@@ -22,7 +22,7 @@ synchronization point, and the Py4J local-relation serde bring-up cost
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -153,6 +153,22 @@ def global_fill_forward(
     )
 
 
+def _ntile(k: int) -> Column:
+    """NTILE(k) of the ``row_number`` column among ``_total`` rows: the
+    first ``_total % k`` tiles hold one row more than the rest. Integral
+    ``div`` throughout -- ``/`` is DOUBLE and loses exactness above
+    2^53 rows."""
+    rn = "`row_number`"
+    base = f"(_total div {k})"
+    rem = f"(_total % {k})"
+    big = f"({base} + 1)"
+    small = f"greatest({base}, 1)"
+    return F.expr(
+        f"CASE WHEN {rn} <= {big} * {rem} THEN ({rn} + {big} - 1) div {big} "
+        f"ELSE {rem} + ({rn} - {big} * {rem} + {small} - 1) div {small} END"
+    ).cast("int")
+
+
 def global_ranks(
     df: DataFrame,
     order_cols: list[str],
@@ -226,17 +242,7 @@ def global_ranks(
         .drop("_pid", "_lrk", "_ldr", "_lrn", "_roff", "_doff")
     )
     if ntile is not None:
-        # NTILE(k): first (total % k) tiles hold ceil(total/k) rows --
-        # identical arithmetic to the previous driver-literal form, with
-        # total riding in as the broadcast _total column
-        base = F.floor(F.col("_total") / ntile)
-        rem = F.col("_total") % ntile
-        rn = F.col("row_number")
-        big = base + 1
-        tile = F.when(rn <= big * rem, F.ceil(rn / big)).otherwise(
-            rem + F.ceil((rn - big * rem) / F.greatest(base, F.lit(1)))
-        )
-        out = out.withColumn("ntile", tile.cast("int"))
+        out = out.withColumn("ntile", _ntile(ntile))
     return out.drop("_total")
 
 
@@ -360,13 +366,7 @@ def global_scan(
             .drop("_lrk", "_ldr", "_lrn")
         )
         if ntile is not None:
-            base = F.floor(F.col("_total") / ntile)
-            rem = F.col("_total") % ntile
-            rn, big = F.col("row_number"), base + 1
-            tile = F.when(rn <= big * rem, F.ceil(rn / big)).otherwise(
-                rem + F.ceil((rn - big * rem) / F.greatest(base, F.lit(1)))
-            )
-            out_df = out_df.withColumn("ntile", tile.cast("int"))
+            out_df = out_df.withColumn("ntile", _ntile(ntile))
         if not ranks:
             out_df = out_df.drop("rank", "dense_rank")
     for out, key in (total_cols or {}).items():

@@ -11,6 +11,9 @@ Defaults chosen for correctness-parity with the DuckDB oracle and for
   ``events.ts`` column is parquet TIMESTAMP(NANOS), which Spark cannot
   represent natively; we read it as nanos-since-epoch LONG and convert
   with integer division (see sources.readers.read_table).
+- ``spark.sql.streaming.pollingDelay=100ms``: an idle stream relists its
+  raw zone 10 times a second instead of Spark's 100 (see the comment at
+  the setting).
 - shuffle partitions sized for the local test harness; a cluster deploy
   overrides via ``spark_conf`` (AQE coalescing makes over-provisioning
   cheap, so at 100 TB you set this to ~3x total cores and let AQE shrink).
@@ -59,6 +62,14 @@ _DEFAULTS = {
     # pushFilters; without this flag Spark refuses to plan them at all.
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.parquet.mergeSchema": "false",
+    # An idle long-lived stream relists its source directory every
+    # pollingDelay (an internal conf, 10 ms by default). Each listing
+    # covers every file the raw zone has ever received, so at 10 ms the
+    # stream execution thread burned 0.27 CPU-s per idle second on a
+    # small zone, growing with the zone. 100 ms adds at most 0.1 s of
+    # queue wait to a ~1.6-1.9 s micro-batch; availableNow drains took
+    # the same time at 10 ms and at 3 s.
+    "spark.sql.streaming.pollingDelay": "100ms",
     "spark.ui.enabled": "false",
 }
 

@@ -20,15 +20,35 @@ Scale notes:
   ``_spark_metadata`` log, and skips its own output (pinned:
   tests/test_streaming_windows.py::
   test_checkpoint_loss_with_reused_file_sink_loses_batches). With this
-  module's ``foreachBatch`` + plain append the same mistake DUPLICATES
-  instead. Either way: on checkpoint loss, start a fresh sink dir (or
-  reprocess into a new zone and atomically swap, sources/matview.py).
+  module's ``foreachBatch`` the fresh query re-ingests every raw file
+  still present and replaces its partitions (see the overwrite note
+  below), which costs a full reprocess. Either way: on checkpoint loss,
+  start a fresh sink dir (or reprocess into a new zone and atomically
+  swap, sources/matview.py).
 - output is partitioned by source file basename, reproducing the
   ``processed/<basename>`` routing rule (lambda/s3_event_handler.py:65)
   while keeping one parquet dir per input file for downstream pruning.
+  Each raw file belongs to exactly one micro-batch, so both channels are
+  written with dynamic partition overwrite: a batch replayed after a
+  crash between its writes and its checkpoint commit replaces its own
+  ``source_file=`` partitions instead of appending its rows twice.
+- the dim contract: a ``dim_location`` that reads a data source (files,
+  tables) is read again in every micro-batch, so a dim updated between
+  batches enriches later records with the new values. A dim that reads
+  no source (``createDataFrame``, ``range``) cannot change, so it is
+  persisted once per stream and released when the query terminates;
+  otherwise every batch's broadcast would rebuild a ``createDataFrame``
+  list in PySpark worker processes.
+- the session polls the raw zone every 100 ms while idle
+  (``spark.sql.streaming.pollingDelay``, set in ``session.build_session``;
+  Spark's default is 10 ms). Each poll lists every file the raw zone has
+  ever received, so the idle CPU grows with the zone; the longer poll
+  adds at most 0.1 s of queue wait to a file.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -262,6 +282,67 @@ def detect_replaced_source_files(
     return sorted(replaced)
 
 
+#: Leaf operators that read no data source: their rows are generated or
+#: held by the driver, so they cannot change while a stream runs.
+_IN_MEMORY_LEAVES = frozenset(
+    {"LocalRelation", "LogicalRDD", "Range", "OneRowRelation"}
+)
+
+
+def _reads_no_source(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is in-memory data
+    and it lists no input files."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return (
+        all(
+            leaves.apply(i).getClass().getSimpleName() in _IN_MEMORY_LEAVES
+            for i in range(leaves.size())
+        )
+        and not df.inputFiles()
+    )
+
+
+def _pin_dim(dim: DataFrame | None) -> DataFrame | None:
+    """Persist and evaluate an in-memory dim for the life of one stream;
+    returns the frame to release on termination, or None when there is
+    nothing to release (no dim, a dim that reads a source, or one the
+    caller has already cached and so owns). ``persist`` rather than
+    ``localCheckpoint``: a lost block is recomputed from lineage instead
+    of failing every later batch. Evaluated here, at stream start, so no
+    micro-batch pays an extra job to fill the cache."""
+    if dim is None or not _reads_no_source(dim):
+        return None
+    level = dim.storageLevel
+    if level.useMemory or level.useDisk:
+        return None
+    dim.persist()
+    try:
+        dim.count()
+    except Exception:
+        dim.unpersist()
+        raise
+    return dim
+
+
+def _unpersist_on_termination(query: StreamingQuery, dim: DataFrame) -> None:
+    """Unpersist ``dim`` once ``query`` terminates, however it ends
+    (stopped, failed, or drained by ``availableNow``)."""
+
+    def wait() -> None:
+        try:
+            query.awaitTermination()
+        except Exception:  # noqa: BLE001 -- a failed query ends too
+            pass
+        try:
+            dim.unpersist()
+        except Exception:  # noqa: BLE001 -- the session may be stopped
+            pass
+
+    threading.Thread(
+        target=wait, name=f"unpersist-dim-{query.runId}", daemon=True
+    ).start()
+
+
 def start_sensor_ingest(
     spark: SparkSession,
     raw_dir: str,
@@ -280,7 +361,16 @@ def start_sensor_ingest(
     ``<out_dir>/_dead_letter`` keyed the same way. When ``dim_location``
     is given, every micro-batch broadcast-joins the static dim (stream-
     static enrichment, reference README.md:13): the dim never shuffles
-    the stream, and each batch sees the dim as of its own execution.
+    the stream. A dim that reads a data source is read again in every
+    batch, so each batch sees it as of its own execution; an in-memory
+    dim (``createDataFrame``, ``range``) cannot change, so it is evaluated
+    once: persisted at start and released when the query terminates.
+
+    A long-lived stream (``available_now=False``) lists the raw zone
+    every 100 ms while idle (the session's ``pollingDelay``, see
+    ``session.build_session``), not Spark's default 10 ms: each listing
+    covers every file the zone has ever received, so idle CPU grows with
+    the zone, and the longer poll adds at most 0.1 s of queue wait.
     """
     stream = read_sensor_stream(
         spark, raw_dir, max_files_per_trigger=max_files_per_trigger
@@ -397,16 +487,22 @@ def start_sensor_ingest(
                     "immutable until a burst drains (delete/archive "
                     "only between runs)."
                 )
+        # Dynamic partition overwrite, not append: a batch replayed after
+        # a crash between these writes and the checkpoint commit replaces
+        # exactly its own source_file= partitions, so every row lands
+        # once (a raw file belongs to exactly one batch).
         processed = transform_sensor(good, config, dim_location)
         (
-            processed.write.mode("append")
+            processed.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("source_file")
             .parquet(out_dir)
         )
         if bad.limit(1).count() > 0:
             (
                 bad.withColumn("_ingest_ts", F.current_timestamp())
-                .write.mode("append")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("source_file")
                 .parquet(f"{out_dir}/_dead_letter")
             )
@@ -419,7 +515,16 @@ def start_sensor_ingest(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    pinned = _pin_dim(dim_location)
+    try:
+        query = writer.start()
+    except Exception:
+        if pinned is not None:
+            pinned.unpersist()
+        raise
+    if pinned is not None:
+        _unpersist_on_termination(query, pinned)
+    return query
 
 
 def run_ingest_available_now(
@@ -466,20 +571,27 @@ def run_ingest_available_now(
         warnings.warn(msg, RuntimeWarning, stacklevel=3)
 
     _audit("before")
-    q = start_sensor_ingest(
-        spark,
-        raw_dir,
-        out_dir,
-        checkpoint_dir,
-        config,
-        dim_location=dim_location,
-        available_now=True,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"ingest did not drain within {timeout_s}s")
+    # Pinned here rather than by start_sensor_ingest (which leaves a dim
+    # the caller has cached alone), so it is released before we return.
+    pinned = _pin_dim(dim_location)
+    try:
+        q = start_sensor_ingest(
+            spark,
+            raw_dir,
+            out_dir,
+            checkpoint_dir,
+            config,
+            dim_location=dim_location,
+            available_now=True,
+            max_files_per_trigger=max_files_per_trigger,
+        )
+        q.awaitTermination(timeout_s)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError(f"ingest did not drain within {timeout_s}s")
+    finally:
+        if pinned is not None:
+            pinned.unpersist()
     _audit("after")
 
 

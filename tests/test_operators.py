@@ -703,6 +703,30 @@ def test_global_scan_combines_sums_and_ranks(spark, sf_dir):
             assert g[k][c] == x[k][c], (k, c)
 
 
+def test_ntile_exact_above_2_pow_53(spark):
+    """The NTILE arithmetic is integral: with 2^53 + 3 rows in 4 tiles,
+    DOUBLE division rounds the tile size up by one and puts row
+    2^51 + 2 (the first row of tile 2) in tile 1."""
+    from iot_data_pipeline_spark.operators.prefix import _ntile
+
+    total, k = 2**53 + 3, 4
+    big, rem = total // k + 1, total % k
+
+    def want(rn: int) -> int:
+        if rn <= big * rem:
+            return -(-rn // big)
+        return rem + -(-(rn - big * rem) // (big - 1))
+
+    rows = [1, big - 1, big, big + 1, 2 * big, big * rem, big * rem + 1, total]
+    df = spark.createDataFrame(
+        [(total, rn) for rn in rows], "_total long, row_number long"
+    )
+    got = {r["row_number"]: r["ntile"] for r in df.select(
+        "row_number", _ntile(k).alias("ntile")).collect()}
+    assert got == {rn: want(rn) for rn in rows}
+    assert got[big + 1] == 2
+
+
 def _uf_ground_truth(pairs):
     from iot_data_pipeline_spark.operators.graph import _union_find_local
 

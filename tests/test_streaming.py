@@ -761,3 +761,156 @@ def test_replaced_audit_reads_only_latest_compact_and_tail(spark, tmp_path):
     _write_file(raw, "f00.jsonl", _records(0, 3, 50.0))
     replaced = detect_replaced_source_files(spark, ckpt)
     assert [r.rsplit("/", 1)[-1] for r in replaced] == ["f00.jsonl"]
+
+
+# ------------------------------------------------- replay of a crashed batch
+
+
+@pytest.mark.parametrize("fault_after", ["zone", "dead_letter"])
+def test_replayed_batch_writes_each_row_once(
+    spark, raw_dir, tmp_path, monkeypatch, fault_after
+):
+    """A crash after a micro-batch's write but before its checkpoint
+    commit makes the restart replay the batch. Both channels are written
+    with dynamic partition overwrite, so the replay replaces the batch's
+    own source_file= partitions: every row lands exactly once. With
+    appends the zone held each replayed row twice."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    target = out if fault_after == "zone" else f"{out}/_dead_letter"
+    real_parquet = DataFrameWriter.parquet
+    fired = []
+
+    def parquet_then_crash(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if path == target and not fired:
+            fired.append(path)
+            raise RuntimeError(f"injected fault after the {fault_after} write")
+
+    def drain():
+        run_ingest_available_now(
+            spark, str(raw_dir), out, ckpt,
+            config=PipelineConfig(fixed_clock=CLOCK), timeout_s=120,
+        )
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_then_crash)
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        drain()
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert fired and not (tmp_path / "ckpt" / "commits" / "0").exists()
+    drain()  # restart on the same checkpoint replays batch 0
+
+    zone = spark.read.parquet(out)
+    assert zone.count() == 5  # 3 (a) + 2 (b)
+    assert zone.dropDuplicates(["device_id", "timestamp", "humidity"]).count() == 5
+    dead = spark.read.parquet(f"{out}/_dead_letter")
+    assert [r["raw_line"] for r in dead.collect()] == ["this is a bad line"]
+
+
+# ------------------------------------------------------------ the dim contract
+
+
+def test_file_dim_reread_each_batch_of_one_stream(spark, tmp_path):
+    """A dim that reads files is read again in every micro-batch: one
+    long-lived stream enriches a batch after a dim update with the new
+    value. (The dim is rewritten in place at the same size, because a
+    file frame's listing is fixed when it is created.)"""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iot_data_pipeline_spark.streaming.ingest import start_sensor_ingest
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    dim_file = tmp_path / "dim" / "dim.parquet"
+    dim_file.parent.mkdir()
+
+    def write_dim(location: str) -> int:
+        pq.write_table(
+            pa.table({"device_id": ["device-1"], "location_id": [location]}),
+            str(dim_file),
+        )
+        return os.path.getsize(dim_file)
+
+    old_size = write_dim("loc-OLD")
+    dim = spark.read.parquet(str(dim_file.parent))
+    out = tmp_path / "out"
+    q = start_sensor_ingest(
+        spark, str(raw), str(out), str(tmp_path / "ckpt"),
+        PipelineConfig(fixed_clock=CLOCK), dim_location=dim,
+        available_now=False,
+    )
+    try:
+        _write_file(raw, "f1.jsonl", _records(1, 1, 1.0))
+        q.processAllAvailable()
+        assert write_dim("loc-NEW") == old_size
+        _write_file(raw, "f2.jsonl", _records(1, 1, 2.0))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {
+        r["source_file"]: r["location_id"]
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == {"f1.jsonl": "loc-OLD", "f2.jsonl": "loc-NEW"}
+
+
+def test_in_memory_dim_evaluated_once_per_stream(spark, raw_dir, tmp_path):
+    """A createDataFrame dim cannot change, so the stream persists it:
+    only the first of three micro-batches evaluates the dim's Python RDD
+    (counted by an accumulator its rows pass through); before, every
+    batch's broadcast rebuilt it in PySpark workers."""
+    _write_file(raw_dir, "c.jsonl", _records(3, 4, 30.0))
+    sc = spark.sparkContext
+    evaluated = sc.accumulator(0)
+
+    def count_row(row):
+        evaluated.add(1)
+        return row
+
+    rows = [(f"device-{i}", f"loc-{i}") for i in (1, 2, 3)]
+    dim = spark.createDataFrame(
+        sc.parallelize(rows, 1).map(count_row),
+        "device_id string, location_id string",
+    )
+    run_ingest_available_now(
+        spark, str(raw_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        config=PipelineConfig(fixed_clock=CLOCK), timeout_s=120,
+        dim_location=dim, max_files_per_trigger=1,
+    )
+    enriched = spark.read.parquet(str(tmp_path / "out"))
+    assert enriched.filter(F.col("location_id").isNotNull()).count() == 9
+    assert evaluated.value == len(rows)
+
+
+def test_pinned_dim_released_after_drain(spark, raw_dir, tmp_path):
+    """The dim the stream persisted is unpersisted once the drain
+    returns; a dim the caller cached is the caller's and stays cached."""
+
+    def cached(df) -> bool:
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    def drain(dim, name):
+        run_ingest_available_now(
+            spark, str(raw_dir), str(tmp_path / name / "out"),
+            str(tmp_path / name / "ckpt"),
+            config=PipelineConfig(fixed_clock=CLOCK), timeout_s=120,
+            dim_location=dim,
+        )
+
+    schema = "device_id string, location_id string"
+    pinned = spark.createDataFrame([("device-1", "loc-1")], schema)
+    drain(pinned, "pinned")
+    assert not cached(pinned)
+
+    owned = spark.createDataFrame([("device-2", "loc-2")], schema).cache()
+    try:
+        drain(owned, "owned")
+        assert cached(owned)
+    finally:
+        owned.unpersist()
