@@ -35,9 +35,14 @@ def spread_rows(df: DataFrame) -> DataFrame:
     # Partition probe via the frame's own (cached, lazily reused)
     # QueryExecution: ``df.rdd`` compiled a SEPARATE to-Python-RDD plan of
     # the whole upstream subtree on every call -- pure driver overhead,
-    # paid even when the spread no-ops (round-15 ADVICE). The callers all
-    # sit directly on scan-shaped subtrees, so the probe never has an
-    # AQE exchange to materialize.
-    if df._jdf.queryExecution().toRdd().getNumPartitions() >= n:
+    # paid even when the spread no-ops (round-15 ADVICE). Counting the
+    # partitions of a plan with an exchange or a subquery would RUN its
+    # upstream stages (AQE materializes them to plan the rest), so such a
+    # plan is spread without a probe; a false match only costs a shuffle.
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    if any(tag in plan for tag in ("Exchange", "Subquery", "AdaptiveSparkPlan")):
+        return df.repartition(n)
+    if qe.toRdd().getNumPartitions() >= n:
         return df
     return df.repartition(n)

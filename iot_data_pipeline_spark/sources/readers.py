@@ -252,9 +252,16 @@ def _respell(uri: str, root: str, fs_path: str) -> str:
 
 
 def _list_parquet_files(fs, root: str) -> list[str] | None:
-    """Recursive data-file listing under ``root`` (fs-local paths) with
-    Spark's OWN listing semantics: every file except those under a path
-    segment Spark hides (leading ``_`` or ``.`` -- ``_SUCCESS``,
+    """Sorted paths of :func:`_list_visible_files`, or None."""
+    infos = _list_visible_files(fs, root)
+    return None if infos is None else [e.path for e in infos]
+
+
+def _list_visible_files(fs, root: str) -> list | None:
+    """Recursive data-file listing under ``root`` (pyarrow ``FileInfo``
+    entries with fs-local paths, sorted by path) with Spark's OWN
+    listing semantics: every file except those under a path segment
+    Spark hides (leading ``_`` or ``.`` -- ``_SUCCESS``,
     ``_temporary``, checksum files). NO extension filter: Spark's
     directory scan reads every visible file regardless of name, and
     Hive-written parquet is classically extensionless (``000000_0``) --
@@ -270,7 +277,7 @@ def _list_parquet_files(fs, root: str) -> list[str] | None:
     try:
         info = fs.get_file_info(root)
         if info.type == pafs.FileType.File:
-            return [root]  # bare-file table: one-element listing
+            return [info]  # bare-file table: one-element listing
         if info.type != pafs.FileType.Directory:
             return None
         entries = fs.get_file_info(pafs.FileSelector(root, recursive=True))
@@ -284,8 +291,8 @@ def _list_parquet_files(fs, root: str) -> list[str] | None:
         rel = e.path[len(base) :].lstrip("/")
         if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
             continue
-        files.append(e.path)
-    return sorted(files)
+        files.append(e)
+    return sorted(files, key=lambda e: e.path)
 
 
 def _ts_file_survives(
@@ -490,26 +497,30 @@ def _glob_escape(p: str) -> str:
     return re.sub(r"([{}\[\]*?\\])", r"\\\1", p)
 
 
-#: Whole-table schema per table root, captured once per process (round-12
-#: ADVICE: the partition-parity metadata pass re-listed the ENTIRE table on
-#: every pruned read -- on a large object-store table that full listing can
-#: erase much of the pruning win). Staleness tradeoff, documented: a table
-#: REWRITTEN in place with different partition-value spellings mid-process
-#: serves the captured types until :func:`clear_lake_schema_cache`; new
-#: FILES under the same root do not change the cached types unless they
-#: introduce a type-flipping spelling (the rare case the cache trades away).
-_LAKE_SCHEMA_CACHE: dict[str, dict[str, T.DataType]] = {}
+#: Inferred schema per resolved table root, stored with the fingerprint
+#: it was inferred under (:func:`_schema_fingerprint`). A changed
+#: fingerprint REPLACES the root's entry, so a zone that a stream keeps
+#: adding files to holds one entry; the cap bounds the roots themselves
+#: (every atomic publish resolves to a new snapshot directory).
+_SCHEMA_CACHE: dict[str, tuple[tuple, T.StructType]] = {}
+_SCHEMA_CACHE_MAX = 256
+_SCHEMA_CACHE_LOCK = threading.Lock()
 
-#: Partition spellings that already TRIGGERED a cache re-inference per
-#: table root (round-14 ADVICE: a later-added directory with a
-#: type-flipping spelling -- cached INT for ``p``, new dir ``p=1x`` --
-#: cast the raw string to the stale cached type and produced silent
-#: NULL partition values; the pruned read now revalidates every
-#: spelling in its file list against the cached types and re-infers
-#: once when one cannot cast). The memo caps the cost: a spelling that
-#: legitimately survives Spark's cast but fails the conservative
-#: driver-side check re-lists the table at most ONCE, not per read.
-_LAKE_SCHEMA_REVALIDATED: dict[str, set[tuple[str, str]]] = {}
+#: SQL confs that parquet schema inference and partition inference read:
+#: a schema inferred under one value of any of them is not the schema
+#: under another (``nanosAsLong`` alone flips a NANOS column between
+#: BIGINT and an error).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone",
+    "spark.sql.files.ignoreCorruptFiles",
+)
 
 #: Serializes the brief partition-type-inference conf toggle below across
 #: the ENGINE'S OWN threads. Reads issued by foreign threads on the same
@@ -523,91 +534,74 @@ _INFERENCE_TOGGLE_LOCK = threading.Lock()
 
 
 def clear_lake_schema_cache() -> None:
-    """Drop the cached whole-table schemas (call after rewriting a table
-    in place with different partition-value spellings)."""
-    _LAKE_SCHEMA_CACHE.clear()
-    _LAKE_SCHEMA_REVALIDATED.clear()
+    """Drop every cached table schema. Never needed for correctness (a
+    changed listing or inference conf misses the cache by itself); it
+    only frees the entries."""
+    _SCHEMA_CACHE.clear()
 
 
-def _partition_spellings(
-    src: str, files: list[str], part_cols: list[str]
-) -> set[tuple[str, str]]:
-    """(column, raw-spelling) pairs appearing as hive segments between
-    the table root and the given data files."""
-    base = src.rstrip("/")
-    wanted = {c.lower(): c for c in part_cols}
-    out: set[tuple[str, str]] = set()
-    for f in files:
-        if not f.startswith(base + "/"):
-            continue
-        for seg in f[len(base) + 1:].split("/")[:-1]:
-            if "=" in seg:
-                name, value = seg.split("=", 1)
-                col = wanted.get(name.lower())
-                if col is not None:
-                    out.add((col, value))
-    return out
+def _schema_fingerprint(spark: SparkSession, src: str) -> tuple | None:
+    """What a table's inferred schema depends on: the session, the
+    inference confs' effective values (an unset conf reads as its
+    default), and every visible data file as ``(path, size, mtime)`` --
+    a new file, a new partition directory, or a file rewritten in place
+    all change it. None when pyarrow cannot list ``src`` (such a table
+    is inferred on every read)."""
+    fs, root = _pafs_for(src)
+    if fs is None:
+        return None
+    infos = _list_visible_files(fs, root)
+    if infos is None:
+        return None
+    return (
+        id(spark),
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+        tuple((e.path, e.size, e.mtime_ns) for e in infos),
+    )
 
 
-def _spelling_casts(value: str, dtype: T.DataType | None) -> bool:
-    """Conservative driver-side castability probe: True only when the
-    raw hive spelling definitely survives ``CAST(value AS dtype)``
-    non-null. False triggers a whole-table re-inference -- always safe
-    (it is exactly Spark's own typing pass), just one extra listing --
-    so unknown-here formats err toward False. Types outside partition
-    inference's output universe (int/long/double/decimal/date/
-    timestamp/string) are trusted: a cached exotic type means explicit
-    schema intent, not inference gone stale."""
-    import datetime
-    import re
-    from decimal import Decimal, InvalidOperation
-    from urllib.parse import unquote
+def _cached_schema(spark: SparkSession, src: str) -> tuple:
+    """``(fingerprint, schema)``: the cached schema of ``src`` when its
+    fingerprint still matches, else None in its place."""
+    key = _schema_fingerprint(spark, src)
+    hit = _SCHEMA_CACHE.get(src)
+    if key is None or hit is None or hit[0] != key:
+        return key, None
+    return key, hit[1]
 
-    v = unquote(value)
-    if v == "__HIVE_DEFAULT_PARTITION__":
-        return True  # the null spelling: NULL under every typing
-    if dtype is None or isinstance(dtype, T.StringType):
-        return True
-    # Strict spellings only (round-15 advisor find): Python's parsers are
-    # MORE permissive than Spark's CAST for some forms -- int('1_0'),
-    # int(' 42'), float('inf'), and (py3.11+) date.fromisoformat
-    # ('20260101') all parse while Spark casts them to NULL -- so a
-    # type-flipping spelling in those shapes slipped past the probe and
-    # reproduced exactly the silent-NULL partition values the
-    # revalidation exists to catch. Rejecting a castable spelling is
-    # always safe (False just re-runs whole-table inference), so every
-    # numeric/temporal branch gates on a regex strictly no more
-    # permissive than Spark's cast before the Python parse.
+
+def _infer_table(spark: SparkSession, src: str, key: tuple | None) -> DataFrame:
+    """The inferring whole-table read (one Spark schema-inference job),
+    remembering its schema under ``key``. Only a schema that a
+    schema-given read reproduces is stored: a partition column that is
+    also a data column sits at another position under a given schema,
+    so such a table is inferred on every read."""
+    df = spark.read.parquet(src)
+    if key is None:
+        return df
+    schema = df.schema
     try:
-        if isinstance(
-            dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-        ):
-            if not re.fullmatch(r"[+-]?\d+", v):
-                return False
-            int(v)
-        elif isinstance(dtype, (T.DoubleType, T.FloatType, T.DecimalType)):
-            # plain decimal/scientific notation only: no underscores, no
-            # whitespace padding, no inf/nan spellings
-            if not re.fullmatch(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", v):
-                return False
-            if isinstance(dtype, T.DecimalType):
-                Decimal(v)
-            else:
-                float(v)
-        elif isinstance(dtype, T.DateType):
-            if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", v):
-                return False  # dashed ISO form only (no '20260101')
-            datetime.date.fromisoformat(v)
-        elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            if not re.match(r"\d{4}-\d{2}-\d{2}([ T]|$)", v):
-                return False  # dashed date prefix, no whitespace padding
-            datetime.datetime.fromisoformat(v)
-        elif isinstance(dtype, T.BooleanType):
-            if v.strip().lower() not in ("true", "false", "0", "1"):
-                return False
-    except (ValueError, ArithmeticError, InvalidOperation):
-        return False
-    return True
+        ok = spark.read.schema(schema).parquet(src).schema == schema
+    except Exception:  # noqa: BLE001 -- not reproducible: do not cache
+        ok = False
+    if ok:
+        with _SCHEMA_CACHE_LOCK:
+            _SCHEMA_CACHE.pop(src, None)
+            if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+                _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
+            _SCHEMA_CACHE[src] = (key, schema)
+    return df
+
+
+def _read_table_root(spark: SparkSession, src: str) -> DataFrame:
+    """Whole-table parquet read that infers the schema once per
+    fingerprint. A hit reads with the cached schema: no inference job,
+    and still a fresh relation (fresh attribute IDs, Spark's own file
+    listing) on every call."""
+    key, schema = _cached_schema(spark, src)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(src)
+    return _infer_table(spark, src, key)
 
 
 def _read_explicit_files(
@@ -625,59 +619,31 @@ def _read_explicit_files(
     (``batch=01`` next to ``batch=abc``) answers differently bounded vs
     unbounded: the full read infers STRING and keeps ``'01'``, the
     pruned read infers INT and returns ``1`` -- a different value AND a
-    different column type from the same table. Fix: capture the
-    whole-table partition schema once per process (a driver metadata
-    pass -- data columns resolve from one arbitrary footer under
-    ``mergeSchema=false``, partition columns from the full listing,
-    which is exactly Spark's own inference; cached in
-    :data:`_LAKE_SCHEMA_CACHE` so repeated pruned reads of the same
-    table do not re-list it), read the subset with partition-type
-    inference OFF (raw spellings), and cast to the whole-table types --
-    bit-identical to the unpruned read on every layout. Tables without
-    hive-partition segments skip all of this (one string scan of the
-    path list). The inference conf is captured at ANALYSIS time
-    (probed), so the brief session-conf toggle cannot leak into the
-    returned lazy plan; the toggle window is serialized across engine
-    threads by :data:`_INFERENCE_TOGGLE_LOCK` (single-threaded-driver
-    contract for foreign threads, see the lock's note)."""
+    different column type from the same table. Fix: take the
+    whole-table partition types from the table's schema cache
+    (:func:`_cached_schema` -- keyed by the whole-table listing, so a
+    new partition directory, whatever its spelling, re-infers; a miss
+    runs exactly Spark's own whole-table inference under the session's
+    confs), read the subset with partition-type inference OFF (raw
+    spellings), and cast to the whole-table types -- bit-identical to
+    the unpruned read on every layout. Tables without hive-partition
+    segments skip all of this (one string scan of the path list). The
+    inference conf is captured at ANALYSIS time (probed), so the brief
+    session-conf toggle cannot leak into the returned lazy plan; the
+    toggle window is serialized across engine threads by
+    :data:`_INFERENCE_TOGGLE_LOCK` (single-threaded-driver contract for
+    foreign threads, see the lock's note)."""
     reader = spark.read.option("basePath", src)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     part_cols = _hive_partition_cols(src, files)  # on RAW paths
-    raw_files = files
     files = [_glob_escape(f) for f in files]  # Spark globs every path
     if not part_cols:
         return reader.parquet(*files)
-    lake_fields = _LAKE_SCHEMA_CACHE.get(src)
-    if lake_fields is not None:
-        # Staleness revalidation (round-14 ADVICE): a directory added
-        # AFTER the cached inference can carry a spelling the cached
-        # type cannot represent (cached INT, new dir ``p=1x``) -- the
-        # cast below would then produce silent NULLs where an uncached
-        # read re-infers STRING. Any subset spelling that fails the
-        # conservative castability probe invalidates the entry and
-        # re-runs the whole-table pass (which sees the new directory);
-        # the memo ensures a probe-vs-Spark disagreement costs one
-        # re-listing total, never one per read.
-        seen = _LAKE_SCHEMA_REVALIDATED.setdefault(src, set())
-        flipped = {
-            s
-            for s in _partition_spellings(src, raw_files, part_cols)
-            if s not in seen
-            and not _spelling_casts(s[1], lake_fields.get(s[0].lower()))
-        }
-        if flipped:
-            seen.update(flipped)
-            _LAKE_SCHEMA_CACHE.pop(src, None)
-            lake_fields = None
-    if lake_fields is None:
+    fingerprint, schema = _cached_schema(spark, src)
+    if schema is None:
         try:
-            lake_fields = {
-                f.name.lower(): f.dataType
-                for f in spark.read.option("mergeSchema", "false")
-                .parquet(src)
-                .schema.fields
-            }
+            schema = _infer_table(spark, src, fingerprint).schema
         except Exception as e:  # noqa: BLE001 -- whole-table schema
             # unreadable: keep the subset read's own inference (the
             # pre-round-12 behavior) but say so -- silently reverting
@@ -695,7 +661,7 @@ def _read_explicit_files(
                 stacklevel=2,
             )
             return reader.parquet(*files)
-        _LAKE_SCHEMA_CACHE[src] = lake_fields
+    lake_fields = {f.name.lower(): f.dataType for f in schema.fields}
     key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     with _INFERENCE_TOGGLE_LOCK:
         old = spark.conf.get(key, "true")
@@ -1005,6 +971,16 @@ def read_table(
       thousands of part files and the file is the recoverable unit.
       Conservative: stats-less files are kept, non-UTC sessions and
       single-file tables skip the pass.
+
+    Schema cache: the table's inferred schema is kept per resolved table
+    root, keyed by the root's listing (every visible data file's path,
+    size and mtime), the SQL confs schema and partition inference read
+    (:data:`_INFERENCE_CONFS`) and the session. One entry per root: a
+    changed key replaces it. A read whose key matches skips Spark's
+    schema-inference job and reads with the cached schema; every call
+    still builds a fresh relation (fresh attribute IDs, so two reads of
+    one table self-join) over Spark's own file listing. Roots pyarrow
+    cannot list are inferred on every read.
     """
     src = f"{sf_dir}/{name}.parquet"
     # Atomically-published zone (write_parquet(atomic=True) /
@@ -1037,7 +1013,7 @@ def read_table(
         # batch=01 from string '01' to int 1).
         df = _read_explicit_files(spark, src, pruned)
     else:
-        df = spark.read.parquet(src)
+        df = _read_table_root(spark, src)
     # Canonical name-case normalization: column-name CASE is a writer
     # choice (an Oracle/Snowflake-bred exporter upper-cases every
     # identifier). Spark RESOLVES references case-insensitively but

@@ -979,3 +979,16 @@ def test_lsh_max_bucket_guard(spark):
     )
     with _pytest.raises(ValueError, match="max_bucket"):
         lsh_candidate_pairs(sigs, n_bands=2, max_bucket=1)
+
+
+def test_spread_rows_probes_no_plan_with_an_exchange(spark, count_jobs):
+    """The partition probe counts partitions through the frame's
+    QueryExecution; on a plan with an exchange that count would run the
+    upstream stages. A grouped frame is spread without a probe: no job
+    runs inside ``spread_rows``, and the rows are unchanged."""
+    from iot_data_pipeline_spark.operators.spread import spread_rows
+
+    grouped = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    spread, jobs = count_jobs(lambda: spread_rows(grouped))
+    assert jobs == 0
+    assert sorted(spread.collect()) == sorted(grouped.collect())

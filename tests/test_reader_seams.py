@@ -1310,34 +1310,37 @@ def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):
     """Round-12 ADVICE closed (two findings at _read_explicit_files):
 
     - the partition-type parity pass re-listed the WHOLE table on every
-      pruned read; the schema is now cached per table root for the
-      process lifetime (clear_lake_schema_cache after an in-place
-      rewrite that changes partition-value spellings);
+      pruned read; its whole-table schema now comes from the table
+      schema cache that ``read_table`` uses, keyed by the table's
+      listing (clear_lake_schema_cache only frees entries);
     - the broad fallback when that pass fails now WARNS instead of
       silently reverting to subset-local partition-type inference.
     """
     import warnings
 
-    from iot_data_pipeline_spark.sources.readers import (
-        _LAKE_SCHEMA_CACHE,
-        _read_explicit_files,
-        clear_lake_schema_cache,
-    )
+    from iot_data_pipeline_spark.sources import readers as R
 
     root = str(tmp_path / "cached_tbl")
     os.makedirs(f"{root}/a=1")
     t = pa.table({"x": pa.array([1, 2], pa.int64())})
     pq.write_table(t, f"{root}/a=1/p.parquet")
-    df = _read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
+    df = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df.dtypes)["a"] == "int"
-    assert root in _LAKE_SCHEMA_CACHE
-    # cache is CONSULTED on the next read: poison the entry and observe
-    # the partition type follow it (no monkeypatching of spark.read)
-    _LAKE_SCHEMA_CACHE[root] = {"x": T.LongType(), "a": T.StringType()}
-    df2 = _read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
+    assert root in R._SCHEMA_CACHE
+    # cache is CONSULTED on the next read: poison the entry (same
+    # fingerprint) and observe the partition type follow it (no
+    # monkeypatching of spark.read)
+    key, _schema = R._SCHEMA_CACHE[root]
+    R._SCHEMA_CACHE[root] = (
+        key,
+        T.StructType(
+            [T.StructField("x", T.LongType()), T.StructField("a", T.StringType())]
+        ),
+    )
+    df2 = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df2.dtypes)["a"] == "string"
-    clear_lake_schema_cache()
-    df3 = _read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
+    R.clear_lake_schema_cache()
+    df3 = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df3.dtypes)["a"] == "int"
 
     # loud fallback: a table ROOT carrying a glob metachar defeats the
@@ -1351,7 +1354,7 @@ def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):
     pq.write_table(t, f"{gd}/a=1/p.parquet")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        df4 = _read_explicit_files(spark, gd, [f"{gd}/a=1/p.parquet"])
+        df4 = R._read_explicit_files(spark, gd, [f"{gd}/a=1/p.parquet"])
         assert sorted(r["x"] for r in df4.collect()) == [1, 2]
     msgs = [str(x.message) for x in w if x.category is RuntimeWarning]
     assert any("partition-type parity" in m for m in msgs)
@@ -1360,14 +1363,11 @@ def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):
 def test_stale_schema_cache_reinfers_on_type_flipping_spelling(
     spark, tmp_path
 ):
-    """Round-14 ADVICE closed: the schema cache's documented staleness
-    had a SILENT-NULL failure mode -- a directory added after the
-    cached inference with a spelling the cached type cannot hold
-    (cached INT for ``a``, new dir ``a=1x``) cast to NULL, where an
-    uncached read re-infers STRING. The pruned read now revalidates
-    the subset's spellings against the cached types and re-infers once
-    when one cannot cast; a probe-vs-Spark disagreement is memoized so
-    it costs one extra listing total, not one per read."""
+    """Round-14 ADVICE closed: a directory added after the cached
+    inference with a spelling the cached type cannot hold (cached INT
+    for ``a``, new dir ``a=1x``) must not cast to NULL; an uncached
+    read re-infers STRING. The new directory's file changes the table's
+    listing, so the cache misses and the whole table is re-inferred."""
     from iot_data_pipeline_spark.sources import readers as R
 
     root = str(tmp_path / "flip_tbl")
@@ -1387,37 +1387,156 @@ def test_stale_schema_cache_reinfers_on_type_flipping_spelling(
     assert dict(df2.dtypes)["a"] == "string"
     got = sorted((r["a"], r["x"]) for r in df2.collect())
     assert got == [("1", 1), ("1", 2), ("1x", 1), ("1x", 2)]  # no NULLs
-    # and the refreshed cache entry types the whole table STRING
-    assert isinstance(R._LAKE_SCHEMA_CACHE[root]["a"], T.StringType)
-
-    # memo: the same flip-triggering spelling does not re-list again --
-    # poison the cache back to INT and mark the spelling as already
-    # revalidated; the read must TRUST the (poisoned) cache, proving no
-    # second inference pass fired
-    R._LAKE_SCHEMA_CACHE[root] = {"x": T.LongType(), "a": T.IntegerType()}
-    df3 = R._read_explicit_files(
-        spark, root, [f"{root}/a=1/p.parquet", f"{root}/a=1x/p.parquet"]
-    )
-    assert dict(df3.dtypes)["a"] == "int"  # cache trusted: memo hit
+    # and the refreshed entry, the root's only one, types it STRING
+    _key, schema = R._SCHEMA_CACHE[root]
+    assert isinstance(schema["a"].dataType, T.StringType)
     R.clear_lake_schema_cache()
 
 
-def test_spelling_castability_probe():
-    """Unit band for the conservative driver-side cast probe."""
-    from iot_data_pipeline_spark.sources.readers import _spelling_casts
+def _write_events(root: str, part: str, name: str, xs: list[int], day: str):
+    import datetime as dt
 
-    assert _spelling_casts("42", T.IntegerType())
-    assert not _spelling_casts("1x", T.IntegerType())
-    assert not _spelling_casts("1.5", T.LongType())  # Spark toInt: null
-    assert _spelling_casts("1.5", T.DoubleType())
-    assert _spelling_casts("1.5", T.DecimalType(10, 2))
-    assert not _spelling_casts("abc", T.DecimalType(10, 2))
-    assert _spelling_casts("2026-01-01", T.DateType())
-    assert not _spelling_casts("01/02/2026", T.DateType())
-    # hive percent-encoding decodes before probing
-    assert _spelling_casts("2026-01-01 00%3A00%3A00", T.TimestampType())
-    assert _spelling_casts("__HIVE_DEFAULT_PARTITION__", T.IntegerType())
-    assert _spelling_casts("anything", T.StringType())
-    assert _spelling_casts("anything", None)  # unknown column: trust
-    # exotic cached types are explicit intent, never re-inferred
-    assert _spelling_casts("zzz", T.BinaryType())
+    os.makedirs(f"{root}/a={part}", exist_ok=True)
+    ts = dt.datetime.fromisoformat(day)
+    pq.write_table(
+        pa.table(
+            {
+                "x": pa.array(xs, pa.int64()),
+                "ts": pa.array([ts] * len(xs), pa.timestamp("us")),
+            }
+        ),
+        f"{root}/a={part}/{name}.parquet",
+    )
+
+
+def test_schema_cache_second_read_runs_no_job(spark, tmp_path, count_jobs):
+    """A second ``read_table`` of an unchanged table skips Spark's
+    schema-inference job: 0 jobs, against at least 1 for the first."""
+    from iot_data_pipeline_spark.sources.readers import read_table
+
+    _write_events(str(tmp_path / "events.parquet"), "1", "p0", [1, 2], "2026-01-01")
+    first, jobs1 = count_jobs(lambda: read_table(spark, str(tmp_path), "events"))
+    second, jobs2 = count_jobs(lambda: read_table(spark, str(tmp_path), "events"))
+    assert jobs1 >= 1
+    assert jobs2 == 0
+    assert second.dtypes == first.dtypes
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+@pytest.mark.parametrize("bounded", [False, True], ids=["plain", "pruned"])
+def test_schema_cache_sees_new_files_and_flipping_spelling(
+    spark, tmp_path, bounded
+):
+    """Between two reads, a file added to an existing partition gives its
+    rows, and a new partition directory whose spelling flips the
+    partition type (``a=1x`` after ``a=1``) re-infers STRING with no
+    NULL partition values -- on the plain read and on the bounds-pruned
+    explicit-file read alike."""
+    from iot_data_pipeline_spark.sources.readers import read_table
+
+    root = str(tmp_path / "events.parquet")
+    _write_events(root, "1", "old", [0], "2020-06-01")  # pruned when bounded
+    _write_events(root, "1", "p0", [1, 2], "2026-01-01")
+    bounds = {"ts": ("2025-01-01", None)} if bounded else None
+
+    def rows():
+        df = read_table(spark, str(tmp_path), "events", bounds=bounds)
+        return dict(df.dtypes)["a"], sorted((r["a"], r["x"]) for r in df.collect())
+
+    old = [] if bounded else [(0,)]
+    typ, got = rows()
+    assert typ == "int"
+    assert got == sorted([(1, x) for (x,) in old] + [(1, 1), (1, 2)])
+
+    _write_events(root, "1", "p1", [3], "2026-01-02")
+    typ, got = rows()
+    assert typ == "int"
+    assert got == sorted([(1, x) for (x,) in old] + [(1, 1), (1, 2), (1, 3)])
+
+    _write_events(root, "1x", "p2", [4], "2026-01-03")
+    typ, got = rows()
+    assert typ == "string"
+    assert got == sorted(
+        [("1", x) for (x,) in old] + [("1", 1), ("1", 2), ("1", 3), ("1x", 4)]
+    )
+
+
+def test_schema_cache_follows_inference_confs(spark, tmp_path):
+    """Flipping an inference conf between two reads of one table gives
+    each conf's schema, never the cached one: a TIMESTAMP(NANOS) column
+    is BIGINT under ``nanosAsLong`` and refused without it, and a BINARY
+    column is STRING only under ``binaryAsString``."""
+    from iot_data_pipeline_spark.sources.readers import read_table
+
+    root = tmp_path / "nanos_tbl.parquet"
+    root.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "t": pa.array([1_700_000_000_000_000_123], pa.timestamp("ns")),
+                "b": pa.array([b"ab"], pa.binary()),
+            }
+        ),
+        str(root / "p.parquet"),
+    )
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    binary = "spark.sql.parquet.binaryAsString"
+    assert spark.conf.get(nanos) == "true"
+    old_binary = spark.conf.get(binary)
+
+    def dtypes():
+        return dict(read_table(spark, str(tmp_path), "nanos_tbl").dtypes)
+
+    try:
+        assert dtypes() == {"t": "bigint", "b": "binary"}
+        spark.conf.set(nanos, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            dtypes()
+        spark.conf.set(nanos, "true")
+        spark.conf.set(binary, "true")
+        assert dtypes() == {"t": "bigint", "b": "string"}
+        spark.conf.set(binary, "false")
+        assert dtypes() == {"t": "bigint", "b": "binary"}
+    finally:
+        spark.conf.set(nanos, "true")
+        spark.conf.set(binary, old_binary)
+
+
+def test_schema_cache_reads_still_self_join(spark, tmp_path):
+    """Each cached read is a fresh relation with fresh attribute IDs, so
+    two ``read_table`` calls of one table join on their own columns
+    (shared IDs would make ``l.x < r.x`` compare a column with itself)."""
+    from iot_data_pipeline_spark.sources.readers import read_table
+
+    _write_events(
+        str(tmp_path / "events.parquet"), "1", "p0", [1, 2, 3], "2026-01-01"
+    )
+    read_table(spark, str(tmp_path), "events")  # fill the cache
+    left = read_table(spark, str(tmp_path), "events")
+    right = read_table(spark, str(tmp_path), "events")
+    pairs = left.join(right, left.x < right.x).select(left.x, right.x.alias("y"))
+    assert sorted((r["x"], r["y"]) for r in pairs.collect()) == [
+        (1, 2),
+        (1, 3),
+        (2, 3),
+    ]
+
+
+def test_schema_cache_keeps_column_order_of_overlapping_partition(
+    spark, tmp_path
+):
+    """A partition column that is also a data column sits at its data
+    position when Spark infers the schema, but at the end under a given
+    schema. Such a table is not cached, so every read keeps the inferred
+    column order."""
+    from iot_data_pipeline_spark.sources import readers as R
+
+    os.makedirs(tmp_path / "ov.parquet" / "a=1")
+    pq.write_table(
+        pa.table({"a": pa.array([1], pa.int32()), "x": pa.array([5], pa.int64())}),
+        str(tmp_path / "ov.parquet" / "a=1" / "p.parquet"),
+    )
+    first = R.read_table(spark, str(tmp_path), "ov")
+    second = R.read_table(spark, str(tmp_path), "ov")
+    assert first.columns == second.columns == ["a", "x"]
+    assert str(tmp_path / "ov.parquet") not in R._SCHEMA_CACHE
