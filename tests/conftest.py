@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import sys
 import uuid
 
 import pytest
@@ -47,6 +48,11 @@ def pytest_deselected(items):
 
 
 def pytest_terminal_summary(terminalreporter):
+    # whether the test session's driver JVM started from the class-data
+    # archive (session.build_session logs the same line)
+    session = sys.modules.get("iot_data_pipeline_spark.session")
+    if session is not None and session.archive_status:
+        terminalreporter.write_line(session.archive_status)
     if _RECERT_DESELECTED:
         terminalreporter.write_line(
             f"{len(_RECERT_DESELECTED)} recert tests deselected by the default "

@@ -1,7 +1,7 @@
 """Measure dedup-family behavior under HOT-KEY skew: duplicate clusters.
 
-tools/scale_sweep.py proves per-row cost stays flat as volume grows with
-UNIFORM key cardinality. This tool probes the orthogonal hazard: one value
+tools/scale_sweep.py (historical: since deleted) proved per-row cost
+stays flat as volume grows with UNIFORM key cardinality. This tool probes the orthogonal hazard: one value
 repeated an extreme number of times -- the boilerplate page / empty
 document that dominates every real crawl. Two probes, each comparing the
 shipped operator against the shape it replaced (or the uncapped variant it
