@@ -46,7 +46,8 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
     10M times serializes 10M rows through a single task. The aggregate
     has map-side partial merge: each input task collapses its local
     copies first, so a hot digest ships one partial per task regardless
-    of cluster size (measured: tools/skew_sweep.py, SCALE.md section 7d).
+    of cluster size (measured: tools/skew_sweep.py, historical: since
+    deleted, SCALE.md section 7d).
 
     Contract: ``id_col`` is non-NULL. Enforced with a pre-shuffle filter
     rather than documentation: ``min_by`` skips NULL-ordered rows, so a
@@ -154,7 +155,8 @@ def lsh_candidate_pairs(
     filter, no transitive closure) would miss those candidates. Keep the
     default ``None`` for per-pair-verification pipelines. Cost of the
     cap: one extra (band, key) count+min aggregation, fully
-    partial-merged. Measured: tools/skew_sweep.py, SCALE.md section 7d.
+    partial-merged. Measured: tools/skew_sweep.py (historical: since deleted),
+    SCALE.md section 7d.
     Default None keeps the exhaustive semantics (q23's oracle-matched
     form).
     """

@@ -5,6 +5,8 @@ Reference semantics being reproduced (SURVEY.md section 2.1, Tier A):
 - JSONL scan, line-at-a-time JSON parse, malformed lines logged-and-dropped
   to an error channel (app/app.py:29-45,62-65)  -> PERMISSIVE read + corrupt
   split (sources.readers).
+- one ETL body (app/app.py:19-89) -> ``_process_sensor_frame``, which the
+  bulk run and every stream micro-batch call alike.
 - ``processed_timestamp`` = current UTC time (app/app.py:48) -> injectable
   clock column so tests are deterministic.
 - ``temp_fahrenheit = temperature * 9/5 + 32`` only when a numeric
@@ -24,14 +26,16 @@ transform compiles to one WholeStageCodegen span over the scan.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.sources.readers import (
+    CORRUPT_COL,
     SENSOR_SCHEMA,
     read_jsonl,
-    split_corrupt,
+    split_cached,
 )
 from iot_data_pipeline_spark.sources.sinks import (
     write_dead_letter,
@@ -76,6 +80,53 @@ def transform_sensor(
     return out
 
 
+#: The per-file routing column a stream micro-batch carries on both channels.
+ROUTE_COL = "source_file"
+
+
+def _process_sensor_frame(
+    parsed: DataFrame,
+    config: PipelineConfig,
+    dim_location: DataFrame | None,
+    write_good: Callable[[DataFrame], None],
+    write_bad: Callable[[DataFrame], None] | None = None,
+    check: Callable[[set[str]], None] | None = None,
+) -> tuple[int, int, int]:
+    """The sensor ETL body over one PERMISSIVE-parsed frame; returns
+    (rows in, good rows written, corrupt rows).
+
+    One pass fills the frame's cache, reading every input once, while an
+    observed aggregate counts its rows and corrupt rows and, when it
+    carries ``ROUTE_COL``, collects the routing keys seen, which
+    ``check`` gets before any write (it raises to write nothing). The
+    pass writes to Spark's ``noop`` sink: one job, where an aggregate
+    action runs three under adaptive execution. The transformed good rows
+    go to ``write_good``, counted on that write (after the threshold
+    filter); the corrupt rows go to ``write_bad``. The cache is released
+    however the body ends.
+    """
+    routed = ROUTE_COL in parsed.columns
+    parent = parsed.persist()
+    try:
+        read = Observation("sensor_read")
+        keys = [F.collect_set(ROUTE_COL).alias("seen")] if routed else []
+        parent.observe(
+            read, F.count(F.lit(1)).alias("n_in"), F.count(CORRUPT_COL).alias("n_bad"), *keys
+        ).write.format("noop").mode("overwrite").save()
+        row = read.get
+        if check is not None:
+            check(set(row.get("seen", ())))
+        good, bad = split_cached(parent, keep=ROUTE_COL if routed else None)
+        obs = Observation("sensor_pipeline")
+        processed = transform_sensor(good, config, dim_location)
+        write_good(processed.observe(obs, F.count(F.lit(1)).alias("n_good")))
+        if write_bad is not None:
+            write_bad(bad)
+        return row["n_in"], obs.get["n_good"], row["n_bad"]
+    finally:
+        parent.unpersist()
+
+
 def run_batch_pipeline(
     spark: SparkSession,
     in_path: str,
@@ -87,33 +138,15 @@ def run_batch_pipeline(
 
     Returns (good_count, bad_count). Unlike the reference -- which buffers
     the whole file in a Python list (app/app.py:24,60) -- nothing here
-    materializes on the driver; counts come from Spark aggregations.
+    materializes on the driver; the counts come from Spark aggregations
+    (the reference logs them from its loop, app/app.py:74-79).
     """
-    from pyspark.sql import Observation
-
-    raw = read_jsonl(spark, in_path, SENSOR_SCHEMA)
-    good, bad = split_corrupt(raw)
-    processed = transform_sensor(good, config, dim_location)
-
-    # Piggyback row/quality metrics on the write pass itself (df.observe):
-    # counts come from the sink action, not extra full scans -- the
-    # reference logs equivalent counters from its loop (app/app.py:74-79).
-    obs = Observation("sensor_pipeline")
-    processed = processed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_good"),
-        F.count("temp_fahrenheit").alias("n_converted"),
-        F.min("temperature").alias("min_temp"),
-        F.max("temperature").alias("max_temp"),
+    dead_letter = config.dead_letter_path
+    _, n_good, n_bad = _process_sensor_frame(
+        read_jsonl(spark, in_path, SENSOR_SCHEMA),
+        config,
+        dim_location,
+        write_good=lambda df: write_jsonl(df, out_path),
+        write_bad=None if dead_letter is None else lambda df: write_dead_letter(df, dead_letter),
     )
-    write_jsonl(processed, out_path)
-    n_good = obs.get["n_good"]
-
-    if config.dead_letter_path is not None:
-        bad_obs = Observation("sensor_pipeline_dlq")
-        bad = bad.observe(bad_obs, F.count(F.lit(1)).alias("n_bad"))
-        write_dead_letter(bad, config.dead_letter_path)
-        n_bad = bad_obs.get["n_bad"]
-    else:
-        n_bad = bad.count()
     return n_good, n_bad

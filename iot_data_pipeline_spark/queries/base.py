@@ -130,14 +130,6 @@ def _embeddings_fingerprint(sf_dir: str) -> tuple:
     return (latest, total, n)
 
 
-def clear_modal_dim_cache() -> None:
-    """Drop every memoized modal dimension. Fixture builders that
-    rewrite an embeddings.parquet in place may call this instead of
-    relying on the fingerprint key (belt and braces for same-nanosecond
-    rewrites on coarse-mtime filesystems)."""
-    _MODAL_DIM_CACHE.clear()
-
-
 def valid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table with degenerate rows excluded: NULL arrays,
     arrays containing NULL elements, all-zero vectors, and vectors whose

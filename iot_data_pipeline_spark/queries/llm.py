@@ -369,7 +369,7 @@ def q192_lsh_hot_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation per (band, key); star output is linear in cluster size;
     connected components downstream are unchanged (every member reaches
     the hub). Measured against the uncapped blowup in
-    tools/skew_sweep.py / SCALE.md section 7d.
+    tools/skew_sweep.py (historical: since deleted) / SCALE.md section 7d.
     """
     from iot_data_pipeline_spark.operators.dedup import (
         lsh_candidate_pairs,

@@ -1169,17 +1169,21 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     The parsed frame is cached: Spark refuses to answer queries that
     reference only the internal corrupt-record column of a raw JSON scan
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the cache
-    also makes the one-pass parse serve both output frames.
+    also makes the one-pass parse serve both output frames. The cache is
+    registered with :mod:`iot_data_pipeline_spark.transient`; a caller
+    that owns its cache splits with :func:`split_cached` instead.
     """
-    # transient (round-15): registered so batch drivers can unpersist
-    # after the consuming query's action -- a bare .cache() here pinned
-    # one CacheManager entry per corrupt-split read for the session's
-    # lifetime (guide section 5). The cache itself stays mandatory (see
-    # the docstring paragraph above).
     from iot_data_pipeline_spark.transient import transient_persist
 
-    df = transient_persist(df)
-    data_cols = [c for c in df.columns if c != CORRUPT_COL]
+    return split_cached(transient_persist(df))
+
+
+def split_cached(df: DataFrame, keep: str | None = None) -> tuple[DataFrame, DataFrame]:
+    """:func:`split_corrupt`'s split of a PERMISSIVE-read frame the caller
+    has already cached. ``keep`` names a routing column carried last on
+    both channels and left out of the all-NULL test."""
+    data_cols = [c for c in df.columns if c not in (CORRUPT_COL, keep)]
+    kept = [keep] if keep else []
     all_null = F.lit(True)
     for c in data_cols:
         all_null = all_null & F.col(c).isNull()
@@ -1195,9 +1199,10 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.coalesce(
             F.col(CORRUPT_COL), F.to_json(F.struct(*data_cols))
-        ).alias("raw_line")
+        ).alias("raw_line"),
+        *kept,
     )
-    good = df.filter(F.col(CORRUPT_COL).isNull() & ~all_null).select(*data_cols)
+    good = df.filter(F.col(CORRUPT_COL).isNull() & ~all_null).select(*data_cols, *kept)
     return good, bad
 
 

@@ -32,6 +32,9 @@ Scale notes:
   written with dynamic partition overwrite: a batch replayed after a
   crash between its writes and its checkpoint commit replaces its own
   ``source_file=`` partitions instead of appending its rows twice.
+- both channels, the zone and its ``_dead_letter``, get a 0-row schema
+  partition at stream start, so each is readable before its first row
+  and a micro-batch writes both without first probing for corrupt rows.
 - the dim contract: a ``dim_location`` that reads a data source (files,
   tables) is read again in every micro-batch, so a dim updated between
   batches enriches later records with the new values. A dim that reads
@@ -49,18 +52,20 @@ Scale notes:
 from __future__ import annotations
 
 import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from iot_data_pipeline_spark.pipeline import PipelineConfig, transform_sensor
-from iot_data_pipeline_spark.sources.readers import (
-    CORRUPT_COL,
-    SENSOR_SCHEMA,
-    split_corrupt,
+from iot_data_pipeline_spark.pipeline import (
+    ROUTE_COL,
+    PipelineConfig,
+    _process_sensor_frame,
+    transform_sensor,
 )
+from iot_data_pipeline_spark.sources.readers import CORRUPT_COL, SENSOR_SCHEMA, split_cached
 
 
 def read_sensor_stream(
@@ -100,7 +105,7 @@ def read_sensor_stream(
     segment = F.element_at(F.split(F.input_file_name(), "/"), -1)
     plus_safe = F.regexp_replace(segment, r"\+", "%2B")
     return reader.json(raw_dir).withColumn(
-        "_source_file", F.coalesce(F.try_url_decode(plus_safe), segment)
+        ROUTE_COL, F.coalesce(F.try_url_decode(plus_safe), segment)
     )
 
 
@@ -116,8 +121,6 @@ def _batch_source_files(
     batch 9 of a 12-file burst, silently skipping the vanished-file
     guard on exactly the compaction batches). Empty when no log entry
     exists under either name."""
-    import json
-
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     root = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/sources")
@@ -137,24 +140,33 @@ def _batch_source_files(
             compacted = True
             if not fs.exists(entry):
                 continue
-        stream = fs.open(entry)
+        for rec in _log_records(jvm, fs, entry):
+            if not compacted or rec.get("batchId") == batch_id:
+                out.append(rec["path"])  # compact files carry the whole history
+    return out
+
+
+def _log_records(jvm, fs, entry) -> list[dict]:
+    """The file entries of one checkpointed source-log file: a ``v1``
+    header, then one JSON object per line carrying at least ``path``."""
+    import json
+
+    stream = fs.open(entry)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    out = []
+    for line in text.splitlines():
+        line = line.strip()
+        if not line or line.startswith("v"):
+            continue
         try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        for line in text.splitlines():
-            line = line.strip()
-            if not line or line.startswith("v"):
-                continue
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            if not (isinstance(rec, dict) and rec.get("path")):
-                continue
-            if compacted and rec.get("batchId") != batch_id:
-                continue  # compact files carry the whole history
-            out.append(rec["path"])
+            rec = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(rec, dict) and rec.get("path"):
+            out.append(rec)
     return out
 
 
@@ -180,12 +192,62 @@ def _log_uri_to_path(jvm, uri: str):
 
 def _decoded_basename(uri_path: str) -> str:
     """The decoded basename of a checkpoint-log URI path -- the exact
-    twin of the ``_source_file`` derivation in
+    twin of the ``source_file`` derivation in
     :func:`read_sensor_stream` (percent-decoding only: '+' stays
     literal, matching the %2B re-escape there)."""
     from urllib.parse import unquote
 
     return unquote(uri_path.rsplit("/", 1)[-1])
+
+
+def _raise_if_files_vanished(
+    spark: SparkSession, checkpoint_dir: str, batch_id: int, seen: set[str]
+) -> None:
+    """Vanished-file guard (round-13 probe, measured as SILENT loss): the
+    file source tolerates a listed file being deleted before its batch
+    reads it (ignoreMissingFiles is forced internally to support
+    cleanSource archiving), so the batch commits EMPTY, the checkpoint
+    marks the file processed, and its rows are gone forever with a clean
+    exit. ``seen`` holds the routing keys of the rows the batch read; a
+    file the checkpoint log lists for ``batch_id`` that contributed no
+    row AND no longer exists fails the batch loudly. A legal empty file
+    still exists; a file deleted after the read has rows in ``seen``, so
+    a normal batch probes no file at all."""
+    lost = []
+    for uri in _batch_source_files(spark, checkpoint_dir, batch_id):
+        if _decoded_basename(uri) not in seen:
+            p = _log_uri_to_path(spark._jvm, uri)
+            if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+                lost.append(uri)
+    if lost:
+        raise RuntimeError(
+            f"source file(s) vanished mid-burst before batch {batch_id} could read "
+            f"them -- their rows are NOT in the output and the checkpoint would mark "
+            f"them processed: {lost}. The raw zone must stay immutable until a burst "
+            "drains (delete/archive only between runs)."
+        )
+
+
+def _overwrite_partitions(path: str) -> Callable[[DataFrame], None]:
+    """Sink writing a frame's ``source_file=`` partitions under ``path``
+    with dynamic partition overwrite, not append: a batch replayed after
+    a crash between its writes and its checkpoint commit replaces exactly
+    its own partitions, so every row lands once (a raw file belongs to
+    exactly one batch)."""
+
+    def write(df: DataFrame) -> None:
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(ROUTE_COL)
+            .parquet(path)
+        )
+
+    return write
+
+
+def _stamp_ingest_time(bad: DataFrame) -> DataFrame:
+    return bad.withColumn("_ingest_ts", F.current_timestamp())
 
 
 def detect_replaced_source_files(
@@ -215,8 +277,6 @@ def detect_replaced_source_files(
     fs = root.getFileSystem(conf)
     if not fs.exists(root):
         return []
-    import json
-
     for src_status in fs.listStatus(root):
         # A `.compact` entry carries the ENTIRE history up to its batch,
         # so the audit only needs the LATEST compact plus the plain
@@ -245,28 +305,10 @@ def detect_replaced_source_files(
             ):
                 keep.append(n)
         for name in keep:
-            entry_path = jvm.org.apache.hadoop.fs.Path(
-                src_status.getPath(), name
-            )
-            stream = fs.open(entry_path)
-            try:
-                text = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            for line in text.splitlines():
-                line = line.strip()
-                if not line or line.startswith("v"):
-                    continue
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                if isinstance(rec, dict) and rec.get("path"):
-                    ts = int(rec.get("timestamp", 0))
-                    p = rec["path"]
-                    recorded[p] = max(ts, recorded.get(p, 0))
+            entry = jvm.org.apache.hadoop.fs.Path(src_status.getPath(), name)
+            for rec in _log_records(jvm, fs, entry):
+                p = rec["path"]
+                recorded[p] = max(int(rec.get("timestamp", 0)), recorded.get(p, 0))
     if not recorded:
         return []
     replaced = []
@@ -355,9 +397,10 @@ def start_sensor_ingest(
 ) -> StreamingQuery:
     """Start the streaming sensor pipeline; returns the StreamingQuery.
 
-    Each micro-batch applies the exact batch transform (same code path as
-    ``run_batch_pipeline`` -- streaming/batch parity by construction) and
-    writes parquet partitioned by source file; corrupt rows go to
+    Each micro-batch runs ``run_batch_pipeline``'s own body (same split,
+    same transform): one pass that caches the batch and aggregates it
+    (counts and the source files seen), the vanished-file guard, then two
+    writes, parquet partitioned by source file and the corrupt rows to
     ``<out_dir>/_dead_letter`` keyed the same way. When ``dim_location``
     is given, every micro-batch broadcast-joins the static dim (stream-
     static enrichment, reference README.md:13): the dim never shuffles
@@ -376,28 +419,26 @@ def start_sensor_ingest(
         spark, raw_dir, max_files_per_trigger=max_files_per_trigger
     )
 
-    # Seed the processed zone's schema before the first micro-batch: a
+    # Seed both channels' schemas before the first micro-batch: a
     # drained-empty stream (no raw files, or all-corrupt input) would
     # otherwise leave an unreadable zone -- partitioned writes of 0 rows
     # emit no files -- and every downstream read_parquet(out_dir) dies on
-    # schema inference. The seed is the exact transform output schema
+    # schema inference. Each seed is the exact channel output schema,
     # computed on a 0-row frame (no data touched).
     from iot_data_pipeline_spark.sources.matview import ensure_plain_zone
     from iot_data_pipeline_spark.sources.sinks import seed_zone_schema
 
     ensure_plain_zone(spark, out_dir, "start_sensor_ingest")
-    empty_good = spark.createDataFrame(
-        [],
-        T.StructType(
-            SENSOR_SCHEMA.fields
-            + [T.StructField("source_file", T.StringType())]
-        ),
+    dead_letter = f"{out_dir}/_dead_letter"
+    empty_good, empty_bad = split_cached(
+        spark.createDataFrame([], stream.schema), keep=ROUTE_COL
     )
     seed_zone_schema(
-        transform_sensor(empty_good, config, dim_location),
-        out_dir,
-        "source_file",
+        transform_sensor(empty_good, config, dim_location), out_dir, ROUTE_COL
     )
+    seed_zone_schema(_stamp_ingest_time(empty_bad), dead_letter, ROUTE_COL)
+    write_good = _overwrite_partitions(out_dir)
+    write_dead = _overwrite_partitions(dead_letter)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Re-check the zone layout EVERY batch (round-14 probe): the
@@ -406,107 +447,22 @@ def start_sensor_ingest(
         # goes to the zone root where pointer-resolving readers never
         # look, so every subsequent batch would be silently invisible.
         # One tiny pointer probe per batch buys a loud failure instead;
-        # it runs before any write, so the failed batch never commits
-        # and retries stay clean.
+        # it runs before the read and any write, so the failed batch
+        # never commits and retries stay clean.
         ensure_plain_zone(spark, out_dir, "start_sensor_ingest micro-batch")
-        # Like sources.readers.split_corrupt, but keeping the per-file
-        # routing column on both channels.
-        source = F.col("_source_file")
-        parent = batch_df.cache()
-        # Materialize the cache NOW (round-15, advisor find): the
-        # vanished-file guard below probes source-file existence, and
-        # with a lazy cache those probes ran before any Spark job had
-        # actually READ the files -- a file deleted after the probe but
-        # before the write's read was silently tolerated
-        # (ignoreMissingFiles is forced on) and its rows lost. Counting
-        # the cached frame completes every source read first, so a file
-        # deleted afterwards still has its rows in the cache; the scan
-        # is not extra work, it is the same read the output write would
-        # have paid (which now hits the cache instead).
-        parent.count()
-        data_cols = [c for c in parent.columns if c not in (CORRUPT_COL, "_source_file")]
-        all_null = F.lit(True)
-        for c in data_cols:
-            all_null = all_null & F.col(c).isNull()
-        good = parent.filter(F.col(CORRUPT_COL).isNull() & ~all_null).select(
-            *data_cols, source.alias("source_file")
+        # The guard runs AFTER the body's cache pass has read every file
+        # into the cache (round 15: a guard ahead of the read let a file
+        # deleted in between lose its rows) and BEFORE any write (round
+        # 14: rows written by a batch that then failed were re-appended
+        # by every retry). A failed batch writes nothing.
+        _process_sensor_frame(
+            batch_df,
+            config,
+            dim_location,
+            write_good,
+            lambda bad: write_dead(_stamp_ingest_time(bad)),
+            lambda seen: _raise_if_files_vanished(spark, checkpoint_dir, batch_id, seen),
         )
-        bad = parent.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("raw_line"), source.alias("source_file")
-        )
-        # Vanished-file guard (round-13 probe, measured as SILENT loss):
-        # the file source tolerates a listed file being deleted before
-        # its batch reads it (ignoreMissingFiles is forced internally to
-        # support cleanSource archiving), so the batch commits EMPTY,
-        # the checkpoint marks the file processed, and its rows are
-        # gone forever with a clean exit. Cross-check the checkpointed
-        # file list for THIS batch against the rows that survived: a
-        # listed file contributing zero rows AND no longer existing
-        # fails the query loudly (a legal empty file still exists; a
-        # file deleted AFTER a successful read has surviving rows).
-        # The guard runs BEFORE any output write (round-14, advisor
-        # find): raising after the appends left rows in the processed
-        # zone with the batch uncommitted, so every restart-retry of the
-        # same terminal condition re-appended the surviving files' rows
-        # -- duplicates compounding per retry. Guard-first means a
-        # failed batch writes NOTHING and a retry is idempotent-clean.
-        listed = _batch_source_files(spark, checkpoint_dir, batch_id)
-        if listed:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            missing = []
-            for uri in listed:
-                p = _log_uri_to_path(jvm, uri)
-                if not p.getFileSystem(conf).exists(p):
-                    missing.append(uri)
-            # normal bursts (every listed file still present) pay only
-            # the existence probes -- no extra Spark job; the row-level
-            # check runs only when a file actually vanished, to
-            # distinguish deleted-after-read (rows survived) from
-            # deleted-before-read (rows lost)
-            lost = []
-            if missing:
-                seen = {
-                    r[0]
-                    for r in parent.select("_source_file")
-                    .distinct()
-                    .collect()
-                }
-                lost = [
-                    uri
-                    for uri in missing
-                    if _decoded_basename(uri) not in seen
-                ]
-            if lost:
-                parent.unpersist()
-                raise RuntimeError(
-                    f"source file(s) vanished mid-burst before batch "
-                    f"{batch_id} could read them -- their rows are NOT "
-                    f"in the output and the checkpoint would mark them "
-                    f"processed: {lost}. The raw zone must stay "
-                    "immutable until a burst drains (delete/archive "
-                    "only between runs)."
-                )
-        # Dynamic partition overwrite, not append: a batch replayed after
-        # a crash between these writes and the checkpoint commit replaces
-        # exactly its own source_file= partitions, so every row lands
-        # once (a raw file belongs to exactly one batch).
-        processed = transform_sensor(good, config, dim_location)
-        (
-            processed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("source_file")
-            .parquet(out_dir)
-        )
-        if bad.limit(1).count() > 0:
-            (
-                bad.withColumn("_ingest_ts", F.current_timestamp())
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("source_file")
-                .parquet(f"{out_dir}/_dead_letter")
-            )
-        parent.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

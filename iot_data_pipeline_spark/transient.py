@@ -13,7 +13,12 @@ The operators cannot unpersist themselves: the cache must stay alive
 until the *caller* has executed the returned DataFrame. So they register
 here, and batch drivers call :func:`release_transient_caches` after each
 query's action completes. Frames NOT registered here (e.g. the bench's
-deliberate session-shared pair-graph cache) are untouched.
+deliberate session-shared pair-graph cache) are untouched. Code that
+runs its own actions owns its cache instead: the sensor ETL body
+(``pipeline._process_sensor_frame``, behind both ``run_batch_pipeline``
+and the stream's micro-batch) persists its parse and unpersists it when
+it ends, so of the JSONL path only ``readers.split_corrupt`` still
+registers one here.
 
 ``unpersist(blocking=False)`` keeps the release itself ~free.
 

@@ -1020,8 +1020,8 @@ _DUP_HEAVY_QUERIES = list(_SHORT_DOC_QUERIES)
 def dup_heavy_doc_dir(spark, tmp_path_factory):
     """A corpus that is MOSTLY one document: 12 of 20 docs share one text,
     4 share another, 4 unique -- the duplicate-cluster shape of a real
-    crawl, as a correctness probe (tools/skew_sweep.py measures the same
-    shape for wall time). Every dedup/near-dup/fingerprint query must
+    crawl, as a correctness probe (tools/skew_sweep.py, historical: since
+    deleted, measured the same shape for wall time). Every dedup/near-dup/fingerprint query must
     agree with DuckDB on the blown-up pair/cluster enumeration, and the
     statistics queries must not let the dominant document distort
     per-doc aggregates."""

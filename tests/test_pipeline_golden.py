@@ -123,3 +123,28 @@ def test_empty_input(spark, tmp_path):
     """Empty output is legal (reference app/app.py:69-70)."""
     good, bad, rows = _run(spark, tmp_path, [""])
     assert (good, bad, rows) == (0, 0, [])
+
+
+@pytest.mark.parametrize("with_dead_letter", [False, True])
+def test_batch_run_releases_its_parse(spark, tmp_path, with_dead_letter):
+    """``run_batch_pipeline`` owns the cache it parses into: the context's
+    persistent RDDs are the same after the run as before it, whether or
+    not a dead-letter channel is written (the parse used to stay pinned
+    for the session's lifetime, one cached input per call)."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    kwargs = {"dead_letter_path": str(tmp_path / "dlq")} if with_dead_letter else {}
+    good, bad, _ = _run(spark, tmp_path, DUMMY_LINES, **kwargs)
+    assert (good, bad) == (4, 1)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_clean_input_leaves_readable_empty_dead_letter(spark, tmp_path):
+    """No corrupt line, dead letter configured: the channel still exists
+    as a readable 0-row dataset with the dead-letter schema."""
+    dlq = tmp_path / "dlq"
+    good, bad, _ = _run(spark, tmp_path, README_LINES, dead_letter_path=str(dlq))
+    assert (good, bad) == (5, 0)
+    dead = spark.read.parquet(str(dlq))
+    assert dead.count() == 0
+    assert dead.columns == ["raw_line", "_ingest_ts"]

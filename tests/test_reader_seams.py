@@ -324,7 +324,8 @@ def _split_lineitem(sf_dir: str, root: str, statsless: tuple[int, ...] = (),
 
 
 def test_stats_absent_mix_prunes_around(spark, sf_dir, tmp_path):
-    """Round-11 probe band (tools/stats_absence_probe.py): files written
+    """Round-11 probe band (tools/stats_absence_probe.py, historical: since
+    deleted): files written
     with statistics disabled are KEPT unconditionally while the
     stats-bearing out-of-range files around them still prune, and the
     bounded result matches the post-filter form exactly."""

@@ -147,6 +147,68 @@ def test_per_file_routing_and_dead_letter(spark, raw_dir, tmp_path):
     assert rows[0]["source_file"] == "b.jsonl"
 
 
+def test_one_batch_runs_one_pass_the_guard_and_two_writes(
+    spark, raw_dir, tmp_path, monkeypatch
+):
+    """A 2-file batch with a corrupt line runs at most 4 Spark jobs under
+    the query's job group (one pass that caches and counts the batch, the
+    zone write, the dead-letter write; no separate count, aggregate or
+    dead-letter probe; 7 before), and the vanished-file guard resolves no
+    file path: every listed file contributed rows, so none needs an
+    existence probe."""
+    from iot_data_pipeline_spark.streaming import ingest as ingest_mod
+
+    queries = []
+    real_start = ingest_mod.start_sensor_ingest
+
+    def start(*args, **kwargs):
+        queries.append(real_start(*args, **kwargs))
+        return queries[-1]
+
+    resolved = []
+    real_resolve = ingest_mod._log_uri_to_path
+
+    def resolve(jvm, uri):
+        resolved.append(uri)
+        return real_resolve(jvm, uri)
+
+    monkeypatch.setattr(ingest_mod, "start_sensor_ingest", start)
+    monkeypatch.setattr(ingest_mod, "_log_uri_to_path", resolve)
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    run_ingest_available_now(
+        spark,
+        str(raw_dir),
+        str(out),
+        str(ckpt),
+        config=PipelineConfig(fixed_clock=CLOCK),
+        timeout_s=120,
+        on_replaced="ignore",  # the audit is not part of the batch
+    )
+    offsets = [p.name for p in (ckpt / "offsets").iterdir() if not p.name.startswith(".")]
+    assert offsets == ["0"]  # both files in one micro-batch
+    assert resolved == []
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(queries[0].runId))
+    assert 0 < len(jobs) <= 4, len(jobs)
+    assert spark.read.parquet(str(out)).count() == 5
+    assert spark.read.parquet(str(out / "_dead_letter")).count() == 1
+
+
+def test_clean_batch_leaves_readable_empty_dead_letter(spark, tmp_path):
+    """A batch with no corrupt row still leaves ``_dead_letter`` readable
+    (0 rows, the channel's schema), and neither channel keeps a
+    dynamic-overwrite staging directory behind."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_file(raw, "a.jsonl", _records(1, 3, 10.0))
+    out, _ = _run(spark, raw, tmp_path)
+    dead = spark.read.parquet(str(out / "_dead_letter"))
+    assert dead.count() == 0
+    assert sorted(dead.columns) == ["_ingest_ts", "raw_line", "source_file"]
+    assert spark.read.parquet(str(out)).count() == 3
+    for d in (out, out / "_dead_letter"):
+        assert not [p.name for p in d.iterdir() if p.name.startswith(".spark-staging")]
+
+
 def test_routing_decodes_special_character_basenames(spark, tmp_path):
     """Round-11 probe: input_file_name() returns the file's URI, so a
     raw file "data file u.jsonl" routed as "data%20file%20u.jsonl". The
@@ -398,8 +460,7 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
     re-running drains its rows exactly once."""
     import os as _os
 
-    from iot_data_pipeline_spark import streaming as _streaming_pkg  # noqa: F401
-    from iot_data_pipeline_spark.streaming import ingest as ingest_mod
+    from iot_data_pipeline_spark import pipeline as pipeline_mod
 
     raw = tmp_path / "raw"
     raw.mkdir()
@@ -410,7 +471,7 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-    real_transform = ingest_mod.transform_sensor
+    real_transform = pipeline_mod.transform_sensor
     state = {"deleted": False}
 
     def delete_f2_then_transform(df, config, dim=None):
@@ -425,7 +486,7 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
         return real_transform(df, config, dim)
 
     monkeypatch.setattr(
-        ingest_mod, "transform_sensor", delete_f2_then_transform
+        pipeline_mod, "transform_sensor", delete_f2_then_transform
     )
     with pytest.raises(Exception, match="vanished mid-burst"):
         run_ingest_available_now(
@@ -436,7 +497,7 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
             config=PipelineConfig(fixed_clock=CLOCK),
             max_files_per_trigger=1,
         )
-    monkeypatch.setattr(ingest_mod, "transform_sensor", real_transform)
+    monkeypatch.setattr(pipeline_mod, "transform_sensor", real_transform)
     # batch 1 never committed: f1's rows are out, f2's are recoverable
     assert spark.read.parquet(out).count() == 2
     assert not _os.path.exists(_os.path.join(ckpt, "commits", "1"))
@@ -558,7 +619,7 @@ def test_deletion_after_read_tolerated_without_loss(
     state = {"deleted": False}
 
     def delete_f2_then_list(spark_, ckpt_, batch_id):
-        # runs after parent.count() materialized every source read: the
+        # runs after the body's cache pass read every source file: the
         # deletion lands in the now-closed probe-vs-read window
         if not state["deleted"]:
             _os.remove(raw / "f2.jsonl")
@@ -593,8 +654,8 @@ def test_atomic_publish_landing_mid_burst_fails_loud(
     invisible rows, measured). The guard now re-runs per micro-batch,
     BEFORE any write: the first batch after the publish fails loud and
     commits nothing."""
+    from iot_data_pipeline_spark import pipeline as pipeline_mod
     from iot_data_pipeline_spark.sources.sinks import write_parquet
-    from iot_data_pipeline_spark.streaming import ingest as ingest_mod
 
     raw = tmp_path / "raw"
     raw.mkdir()
@@ -605,7 +666,7 @@ def test_atomic_publish_landing_mid_burst_fails_loud(
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-    real_transform = ingest_mod.transform_sensor
+    real_transform = pipeline_mod.transform_sensor
     state = {"published": False}
 
     def publish_then_transform(df, config, dim=None):
@@ -620,7 +681,7 @@ def test_atomic_publish_landing_mid_burst_fails_loud(
             )
         return real_transform(df, config, dim)
 
-    monkeypatch.setattr(ingest_mod, "transform_sensor", publish_then_transform)
+    monkeypatch.setattr(pipeline_mod, "transform_sensor", publish_then_transform)
     with pytest.raises(Exception, match="atomically-published"):
         run_ingest_available_now(
             spark,
