@@ -317,8 +317,8 @@ def _ts_file_survives(
 
 
 def _md_survives(md, ops: list[tuple[str, str, int]]) -> bool:
-    """Keep-decision from an already-open parquet footer (shared by the
-    pruner and the evolving reader's single fingerprint+prune pass).
+    """Keep-decision for :func:`_ts_file_survives` from an already-open
+    parquet footer.
 
     0-row row groups (a streaming writer's empty-batch flush, a
     committed-but-empty micro-batch) are skipped EXACTLY, not kept
@@ -604,20 +604,17 @@ def _read_table_root(spark: SparkSession, src: str) -> DataFrame:
     return _infer_table(spark, src, key)
 
 
-def _read_explicit_files(
-    spark: SparkSession, src: str, files: list[str], *, merge_schema: bool = False
-) -> DataFrame:
+def _read_explicit_files(spark: SparkSession, src: str, files: list[str]) -> DataFrame:
     """Read an EXPLICIT file subset of table ``src`` with partition
     columns typed and canonicalized exactly as the WHOLE-table read
     types them.
 
     Why (round-12 probe, measured as silent corruption): Spark infers a
     partition column's TYPE from the partition values present in the
-    file index. An explicit subset (a bounds-pruned read, or one
-    generation of an evolving lake) re-runs that inference over ONLY
-    the subset's values, so a table whose spellings span types
-    (``batch=01`` next to ``batch=abc``) answers differently bounded vs
-    unbounded: the full read infers STRING and keeps ``'01'``, the
+    file index. An explicit subset (a bounds-pruned read) re-runs that
+    inference over ONLY the subset's values, so a table whose spellings
+    span types (``batch=01`` next to ``batch=abc``) answers differently
+    bounded vs unbounded: the full read infers STRING and keeps ``'01'``, the
     pruned read infers INT and returns ``1`` -- a different value AND a
     different column type from the same table. Fix: take the
     whole-table partition types from the table's schema cache
@@ -634,8 +631,6 @@ def _read_explicit_files(
     :data:`_INFERENCE_TOGGLE_LOCK` (single-threaded-driver contract for
     foreign threads, see the lock's note)."""
     reader = spark.read.option("basePath", src)
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
     part_cols = _hive_partition_cols(src, files)  # on RAW paths
     files = [_glob_escape(f) for f in files]  # Spark globs every path
     if not part_cols:
@@ -1272,531 +1267,3 @@ def read_binary_files(
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def read_parquet_evolving(
-    spark: SparkSession,
-    path: str,
-    target_schema: T.StructType,
-    *,
-    bounds: dict[str, tuple] | None = None,
-) -> DataFrame:
-    """Schema-evolution read with contract enforcement: merge the footers
-    of every file generation under ``path`` (``mergeSchema`` -- columns
-    added over time union instead of erroring), then align the result to
-    ``target_schema``: missing columns materialize as typed NULLs,
-    columns outside the contract are dropped, and every kept column is
-    cast to the contract type.
-
-    This is the standard "old files lack the new column / stray writer
-    added an extra one" read for a long-lived data lake. Scale notes:
-    mergeSchema unions FOOTERS (metadata, driver-side), not data; the
-    NULL backfill and casts are per-row projections in the same codegen
-    span as the scan, and column pruning still reaches parquet for
-    contract columns.
-
-    VALUE-TYPE evolution (round-10 probe, tools/schema_evolution_probe.py):
-    Spark's footer merge refuses any type change -- an int32-narrowed
-    generation later widened back, a TIMESTAMP(NANOS) generation (which
-    ``nanosAsLong`` surfaces as BIGINT), or a DECIMAL-retyped money
-    column all raise ``CANNOT_MERGE_SCHEMAS`` and the lake becomes
-    unreadable, even though every generation individually satisfies the
-    contract after a cast. On that error this read falls back to
-    per-schema-group scans: group the files by footer schema (a
-    metadata-only pass), read each group homogeneously, align each to
-    the contract, and ``unionByName`` -- ONE scan per generation schema,
-    not per file, so the plan stays small and filters/pruning still push
-    into every branch (Catalyst pushes predicates through Union). The
-    footer pass also recovers what the merged read cannot see: a
-    parquet TIMESTAMP(NANOS) column arrives in Spark as bare BIGINT, but
-    the arrow footer says ``timestamp[ns]``, so the fallback converts
-    nanos -> timestamp exactly (integer div) instead of misreading the
-    longs as seconds. Since round 11 the MERGED path runs the same
-    detection (round-10 ADVICE: a HOMOGENEOUS nanos lake merges fine --
-    every footer surfaces the same BIGINT -- and was still seconds-cast):
-    any contract timestamp column that merged as BIGINT gets a footer
-    probe; all-``timestamp[ns]`` converts exactly, a ns/int64 MIX across
-    files raises (per-file semantics differ -- unrecoverable ambiguity,
-    fail loud over guessing).
-
-    ``bounds`` -- optional, the :func:`read_table` spec, applied on the
-    RAW columns of every generation BEFORE contract alignment so the
-    predicates reach ``PushedFilters`` in each Union branch (a filter
-    above the alignment casts would not translate). In the
-    schema-group fallback the same bound additionally FILE-prunes each
-    generation from footer stats on the one metadata pass the grouping
-    already makes (UTC-equivalent sessions; str/datetime/date literals
-    via :func:`_bound_to_micros` -- the
-    :func:`_prune_files_for_ts_bounds` contract); a generation written
-    BEFORE the bounded column existed contributes nothing (its rows
-    would be NULL-backfilled, and a range predicate on NULL keeps no
-    row), enforced post-alignment.
-
-    Since round 11 both paths route listing and footer reads through
-    ``pyarrow.fs``: object-store lakes (``s3://``...) get the identical
-    evolution/bounds treatment; Spark-only schemes pyarrow cannot
-    resolve raise (fallback) or fail loud on ambiguity (merged path)
-    rather than silently corrupting.
-    """
-    preds_by_col = _parse_bounds(bounds)
-    # Atomically-published zones resolve to their current snapshot dir
-    # first (same boundary move as read_table): evolution generations
-    # live INSIDE a snapshot, not across snapshots of the same zone.
-    from iot_data_pipeline_spark.sources.matview import resolve_snapshot_dir
-
-    resolved = resolve_snapshot_dir(spark, path)
-    if resolved is not None:
-        path = resolved
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception as e:  # noqa: BLE001
-        if "CANNOT_MERGE_SCHEMAS" not in str(e):
-            raise
-        return _read_evolving_by_schema_group(
-            spark, path, target_schema, preds_by_col
-        )
-    nanos = _merged_bigint_ts_nanos_cols(spark, path, df, target_schema)
-    # FILE-level pruning on the merged path too: an evolving lake is
-    # multi-file by definition, and on NTZ/NANOS encodings the pushed
-    # predicates never become row-group filters (the round-10
-    # measurement), so the footer pass is the only scan pruning a
-    # bounded merged read gets. Same conservative gates as read_table's
-    # (_prune_files_for_ts_bounds); the re-read keeps mergeSchema and
-    # basePath so evolution and partition columns both survive.
-    ts_fields = {
-        f.name.lower()
-        for f in target_schema.fields
-        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-    }
-    ts_preds = {
-        c.lower(): p for c, p in preds_by_col.items() if c.lower() in ts_fields
-    }
-    if ts_preds:
-        pruned = _prune_files_for_ts_bounds(spark, path, "<evolving>", ts_preds)
-        if pruned:
-            df = _read_explicit_files(spark, path, pruned, merge_schema=True)
-    # Pre/post split (same as the fallback): a bounded column can vanish
-    # from the pruned re-read when every file carrying it was pruned
-    # away -- its surviving rows are contract NULLs, so the predicate
-    # belongs on the aligned column (keeps nothing), not a KeyError.
-    present = {c.lower() for c in df.columns}
-    pre = {c: v for c, v in preds_by_col.items() if c.lower() in present}
-    post = {c: v for c, v in preds_by_col.items() if c.lower() not in present}
-    if pre:
-        df = _apply_bounds(df, pre, nanos_cols=nanos)
-    adf = _align_to_contract(df, target_schema, nanos_cols=nanos)
-    if post:
-        adf = _apply_bounds(adf, post)
-    return adf
-
-
-def _footer_probes(
-    spark: SparkSession, fs, files: list[str], ops: list[tuple[str, str, int]]
-) -> list[tuple[str, tuple[tuple[str, str], ...], bool]]:
-    """One metadata-only pass over every footer: ``(path, arrow-type
-    fingerprint, survives-bounds)`` per file. Distributed over the
-    executors above 64 files (pyarrow filesystems are picklable); footer
-    read errors PROPAGATE here -- unlike the best-effort pruner, the
-    evolving reader is about to read these files, so an unreadable
-    footer is the job's failure, not a keep-decision."""
-
-    def probe(
-        p: str,
-    ) -> tuple[str, tuple[tuple[str, str], ...], tuple[tuple[str, str], ...], bool]:
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(p, filesystem=fs)
-        types = tuple((f.name, str(f.type)) for f in pf.schema_arrow)
-        # dotted-leaf-path -> arrow type: the nested nanos-as-bigint
-        # disambiguation (nanosAsLong applies inside structs too)
-        ptypes = tuple(sorted(_arrow_path_types(pf.schema_arrow).items()))
-        survives = _md_survives(pf.metadata, ops) if ops else True
-        return p, types, ptypes, survives
-
-    if len(files) > 64:
-        return (
-            spark.sparkContext.parallelize(files, 32).map(probe).collect()
-        )
-    return [probe(p) for p in files]
-
-
-def _merged_bigint_ts_nanos_cols(
-    spark: SparkSession, path: str, df: DataFrame, target_schema: T.StructType
-) -> frozenset[str]:
-    """Round-10 ADVICE fix for the merged (mergeSchema-success) path: a
-    homogeneous TIMESTAMP(NANOS) lake surfaces every footer as the SAME
-    BIGINT under ``nanosAsLong``, so the merge succeeds -- and the plain
-    contract cast then misreads nanos as SECONDS (silent near-epoch
-    corruption; ANSI only catches modern values by overflow). Detect:
-    for each contract timestamp POSITION whose merged dtype is bigint --
-    top-level columns AND nested struct fields / array elements / map
-    values (round 12: ``nanosAsLong`` applies inside structs too, and
-    the positional struct cast misread nested nanos the same way) --
-    probe the footers. All ``timestamp[ns]`` -> exact integer-div
-    conversion; a ns/int64 MIX -> ValueError (per-file semantics differ,
-    no cast is right for both); all plain int64 -> the documented
-    seconds-cast contract stands. Zero cost for lakes without a
-    bigint-surfaced timestamp position (the common case: no footer pass
-    runs at all). Returns DOTTED lowercase paths (``ts``, ``meta.ts``,
-    ``events[]``)."""
-    src_fields = {f.name.lower(): f.dataType for f in df.schema.fields}
-    suspects: list[str] = []
-    for f in target_schema.fields:
-        st = src_fields.get(f.name.lower())
-        if st is not None:
-            suspects += _contract_bigint_ts_paths(
-                f.dataType, st, f.name.lower()
-            )
-    if not suspects:
-        return frozenset()
-    fs, root = _pafs_for(path)
-    files = _list_parquet_files(fs, root) if fs is not None else None
-    if not files:
-        raise NotImplementedError(
-            f"contract timestamp position(s) {suspects} surfaced as BIGINT "
-            f"but the footers of {path!r} are not reachable via pyarrow.fs "
-            "to disambiguate nanos vs plain int64; refusing the silent "
-            "seconds-cast"
-        )
-    probes = _footer_probes(spark, fs, files, ops=[])
-    nanos: set[str] = set()
-    for p in suspects:
-        seen = {
-            t
-            for _f, _types, ptypes, _s in probes
-            for pp, t in ptypes
-            if pp == p
-        }
-        ns = {t for t in seen if t.startswith("timestamp[ns")}
-        others = seen - ns
-        if ns and others:
-            raise ValueError(
-                f"position {p!r} under {path!r} is timestamp[ns] in some "
-                f"files and {sorted(others)} in others; per-file semantics "
-                "differ -- no single cast is correct, split the lake"
-            )
-        if ns:
-            nanos.add(p)
-    return frozenset(nanos)
-
-
-def _arrow_path_types(schema_arrow) -> dict[str, str]:
-    """Flatten a pyarrow schema to ``{dotted lowercase leaf path: arrow
-    type string}``; array elements append ``[]``, map keys/values
-    ``{k}``/``{v}``. The nested twin of the footer fingerprint: the
-    nanos-as-bigint disambiguation needs the FILE's logical type at any
-    depth, because ``nanosAsLong`` applies inside structs too (round-12
-    probe: ``struct<ts: timestamp[ns]>`` surfaces as
-    ``struct<ts: bigint>``)."""
-    import pyarrow as pa
-
-    out: dict[str, str] = {}
-
-    def walk(t, pre: str) -> None:
-        if pa.types.is_struct(t):
-            for f in t:
-                walk(f.type, f"{pre}.{f.name.lower()}" if pre else f.name.lower())
-        elif pa.types.is_list(t) or pa.types.is_large_list(t):
-            walk(t.value_type, pre + "[]")
-        elif pa.types.is_map(t):
-            walk(t.key_type, pre + "{k}")
-            walk(t.item_type, pre + "{v}")
-        else:
-            out[pre] = str(t)
-
-    for f in schema_arrow:
-        walk(f.type, f.name.lower())
-    return out
-
-
-def _contract_bigint_ts_paths(
-    dst_t: T.DataType, src_t: T.DataType | None, prefix: str
-) -> list[str]:
-    """Dotted paths where the contract wants TIMESTAMP/NTZ but the
-    source surfaces BIGINT -- the positions whose footer logical type
-    (nanos vs plain int64) decides the conversion."""
-    if isinstance(dst_t, (T.TimestampType, T.TimestampNTZType)):
-        return [prefix] if isinstance(src_t, T.LongType) else []
-    if isinstance(dst_t, T.StructType) and isinstance(src_t, T.StructType):
-        src_fields = {f.name.lower(): f.dataType for f in src_t.fields}
-        out: list[str] = []
-        for f in dst_t.fields:
-            sub = src_fields.get(f.name.lower())
-            if sub is not None:
-                out += _contract_bigint_ts_paths(
-                    f.dataType, sub, f"{prefix}.{f.name.lower()}"
-                )
-        return out
-    if isinstance(dst_t, T.ArrayType) and isinstance(src_t, T.ArrayType):
-        return _contract_bigint_ts_paths(
-            dst_t.elementType, src_t.elementType, prefix + "[]"
-        )
-    if isinstance(dst_t, T.MapType) and isinstance(src_t, T.MapType):
-        # keys AND values (round-12 ADVICE: a nanos-backed timestamp map
-        # KEY fell through to the plain positional cast -- the same
-        # silent seconds-misread class, at the key position;
-        # _arrow_path_types already emits '{k}' paths for the footer
-        # probe to match)
-        return _contract_bigint_ts_paths(
-            dst_t.keyType, src_t.keyType, prefix + "{k}"
-        ) + _contract_bigint_ts_paths(
-            dst_t.valueType, src_t.valueType, prefix + "{v}"
-        )
-    return []
-
-
-def _nested_cast(col, src_t, dst_t, nanos_paths: frozenset, path: str):
-    """Cast a source column/element to its contract type, recursing into
-    nested types BY NAME.
-
-    Why not a plain ``.cast`` (the pre-round-12 shape): Spark casts
-    struct-to-struct POSITIONALLY and only when field counts match, so
-    a generation whose struct gained a field made the whole lake
-    unreadable (CAST_WITHOUT_SUGGESTION), a generation with REORDERED
-    struct fields would silently swap values, and a missing nested
-    field has no NULL-backfill path at all -- while parquet itself is
-    a by-name format, and the reader's own top-level alignment is
-    by-name. Struct fields resolve case-insensitively with typed-NULL
-    backfill for contract fields the generation predates; extra source
-    fields drop (contract projection); case-colliding source fields
-    fail loudly (the top-level rule, recursed). ``nanos_paths`` are the
-    dotted positions where BIGINT carries nanos-since-epoch (from the
-    footer's logical types): those convert with integer division at
-    any depth -- the plain cast would read them as SECONDS, the silent
-    near-epoch corruption the merged-path probe measures."""
-    if isinstance(dst_t, (T.TimestampType, T.TimestampNTZType)) and isinstance(
-        src_t, T.LongType
-    ):
-        if path in nanos_paths:
-            return F.timestamp_micros(
-                F.call_function("div", col, F.lit(1000))
-            ).cast(dst_t)
-        return col.cast(dst_t)  # plain int64: the documented seconds cast
-    if isinstance(dst_t, T.StructType) and isinstance(src_t, T.StructType):
-        lower_counts: dict[str, int] = {}
-        for f in src_t.fields:
-            lower_counts[f.name.lower()] = lower_counts.get(f.name.lower(), 0) + 1
-        collisions = sorted(
-            low
-            for low in (f.name.lower() for f in dst_t.fields)
-            if lower_counts.get(low, 0) > 1
-        )
-        if collisions:
-            raise ValueError(
-                f"contract struct field(s) {collisions} at {path!r} match "
-                "multiple source fields differing only by case; refusing "
-                f"to pick one silently (source fields "
-                f"{[f.name for f in src_t.fields]})"
-            )
-        src_fields = {f.name.lower(): f for f in src_t.fields}
-        parts = []
-        for f in dst_t.fields:
-            sf = src_fields.get(f.name.lower())
-            if sf is None:
-                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                parts.append(
-                    _nested_cast(
-                        col.getField(sf.name),
-                        sf.dataType,
-                        f.dataType,
-                        nanos_paths,
-                        f"{path}.{f.name.lower()}",
-                    ).alias(f.name)
-                )
-        # struct() of NULL fields is a non-NULL struct: preserve NULL rows
-        return F.when(col.isNull(), F.lit(None).cast(dst_t)).otherwise(
-            F.struct(*parts)
-        )
-    if isinstance(dst_t, T.ArrayType) and isinstance(src_t, T.ArrayType):
-        if _needs_nested_cast(src_t.elementType, dst_t.elementType, nanos_paths, path + "[]"):
-            return F.transform(
-                col,
-                lambda x: _nested_cast(
-                    x, src_t.elementType, dst_t.elementType, nanos_paths, path + "[]"
-                ),
-            ).cast(dst_t)
-        return col.cast(dst_t)
-    if isinstance(dst_t, T.MapType) and isinstance(src_t, T.MapType):
-        # keys recurse via transform_keys exactly like values (round-12
-        # ADVICE: a struct-typed or nanos-bigint map KEY fell through to
-        # the plain positional cast -- value-swap / seconds-misread at
-        # the key position). Map keys are non-null by construction, so
-        # the struct branch's NULL guard folds away.
-        out = col
-        if _needs_nested_cast(src_t.keyType, dst_t.keyType, nanos_paths, path + "{k}"):
-            out = F.transform_keys(
-                out,
-                lambda k, _v: _nested_cast(
-                    k, src_t.keyType, dst_t.keyType, nanos_paths, path + "{k}"
-                ),
-            )
-        if _needs_nested_cast(src_t.valueType, dst_t.valueType, nanos_paths, path + "{v}"):
-            out = F.transform_values(
-                out,
-                lambda _k, v: _nested_cast(
-                    v, src_t.valueType, dst_t.valueType, nanos_paths, path + "{v}"
-                ),
-            )
-        return out.cast(dst_t)
-    return col.cast(dst_t)
-
-
-def _needs_nested_cast(src_t, dst_t, nanos_paths: frozenset, path: str) -> bool:
-    """True when the plain Spark cast at this position would be wrong:
-    a struct anywhere below (positional cast), or a nanos conversion."""
-    if isinstance(dst_t, T.StructType):
-        return True
-    if isinstance(dst_t, (T.TimestampType, T.TimestampNTZType)) and isinstance(
-        src_t, T.LongType
-    ):
-        return path in nanos_paths
-    if isinstance(dst_t, T.ArrayType) and isinstance(src_t, T.ArrayType):
-        return _needs_nested_cast(
-            src_t.elementType, dst_t.elementType, nanos_paths, path + "[]"
-        )
-    if isinstance(dst_t, T.MapType) and isinstance(src_t, T.MapType):
-        return _needs_nested_cast(
-            src_t.keyType, dst_t.keyType, nanos_paths, path + "{k}"
-        ) or _needs_nested_cast(
-            src_t.valueType, dst_t.valueType, nanos_paths, path + "{v}"
-        )
-    return False
-
-
-def _align_to_contract(
-    df: DataFrame, target_schema: T.StructType, nanos_cols: frozenset[str]
-) -> DataFrame:
-    """Project ``df`` onto the contract: case-insensitive name match,
-    typed-NULL backfill, contract casts recursing into nested types BY
-    NAME (:func:`_nested_cast` -- round 12; the previous whole-column
-    cast was positional on structs and crashed on widened ones);
-    ``nanos_cols`` are dotted lowercase paths of BIGINT
-    nanos-since-epoch positions (top-level column names, or
-    ``meta.ts``/``col[]`` for nested ones) converted with integer
-    division (a plain cast would read them as seconds).
-
-    Source columns that differ only by case ("Id" and "ID", a
-    case-sensitive-session scan of a sloppy writer's footer) and both
-    match a contract field fail LOUDLY here: the dict-build otherwise
-    silently kept whichever column enumerated last (round-11 probe) --
-    the same hazard ``read_table`` already rejects by name at its scan
-    boundary."""
-    lower_counts: dict[str, int] = {}
-    for f in df.schema.fields:
-        lower_counts[f.name.lower()] = lower_counts.get(f.name.lower(), 0) + 1
-    collisions = sorted(
-        low
-        for low in (f.name.lower() for f in target_schema.fields)
-        if lower_counts.get(low, 0) > 1
-    )
-    if collisions:
-        raise ValueError(
-            f"contract column(s) {collisions} match multiple source "
-            "columns differing only by case; refusing to pick one "
-            f"silently (source columns {[f.name for f in df.schema.fields]})"
-        )
-    present = {f.name.lower(): f for f in df.schema.fields}
-    nanos_paths = frozenset(nanos_cols)
-    cols = []
-    for field in target_schema.fields:
-        sf = present.get(field.name.lower())
-        if sf is None:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(
-                _nested_cast(
-                    F.col(sf.name),
-                    sf.dataType,
-                    field.dataType,
-                    nanos_paths,
-                    field.name.lower(),
-                ).alias(field.name)
-            )
-    return df.select(*cols)
-
-
-def _read_evolving_by_schema_group(
-    spark: SparkSession,
-    path: str,
-    target_schema: T.StructType,
-    preds_by_col: dict[str, list] | None = None,
-) -> DataFrame:
-    """CANNOT_MERGE_SCHEMAS fallback: one aligned scan per distinct
-    footer schema, unioned. Footer fingerprinting is distributed over
-    the executors (metadata-only -- pyarrow reads the footer, never row
-    groups); the driver collects one (fingerprint, type-map, survives)
-    row per FILE, bounded state, and groups. Routed through
-    ``pyarrow.fs`` since round 11 (object-store lakes included); each
-    group reads with ``basePath`` so PARTITION columns keep being
-    inferred from the explicit leaf paths (round-10 ADVICE: a
-    partitioned evolving lake silently NULL-backfilled its partition
-    keys). ``preds_by_col`` (parsed bounds) additionally file-prunes on
-    the same footer pass and pushes per-group raw-column predicates."""
-    preds_by_col = preds_by_col or {}
-    fs, root = _pafs_for(path)
-    if fs is None:
-        raise NotImplementedError(
-            "per-schema-group evolving read needs footer access via "
-            f"pyarrow.fs; the scheme of {path!r} is not resolvable"
-        )
-    files = _list_parquet_files(fs, root)
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path!r}")
-    # bounds -> footer keep-ops, under the same contract as
-    # _prune_files_for_ts_bounds: UTC-equivalent session only (the
-    # micros literals parse as UTC wall time), stats-less/missing
-    # columns keep the file.
-    ops: list[tuple[str, str, int]] = []
-    if preds_by_col and _session_tz_is_utc(
-        spark.conf.get("spark.sql.session.timeZone", "")
-    ):
-        for c, preds in preds_by_col.items():
-            for op, value in preds:
-                micros = _bound_to_micros(value)
-                if micros is not None:
-                    ops.append((c.lower(), op, micros))
-    probes = _footer_probes(spark, fs, files, ops)
-    groups: dict[tuple[tuple[str, str], ...], list[str]] = {}
-    group_ptypes: dict[tuple[tuple[str, str], ...], tuple] = {}
-    for p, types, ptypes, survives in probes:
-        groups.setdefault(types, [])
-        group_ptypes[types] = ptypes  # fingerprint-homogeneous per group
-        if survives:
-            groups[types].append(p)
-    aligned = []
-    for types, paths in sorted(groups.items()):
-        if not paths:
-            # every file of this generation provably outside the bounds
-            continue
-        # dotted nanos paths (nested included -- nanosAsLong applies
-        # inside structs); _apply_bounds takes only the top-level subset
-        # (bounds address top-level columns)
-        nanos_paths = frozenset(
-            p for p, t in group_ptypes[types] if t.startswith("timestamp[ns")
-        )
-        nanos = frozenset(
-            p for p in nanos_paths
-            if "." not in p and "[]" not in p and "{" not in p
-        )
-        gdf = _read_explicit_files(
-            spark, path, [_respell(path, root, p) for p in paths]
-        )
-        present = {c.lower() for c in gdf.columns}
-        pre = {c: v for c, v in preds_by_col.items() if c.lower() in present}
-        post = {c: v for c, v in preds_by_col.items() if c.lower() not in present}
-        gdf = _apply_bounds(gdf, pre, nanos_cols=nanos)
-        adf = _align_to_contract(gdf, target_schema, nanos_paths)
-        if post:
-            # generation predates the bounded column: the contract
-            # backfills typed NULLs, and a range/equality predicate on
-            # NULL keeps no row -- applied on the aligned column so the
-            # semantics are exactly that.
-            adf = _apply_bounds(adf, post)
-        aligned.append(adf)
-    if not aligned:
-        return spark.createDataFrame([], target_schema)
-    out = aligned[0]
-    for gdf in aligned[1:]:
-        out = out.unionByName(gdf)
-    return out

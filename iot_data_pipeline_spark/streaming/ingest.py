@@ -65,7 +65,12 @@ from iot_data_pipeline_spark.pipeline import (
     _process_sensor_frame,
     transform_sensor,
 )
-from iot_data_pipeline_spark.sources.readers import CORRUPT_COL, SENSOR_SCHEMA, split_cached
+from iot_data_pipeline_spark.sources.readers import (
+    CORRUPT_COL,
+    SENSOR_SCHEMA,
+    _pafs_for,
+    split_cached,
+)
 
 
 def read_sensor_stream(
@@ -269,6 +274,11 @@ def detect_replaced_source_files(
     after every burst). Limitation: detection keys on modification
     time, so a copy tool that preserves the old mtime (``rsync -t``)
     slips past; size is not recorded in Spark's log.
+
+    Cost: the recorded files are grouped by directory and each directory
+    is listed once (:func:`_list_log_dir`); the log's millisecond
+    ``timestamp`` is compared with the listing's mtime in Python, so no
+    Py4J call is made per recorded file.
     """
     recorded: dict[str, int] = {}
     jvm = spark._jvm
@@ -309,19 +319,41 @@ def detect_replaced_source_files(
             for rec in _log_records(jvm, fs, entry):
                 p = rec["path"]
                 recorded[p] = max(int(rec.get("timestamp", 0)), recorded.get(p, 0))
-    if not recorded:
-        return []
-    replaced = []
+    by_dir: dict[str, dict[str, tuple[str, int]]] = {}
     for uri, ts in recorded.items():
-        p = _log_uri_to_path(jvm, uri)
-        pfs = p.getFileSystem(conf)
-        try:
-            status = pfs.getFileStatus(p)
-        except Exception:  # noqa: BLE001 -- deleted after processing:
-            continue  # legitimate (cleanSource-style tidying), not a replace
-        if status.getModificationTime() > ts:
-            replaced.append(uri)
+        parent = uri.rsplit("/", 1)[0]
+        by_dir.setdefault(parent, {})[_decoded_basename(uri)] = (uri, ts)
+    replaced = []
+    for parent, files in by_dir.items():
+        # A recorded file missing from its directory's listing was
+        # deleted after processing: legitimate (cleanSource-style
+        # tidying), not a replace.
+        for info in _list_log_dir(parent):
+            hit = files.get(info.base_name)
+            if hit is not None and info.mtime_ns // 1_000_000 > hit[1]:
+                replaced.append(hit[0])
     return sorted(replaced)
+
+
+def _list_log_dir(uri: str) -> list:
+    """The files directly under a directory named by a checkpoint-log
+    URI, in one ``pyarrow.fs`` listing. The log's mixed encoding
+    (reserved ASCII escaped, non-ASCII raw) is re-encoded in full first:
+    pyarrow refuses raw non-ASCII in a URI and decodes escapes. A scheme
+    pyarrow cannot open fails the audit rather than skip it."""
+    from urllib.parse import quote, unquote, urlsplit, urlunsplit
+
+    from pyarrow import fs as pafs
+
+    parts = urlsplit(uri)  # the log records qualified URIs only
+    fs, root = _pafs_for(urlunsplit(parts._replace(path=quote(unquote(parts.path)))))
+    if fs is None:
+        raise NotImplementedError(
+            f"replaced-file audit cannot list {parts.scheme}:// paths "
+            f"through pyarrow.fs ({uri!r})"
+        )
+    infos = fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
+    return [e for e in infos if e.type == pafs.FileType.File]
 
 
 #: Leaf operators that read no data source: their rows are generated or

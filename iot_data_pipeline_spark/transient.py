@@ -31,11 +31,20 @@ long-lived multi-threaded consumers (e.g. a streaming foreachBatch that
 calls expect_split) should simply never call release_transient_caches
 and accept the session-lifetime cache, or unpersist their own frames.
 
-Release-then-re-execute is supported: every registered frame's plan
-recomputes identically without the cache (frozen in
-tests/test_transient_caches.py, including the corrupt-split ``bad``
-frame, which needs the coalesce guard in readers.split_corrupt to stay
-analyzable against the raw JSON scan).
+Release-then-re-execute is shown safe for ONE registered frame only:
+``readers.split_corrupt``'s parse, whose ``good`` and ``bad`` frames
+recompute identically without the cache, released before or after
+their first execution (frozen in tests/test_transient_caches.py; the
+``bad`` frame needs the coalesce guard in ``readers.split_cached`` to
+stay analyzable against the raw JSON scan). The prefix operators'
+frames (``operators/prefix.py``) are NOT covered: once released, their
+``repartitionByRange`` sampling and ``spark_partition_id()`` are
+recomputed separately on each side of a join, so the offsets can be
+keyed to a different partitioning than the rows they are added to,
+which gives silently wrong running sums and ranks; a prefix result
+executed (or re-executed) after a release is not known to be correct.
+The ``quality.expect_split`` and ``llm.py`` tokenizer frames are not
+shown either way.
 """
 
 from __future__ import annotations
@@ -59,11 +68,12 @@ def transient_persist(df: DataFrame) -> DataFrame:
 def release_transient_caches() -> int:
     """Unpersist every registered frame; returns how many were released.
 
-    Safe to call at any time in the single-threaded drivers this serves:
-    a frame whose query is still executing is never registered-and-
-    released concurrently there, every registered plan recomputes
-    identically after release, and unpersist on a dead context is
-    swallowed (the session owning the frame may already be stopped)."""
+    Call it after each query's action has completed, in the
+    single-threaded drivers this serves: a frame whose query is still
+    executing is never registered-and-released concurrently there, and
+    only the frames the module docstring names are shown to recompute
+    identically once released. Unpersist on a dead context is swallowed
+    (the session owning the frame may already be stopped)."""
     with _LOCK:
         frames, _TRANSIENT[:] = list(_TRANSIENT), []
     n = 0

@@ -489,27 +489,20 @@ def test_corrupt_pointer_fails_loud_naming_the_zone(spark, tmp_path):
         resolve_snapshot_dir(spark, zone)
 
 
-def test_resolution_via_file_uri_and_evolving_reader(spark, tmp_path):
+def test_resolution_via_file_uri_and_bounded_read(spark, tmp_path):
     """Pointer resolution covers the other read shapes: a file:// URI
     spelling of the zone (the pyarrow/Hadoop composed-URI path other
-    reader seams exercise) and read_parquet_evolving (derived zones are
-    read through it when generations may differ)."""
-    from pyspark.sql import types as T
-
-    from iot_data_pipeline_spark.sources.readers import read_parquet_evolving
-
+    reader seams exercise) and a bounded read_table, which goes through
+    the same resolved snapshot."""
     zone = str(tmp_path / "z" / "t.parquet")
     df = spark.createDataFrame([Row(id=1, val=2)])
     write_parquet(df, zone, atomic=True)
     assert resolve_snapshot_dir(spark, f"file://{zone}") == f"file://{zone}/v=0"
-    contract = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("val", T.LongType())]
-    )
-    got = read_parquet_evolving(spark, zone, contract)
+    got = read_table(spark, str(tmp_path / "z"), "t")
     assert _rows(got) == _rows(df)
     # and with a bound, through the same resolved snapshot
-    got2 = read_parquet_evolving(
-        spark, zone, contract, bounds={"id": ((">=", 0),)}
+    got2 = read_table(
+        spark, str(tmp_path / "z"), "t", bounds={"id": ((">=", 0),)}
     )
     assert _rows(got2) == _rows(df)
 

@@ -1,8 +1,6 @@
-"""Round-11 reader seams: object-store routing (pyarrow.fs) for the two
-footer passes, recursive/partitioned pruning, UTC-equivalent session
-zones, and the evolving reader's merged-path nanos detection, partition
-columns, and bounds pushdown (round-10 verdict items 1/3 + all four
-round-10 ADVICE findings).
+"""Round-11 reader seams: object-store routing (pyarrow.fs) for the
+footer pass, recursive/partitioned pruning, UTC-equivalent session
+zones, bounds pushdown and the table schema cache of ``read_table``.
 
 The sandbox has no real S3; remote-scheme behavior is proven the way
 test_object_store.py proves Spark's: ``file://`` URIs exercise the full
@@ -25,7 +23,6 @@ from iot_data_pipeline_spark.sources.readers import (
     _pafs_for,
     _prune_files_for_ts_bounds,
     _session_tz_is_utc,
-    read_parquet_evolving,
     read_table,
 )
 
@@ -163,15 +160,6 @@ def test_pruner_hidden_segments_excluded(spark, sf_dir, tmp_path):
     assert bnd.count() == full.count() == src.num_rows
 
 
-CONTRACT = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("v", T.DoubleType()),
-    ]
-)
-
-
 def _ts_table(ids, unit: str, tz: str | None = None) -> pa.Table:
     base = 1_700_000_000_000_000  # 2023-11-14T22:13:20Z in micros
     scale = {"us": 1, "ns": 1000}[unit]
@@ -185,125 +173,6 @@ def _ts_table(ids, unit: str, tz: str | None = None) -> pa.Table:
             "v": pa.array([float(i) for i in ids], pa.float64()),
         }
     )
-
-
-def test_evolving_merged_homogeneous_nanos_lake(spark, tmp_path):
-    """Round-10 ADVICE (medium): a lake whose every generation is
-    TIMESTAMP(NANOS) merges fine -- each footer surfaces the same BIGINT
-    under nanosAsLong -- and the merged path then seconds-cast the nanos.
-    Pin: values decode to the true instants."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "ns"), f"{root}/gen1.parquet")
-    pq.write_table(_ts_table([2, 3], "ns"), f"{root}/gen2.parquet")
-    out = read_parquet_evolving(spark, root, CONTRACT)
-    rows = {r["id"]: r["ts"] for r in out.collect()}
-    assert len(rows) == 4
-    assert rows[0].year == 2023 and rows[0].month == 11
-    assert (rows[1] - rows[0]).days == 1
-
-
-def test_evolving_mixed_ns_int64_same_column_raises(spark, tmp_path):
-    """timestamp[ns] in one file, plain int64 in another, SAME column:
-    both surface BIGINT, the merge succeeds, but per-file semantics
-    differ -- no single cast is correct. Fail loud, never guess."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "ns"), f"{root}/gen1.parquet")
-    plain = pa.table(
-        {
-            "id": pa.array([2, 3], pa.int64()),
-            "ts": pa.array([1_700_000_000, 1_700_086_400], pa.int64()),
-            "v": pa.array([2.0, 3.0], pa.float64()),
-        }
-    )
-    pq.write_table(plain, f"{root}/gen2.parquet")
-    with pytest.raises(ValueError, match="timestamp\\[ns\\]"):
-        read_parquet_evolving(spark, root, CONTRACT)
-
-
-def test_evolving_partitioned_lake_keeps_partition_columns(spark, tmp_path):
-    """Round-10 ADVICE (medium): the schema-group fallback read explicit
-    file paths without basePath, so a partitioned evolving lake's
-    partition keys silently NULL-backfilled. Pin: real values."""
-    contract = T.StructType(
-        CONTRACT.fields + [T.StructField("region", T.StringType())]
-    )
-    root = str(tmp_path / "lake")
-    for region, tbl in (
-        ("eu", _ts_table([0, 1], "us", tz="UTC")),
-        ("us", _ts_table([2, 3], "ns")),  # value-type change -> fallback
-    ):
-        pdir = f"{root}/region={region}"
-        os.makedirs(pdir)
-        pq.write_table(tbl, f"{pdir}/part-0.parquet")
-    out = read_parquet_evolving(spark, root, contract)
-    rows = {r["id"]: r for r in out.collect()}
-    assert len(rows) == 4
-    assert rows[0]["region"] == "eu" and rows[2]["region"] == "us"
-    assert rows[2]["ts"].year == 2023, "nanos generation must decode exactly"
-
-
-def test_evolving_bounds_pushdown_both_branches(spark, tmp_path):
-    """Round-10 verdict item 3: bounds wired through the fallback --
-    raw-column predicates in EVERY Union branch (PushedFilters twice in
-    the formatted plan), correct rows across a us/ns generation split,
-    and footer file-pruning on the same metadata pass."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "us", tz="UTC"), f"{root}/g1a.parquet")
-    pq.write_table(_ts_table([10, 11], "us", tz="UTC"), f"{root}/g1b.parquet")
-    pq.write_table(_ts_table([2, 3], "ns"), f"{root}/g2a.parquet")
-    pq.write_table(_ts_table([12, 13], "ns"), f"{root}/g2b.parquet")
-    lo, hi = "2023-11-14", "2023-11-20"  # ids 0..5 window
-    out = read_parquet_evolving(spark, root, CONTRACT, bounds={"ts": (lo, hi)})
-    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3]
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    pushed = re.findall(r"PushedFilters: \[([^\n]*)", plan)
-    assert len(pushed) >= 2, plan
-    assert sum("ts" in p for p in pushed) >= 2, (
-        f"bounds must push into BOTH Union branches: {pushed}"
-    )
-    # file pruning on the same footer pass: the out-of-range file of
-    # each generation never reaches the scan
-    read_files = " ".join(out.inputFiles())
-    assert "g1b" not in read_files and "g2b" not in read_files, read_files
-    assert "g1a" in read_files and "g2a" in read_files, read_files
-
-
-def test_evolving_bounds_generation_missing_column(spark, tmp_path):
-    """A generation written before the bounded column existed can match
-    no bound (its values are contract NULLs): it contributes zero rows,
-    and the read still succeeds."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    old = pa.table(
-        {
-            "id": pa.array([100, 101], pa.int64()),
-            "v": pa.array([1.5, 2.5], pa.float32()),  # type change -> fallback
-        }
-    )
-    pq.write_table(old, f"{root}/g0.parquet")
-    pq.write_table(_ts_table([0, 1], "us", tz="UTC"), f"{root}/g1.parquet")
-    unbounded = read_parquet_evolving(spark, root, CONTRACT)
-    assert unbounded.count() == 4
-    out = read_parquet_evolving(
-        spark, root, CONTRACT, bounds={"ts": ("2023-11-14", None)}
-    )
-    assert sorted(r["id"] for r in out.collect()) == [0, 1]
-
-
-def test_evolving_fallback_via_file_uri(spark, tmp_path):
-    """The fallback's listing + footer reads run through pyarrow.fs: a
-    file:// URI (formerly NotImplementedError) reads identically."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "us", tz="UTC"), f"{root}/g1.parquet")
-    pq.write_table(_ts_table([2, 3], "ns"), f"{root}/g2.parquet")
-    out = read_parquet_evolving(spark, f"file://{root}", CONTRACT)
-    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3]
 
 
 def _split_lineitem(sf_dir: str, root: str, statsless: tuple[int, ...] = (),
@@ -500,18 +369,6 @@ def test_pruner_keeps_extensionless_files(spark, sf_dir, tmp_path):
     assert "000001_0" in read_files, read_files
 
 
-def test_evolving_fallback_reads_extensionless_generation(spark, tmp_path):
-    """The schema-group fallback's listing has the same contract: an
-    extensionless generation file (Hive writer) must contribute its
-    rows, not silently vanish from the unioned read."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "us", tz="UTC"), f"{root}/g1.parquet")
-    pq.write_table(_ts_table([2, 3], "ns"), f"{root}/000000_0")
-    out = read_parquet_evolving(spark, root, CONTRACT)
-    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3]
-
-
 def test_nanos_bounds_beyond_horizon_saturate(spark, tmp_path):
     """Round-11 probe: a bound past the int64-nanos horizon (2262-04-11)
     overflowed the micros*1000 literal -- ARITHMETIC_OVERFLOW under ANSI,
@@ -618,102 +475,6 @@ def test_discrete_bound_literals_rewrite_exactly(spark, tmp_path):
     assert "PushedFilters: [" in plan and "l_quantity" in plan.split(
         "PushedFilters: ["
     )[1].split("]")[0], plan
-
-
-def test_evolving_composed_uri_extensionless_bounds(spark, tmp_path):
-    """Round-11 composition pin: file:// URI x extensionless Hive files
-    x bounds, through the schema-group fallback. Each generation
-    file-prunes from its own footers, the IN-window extensionless file
-    contributes its rows (it formerly vanished from the listing), and
-    the OUT-window file of each generation never reaches the scan."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    pq.write_table(_ts_table([0, 1], "us", tz="UTC"), f"{root}/g1a.parquet")
-    pq.write_table(_ts_table([20, 21], "us", tz="UTC"), f"{root}/000000_0")
-    pq.write_table(_ts_table([2, 3], "ns"), f"{root}/000001_0")
-    pq.write_table(_ts_table([22, 23], "ns"), f"{root}/g2b.parquet")
-    out = read_parquet_evolving(
-        spark,
-        f"file://{root}",
-        CONTRACT,
-        bounds={"ts": ("2023-11-14", "2023-11-20")},
-    )
-    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3]
-    files = " ".join(out.inputFiles())
-    assert "g1a" in files and "000001_0" in files, files
-    assert "g2b" not in files and "000000_0" not in files, files
-
-
-def test_evolving_case_colliding_contract_columns_fail_loudly(spark, tmp_path):
-    """Round-11 probe: a generation carrying BOTH "Id" and "ID" (a
-    case-sensitive-session scan of a sloppy writer) silently aligned
-    whichever column enumerated last onto the contract's "id" --
-    arbitrary data selection, where read_table rejects the identical
-    footer loudly. Pin the same posture; non-contract collisions and
-    merely case-VARIANT single columns still align fine."""
-    contract = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    t = pa.table(
-        {
-            "Id": pa.array([1, 2], pa.int64()),
-            "ID": pa.array([100, 200], pa.int64()),
-            "v": pa.array([1.0, 2.0], pa.float64()),
-        }
-    )
-    pq.write_table(t, f"{root}/g1.parquet")
-    was = spark.conf.get("spark.sql.caseSensitive")
-    try:
-        spark.conf.set("spark.sql.caseSensitive", "true")
-        with pytest.raises(ValueError, match="differing only by case"):
-            read_parquet_evolving(spark, root, contract).collect()
-    finally:
-        spark.conf.set("spark.sql.caseSensitive", was)
-    # a single case-variant column still aligns
-    root2 = str(tmp_path / "lake2")
-    os.makedirs(root2)
-    t2 = pa.table(
-        {
-            "ID": pa.array([1, 2], pa.int64()),
-            "v": pa.array([1.0, 2.0], pa.float64()),
-        }
-    )
-    pq.write_table(t2, f"{root2}/g1.parquet")
-    out = read_parquet_evolving(spark, root2, contract)
-    assert sorted((r["id"], r["v"]) for r in out.collect()) == [(1, 1.0), (2, 2.0)]
-
-
-def test_evolving_merged_path_file_prunes(spark, tmp_path):
-    """The MERGED (mergeSchema-success) path file-prunes bounded contract
-    timestamp columns too: an added-column evolving lake is multi-file
-    by definition, and on NTZ encodings the pushed predicate never
-    becomes a row-group filter -- the footer pass is the only scan
-    pruning the read gets. Evolution (NULL backfill of the new column)
-    must survive the pruned re-read."""
-    contract = T.StructType(
-        CONTRACT.fields + [T.StructField("extra", T.StringType())]
-    )
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    # four date-disjoint files; gen2 adds a column (merge succeeds);
-    # ts stays NTZ microseconds (the encoding parquet declines to
-    # row-filter)
-    for k, ids in enumerate(([0, 1], [10, 11], [20, 21], [30, 31])):
-        t = _ts_table(ids, "us")
-        if k >= 2:
-            t = t.append_column(
-                "extra", pa.array([f"g{k}"] * 2, pa.string())
-            )
-        pq.write_table(t, f"{root}/part-{k}.parquet")
-    lo, hi = "2023-11-14", "2023-11-30"  # ids 0..15 window
-    out = read_parquet_evolving(spark, root, contract, bounds={"ts": (lo, hi)})
-    rows = sorted((r["id"], r["extra"]) for r in out.collect())
-    assert rows == [(0, None), (1, None), (10, None), (11, None)]
-    read_files = " ".join(out.inputFiles())
-    assert "part-2" not in read_files and "part-3" not in read_files
-    assert "part-0" in read_files and "part-1" in read_files
 
 
 def _date32_orders(sf_dir: str, root: str, n_files: int = 4) -> None:
@@ -847,53 +608,6 @@ def test_pruned_read_partition_type_parity(spark, tmp_path):
     assert dict(bnd.dtypes)["batch"] == "string"
     assert len(bnd.inputFiles()) == 1  # pruning itself must survive
     assert sorted((r["id"], r["batch"]) for r in bnd.collect()) == [
-        (0, "01"),
-        (1, "01"),
-    ]
-
-
-def test_evolving_fallback_partition_type_parity(spark, tmp_path):
-    """Same hazard through the evolving reader's schema-group fallback:
-    each generation read alone re-inferred partition types from its own
-    values. Generations under k=01 (µs) and k=abc (NANOS -- forces the
-    CANNOT_MERGE_SCHEMAS fallback) must surface k exactly as the
-    whole-lake string inference would."""
-    root = str(tmp_path / "lake")
-    base = 1_700_000_000_000_000
-    for d, ids, unit in (("k=01", [0, 1], "us"), ("k=abc", [10, 11], "ns")):
-        os.makedirs(f"{root}/{d}", exist_ok=True)
-        scale = 1000 if unit == "ns" else 1
-        tab = pa.table(
-            {
-                "id": pa.array(ids, pa.int64()),
-                "ts": pa.array(
-                    [(base + i * 86_400_000_000) * scale for i in ids],
-                    pa.timestamp(unit),
-                ),
-                "v": pa.array([float(i) for i in ids], pa.float64()),
-            }
-        )
-        pq.write_table(tab, f"{root}/{d}/part-0.parquet", store_schema=False)
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("v", T.DoubleType()),
-            T.StructField("k", T.StringType()),
-        ]
-    )
-    df = read_parquet_evolving(spark, root, contract)
-    assert sorted((r["id"], r["k"]) for r in df.collect()) == [
-        (0, "01"),
-        (1, "01"),
-        (10, "abc"),
-        (11, "abc"),
-    ]
-    # bounded: prunes to the µs generation, k spelling still exact
-    bnd = read_parquet_evolving(
-        spark, root, contract, bounds={"ts": ("2023-11-14", "2023-11-17")}
-    )
-    assert sorted((r["id"], r["k"]) for r in bnd.collect()) == [
         (0, "01"),
         (1, "01"),
     ]
@@ -1059,252 +773,6 @@ def test_pruner_distributed_branch_above_64_files(spark, sf_dir, tmp_path):
     )
     assert bnd.count() == post.count() > 0
     assert len(bnd.inputFiles()) == len(pruned)
-
-
-def test_evolving_nested_type_evolution(spark, tmp_path):
-    """Round-12 found-and-fixed (the queued nested-evolution axis):
-    contract alignment used a whole-column ``.cast``, which Spark
-    resolves POSITIONALLY on structs and only when field counts match --
-    a generation whose struct GAINED a field made the whole lake
-    unreadable (CAST_WITHOUT_SUGGESTION), and reordered struct fields
-    would have swapped values silently. Alignment now recurses BY NAME
-    (parquet's own semantics): missing nested fields NULL-backfill,
-    extra ones drop, array elements and map values recurse."""
-    root = str(tmp_path / "lake")
-    os.makedirs(root)
-    g1 = pa.table(
-        {
-            "id": pa.array([0, 1], pa.int64()),
-            "tags": pa.array([[1, 2], [3]], pa.list_(pa.int32())),
-            "meta": pa.array(
-                [{"a": 1}, {"a": 2}], pa.struct([("a", pa.int32())])
-            ),
-        }
-    )
-    g2 = pa.table(
-        {
-            "id": pa.array([10], pa.int64()),
-            "tags": pa.array([[10]], pa.list_(pa.int64())),
-            # field ADDED and declared order reversed vs the contract
-            "meta": pa.array(
-                [{"b": "x", "a": 10}],
-                pa.struct([("b", pa.string()), ("a", pa.int64())]),
-            ),
-        }
-    )
-    pq.write_table(g1, f"{root}/g1.parquet", store_schema=False)
-    pq.write_table(g2, f"{root}/g2.parquet", store_schema=False)
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("tags", T.ArrayType(T.LongType())),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("a", T.LongType()),
-                        T.StructField("b", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    df = read_parquet_evolving(spark, root, contract)
-    rows = sorted(
-        (r["id"], list(r["tags"]), r["meta"].asDict()) for r in df.collect()
-    )
-    assert rows == [
-        (0, [1, 2], {"a": 1, "b": None}),
-        (1, [3], {"a": 2, "b": None}),
-        (10, [10], {"a": 10, "b": "x"}),
-    ]
-
-
-def test_evolving_nested_nanos_decode_and_mix(spark, tmp_path):
-    """Round-12 found-and-fixed: ``nanosAsLong`` applies INSIDE structs
-    (probed: struct<ts: timestamp[ns]> surfaces as struct<ts: bigint>),
-    so a homogeneous nested-nanos lake through the merged path
-    seconds-cast the nanos -- silent near-epoch corruption, the nested
-    twin of the round-10 top-level find. The merged-path detector now
-    walks DOTTED paths; a nested ns/int64 mix fails loud by path."""
-    base_ns = 1_700_000_000_000_000_000  # 2023-11-14T22:13:20Z
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField(
-                "meta",
-                T.StructType([T.StructField("ts", T.TimestampType())]),
-            ),
-        ]
-    )
-    root = str(tmp_path / "ns_lake")
-    os.makedirs(root)
-    for i, name in ((0, "g1"), (1, "g2")):
-        t = pa.table(
-            {
-                "id": pa.array([i], pa.int64()),
-                "meta": pa.array(
-                    [{"ts": base_ns + i * 1_000_000_000}],
-                    pa.struct([("ts", pa.timestamp("ns"))]),
-                ),
-            }
-        )
-        pq.write_table(t, f"{root}/{name}.parquet", store_schema=False)
-    df = read_parquet_evolving(spark, root, contract)
-    assert sorted(str(r["meta"]["ts"]) for r in df.collect()) == [
-        "2023-11-14 22:13:20",
-        "2023-11-14 22:13:21",
-    ]
-    # ns/int64 MIX at a nested path: loud, named by dotted path
-    root2 = str(tmp_path / "mix_lake")
-    os.makedirs(root2)
-    t1 = pa.table(
-        {
-            "id": pa.array([0], pa.int64()),
-            "meta": pa.array(
-                [{"ts": base_ns}], pa.struct([("ts", pa.timestamp("ns"))])
-            ),
-        }
-    )
-    t2 = pa.table(
-        {
-            "id": pa.array([1], pa.int64()),
-            "meta": pa.array(
-                [{"ts": 1_700_000_000}], pa.struct([("ts", pa.int64())])
-            ),
-        }
-    )
-    pq.write_table(t1, f"{root2}/g1.parquet", store_schema=False)
-    pq.write_table(t2, f"{root2}/g2.parquet", store_schema=False)
-    with pytest.raises(ValueError, match="meta.ts"):
-        read_parquet_evolving(spark, root2, contract).collect()
-
-
-def test_evolving_map_key_nanos_decode(spark, tmp_path):
-    """Round-12 ADVICE closed: ``nanosAsLong`` applies to map KEYS too
-    (probed: map<timestamp[ns], v> surfaces as map<bigint, v>), and the
-    nanos detector/nested cast recursed into struct fields, array
-    elements, and map VALUES only -- a nanos-backed timestamp map key
-    fell through to the plain positional cast, the same silent
-    seconds-misread class at the key position. Keys now recurse via
-    transform_keys with '{k}' footer paths."""
-    base_ns = 1_700_000_000_000_000_000  # 2023-11-14T22:13:20Z
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField(
-                "m", T.MapType(T.TimestampType(), T.LongType())
-            ),
-        ]
-    )
-    root = str(tmp_path / "nskey_lake")
-    os.makedirs(root)
-    for i, name in ((0, "g1"), (1, "g2")):
-        t = pa.table(
-            {
-                "id": pa.array([i], pa.int64()),
-                "m": pa.array(
-                    [[(base_ns + i * 1_000_000_000, i)]],
-                    pa.map_(pa.timestamp("ns"), pa.int64()),
-                ),
-            }
-        )
-        pq.write_table(t, f"{root}/{name}.parquet", store_schema=False)
-    df = read_parquet_evolving(spark, root, contract)
-    got = sorted(
-        (r["id"], str(k), v)
-        for r in df.collect()
-        for k, v in r["m"].items()
-    )
-    assert got == [
-        (0, "2023-11-14 22:13:20", 0),
-        (1, "2023-11-14 22:13:21", 1),
-    ]
-    # ns/int64 MIX at the key path: loud, named by the dotted {k} path
-    root2 = str(tmp_path / "nskey_mix")
-    os.makedirs(root2)
-    t1 = pa.table(
-        {
-            "id": pa.array([0], pa.int64()),
-            "m": pa.array(
-                [[(base_ns, 0)]], pa.map_(pa.timestamp("ns"), pa.int64())
-            ),
-        }
-    )
-    t2 = pa.table(
-        {
-            "id": pa.array([1], pa.int64()),
-            "m": pa.array(
-                [[(1_700_000_000, 1)]], pa.map_(pa.int64(), pa.int64())
-            ),
-        }
-    )
-    pq.write_table(t1, f"{root2}/g1.parquet", store_schema=False)
-    pq.write_table(t2, f"{root2}/g2.parquet", store_schema=False)
-    with pytest.raises(ValueError, match=r"m\{k\}"):
-        read_parquet_evolving(spark, root2, contract).collect()
-
-
-def test_evolving_map_struct_key_by_name(spark, tmp_path):
-    """Round-12 ADVICE twin: a STRUCT-typed map key whose generation
-    reordered/widened the struct hit the positional cast at the key
-    position (silent value swap / CAST_WITHOUT_SUGGESTION); keys now
-    recurse the by-name alignment exactly like struct values."""
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField(
-                "m",
-                T.MapType(
-                    T.StructType(
-                        [
-                            T.StructField("a", T.LongType()),
-                            T.StructField("b", T.StringType()),
-                        ]
-                    ),
-                    T.LongType(),
-                ),
-            ),
-        ]
-    )
-    root = str(tmp_path / "structkey_lake")
-    os.makedirs(root)
-    g1 = pa.table(
-        {
-            "id": pa.array([0], pa.int64()),
-            # declared order REVERSED vs the contract: positional cast
-            # would swap a<->b (and crash on the string->long leg)
-            "m": pa.array(
-                [[({"b": "x", "a": 7}, 5)]],
-                pa.map_(
-                    pa.struct([("b", pa.string()), ("a", pa.int64())]),
-                    pa.int64(),
-                ),
-            ),
-        }
-    )
-    g2 = pa.table(
-        {
-            "id": pa.array([1], pa.int64()),
-            # field b MISSING: NULL-backfills inside the key struct
-            "m": pa.array(
-                [[({"a": 9}, 6)]],
-                pa.map_(pa.struct([("a", pa.int64())]), pa.int64()),
-            ),
-        }
-    )
-    pq.write_table(g1, f"{root}/g1.parquet", store_schema=False)
-    pq.write_table(g2, f"{root}/g2.parquet", store_schema=False)
-    df = read_parquet_evolving(spark, root, contract)
-    got = sorted(
-        (r["id"], k.asDict(), v)
-        for r in df.collect()
-        for k, v in r["m"].items()
-    )
-    assert got == [
-        (0, {"a": 7, "b": "x"}, 5),
-        (1, {"a": 9, "b": None}, 6),
-    ]
 
 
 def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):

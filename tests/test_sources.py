@@ -219,36 +219,6 @@ def test_analyze_table_feeds_cbo_estimates(spark, sf_dir, tmp_path):
             spark.conf.unset(k)
 
 
-def test_read_parquet_evolving_backfills_and_enforces(spark, tmp_path):
-    """Schema evolution: batch 1 lacks a later column, batch 2 adds it plus
-    a stray column outside the contract. The evolving read unions footers,
-    NULL-backfills the missing column for old rows, drops the stray one,
-    and casts everything to the contract types."""
-    from pyspark.sql import types as T
-
-    from iot_data_pipeline_spark.sources.readers import read_parquet_evolving
-
-    p = str(tmp_path / "lake")
-    spark.createDataFrame([(1, "a")], "id long, a string").write.parquet(p)
-    spark.createDataFrame(
-        [(2, "b", 9, "stray")], "id long, a string, b int, junk string"
-    ).write.mode("append").parquet(p)
-
-    contract = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("a", T.StringType()),
-            T.StructField("b", T.LongType()),  # wider than the written int
-        ]
-    )
-    out = read_parquet_evolving(spark, p, contract)
-    assert [f.name for f in out.schema.fields] == ["id", "a", "b"]
-    assert dict(out.dtypes)["b"] == "bigint"
-    rows = {r.id: r for r in out.collect()}
-    assert rows[1].b is None and rows[2].b == 9
-    assert not hasattr(rows[2], "junk")
-
-
 def test_read_jsonl_byte_level_writer_choices(spark, tmp_path):
     """Round-10 probe, frozen: byte-level JSONL writer choices -- a UTF-8
     BOM (Windows notepad/PowerShell), CRLF and bare-CR line endings, and
@@ -571,42 +541,6 @@ def test_read_table_case_colliding_columns_fail_loudly(spark, tmp_path):
             read_table(spark, d, "part")
     finally:
         spark.conf.set("spark.sql.caseSensitive", "false")
-
-
-def test_read_parquet_evolving_value_type_generations(spark, sf_dir, tmp_path):
-    """Round-10 frozen band (tools/schema_evolution_probe.py): a lake
-    whose generations re-TYPE columns -- int32-narrowed keys, a
-    TIMESTAMP(NANOS) generation (BIGINT to the merged read), DECIMAL
-    money -- raises CANNOT_MERGE_SCHEMAS under mergeSchema; the
-    per-footer-schema-group fallback must read it anyway and align every
-    generation to the contract, including the nanos generation by
-    integer division (a plain BIGINT->timestamp cast would misread nanos
-    as seconds)."""
-    from tools.schema_evolution_probe import build_lake, verify
-
-    lake = str(tmp_path / "lake")
-    import os
-
-    os.makedirs(lake)
-    truth = build_lake(lake, sf_dir)
-    problems = verify(spark, lake, truth)
-    assert not problems, problems
-
-
-def test_read_parquet_evolving_merge_failure_unrelated_errors_propagate(
-    spark, tmp_path
-):
-    """The fallback triggers ONLY on CANNOT_MERGE_SCHEMAS; a genuinely
-    broken path must keep its original error, not a confusing
-    footer-group failure."""
-    import pytest
-
-    from iot_data_pipeline_spark.sources.readers import read_parquet_evolving
-    from pyspark.sql import types as T
-
-    contract = T.StructType([T.StructField("x", T.LongType())])
-    with pytest.raises(Exception, match="PATH_NOT_FOUND|Path does not exist"):
-        read_parquet_evolving(spark, str(tmp_path / "nope"), contract)
 
 
 def test_seed_zone_schema_empty_then_real_data(spark, tmp_path):

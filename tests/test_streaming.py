@@ -182,7 +182,6 @@ def test_one_batch_runs_one_pass_the_guard_and_two_writes(
         str(ckpt),
         config=PipelineConfig(fixed_clock=CLOCK),
         timeout_s=120,
-        on_replaced="ignore",  # the audit is not part of the batch
     )
     offsets = [p.name for p in (ckpt / "offsets").iterdir() if not p.name.startswith(".")]
     assert offsets == ["0"]  # both files in one micro-batch
@@ -822,6 +821,50 @@ def test_replaced_audit_reads_only_latest_compact_and_tail(spark, tmp_path):
     _write_file(raw, "f00.jsonl", _records(0, 3, 50.0))
     replaced = detect_replaced_source_files(spark, ckpt)
     assert [r.rsplit("/", 1)[-1] for r in replaced] == ["f00.jsonl"]
+
+
+def test_replaced_audit_resolves_no_recorded_path(spark, tmp_path, monkeypatch):
+    """The audit lists each recorded directory once through pyarrow.fs
+    and compares mtimes in Python: after a 12-file burst it resolves no
+    recorded file to a Hadoop path (12 before, about 3 Py4J calls each),
+    and still sees a replacement."""
+    import time
+
+    from iot_data_pipeline_spark.streaming import ingest as ingest_mod
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for i in range(12):
+        _write_file(raw, f"f{i:02d}.jsonl", _records(i, 1, 10.0))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_ingest_available_now(
+        spark, str(raw), out, ckpt, config=PipelineConfig(fixed_clock=CLOCK)
+    )
+    resolved = []
+    real_resolve = ingest_mod._log_uri_to_path
+
+    def resolve(jvm, uri):
+        resolved.append(uri)
+        return real_resolve(jvm, uri)
+
+    monkeypatch.setattr(ingest_mod, "_log_uri_to_path", resolve)
+    assert ingest_mod.detect_replaced_source_files(spark, ckpt) == []
+    assert resolved == []
+    time.sleep(1.1)
+    _write_file(raw, "f03.jsonl", _records(3, 2, 50.0))
+    assert ingest_mod.detect_replaced_source_files(spark, ckpt) == [
+        f"file://{raw}/f03.jsonl"
+    ]
+    assert resolved == []
+
+
+def test_replaced_audit_fails_loud_on_unlistable_scheme():
+    """A recorded directory pyarrow.fs cannot open fails the audit and
+    names the scheme; it is never skipped as if nothing were replaced."""
+    from iot_data_pipeline_spark.streaming.ingest import _list_log_dir
+
+    with pytest.raises(NotImplementedError, match="viewfs://"):
+        _list_log_dir("viewfs://cluster/raw")
 
 
 # ------------------------------------------------- replay of a crashed batch
