@@ -310,18 +310,18 @@ def q117_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     attention-mask resets -- the metric packing strategies minimize).
 
     Scale notes: the layout is one global running sum, executed as the
-    two-phase scan (operators/prefix.global_running_sum): range-partition
+    two-phase scan (operators/prefix.global_scan): range-partition
     on doc_id, per-partition local cumsum, P-row offset broadcast --
     never a single-partition window, and exact LONG arithmetic end to end.
     """
-    from iot_data_pipeline_spark.operators.prefix import global_running_sum
+    from iot_data_pipeline_spark.operators.prefix import global_scan
 
     docs = read_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id", "source", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
-    placed = global_running_sum(
-        sized, "n_tokens", ["doc_id"], out_col="cum_tokens"
+    placed = global_scan(
+        sized, ["doc_id"], sum_cols={"cum_tokens": "n_tokens"}
     ).withColumn("start_pos", F.col("cum_tokens") - F.col("n_tokens"))
     pack = F.floor(F.col("start_pos") / PACK_TOKENS)
     end_pack = F.floor((F.col("start_pos") + F.col("n_tokens") - 1) / PACK_TOKENS)

@@ -57,20 +57,21 @@ def q15b_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     order by balance alone (ties share a rank -- deterministic); NTILE needs
     the total order to assign tiles stably.
 
-    One distributed two-phase pass (operators/prefix.global_ranks):
+    One distributed two-phase pass (operators/prefix.global_scan):
     range-partitioned on balance (ties never split), rank/dense_rank tie
     on balance alone while row_number/ntile use the c_custkey tiebreak --
     one range shuffle serves all four functions."""
-    from iot_data_pipeline_spark.operators.prefix import global_ranks
+    from iot_data_pipeline_spark.operators.prefix import global_scan
 
     customer = read_table(spark, sf_dir, "customer")
     return (
-        global_ranks(
+        global_scan(
             customer.select("c_custkey", "c_acctbal"),
             ["c_acctbal"],
             ascending=[False],
-            tiebreak_cols=["c_custkey"],
+            ranks=True,
             ntile=4,
+            tiebreak_cols=["c_custkey"],
         )
         .select(
             "c_custkey",
@@ -436,14 +437,14 @@ def q16b_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q99_global_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global running total over a TOTAL order (no PARTITION BY) -- the one
     window shape Spark executes on a single partition. Implemented with the
-    distributed two-phase prefix scan (operators/prefix.py): range-partition
-    by the order key, local cumulative sums, then a P-value driver-side
-    offset prefix broadcast back. Sampled to every 97th event for the
-    oracle compare."""
-    from iot_data_pipeline_spark.operators.prefix import global_running_sum
+    distributed two-phase prefix scan (operators/prefix.global_scan):
+    range-partition by the order key, local cumulative sums, then a
+    P-value offset prefix computed in-plan and broadcast back. Sampled to
+    every 97th event for the oracle compare."""
+    from iot_data_pipeline_spark.operators.prefix import global_scan
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "value")
-    rs = global_running_sum(ev, "value", ["event_id"])
+    rs = global_scan(ev, ["event_id"], sum_cols={"running_sum": "value"})
     return (
         rs.filter(F.col("event_id") % 97 == 0)
         .select("event_id", F.round("running_sum", 2).alias("running_sum"))

@@ -384,7 +384,7 @@ def _md_survives(md, ops: list[tuple[str, str, int]]) -> bool:
 
 
 def _prune_files_for_ts_bounds(
-    spark: SparkSession, src: str, name: str, preds_by_col: dict[str, list]
+    spark: SparkSession, src: str, preds_by_col: dict[str, list]
 ) -> list[str] | None:
     """FILE-level pruning for bounded canonical timestamp columns.
 
@@ -999,7 +999,7 @@ def read_table(
     pruned = None
     ts_preds = {c: p for c, p in preds_by_col.items() if c in ts_cols}
     if ts_preds:
-        pruned = _prune_files_for_ts_bounds(spark, src, name, ts_preds)
+        pruned = _prune_files_for_ts_bounds(spark, src, ts_preds)
     if pruned:
         # explicit leaf files: basePath keeps partition columns inferred,
         # and _read_explicit_files pins their TYPES to the whole-table

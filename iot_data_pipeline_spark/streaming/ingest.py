@@ -39,9 +39,10 @@ Scale notes:
   tables) is read again in every micro-batch, so a dim updated between
   batches enriches later records with the new values. A dim that reads
   no source (``createDataFrame``, ``range``) cannot change, so it is
-  persisted once per stream and released when the query terminates;
-  otherwise every batch's broadcast would rebuild a ``createDataFrame``
-  list in PySpark worker processes.
+  collected once at stream start into a JVM local relation: no batch
+  rebuilds a ``createDataFrame`` list in PySpark worker processes, and
+  there is no cache to release. Each batch still runs one broadcast
+  job to ship the dim to its join.
 - the session polls the raw zone every 100 ms while idle
   (``spark.sql.streaming.pollingDelay``, set in ``session.build_session``;
   Spark's default is 10 ms). Each poll lists every file the raw zone has
@@ -51,7 +52,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -376,45 +376,18 @@ def _reads_no_source(df: DataFrame) -> bool:
     )
 
 
-def _pin_dim(dim: DataFrame | None) -> DataFrame | None:
-    """Persist and evaluate an in-memory dim for the life of one stream;
-    returns the frame to release on termination, or None when there is
-    nothing to release (no dim, a dim that reads a source, or one the
-    caller has already cached and so owns). ``persist`` rather than
-    ``localCheckpoint``: a lost block is recomputed from lineage instead
-    of failing every later batch. Evaluated here, at stream start, so no
-    micro-batch pays an extra job to fill the cache."""
+def _snapshot_dim(dim: DataFrame | None) -> DataFrame | None:
+    """Evaluate an in-memory dim once, at stream start, into a JVM local
+    relation: its rows then live in the plan, so no micro-batch reruns
+    the dim's Python workers and nothing is cached or left to release.
+    A dim that reads a source (or no dim) is returned as it is."""
     if dim is None or not _reads_no_source(dim):
-        return None
-    level = dim.storageLevel
-    if level.useMemory or level.useDisk:
-        return None
-    dim.persist()
-    try:
-        dim.count()
-    except Exception:
-        dim.unpersist()
-        raise
-    return dim
-
-
-def _unpersist_on_termination(query: StreamingQuery, dim: DataFrame) -> None:
-    """Unpersist ``dim`` once ``query`` terminates, however it ends
-    (stopped, failed, or drained by ``availableNow``)."""
-
-    def wait() -> None:
-        try:
-            query.awaitTermination()
-        except Exception:  # noqa: BLE001 -- a failed query ends too
-            pass
-        try:
-            dim.unpersist()
-        except Exception:  # noqa: BLE001 -- the session may be stopped
-            pass
-
-    threading.Thread(
-        target=wait, name=f"unpersist-dim-{query.runId}", daemon=True
-    ).start()
+        return dim
+    jdf, spark = dim._jdf, dim.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()),
+        spark,
+    )
 
 
 def start_sensor_ingest(
@@ -439,7 +412,7 @@ def start_sensor_ingest(
     the stream. A dim that reads a data source is read again in every
     batch, so each batch sees it as of its own execution; an in-memory
     dim (``createDataFrame``, ``range``) cannot change, so it is evaluated
-    once: persisted at start and released when the query terminates.
+    once, at start, into a local relation that holds its rows.
 
     A long-lived stream (``available_now=False``) lists the raw zone
     every 100 ms while idle (the session's ``pollingDelay``, see
@@ -450,6 +423,7 @@ def start_sensor_ingest(
     stream = read_sensor_stream(
         spark, raw_dir, max_files_per_trigger=max_files_per_trigger
     )
+    dim_location = _snapshot_dim(dim_location)
 
     # Seed both channels' schemas before the first micro-batch: a
     # drained-empty stream (no raw files, or all-corrupt input) would
@@ -503,16 +477,7 @@ def start_sensor_ingest(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    pinned = _pin_dim(dim_location)
-    try:
-        query = writer.start()
-    except Exception:
-        if pinned is not None:
-            pinned.unpersist()
-        raise
-    if pinned is not None:
-        _unpersist_on_termination(query, pinned)
-    return query
+    return writer.start()
 
 
 def run_ingest_available_now(
@@ -559,27 +524,20 @@ def run_ingest_available_now(
         warnings.warn(msg, RuntimeWarning, stacklevel=3)
 
     _audit("before")
-    # Pinned here rather than by start_sensor_ingest (which leaves a dim
-    # the caller has cached alone), so it is released before we return.
-    pinned = _pin_dim(dim_location)
-    try:
-        q = start_sensor_ingest(
-            spark,
-            raw_dir,
-            out_dir,
-            checkpoint_dir,
-            config,
-            dim_location=dim_location,
-            available_now=True,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"ingest did not drain within {timeout_s}s")
-    finally:
-        if pinned is not None:
-            pinned.unpersist()
+    q = start_sensor_ingest(
+        spark,
+        raw_dir,
+        out_dir,
+        checkpoint_dir,
+        config,
+        dim_location=dim_location,
+        available_now=True,
+        max_files_per_trigger=max_files_per_trigger,
+    )
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"ingest did not drain within {timeout_s}s")
     _audit("after")
 
 

@@ -36,8 +36,9 @@ Release-then-re-execute is shown safe for ONE registered frame only:
 recompute identically without the cache, released before or after
 their first execution (frozen in tests/test_transient_caches.py; the
 ``bad`` frame needs the coalesce guard in ``readers.split_cached`` to
-stay analyzable against the raw JSON scan). The prefix operators'
-frames (``operators/prefix.py``) are NOT covered: once released, their
+stay analyzable against the raw JSON scan). The frames of the prefix
+operators ``global_scan`` and ``global_fill_forward``
+(``operators/prefix.py``) are NOT covered: once released, their
 ``repartitionByRange`` sampling and ``spark_partition_id()`` are
 recomputed separately on each side of a join, so the offsets can be
 keyed to a different partitioning than the rows they are added to,

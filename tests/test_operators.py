@@ -592,12 +592,12 @@ def test_extract_features_arrow_matches_pandas(media):
 
 
 def test_global_running_sum_matches_window(spark, sf_dir):
-    from iot_data_pipeline_spark.operators.prefix import global_running_sum
+    from iot_data_pipeline_spark.operators.prefix import global_scan
     from pyspark.sql.window import Window as W
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "value")
-    got = global_running_sum(
-        ev, "value", ["event_id"], num_partitions=7
+    got = global_scan(
+        ev, ["event_id"], sum_cols={"running_sum": "value"}, num_partitions=7
     )
     w = W.orderBy("event_id").rowsBetween(W.unboundedPreceding, W.currentRow)
     want = ev.withColumn("running_sum", F.sum("value").over(w))
@@ -645,16 +645,16 @@ def test_global_fill_forward_matches_window(spark, sf_dir):
 
 
 def test_global_ranks_match_window(spark, sf_dir):
-    from iot_data_pipeline_spark.operators.prefix import global_ranks
+    from iot_data_pipeline_spark.operators.prefix import global_scan
     from pyspark.sql.window import Window as W
 
     # c_acctbal has ties at test SF? force some: bucket the balance
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", F.round(F.col("c_acctbal"), -2).alias("bal")
     )
-    got = global_ranks(
-        cust, ["bal", "c_custkey"], ascending=[False, True], ntile=4,
-        num_partitions=6,
+    got = global_scan(
+        cust, ["bal", "c_custkey"], ascending=[False, True], ranks=True,
+        ntile=4, num_partitions=6,
     )
     w = W.orderBy(F.desc("bal"), "c_custkey")
     want = cust.select(
@@ -802,7 +802,7 @@ def test_prefix_ops_adversarial_random(spark, seed, n_rows, n_parts):
 
     from iot_data_pipeline_spark.operators.prefix import (
         global_fill_forward,
-        global_running_sum,
+        global_scan,
     )
 
     rnd = random.Random(seed)
@@ -814,8 +814,8 @@ def test_prefix_ops_adversarial_random(spark, seed, n_rows, n_parts):
 
     got_s = {
         r["k"]: r["running_sum"]
-        for r in global_running_sum(
-            df, "v", ["k"], num_partitions=n_parts
+        for r in global_scan(
+            df, ["k"], sum_cols={"running_sum": "v"}, num_partitions=n_parts
         ).collect()
     }
     w = W.orderBy("k").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -842,19 +842,16 @@ def test_prefix_ops_adversarial_random(spark, seed, n_rows, n_parts):
 
 @pytest.mark.parametrize("seed,n_rows,n_parts", [(11, 60, 64), (12, 90, 5)])
 def test_global_ranks_and_scan_adversarial_random(spark, seed, n_rows, n_parts):
-    """Tie-heavy seeded fuzz for global_ranks/global_scan: order keys
-    drawn from a tiny domain so tie GROUPS span range-partition
-    boundaries (the property the carry relies on: equal keys never
-    split), descending order, ntile, and NULL-run running sums through
-    global_scan -- all against single-window oracles."""
+    """Tie-heavy seeded fuzz for global_scan: order keys drawn from a
+    tiny domain so tie GROUPS span range-partition boundaries (the
+    property the carry relies on: equal keys never split), descending
+    order, a tiebroken ntile, and NULL-run running sums -- all against
+    single-window oracles."""
     import random
 
     from pyspark.sql.window import Window as W
 
-    from iot_data_pipeline_spark.operators.prefix import (
-        global_ranks,
-        global_scan,
-    )
+    from iot_data_pipeline_spark.operators.prefix import global_scan
 
     rnd = random.Random(seed)
     rows = [
@@ -865,10 +862,11 @@ def test_global_ranks_and_scan_adversarial_random(spark, seed, n_rows, n_parts):
 
     got = {
         r["id"]: (r["rank"], r["dense_rank"], r["ntile"])
-        for r in global_ranks(
+        for r in global_scan(
             df,
             ["key"],
             ascending=[False],
+            ranks=True,
             ntile=7,
             num_partitions=n_parts,
             tiebreak_cols=["id"],

@@ -1036,7 +1036,7 @@ def test_bounds_file_pruning_is_conservative(spark, sf_dir, tmp_path):
     from iot_data_pipeline_spark.sources.readers import _prune_files_for_ts_bounds
 
     pruned = _prune_files_for_ts_bounds(
-        spark, tdir, "events", {"ts": [("<", "2035-01-01")]}
+        spark, tdir, {"ts": [("<", "2035-01-01")]}
     )
     assert pruned is None, "stats-less file kept -> nothing prunable -> full read"
     bnd = read_table(spark, d, "events", bounds={"ts": (("<", "2035-01-01"),)})
@@ -1044,7 +1044,7 @@ def test_bounds_file_pruning_is_conservative(spark, sf_dir, tmp_path):
 
     # single-file table: the footer pass is bypassed entirely
     single = _prune_files_for_ts_bounds(
-        spark, f"{sf_dir}/events.parquet", "events", {"ts": [("<", "2035-01-01")]}
+        spark, f"{sf_dir}/events.parquet", {"ts": [("<", "2035-01-01")]}
     )
     assert single is None
 

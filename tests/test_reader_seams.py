@@ -60,7 +60,6 @@ def test_pruner_via_file_uri(spark, sf_dir, tmp_path):
     pruned = _prune_files_for_ts_bounds(
         spark,
         f"file://{d}/events.parquet",
-        "events",
         {"ts": [(">=", lo), ("<", hi)]},
     )
     assert pruned is not None and 0 < len(pruned) < 8
@@ -78,7 +77,6 @@ def test_pruner_skips_unknown_scheme(spark):
     pruned = _prune_files_for_ts_bounds(
         spark,
         "viewfs://testcell/data/events.parquet",
-        "events",
         {"ts": [("<", "2035-01-01")]},
     )
     assert pruned is None
@@ -93,12 +91,12 @@ def test_pruner_utc_equivalent_session_still_prunes(spark, sf_dir, tmp_path):
     try:
         spark.conf.set("spark.sql.session.timeZone", "Etc/UTC")
         assert _prune_files_for_ts_bounds(
-            spark, f"{d}/events.parquet", "events", preds
+            spark, f"{d}/events.parquet", preds
         )
         spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
         assert (
             _prune_files_for_ts_bounds(
-                spark, f"{d}/events.parquet", "events", preds
+                spark, f"{d}/events.parquet", preds
             )
             is None
         )
@@ -124,7 +122,7 @@ def test_pruner_recursive_partitioned_layout(spark, sf_dir, tmp_path):
         )
     lo, hi = "2024-01-10", "2024-01-12"
     pruned = _prune_files_for_ts_bounds(
-        spark, root, "events", {"ts": [(">=", lo), ("<", hi)]}
+        spark, root, {"ts": [(">=", lo), ("<", hi)]}
     )
     assert pruned is not None and 0 < len(pruned) < 8
     bnd = read_table(spark, d, "events", bounds={"ts": (lo, hi)})
@@ -203,7 +201,7 @@ def test_stats_absent_mix_prunes_around(spark, sf_dir, tmp_path):
     _split_lineitem(sf_dir, root, statsless=(2, 5))
     lo, hi = "1996-01-01", "1996-07-01"
     preds = {"l_shipdate": [(">=", lo), ("<", hi)]}
-    keep = _prune_files_for_ts_bounds(spark, root, "lineitem", preds)
+    keep = _prune_files_for_ts_bounds(spark, root, preds)
     assert keep is not None and len(keep) < 8
     kept = {os.path.basename(p) for p in keep}
     assert {"part-002.parquet", "part-005.parquet"} <= kept, kept
@@ -222,7 +220,7 @@ def test_pruner_all_statsless_degrades(spark, sf_dir, tmp_path):
     _split_lineitem(sf_dir, root, statsless=tuple(range(8)))
     lo, hi = "1996-01-01", "1996-07-01"
     keep = _prune_files_for_ts_bounds(
-        spark, root, "lineitem", {"l_shipdate": [(">=", lo), ("<", hi)]}
+        spark, root, {"l_shipdate": [(">=", lo), ("<", hi)]}
     )
     assert keep is None
     bnd = read_table(spark, d, "lineitem", bounds={"l_shipdate": (lo, hi)})
@@ -358,7 +356,7 @@ def test_pruner_keeps_extensionless_files(spark, sf_dir, tmp_path):
     # bounds covering the back half: both extensionless files carry rows
     lo = src.column("ts")[cut[2]].as_py().strftime("%Y-%m-%d %H:%M:%S")
     keep = _prune_files_for_ts_bounds(
-        spark, root, "events", {"ts": [(">=", lo)]}
+        spark, root, {"ts": [(">=", lo)]}
     )
     assert keep is not None, "date-split corpus must prune"
     assert any(os.path.basename(f) == "000000_0" for f in keep), keep
@@ -763,7 +761,6 @@ def test_pruner_distributed_branch_above_64_files(spark, sf_dir, tmp_path):
     pruned = _prune_files_for_ts_bounds(
         spark,
         f"file://{root}",
-        "events",
         {"ts": [(">=", lo), ("<", hi)]},
     )
     assert pruned is not None and 0 < len(pruned) < 72

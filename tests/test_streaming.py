@@ -991,6 +991,43 @@ def test_in_memory_dim_evaluated_once_per_stream(spark, raw_dir, tmp_path):
     assert evaluated.value == len(rows)
 
 
+def test_in_memory_dim_stream_pins_nothing(spark, raw_dir, tmp_path):
+    """A running long-lived stream holds its in-memory dim as a local
+    relation: it adds no persistent RDD and starts no thread to release
+    one."""
+    import threading
+
+    from iot_data_pipeline_spark.streaming.ingest import start_sensor_ingest
+
+    def n_persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    base = n_persisted()
+    dim = spark.createDataFrame(
+        [("device-1", "loc-1")], "device_id string, location_id string"
+    )
+    out = tmp_path / "out"
+    q = start_sensor_ingest(
+        spark, str(raw_dir), str(out), str(tmp_path / "ckpt"),
+        PipelineConfig(fixed_clock=CLOCK), dim_location=dim,
+        available_now=False,
+    )
+    try:
+        q.processAllAvailable()
+        assert n_persisted() == base
+        assert not [
+            t.name for t in threading.enumerate()
+            if t.name.startswith("unpersist-dim-")
+        ]
+    finally:
+        q.stop()
+    got = {
+        r["device_id"]: r["location_id"]
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == {"device-1": "loc-1", "device-2": None}
+
+
 def test_pinned_dim_released_after_drain(spark, raw_dir, tmp_path):
     """The dim the stream persisted is unpersisted once the drain
     returns; a dim the caller cached is the caller's and stays cached."""

@@ -11,7 +11,7 @@ forever (guide section 5: unpersist when done).
 
 from pyspark.sql import functions as F
 
-from iot_data_pipeline_spark.operators.prefix import global_running_sum
+from iot_data_pipeline_spark.operators.prefix import global_scan
 from iot_data_pipeline_spark.operators.quality import Expectation, expect_split
 from iot_data_pipeline_spark.transient import (
     _TRANSIENT,
@@ -29,7 +29,7 @@ def test_release_unpins_prefix_cache_and_preserves_results(spark):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") % 7).cast("double").alias("v")
     )
-    out = global_running_sum(df, "v", ["k"])
+    out = global_scan(df, ["k"], sum_cols={"running_sum": "v"})
     before = out.orderBy("k").collect()
     assert len(_TRANSIENT) >= 1  # the operator registered its persist
     assert _n_cached(spark) > base  # and it is materially pinned
