@@ -26,7 +26,7 @@ banker's rounding), so the full decode math is expressible in closed form
 in DuckDB SQL for solid-color fixtures. All IDCT/FDCT math is float64
 matrix multiplication against the orthonormal DCT-II basis.
 
-This runs INSIDE mapInPandas/mapInArrow kernels (operators/multimodal.py);
+This runs INSIDE mapInPandas kernels (operators/multimodal.py);
 throughput is secondary to having an honest end-to-end pixels path (a real
 cluster vendors libjpeg-turbo via the cluster image, same kernel shape).
 

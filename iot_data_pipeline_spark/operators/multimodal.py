@@ -251,88 +251,6 @@ def resize_images(
     return df.select(id_col, content_col).mapInPandas(run, schema=out_schema)
 
 
-def sample_frames(
-    df: DataFrame,
-    every_ms: int,
-    content_col: str = "content",
-    id_col: str = "media_id",
-    duration_col: str = "duration_ms",
-) -> DataFrame:
-    """Frame-sampling *plan* for video payloads: one output row per sampled
-    timestamp (real), frame decode stubbed (strict-only).
-
-    The timestamp fan-out runs JVM-side via ``sequence`` + ``explode`` --
-    at scale the expensive part is the decode kernel, and this keeps
-    everything around it in codegen.
-    """
-    ts = F.explode(
-        F.sequence(F.lit(0), F.greatest(F.col(duration_col) - 1, F.lit(0)), F.lit(every_ms))
-    ).alias("frame_ts_ms")
-    frames = df.select(id_col, duration_col, content_col).select(
-        id_col, ts, F.col(content_col)
-    )
-
-    def decode(batches: Iterator) -> Iterator:
-        raise NotImplementedError(
-            "frame decode requires video codecs not present in this environment"
-        )
-
-    # The decode stage is deliberately NOT attached here: callers get the
-    # sampled-frame plan (id, frame_ts_ms, content) and attach a decode
-    # kernel via mapInPandas when codecs exist. `decode` documents the
-    # expected shape.
-    del decode
-    return frames
-
-
-def extract_features_arrow(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "media_id",
-    dim: int = 16,
-    mode: str = "strict",
-) -> DataFrame:
-    """Arrow-native twin of :func:`extract_features` via ``mapInArrow``:
-    the kernel receives raw ``pyarrow.RecordBatch``es, so payload bytes
-    skip the pandas object-column materialization entirely -- for
-    binary-heavy media batches this removes one full copy per batch
-    versus ``mapInPandas``. Same contract: NULL payload -> NULL features,
-    strict mode decodes PNG/baseline-JPEG/GIF for real and refuses other
-    codecs.
-    """
-    if mode not in ("strict", "fake"):
-        raise ValueError(f"mode must be strict|fake, got {mode!r}")
-
-    id_field = next(f for f in df.schema.fields if f.name == id_col)
-    out_schema = T.StructType(
-        [id_field, T.StructField("features", T.ArrayType(T.FloatType()))]
-    )
-
-    def kernel(payload: bytes) -> list[float]:
-        if mode == "fake":
-            return _fake_features(payload, dim)
-        return _decode_image_features(payload, dim)
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            content = batch.column(batch.schema.get_field_index(content_col))
-            feats = [
-                None if v is None else kernel(v)
-                for v in content.to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index(id_col)),
-                    pa.array(feats, type=pa.list_(pa.float32())),
-                ],
-                names=[id_col, "features"],
-            )
-
-    return df.select(id_col, content_col).mapInArrow(run, schema=out_schema)
-
-
 def extract_audio_features(
     df: DataFrame,
     content_col: str = "content",
@@ -418,8 +336,7 @@ def sample_video_frames(
     ``every_n``-th frame, and emit one row per sampled frame with its
     Rec.601-luma mean -- ``(id, frame_idx, n_frames, mean_luma)``.
 
-    This supersedes :func:`sample_frames`' timestamp-only plan:
-    container parse, frame decode and per-frame statistics all execute
+    Container parse, frame decode and per-frame statistics all execute
     for real inside the Arrow-batched kernel -- YUV4MPEG2 plane slicing
     for the uncompressed tier, and (round 5) MJPEG-AVI with every frame
     JPEG-decoded through operators/jpeg.py for the compressed tier.

@@ -10,7 +10,7 @@ scanline filters, and 16-bit samples (narrowed to their high byte, the
 standard 16->8 approximation) -- i.e. everything common PNG writers
 emit.
 
-This runs INSIDE mapInPandas/mapInArrow kernels (operators/multimodal.py),
+This runs INSIDE mapInPandas kernels (operators/multimodal.py),
 so it must be dependency-free and deterministic; throughput is secondary
 to having an honest end-to-end pixels path (the fast path on a real
 cluster vendors libjpeg-turbo/ffmpeg via the cluster image).

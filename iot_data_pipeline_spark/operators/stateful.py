@@ -4,17 +4,14 @@ The reference keeps no state at all (every file is processed in
 isolation); the generalized engine tracks per-device latest readings
 across micro-batches -- the canonical IoT "device shadow".
 
-Three implementations with identical semantics:
+Two implementations with identical semantics:
 
 - ``last_state_batch``: the batch/backfill formulation -- max_by over the
   full history. One shuffle on the key, map-side partial aggregation.
 - ``apply_last_state_stream``: the streaming formulation with
-  ``applyInPandasWithState`` -- state is one row per device, updated per
-  micro-batch; emits the devices whose state changed in that batch.
-- ``transform_last_state_stream``: the same fold on Spark 4's
-  ``transformWithStateInPandas`` (the successor API: named state
-  variables, timers, TTL); kept alongside the legacy form because both
-  are public surface.
+  ``applyInPandasWithState`` (``mapGroupsWithState``) -- state is one row
+  per device, updated per micro-batch; emits the devices whose state
+  changed in that batch.
 
 Streaming-vs-batch parity is asserted in tests (same contract as Q14/Q21:
 the stream must converge to the batch answer over the same inputs).
@@ -25,10 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 #: Output/state schema shared by both formulations.
 STATE_SCHEMA = (
@@ -111,90 +104,4 @@ def apply_last_state_stream(stream: DataFrame) -> DataFrame:
         stateStructType="last_ts timestamp, last_temperature double, n_readings long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class DeviceShadowProcessor(StatefulProcessor):
-    """Spark 4 ``transformWithStateInPandas`` processor: one ValueState row
-    per device holding (last_ts, last_temperature, n_readings), same fold
-    as :func:`_update_device_state`.
-
-    State lives in the RocksDB/HDFS state store partitioned by the groupBy
-    key -- bounded by device count, not stream length, so it scales the
-    same way as the legacy form while adding named-state/timer/TTL surface.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._shadow = handle.getValueState(
-            "shadow",
-            "last_ts timestamp, last_temperature double, n_readings long",
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (device_id,) = key
-        if self._shadow.exists():
-            last_ts, last_temp, n = self._shadow.get()
-        else:
-            last_ts, last_temp, n = None, None, 0
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            best = pdf.sort_values(
-                ["timestamp", "temperature"], na_position="first"
-            ).iloc[-1]
-            ts = None if pd.isna(best["timestamp"]) else best["timestamp"]
-            temp = (
-                None if pd.isna(best["temperature"]) else float(best["temperature"])
-            )
-            if ts is None:
-                continue
-            if (
-                last_ts is None
-                or ts > last_ts
-                or (ts == last_ts and _gt(temp, last_temp))
-            ):
-                last_ts, last_temp = ts, temp
-        self._shadow.update((last_ts, last_temp, n))
-        yield pd.DataFrame(
-            {
-                "device_id": [device_id],
-                "last_ts": [last_ts],
-                "last_temperature": [last_temp],
-                "n_readings": [n],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def transform_last_state_stream(stream: DataFrame) -> DataFrame:
-    """Device shadow on the Spark 4 stateful API; parity with
-    :func:`last_state_batch` is asserted in tests alongside the legacy
-    ``applyInPandasWithState`` form.
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (the Python worker speaks protobuf to the JVM
-    state server). protobuf absence is checked eagerly HERE so the caller
-    gets one clear error instead of an opaque executor-side stack trace
-    minutes into the stream; the test asserts whichever side of the gate
-    this environment is on, so an API change can never hide behind a skip."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf package "
-            "(the Python worker speaks protobuf to the JVM state server); "
-            "install protobuf or use apply_last_state_stream, the "
-            "applyInPandasWithState formulation of the same fold"
-        ) from exc
-    return stream.groupBy("device_id").transformWithStateInPandas(
-        statefulProcessor=DeviceShadowProcessor(),
-        outputStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeMode="none",
     )

@@ -1024,17 +1024,14 @@ def q168_backfill_derived_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     first = backfill(spark, src_dir, dst_dir, "part", derive)
     # upstream correction lands in exactly one source partition
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            base.filter(F.col("part") == 2)
-            .withColumn("value", F.col("value") + 100)
-            .write.mode("overwrite")
-            .partitionBy("part")
-            .parquet(src_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    (
+        base.filter(F.col("part") == 2)
+        .withColumn("value", F.col("value") + 100)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part")
+        .parquet(src_dir)
+    )
     second = backfill(spark, src_dir, dst_dir, "part", derive)
     if not first:
         # empty source zone: a partitioned write of 0 rows creates no

@@ -154,16 +154,15 @@ def backfill(
     derived = derive(src)
     if partition_col not in derived.columns:
         raise ValueError(f"derive() must keep the partition column {partition_col!r}")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            derived.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(dst_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # dynamic partition overwrite requested on this writer, not the
+    # session: a session-wide conf flip would leak into every other
+    # thread's partitioned overwrite while this write runs
+    (
+        derived.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(dst_path)
+    )
     # record the fingerprints we just consumed (the pre-read capture: a
     # partition that changed again mid-run keeps its OLD stamp here, so
     # the next stale_partitions diff re-backfills it)

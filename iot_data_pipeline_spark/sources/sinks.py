@@ -12,52 +12,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _ntz_format(fmt: str) -> str:
-    """Derive the ``timestampNTZFormat`` from a caller's LTZ format by
-    dropping every UNQUOTED zone-pattern letter (X/x/Z/z/O/V/v) anywhere
-    in the pattern -- an NTZ value has no zone to print, and a leftover
-    zone letter fails the whole write when NTZ columns are present.
-
-    Round-12 ADVICE: the previous derivation stripped only a TRAILING
-    zone run, so a zone mid-pattern or followed by a quoted literal
-    (``...ssXXX'Z'``, ``VV yyyy...``) still leaked zone letters into
-    the NTZ option -- the exact failure the fix targets, on adjacent
-    spellings. This tokenizes around single-quoted literal sections
-    (java.time rules: ``''`` inside or outside a section is an escaped
-    quote) so quoted text like ``'Z'`` or ``'at VV'`` is preserved
-    verbatim while pattern-position zone letters drop wherever they sit.
-    """
-    out: list[str] = []
-    i, n = 0, len(fmt)
-    while i < n:
-        ch = fmt[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and fmt[j] != "'":
-                j += 1
-            out.append(fmt[i : j + 1])  # quoted section, closing quote kept
-            i = j + 1
-        elif ch in "XxZzOVv":
-            i += 1  # unquoted zone-pattern letter: drop
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+#: ``timestampFormat`` of :func:`write_jsonl`: ISO-8601, full microseconds,
+#: zone offset (``Z`` in the UTC session).
+TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+#: ``timestampNTZFormat`` of :func:`write_jsonl`: the same pattern without
+#: the zone letters -- a TIMESTAMP_NTZ value has no zone to print, and a
+#: zone letter fails the whole write when an NTZ column is present.
+TIMESTAMP_NTZ_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    coalesce: int | None = None,
-) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """One JSON object per line, ISO-8601 UTC timestamps (reference A11).
 
-    ``coalesce=1`` reproduces the reference's one-file-out contract for
-    small micro-batches; leave None for scale (one file per partition).
+    Overwrites ``path`` and writes one file per partition of ``df``; a
+    caller that wants the reference's one-file-out contract for a small
+    micro-batch passes ``df.coalesce(1)``.
 
-    The default format keeps FULL microsecond precision (round-10 probe:
+    The formats keep FULL microsecond precision (round-10 probe:
     the previous seconds-only format silently truncated sub-second
     timestamps on write, and even Spark's default keeps only millis --
     lossy for the reference's own microsecond-emitting clock,
@@ -67,19 +38,13 @@ def write_jsonl(
     (``utcnow().isoformat()``); this sink always prints ``.SSSSSS`` and
     ``Z`` -- same instants, lossless, and trivially machine-parseable.
     """
-    out = df.coalesce(coalesce) if coalesce else df
     # TIMESTAMP_NTZ columns render through the SEPARATE
-    # timestampNTZFormat option (round-11 probe: the round-10 fix set
-    # only timestampFormat, so NTZ columns still silently truncated to
-    # Spark's default millis). Same full-micros format minus the zone
-    # letters -- an NTZ value has no zone to print; see _ntz_format
-    # (round-12 ADVICE: zone patterns ANYWHERE in the format, not just
-    # a trailing run, quoted literals preserved).
-    ntz_format = _ntz_format(timestamp_format)
+    # timestampNTZFormat option (round-11 probe: setting only
+    # timestampFormat left NTZ columns truncated to Spark's default millis).
     (
-        out.write.mode(mode)
-        .option("timestampFormat", timestamp_format)
-        .option("timestampNTZFormat", ntz_format)
+        df.write.mode("overwrite")
+        .option("timestampFormat", TIMESTAMP_FORMAT)
+        .option("timestampNTZFormat", TIMESTAMP_NTZ_FORMAT)
         .json(path)
     )
 
@@ -232,14 +197,14 @@ def seed_zone_schema(
     )
 
 
-def write_dead_letter(bad: DataFrame, path: str, mode: str = "append") -> None:
+def write_dead_letter(bad: DataFrame, path: str) -> None:
     """Dead-letter sink for corrupt records (realizes reference README.md:215).
 
-    Keeps the raw line plus capture metadata; parquet so the DLQ is itself
-    queryable (count by error day, replay a range, ...).
+    Appends the raw line plus capture metadata; parquet so the DLQ is
+    itself queryable (count by error day, replay a range, ...).
     """
     (
         bad.withColumn("_ingest_ts", F.current_timestamp())
-        .write.mode(mode)
+        .write.mode("append")
         .parquet(path)
     )

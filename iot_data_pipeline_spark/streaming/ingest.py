@@ -10,8 +10,10 @@ arrived, then stop" (one driver invocation per burst -- the same operational
 contract, minus two process boundaries).
 
 Scale notes:
-- ``maxFilesPerTrigger`` bounds micro-batch size so a 10k-file backlog does
-  not become one giant batch (at 100 TB the raw zone arrives in bursts).
+- ``maxFilesPerTrigger`` is set only when the caller passes
+  ``max_files_per_trigger``, and no engine caller does: a backlog of 10k
+  files becomes one micro-batch. A batch of more than 32 files also starts
+  a Spark listing job (ROADMAP item 3(b)).
 - ``pathGlobFilter='*.jsonl'`` reproduces the suffix filter at the source.
 - The CHECKPOINT and the SINK are one consistency unit (round-12 probe,
   measured): with the native file sink, losing the checkpoint but
@@ -76,12 +78,11 @@ from iot_data_pipeline_spark.sources.readers import (
 def read_sensor_stream(
     spark: SparkSession,
     raw_dir: str,
-    schema: T.StructType = SENSOR_SCHEMA,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming JSONL scan over a raw directory with corrupt capture."""
     full = T.StructType(
-        schema.fields + [T.StructField(CORRUPT_COL, T.StringType())]
+        SENSOR_SCHEMA.fields + [T.StructField(CORRUPT_COL, T.StringType())]
     )
     reader = (
         spark.readStream.schema(full)
@@ -539,46 +540,3 @@ def run_ingest_available_now(
         q.stop()
         raise TimeoutError(f"ingest did not drain within {timeout_s}s")
     _audit("after")
-
-
-# ---------------------------------------------------------------- control plane
-
-
-class MalformedEventError(ValueError):
-    """Raised for control-plane trigger payloads that fail validation --
-    the engine twin of the reference Lambda's HTTP 400 response
-    (lambda/s3_event_handler.py:28-33): reject bad input explicitly,
-    never crash the worker and never silently process garbage."""
-
-
-def validate_file_event(event: object) -> list[tuple[str, str]]:
-    """Validate an S3-notification-shaped trigger payload and extract the
-    ``(bucket, key)`` pairs it announces.
-
-    Mirrors the reference handler's parse-then-400 contract
-    (lambda/s3_event_handler.py:21-43): the payload must be a dict with a
-    ``Records`` list, each record carrying ``s3.bucket.name`` and
-    ``s3.object.key``. Raises :class:`MalformedEventError` with a precise
-    reason otherwise. Spark's file source makes this path unnecessary for
-    normal operation (the checkpointed listing IS the notification), but
-    deployments fed by an external event bus still need the reject-bad-
-    input surface, so it is exposed and tested explicitly.
-    """
-    if not isinstance(event, dict):
-        raise MalformedEventError(f"event must be an object, got {type(event).__name__}")
-    records = event.get("Records")
-    if not isinstance(records, list) or not records:
-        raise MalformedEventError("event.Records must be a non-empty list")
-    out: list[tuple[str, str]] = []
-    for i, rec in enumerate(records):
-        if not isinstance(rec, dict):
-            raise MalformedEventError(f"Records[{i}] must be an object")
-        s3 = rec.get("s3")
-        bucket = s3.get("bucket", {}).get("name") if isinstance(s3, dict) else None
-        key = s3.get("object", {}).get("key") if isinstance(s3, dict) else None
-        if not isinstance(bucket, str) or not bucket:
-            raise MalformedEventError(f"Records[{i}].s3.bucket.name missing")
-        if not isinstance(key, str) or not key:
-            raise MalformedEventError(f"Records[{i}].s3.object.key missing")
-        out.append((bucket, key))
-    return out

@@ -111,3 +111,45 @@ def test_manifest_records_consumed_fingerprints_not_later_ones(
     )
     assert done2 == ["0"]
     assert bf.stale_partitions(spark, src, dst, "part") == []
+
+
+def test_backfill_leaves_session_overwrite_mode_alone(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is requested on backfill's writer, not
+    by flipping the session-wide conf around the write: while the conf
+    is flipped, any other thread's partitioned ``mode("overwrite")``
+    write on the session keeps partitions it should replace. Every key
+    set through ``RuntimeConfig.set`` during the backfills is recorded;
+    the overwrite-mode key must never be among them, and the refresh of
+    one partition must still leave the other's files in place."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    spark.range(10).selectExpr("id % 2 AS part", "id AS v").write.partitionBy(
+        "part"
+    ).parquet(src)
+
+    keys: list[str] = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    def derive(df):
+        return df.selectExpr("part", "v * 10 AS tenfold")
+
+    assert bf.backfill(spark, src, dst, "part", derive) == ["0", "1"]
+    survivor_files = sorted(glob.glob(os.path.join(dst, "part=1", "*.parquet")))
+    time.sleep(1.1)  # mtime granularity
+    spark.range(100, 103).selectExpr("0 AS part", "id AS v").write.mode(
+        "append"
+    ).parquet(src + "/part=0")
+    assert bf.backfill(spark, src, dst, "part", derive) == ["0"]
+
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys, keys
+    assert sorted(glob.glob(os.path.join(dst, "part=1", "*.parquet"))) == survivor_files
+    got = sorted(r["tenfold"] for r in spark.read.parquet(dst).collect())
+    assert got == sorted([v * 10 for v in range(10)] + [1000, 1010, 1020])

@@ -17,7 +17,6 @@ from iot_data_pipeline_spark.operators.dedup import (
 from iot_data_pipeline_spark.operators.joins import asof_join, range_join
 from iot_data_pipeline_spark.operators.multimodal import (
     extract_features,
-    sample_frames,
     with_media_metadata,
 )
 from iot_data_pipeline_spark.operators.similarity import (
@@ -305,16 +304,6 @@ def test_extract_features_strict_raises(media):
     )
 
 
-def test_sample_frames_fanout(media):
-    got = sample_frames(media, every_ms=1000).collect()
-    by_id = {}
-    for r in got:
-        by_id.setdefault(r["media_id"], []).append(r["frame_ts_ms"])
-    assert sorted(by_id[2]) == [0, 1000, 2000]
-    # zero-duration media still yields frame 0 (still image)
-    assert by_id[1] == [0]
-
-
 # ------------------------------------------------------------------ skew
 
 
@@ -567,28 +556,6 @@ def test_expect_split_partitions_rows(spark):
     assert stats["n_rows"] == 4
     assert stats["viol_v_range"] == 3
     assert stats["viol_tag_present"] == 1
-
-
-def test_extract_features_arrow_matches_pandas(media):
-    from iot_data_pipeline_spark.operators.multimodal import (
-        extract_features,
-        extract_features_arrow,
-    )
-
-    via_pandas = {
-        r["media_id"]: r["features"]
-        for r in extract_features(media, mode="fake", dim=8).collect()
-    }
-    via_arrow = {
-        r["media_id"]: r["features"]
-        for r in extract_features_arrow(media, mode="fake", dim=8).collect()
-    }
-    assert via_arrow == via_pandas
-    with pytest.raises(Exception) as ei:
-        extract_features_arrow(media, mode="strict").collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 def test_global_running_sum_matches_window(spark, sf_dir):

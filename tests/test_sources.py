@@ -378,7 +378,7 @@ def test_jsonl_nonfinite_numbers_reference_parity(spark, tmp_path):
     assert got["d2"] == math.inf and got["d3"] == -math.inf
     assert got["d4"] == math.inf  # overflow -> inf, same as json.loads
     out = str(tmp_path / "out")
-    write_jsonl(good, out, coalesce=1)
+    write_jsonl(good.coalesce(1), out)
     back, bad2 = split_corrupt(read_jsonl(spark, out))
     rt = {r.device_id: r.temperature for r in back.collect()}
     assert bad2.count() == 0
@@ -401,7 +401,7 @@ def test_write_jsonl_subsecond_timestamps_lossless(spark, tmp_path):
     ts = datetime.datetime(2024, 1, 1, 0, 0, 0, 123456)
     df = spark.createDataFrame([Row(device_id="a", timestamp=ts)])
     out = str(tmp_path / "out")
-    write_jsonl(df, out, coalesce=1)
+    write_jsonl(df.coalesce(1), out)
     schema = T.StructType(
         [
             T.StructField("device_id", T.StringType()),
@@ -421,34 +421,27 @@ def test_write_jsonl_subsecond_timestamps_lossless(spark, tmp_path):
     )
     ndf = spark.createDataFrame([("a", ts)], schema=ntz_schema)
     out2 = str(tmp_path / "out_ntz")
-    write_jsonl(ndf, out2, coalesce=1)
+    write_jsonl(ndf.coalesce(1), out2)
     import glob as _glob
 
     [part] = _glob.glob(f"{out2}/part-*")
     assert ".123456" in open(part).read()
     back2 = read_jsonl(spark, out2, ntz_schema, keep_corrupt=False)
     assert [r.timestamp for r in back2.collect()] == [ts]
-    # round-11 ADVICE: caller formats spelling the offset with OTHER
-    # zone letters ("xxx", "VV", bare "Z") must also strip for the NTZ
-    # option -- the old replace("XXX","") left a zone pattern behind,
-    # which fails at write time when NTZ columns are present; a QUOTED
-    # literal 'Z' is not a zone pattern and must be preserved.
-    # round-12 ADVICE twin: zone letters MID-pattern or followed by a
-    # quoted literal must also strip (the trailing-run regex left them,
-    # failing the write when NTZ columns are present); unquoted zone
-    # runs drop wherever they sit, quoted text survives verbatim.
-    for fmt, frag in (
-        ("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx", ".123456"),
-        ("yyyy-MM-dd HH:mm:ss.SSSSSSVV", ".123456"),
-        ("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'", ".123456Z"),
-        ("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX'Z'", ".123456Z"),
-        ("yyyy-MM-dd HH:mm:ss.SSSSSSZ' utc'", ".123456 utc"),
-        ("yyyy-MM-dd HH:mm:ss.SSSSSSO' end'", ".123456 end"),
-    ):
-        out3 = str(tmp_path / f"out_{abs(hash(fmt))}")
-        write_jsonl(ndf, out3, coalesce=1, timestamp_format=fmt)
-        [part] = _glob.glob(f"{out3}/part-*")
-        assert frag in open(part).read(), fmt
+    # both column types in ONE write: each renders through its own
+    # option, and neither may truncate the other to millis
+    mixed_schema = T.StructType(
+        [
+            T.StructField("device_id", T.StringType()),
+            T.StructField("ts_ltz", T.TimestampType()),
+            T.StructField("ts_ntz", T.TimestampNTZType()),
+        ]
+    )
+    mdf = spark.createDataFrame([("a", ts, ts)], schema=mixed_schema)
+    out3 = str(tmp_path / "out_mixed")
+    write_jsonl(mdf.coalesce(1), out3)
+    back3 = read_jsonl(spark, out3, mixed_schema, keep_corrupt=False)
+    assert [(r.ts_ltz, r.ts_ntz) for r in back3.collect()] == [(ts, ts)]
 
 
 def test_read_csv_embedded_newlines(spark, tmp_path):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from iot_data_pipeline_spark.operators.stateful import (
     apply_last_state_stream,
     last_state_batch,
-    transform_last_state_stream,
 )
 from iot_data_pipeline_spark.sources.readers import SENSOR_SCHEMA
 
@@ -23,45 +22,13 @@ def _write(d, name, recs):
             f.write(json.dumps(r) + "\n")
 
 
-def _has_protobuf() -> bool:
-    """transformWithStateInPandas speaks protobuf to the JVM state server;
-    the operator is real but untestable where protobuf isn't installed."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_transform_with_state_gate_is_loud(spark):
-    """Two-sided dependency gate (round-2 verdict #5): where protobuf is
-    absent, ``transform_last_state_stream`` must raise the documented
-    RuntimeError at CALL time (not an executor stack trace mid-stream);
-    where protobuf is present, the full parity test below runs instead.
-    Either way the API surface is exercised -- nothing hides in a skip."""
-    if _has_protobuf():
-        pytest.xfail("protobuf present: covered by the parity test variant")
-    stream = (
-        spark.readStream.format("rate")
-        .load()
-        .selectExpr(
-            "'a' AS device_id", "timestamp", "CAST(value AS DOUBLE) AS temperature"
-        )
-    )
-    with pytest.raises(RuntimeError, match="google.protobuf"):
-        transform_last_state_stream(stream)
-
-
 _VARIANTS = [(apply_last_state_stream, "device_state")]
-if _has_protobuf():
-    _VARIANTS.append((transform_last_state_stream, "device_state_tws"))
 
 
 @pytest.mark.parametrize(
     "apply_stream, sink",
     _VARIANTS,
-    ids=["applyInPandasWithState", "transformWithStateInPandas"][: len(_VARIANTS)],
+    ids=["applyInPandasWithState"],
 )
 def test_stream_state_matches_batch(spark, tmp_path, apply_stream, sink):
     raw = tmp_path / "raw"
@@ -78,17 +45,6 @@ def test_stream_state_matches_batch(spark, tmp_path, apply_stream, sink):
     _write(raw, "f1.jsonl", recs[:3])
     _write(raw, "f2.jsonl", recs[3:])
 
-    # transformWithState requires the RocksDB state store provider; the
-    # legacy form runs on the default HDFS-backed one too.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    if apply_stream is transform_last_state_stream:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-
     stream = (
         spark.readStream.schema(SENSOR_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -104,16 +60,10 @@ def test_stream_state_matches_batch(spark, tmp_path, apply_stream, sink):
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("stateful stream did not drain")
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
+    q.awaitTermination(120)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError("stateful stream did not drain")
 
     # memory sink in update mode appends one row per state update; the
     # last update per device is the final state.
@@ -206,8 +156,7 @@ def test_rocksdb_state_store_provider_parity(spark, tmp_path):
     (bounded heap, changelog checkpointing on a real cluster) -- must
     produce the same final device states as the default HDFS-backed
     provider for the identical stateful stream. This exercises the
-    bundled rocksdbjni path independent of the protobuf-gated
-    transformWithState variant: provider choice is pure configuration,
+    bundled rocksdbjni path: provider choice is pure configuration,
     so any declared stateful query can switch backends untouched."""
     raw = tmp_path / "raw"
     raw.mkdir()
