@@ -1,7 +1,9 @@
 """Deduplication operator family (north-star mandate; SURVEY.md B44/B45).
 
 Generic, column-parameterized versions of what the declared queries
-q22-q26 instantiate. All shapes are shuffle-minimal by construction:
+q22-q23 instantiate; q192 composes ``shingle_hashes`` ->
+``minhash_signatures`` -> ``lsh_candidate_pairs`` directly. All shapes
+are shuffle-minimal by construction:
 
 - exact: group on a 32-byte digest, never the content (min_by partial
   aggregation, so even a corpus that is 90% one document never funnels
@@ -10,8 +12,8 @@ q22-q26 instantiate. All shapes are shuffle-minimal by construction:
   -> band-bucket equi-join; no corpus-wide quadratic step, and the
   within-bucket quadratic (duplicate-cluster blowup) is capped by
   ``max_bucket`` star pairing;
-- simhash: fixed-width fingerprint per doc; candidate pairing either by
-  blocking key (dense corpora) or prefix bands (sparse fingerprints).
+- simhash: q24 (``queries/llm.py``) is the one implementation; it
+  fingerprints per (doc, lang) block, which is its blocking key.
 """
 
 from __future__ import annotations
@@ -229,71 +231,3 @@ def lsh_candidate_pairs(
         (F.col("__n") > max_bucket) & (F.col("id") != F.col("__hub"))
     ).select(F.col("__hub").alias("id_a"), F.col("id").alias("id_b"))
     return pairwise(small).unionByName(star).distinct()
-
-
-def minhash_dedup_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup candidates (q23's general form)."""
-    return lsh_candidate_pairs(
-        minhash_signatures(shingle_hashes(df, text_col, id_col, k), n_hashes),
-        n_bands,
-    )
-
-
-def simhash_fingerprints(
-    df: DataFrame, text_col: str, id_col: str, n_bits: int = 30
-) -> DataFrame:
-    """(id, simhash): n_bits-bit SimHash over the document's distinct tokens.
-
-    Bit j of the fingerprint is the sign of sum(+/-1) over token-hash bit j
-    -- one groupBy with n_bits conditional sums; fingerprints are
-    fixed-width however long the documents are.
-    """
-    tok = (
-        df.select(F.col(id_col).alias("id"), F.explode(F.split(text_col, " ")).alias("token"))
-        .distinct()
-        .select("id", portable_hash(F.col("token")).alias("h"))
-    )
-    bit_sums = [
-        F.sum(F.when(F.expr(f"(h >> {j}) & 1 = 1"), 1).otherwise(-1)).alias(f"b{j}")
-        for j in range(n_bits)
-    ]
-    fp = " + ".join(
-        f"(CASE WHEN b{j} > 0 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END << {j})"
-        for j in range(n_bits)
-    )
-    return tok.groupBy("id").agg(*bit_sums).select("id", F.expr(fp).alias("simhash"))
-
-
-def hamming_pairs(
-    fp: DataFrame, max_distance: int, block_col: str | None = None
-) -> DataFrame:
-    """Pairs of fingerprints within ``max_distance``, joined within
-    ``block_col`` blocks (or globally when None -- bounded inputs only).
-
-    For sparse fingerprint spaces, prefer prefix-band blocking instead:
-    split n_bits into (max_distance + 1) bands and use
-    :func:`lsh_candidate_pairs` on the band keys -- pigeonhole makes it
-    recall-lossless. On dense corpora (most pairs qualify) banding is pure
-    overhead, which is why it is a separate composition, not the default.
-    """
-    a, b = fp.alias("a"), fp.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col is not None:
-        cond = (F.col(f"a.{block_col}") == F.col(f"b.{block_col}")) & cond
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, cond)
-        .filter(ham <= max_distance)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-    )

@@ -1,8 +1,9 @@
-"""Temporal joins Spark has no built-in for: as-of and range joins
-(SURVEY.md B14/B15; reference has no temporal joins -- this is north-star
-surface motivated by the events table).
+"""The temporal join Spark has no built-in for: the as-of join
+(SURVEY.md B15; reference has no temporal joins -- this is north-star
+surface motivated by the events table). The bucketed range join (B14)
+is q08 (``queries/relational.py``), its one implementation.
 
-Both are compositions of public DataFrame ops, so Catalyst still prunes,
+A composition of public DataFrame ops, so Catalyst still prunes,
 pushes down, and (for bounded right sides) broadcasts.
 """
 
@@ -91,41 +92,4 @@ def asof_join(
         paired.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__asof_ts")
-    )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    lower,
-    upper,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Join right rows whose ``right_on`` falls within
-    ``[left_on + lower, left_on + upper]`` (intervals as Column exprs or
-    literals of the key's type).
-
-    With ``by`` keys this is an equi-join plus range predicates -- the
-    predicates evaluate post-probe inside the hash join, no extra stage.
-    Without ``by``, Spark plans a nested-loop join: correct, but at scale
-    you bucket the time axis yourself (add a coarse time-bucket column to
-    both sides and include it in ``by``) -- that is exactly what q08 does.
-    """
-    by = by or []
-    cond = (F.col(f"r.{right_on}") >= F.col(f"l.{left_on}") + lower) & (
-        F.col(f"r.{right_on}") <= F.col(f"l.{left_on}") + upper
-    )
-    for k in by:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    rcols = [
-        F.col(f"r.{c}").alias(c if c not in left.columns else f"{c}_right")
-        for c in right.columns
-        if c not in by
-    ]
-    return (
-        left.alias("l")
-        .join(right.alias("r"), cond, "inner")
-        .select(*[F.col(f"l.{c}").alias(c) for c in left.columns], *rcols)
     )

@@ -5,7 +5,8 @@ Three tiers, in order of scale:
 1. ``cosine_topk``  -- brute force, exact: every (query, candidate) pair.
    Correctness baseline and the right choice when queries are few.
 2. ``cosine_topk_blocked`` -- IVF-style: both sides assigned to cells,
-   pairing only within a cell. Recall < 1, cost / n_cells.
+   pairing only within a cell. Recall < 1, cost / n_cells. q31 is its
+   oracle-checked caller.
 3. ``cosine_topk_pandas`` -- same brute-force semantics, but the scoring
    runs in an Arrow-batched pandas UDF doing one numpy matmul per batch
    (B50): ~10-50x less per-pair overhead than interpreted higher-order
@@ -38,12 +39,13 @@ def dot(x: Column, y: Column) -> Column:
     )
 
 
-def _normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _normed(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
     emb = F.transform(F.col(vec_col), lambda v: v.cast("double"))
     return df.select(
         F.col(id_col).alias("id"),
         emb.alias("emb"),
         F.sqrt(dot(emb, emb)).alias("nrm"),
+        *extra,
     ).filter(
         # zero-norm/NULL: no direction; NaN/Inf norms: no defined cosine
         # (NaN compares GREATER than 0 in Spark, so > 0 alone admits it)
@@ -86,7 +88,7 @@ def cosine_topk(
     )
 
 
-def assign_cells(df: DataFrame, vec_col: str, n_sign_bits: int = 3) -> Column:
+def assign_cells(vec_col: str, n_sign_bits: int = 3) -> Column:
     """IVF cell id by sign-quantizing the first ``n_sign_bits`` components
     (a stand-in for trained centroids: same plan shape, no training dep)."""
     cell = F.lit(0)
@@ -110,23 +112,17 @@ def cosine_topk_blocked(
     The pairing becomes an equi-join on cell -- a hash join, never a cross
     join -- cutting candidates by ~2^n_sign_bits at the price of recall.
     This is the 100 TB shape: cells partition the candidate set, each
-    executor sees only its cells' vectors.
+    executor sees only its cells' vectors. The cell is computed in the
+    same projection as the norm, so the cell join is the plan's only join.
     """
-    q = _normed(queries, id_col, vec_col)
-    qcell = queries.select(
-        F.col(id_col).alias("id"), assign_cells(queries, vec_col, n_sign_bits).alias("cell")
-    )
-    q = q.join(qcell, "id").select(
+    cell = assign_cells(vec_col, n_sign_bits).alias("cell")
+    q = _normed(queries, id_col, vec_col, cell).select(
         F.col("id").alias("query_id"),
         F.col("emb").alias("qemb"),
         F.col("nrm").alias("qnrm"),
         F.col("cell").alias("qcell"),
     )
-    c = _normed(candidates, id_col, vec_col)
-    ccell = candidates.select(
-        F.col(id_col).alias("id"), assign_cells(candidates, vec_col, n_sign_bits).alias("cell")
-    )
-    c = c.join(ccell, "id")
+    c = _normed(candidates, id_col, vec_col, cell)
     sim = F.round(dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")), 4)
     scored = (
         c.join(F.broadcast(q), F.col("qcell") == F.col("cell"))

@@ -25,6 +25,8 @@ from iot_data_pipeline_spark.functions.hashing import (
     PORTABLE_MOD as MOD,
     portable_hash,
 )
+from iot_data_pipeline_spark.operators.multimodal import with_media_metadata
+from iot_data_pipeline_spark.operators.similarity import cosine_topk_blocked, dot
 from iot_data_pipeline_spark.operators.spread import spread_rows as _spread_rows
 from iot_data_pipeline_spark.queries.registry import declared
 from iot_data_pipeline_spark.queries.base import ORACLE_FINITE, valid_embeddings
@@ -448,6 +450,9 @@ def q24_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     most docs in one band bucket, making banding pure overhead. At 100 TB with realistic
     (sparse) fingerprints, banding is the right shape -- it is exactly the
     q23 MinHash-LSH band join with (simhash >> 6k) & 63 as the band key.
+
+    This is the engine's one SimHash: the fingerprint groups by
+    (doc_id, lang) so the lang block key rides along to the pair join.
     """
     corpus = _corpus_near(spark, sf_dir)
     tok = corpus.select(
@@ -778,20 +783,23 @@ def q29_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q30_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal-column plumbing (B48): treat content as an opaque binary
-    payload with typed metadata (byte length, digest, chunk count). The
-    decode/feature-extract stage lives in operators.multimodal (stubbed --
-    no codecs in this container); this query proves the binary schema,
-    hashing, and chunk accounting survive Spark<->oracle round trips."""
+    payload with typed metadata (byte length, digest, chunk count) from
+    ``operators.multimodal.with_media_metadata``; this query proves the
+    binary schema, hashing, and chunk accounting survive Spark<->oracle
+    round trips."""
     docs = read_table(spark, sf_dir, "documents")
-    payload = F.encode(F.col("text"), "utf-8")
-    return docs.select(
-        "doc_id",
-        F.octet_length(payload).cast("long").alias("byte_len"),
-        F.substring(F.sha2(payload, 256), 1, 16).alias("digest16"),
-        (F.floor(F.octet_length(payload) / 1024) + 1)
-        .cast("long")
-        .alias("n_chunks"),
-    ).orderBy("doc_id")
+    return (
+        with_media_metadata(
+            docs.select("doc_id", F.encode("text", "utf-8").alias("content"))
+        )
+        .select(
+            "doc_id",
+            "byte_len",
+            F.substring("digest", 1, 16).alias("digest16"),
+            "n_chunks",
+        )
+        .orderBy("doc_id")
+    )
 
 
 @declared(
@@ -824,42 +832,13 @@ def q31_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned to one of 8 cells by sign-quantizing the first 3 components
     (a stand-in for trained centroids); each query probes only its own cell.
     The join is equi on cell -- a hash shuffle, not a cross join; recall is
-    traded for a ~8x candidate reduction, the IVF contract."""
+    traded for a ~8x candidate reduction, the IVF contract. The operator
+    is ``operators.similarity.cosine_topk_blocked``; this is its
+    oracle-checked instance."""
     emb = valid_embeddings(spark, sf_dir)
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
-    )
-    e = emb.select(
-        "vec_id",
-        as_double.alias("emb"),
-        F.sqrt(dot(as_double, as_double)).alias("nrm"),
-        cell.alias("cell"),
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"),
-        F.col("cell").alias("qcell"),
-    )
-    sim = F.round(
-        dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")), 4
-    )
-    scored = (
-        e.join(F.broadcast(q), (F.col("qcell") == F.col("cell")))
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "vec_id")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "sim")
+        cosine_topk_blocked(emb.filter(F.col("vec_id") < 5), emb, k=3)
+        .withColumnRenamed("cand_id", "vec_id")
         .orderBy("query_id", F.desc("sim"), "vec_id")
     )
 
@@ -3169,9 +3148,6 @@ def rag_retrieve(with_emb: DataFrame) -> DataFrame:
     stand-in (q143, cross-engine oracle-able) and a model-shaped
     pandas-UDF encoder (bench b06) differ only in how ``e`` is computed.
     """
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
     cell = (
         F.when(F.element_at("e", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("e", 2) > 0, 2).otherwise(0)
@@ -3535,9 +3511,6 @@ def q148_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
     cell = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
@@ -3678,9 +3651,6 @@ def q149_ivf_multiprobe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
     cell = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
@@ -3869,9 +3839,6 @@ def q183_ivf_adaptive_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
     cell = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
@@ -4817,9 +4784,6 @@ def q176_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
-    )
     cell = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iot_data_pipeline_spark.operators.similarity import dot
 from iot_data_pipeline_spark.queries.base import fmt_ts
 from iot_data_pipeline_spark.queries.registry import declared
 from iot_data_pipeline_spark.queries.base import valid_embeddings
@@ -173,7 +174,9 @@ def q08_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (each click lands in its own bucket plus both neighbors via
     explode), then apply the exact range predicate. Shuffle is hash on the
     hour bucket -- linear, skew-resistant, AQE-coalesced. DuckDB's oracle
-    uses its native IEJoin formulation; results are identical.
+    uses its native IEJoin formulation; results are identical. The join
+    is a LEFT join so errors with no click count 0; this query is the
+    engine's one range join (there is no generic operator for it).
     """
     ev = read_table(spark, sf_dir, "events")
     hour_us = 3_600_000_000
@@ -533,18 +536,15 @@ def q11c_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-5 neighbors of vec_id=0 within its label (B16/B35/B46).
 
-    Dot products via zip_with + aggregate in DOUBLE with sequential
-    accumulation -- bit-identical to DuckDB's list_dot_product over
-    DOUBLE[]. Ranking uses the ROUNDED similarity with vec_id tie-break so
+    Dot products via ``operators.similarity.dot`` (zip_with + aggregate
+    in DOUBLE with sequential accumulation) -- bit-identical to DuckDB's
+    list_dot_product over DOUBLE[]. Ranking uses the ROUNDED similarity with vec_id tie-break so
     the top-5 cut is stable across engines. The label filter is the
     blocking step: at 100 TB you never cross-join the full corpus -- you
     broadcast the query vector and prune by partition/label first.
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
     q = emb.filter(F.col("vec_id") == 0).select(
         as_double("embedding").alias("qe"), F.col("label").alias("qlabel")
     )

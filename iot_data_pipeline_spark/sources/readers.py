@@ -522,17 +522,6 @@ _INFERENCE_CONFS = (
     "spark.sql.files.ignoreCorruptFiles",
 )
 
-#: Serializes the brief partition-type-inference conf toggle below across
-#: the ENGINE'S OWN threads. Reads issued by foreign threads on the same
-#: SparkSession during the window would still see inference off -- the
-#: engine's contract is a single-threaded driver (every entry point in
-#: this repo runs reads sequentially); documented rather than isolated
-#: because a per-read spark.newSession() would detach the returned plan
-#: from the caller's session state (temp views, conf) for a hazard the
-#: deployment shape does not have.
-_INFERENCE_TOGGLE_LOCK = threading.Lock()
-
-
 def clear_lake_schema_cache() -> None:
     """Drop every cached table schema. Never needed for correctness (a
     changed listing or inference conf misses the cache by itself); it
@@ -617,19 +606,15 @@ def _read_explicit_files(spark: SparkSession, src: str, files: list[str]) -> Dat
     bounded vs unbounded: the full read infers STRING and keeps ``'01'``, the
     pruned read infers INT and returns ``1`` -- a different value AND a
     different column type from the same table. Fix: take the
-    whole-table partition types from the table's schema cache
+    whole-table schema from the table's schema cache
     (:func:`_cached_schema` -- keyed by the whole-table listing, so a
     new partition directory, whatever its spelling, re-infers; a miss
     runs exactly Spark's own whole-table inference under the session's
-    confs), read the subset with partition-type inference OFF (raw
-    spellings), and cast to the whole-table types -- bit-identical to
-    the unpruned read on every layout. Tables without hive-partition
-    segments skip all of this (one string scan of the path list). The
-    inference conf is captured at ANALYSIS time (probed), so the brief
-    session-conf toggle cannot leak into the returned lazy plan; the
-    toggle window is serialized across engine threads by
-    :data:`_INFERENCE_TOGGLE_LOCK` (single-threaded-driver contract for
-    foreign threads, see the lock's note)."""
+    confs) and read the subset WITH it: Spark parses each partition
+    spelling as the given type, so the subset is bit-identical to the
+    unpruned read on every layout, and no session conf is touched.
+    Tables without hive-partition segments skip all of this (one string
+    scan of the path list)."""
     reader = spark.read.option("basePath", src)
     part_cols = _hive_partition_cols(src, files)  # on RAW paths
     files = [_glob_escape(f) for f in files]  # Spark globs every path
@@ -656,19 +641,12 @@ def _read_explicit_files(spark: SparkSession, src: str, files: list[str]) -> Dat
                 stacklevel=2,
             )
             return reader.parquet(*files)
-    lake_fields = {f.name.lower(): f.dataType for f in schema.fields}
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    with _INFERENCE_TOGGLE_LOCK:
-        old = spark.conf.get(key, "true")
-        spark.conf.set(key, "false")
-        try:
-            df = reader.parquet(*files)
-        finally:
-            spark.conf.set(key, old)
-    for c in part_cols:
-        t = lake_fields.get(c.lower())
-        if t is not None:
-            df = df.withColumn(c, F.col(c).cast(t))
+    df = reader.schema(schema).parquet(*files)
+    names = schema.fieldNames()
+    if df.columns != names:
+        # a partition column that is also a data column comes last under
+        # a given schema; the inferred read keeps it at its data position
+        df = df.select(*[F.col("`" + c.replace("`", "``") + "`") for c in names])
     return df
 
 

@@ -10,11 +10,11 @@ from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.operators.dedup import (
     exact_dedup,
-    hamming_pairs,
-    minhash_dedup_candidates,
-    simhash_fingerprints,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    shingle_hashes,
 )
-from iot_data_pipeline_spark.operators.joins import asof_join, range_join
+from iot_data_pipeline_spark.operators.joins import asof_join
 from iot_data_pipeline_spark.operators.multimodal import (
     extract_features,
     with_media_metadata,
@@ -101,26 +101,6 @@ def test_asof_keep_unmatched(trades, quotes):
     }
 
 
-def test_range_join(trades, quotes):
-    got = range_join(
-        trades,
-        quotes,
-        "t",
-        "qt",
-        F.expr("INTERVAL -20 MINUTES"),
-        F.expr("INTERVAL 20 MINUTES"),
-        by=["sym"],
-    ).collect()
-    # quotes within +/-20min of each trade, same symbol
-    pairs = {(r["sym"], r["t"], r["qt"]) for r in got}
-    assert pairs == {
-        ("A", ts(10, 0), ts(9, 50)),
-        ("A", ts(10, 0), ts(10, 20)),
-        ("A", ts(10, 30), ts(10, 20)),
-        ("B", ts(10, 15), ts(10, 0)),
-    }
-
-
 # ---------------------------------------------------------------- dedup
 
 
@@ -171,22 +151,10 @@ def test_minhash_candidates_find_neardups(spark, sf_dir):
         F.lit(900000).alias("doc_id"),
         F.expr("array_join(slice(split(text, ' '), 1, size(split(text,' ')) - 1), ' ')").alias("text"),
     )
-    cand = minhash_dedup_candidates(docs.unionByName(d0), "text", "doc_id")
-    assert (0, 900000) in {(r["id_a"], r["id_b"]) for r in cand.collect()}
-
-
-def test_simhash_identical_docs_distance_zero(spark):
-    df = spark.createDataFrame(
-        [
-            Row(id=1, text="alpha beta gamma delta"),
-            Row(id=2, text="alpha beta gamma delta"),
-            Row(id=3, text="totally different words entirely distinct tokens"),
-        ]
+    cand = lsh_candidate_pairs(
+        minhash_signatures(shingle_hashes(docs.unionByName(d0), "text", "doc_id"))
     )
-    fp = simhash_fingerprints(df, "text", "id")
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in hamming_pairs(fp, 30).collect()}
-    assert pairs[(1, 2)] == 0
-    assert pairs[(1, 3)] > 0
+    assert (0, 900000) in {(r["id_a"], r["id_b"]) for r in cand.collect()}
 
 
 # ------------------------------------------------------------ similarity
@@ -211,6 +179,40 @@ def test_cosine_topk_tiers_agree(spark, sf_dir):
     for r in blocked.collect():
         if key(r) in exact_sims:
             assert abs(r["sim"] - exact_sims[key(r)]) < 1e-9
+
+
+def test_cosine_topk_blocked_plans_one_join(spark):
+    """The IVF tier's only join is the broadcast cell join: the cell is
+    computed in the projection that makes the norm, not joined back on
+    id from each side."""
+    import re
+
+    from iot_data_pipeline_spark.plans.inspect import formatted_plan
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    plan = formatted_plan(cosine_topk_blocked(df, df, k=2, n_sign_bits=1))
+    joins = re.findall(r"^\(\d+\) (\w*Join\w*)", plan, re.M)
+    assert joins == ["BroadcastHashJoin"], plan
+
+
+def test_queries_share_one_dot_product_fold():
+    """The oracle-exact dot product is ``operators.similarity.dot``; no
+    query module folds its own ``zip_with`` copy."""
+    from pathlib import Path
+
+    import iot_data_pipeline_spark.queries as queries
+
+    root = Path(queries.__file__).parent
+    hits = [
+        f"{p.name}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "F.zip_with(" in line
+    ]
+    assert hits == [], hits
 
 
 def test_cosine_tiers_exclude_zero_norm_vectors(spark):

@@ -611,6 +611,29 @@ def test_pruned_read_partition_type_parity(spark, tmp_path):
     ]
 
 
+def test_pruned_read_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """The partition-type parity of a bounds-pruned read comes from the
+    whole-table schema, not from switching partition-type inference off
+    on the session: another thread's read on the same session would plan
+    with inference off while the switch is held."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    d = _partitioned_mixed_events(tmp_path)
+    read_table(spark, d, "events")  # fill the schema cache
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    bnd = read_table(spark, d, "events", bounds={"ts": ("2023-11-14", "2023-11-17")})
+    assert len(bnd.inputFiles()) == 1  # the explicit-file path ran
+    assert dict(bnd.dtypes)["batch"] == "string"
+    assert "spark.sql.sources.partitionColumnTypeInference.enabled" not in keys
+
+
 def test_pruner_skips_empty_row_groups_exactly(spark, tmp_path):
     """Round-12 found-and-fixed: a 0-row row group (a streaming writer's
     empty-batch flush) carries no statistics, and the stats-less
@@ -1006,3 +1029,32 @@ def test_schema_cache_keeps_column_order_of_overlapping_partition(
     second = R.read_table(spark, str(tmp_path), "ov")
     assert first.columns == second.columns == ["a", "x"]
     assert str(tmp_path / "ov.parquet") not in R._SCHEMA_CACHE
+
+
+def test_pruned_read_keeps_column_order_of_overlapping_partition(
+    spark, tmp_path
+):
+    """A bounds-pruned read of a table whose partition column is also a
+    data column returns the whole-table read's columns and types, in its
+    order (a schema-given read would put the partition column last)."""
+    import datetime as dt
+
+    root = tmp_path / "events.parquet"
+    for a, day in ((1, "2020-06-01"), (2, "2026-01-01")):
+        os.makedirs(root / f"a={a}")
+        pq.write_table(
+            pa.table(
+                {
+                    "a": pa.array([a], pa.int32()),
+                    "x": pa.array([5], pa.int64()),
+                    "ts": pa.array([dt.datetime.fromisoformat(day)], pa.timestamp("us")),
+                }
+            ),
+            str(root / f"a={a}" / "p.parquet"),
+        )
+    full = read_table(spark, str(tmp_path), "events")
+    bnd = read_table(spark, str(tmp_path), "events", bounds={"ts": ("2025-01-01", None)})
+    assert len(bnd.inputFiles()) == 1
+    assert bnd.dtypes == full.dtypes
+    assert bnd.columns == ["a", "x", "ts"]
+    assert [(r["a"], r["x"]) for r in bnd.collect()] == [(2, 5)]
