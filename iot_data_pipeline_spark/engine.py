@@ -132,11 +132,12 @@ class Engine:
         """Snapshot retention for an atomically-published zone (round
         14): keep the newest ``keep_last`` versions OR anything younger
         than ``keep_age_s``; delete only outside both. Returns the
-        versions removed (sources/maintenance.py)."""
-        from iot_data_pipeline_spark.sources.maintenance import expire_snapshots
+        versions removed (``matview.vacuum_snapshots``, the one
+        retention call)."""
+        from iot_data_pipeline_spark.sources.matview import vacuum_snapshots
 
-        return expire_snapshots(
-            self.spark, zone, keep_last=keep_last, keep_age_s=keep_age_s
+        return vacuum_snapshots(
+            self.spark, zone, keep=keep_last, keep_age_s=keep_age_s
         )
 
     def release_claim(self, zone: str, version: int | None = None) -> list[int]:

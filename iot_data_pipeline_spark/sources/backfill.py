@@ -33,13 +33,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iot_data_pipeline_spark.sources.matview import _jpath, _read_text
+
 _MANIFEST = "_backfill_manifest.json"
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
 def partition_fingerprints(
@@ -47,7 +43,7 @@ def partition_fingerprints(
 ) -> dict[str, list[int]]:
     """Map of partition value -> [n_files, total_bytes, max_mtime_ms],
     from file status only (no data read)."""
-    fs, root, _ = _fs(spark, path)
+    fs, root, _ = _jpath(spark, path)
     out: dict[str, list[int]] = {}
     prefix = f"{partition_col}="
     for status in fs.listStatus(root):
@@ -67,21 +63,14 @@ def partition_fingerprints(
 
 
 def _read_manifest(spark: SparkSession, dst_path: str) -> dict[str, list[int]]:
-    fs, p, jvm = _fs(spark, f"{dst_path.rstrip('/')}/{_MANIFEST}")
-    if not fs.exists(p):
-        return {}
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
+    text = _read_text(spark, f"{dst_path.rstrip('/')}/{_MANIFEST}")
+    return {} if text is None else json.loads(text)
 
 
 def _write_manifest(
     spark: SparkSession, dst_path: str, manifest: dict[str, list[int]]
 ) -> None:
-    fs, p, _ = _fs(spark, f"{dst_path.rstrip('/')}/{_MANIFEST}")
+    fs, p, _ = _jpath(spark, f"{dst_path.rstrip('/')}/{_MANIFEST}")
     out = fs.create(p, True)
     try:
         out.write(bytearray(json.dumps(manifest, sort_keys=True), "utf-8"))
@@ -117,26 +106,19 @@ def backfill(
     Atomic-zone composition (round 13): an atomically-published SOURCE
     resolves to its current snapshot (a direct root read would union
     every version); an atomically-published DESTINATION is REFUSED loud
-    -- dynamic partition overwrite writes beside the snapshot dirs where
-    pointer-resolving readers never look, so the backfill would
-    "succeed" while every read keeps serving the old snapshot (the worst
-    failure shape: silent no-op). A zone is either partition-refreshed
+    by ``matview.ensure_plain_zone`` -- dynamic partition overwrite
+    writes beside the snapshot dirs where pointer-resolving readers
+    never look, so the backfill would "succeed" while every read keeps
+    serving the old snapshot (the worst failure shape: silent no-op). A zone is either partition-refreshed
     (this module) or snapshot-published (matview), never both.
     """
-    from iot_data_pipeline_spark.sources.matview import resolve_snapshot_dir
+    from iot_data_pipeline_spark.sources.matview import (
+        ensure_plain_zone,
+        resolve_snapshot_dir,
+    )
 
-    resolved_src = resolve_snapshot_dir(spark, src_path)
-    if resolved_src is not None:
-        src_path = resolved_src
-    if resolve_snapshot_dir(spark, dst_path) is not None:
-        raise ValueError(
-            f"backfill destination {dst_path!r} is an atomically-published "
-            "zone (_current pointer present): dynamic partition overwrite "
-            "would write beside the snapshots, invisible to every "
-            "pointer-resolving reader. Refresh it via "
-            "write_parquet(atomic=True) / matview.publish_snapshot, or "
-            "choose a plain zone for partition-scoped backfill."
-        )
+    ensure_plain_zone(spark, dst_path, "backfill")
+    src_path = resolve_snapshot_dir(spark, src_path) or src_path
     # capture fingerprints ONCE, before reading any data: these are the
     # versions this run consumes, and they are what the manifest must
     # record -- re-listing after the derive would stamp a fingerprint for

@@ -1,4 +1,4 @@
-"""Data-lake maintenance operators: small-file compaction and sorted
+"""Data-lake maintenance operators: small-file compaction and Z-order
 layout rewriting.
 
 The reference's one-file-per-event design (reference
@@ -6,6 +6,8 @@ lambda/s3_event_handler.py:44-48) produces exactly the pathology a
 long-lived lake dies of: millions of tiny objects, each a full
 open/footer-parse/close at scan time. These operators are the batch
 janitors a processed zone needs once files arrive continuously.
+Snapshot retention for atomically-published zones is
+``matview.vacuum_snapshots``.
 """
 
 from __future__ import annotations
@@ -16,57 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _guard_zone_write(spark: SparkSession, out_path: str, op: str) -> None:
-    """Refuse a plain maintenance rewrite into an atomically-published
-    zone (round-13 probe, measured as silent destruction: a plain
-    ``mode=overwrite`` into a pointer zone DELETED the snapshots and the
-    ``_current`` pointer, silently demoting the zone to plain layout).
-    Same hazard class as the write_parquet/backfill guards."""
-    from iot_data_pipeline_spark.sources.matview import resolve_snapshot_dir
-
-    if resolve_snapshot_dir(spark, out_path) is not None:
-        raise ValueError(
-            f"{op}: {out_path!r} is an atomically-published zone "
-            "(_current pointer present); a plain overwrite would destroy "
-            "its snapshots. Pass atomic=True to publish the rewrite as "
-            "the next snapshot."
-        )
-
-
-def expire_snapshots(
-    spark: SparkSession,
-    zone: str,
-    keep_last: int = 2,
-    keep_age_s: float | None = None,
-) -> list[int]:
-    """Snapshot retention for atomically-published zones -- the
-    maintenance janitor that makes ``atomic=True`` sustainable.
-
-    Every atomic refresh adds a FULL copy of the zone; before round 14
-    nothing in the pipeline ever reclaimed them, so at 100 TB a nightly
-    refresh doubles storage daily until someone hand-calls vacuum. This
-    entry point composes with the maintenance writers (or runs on its
-    own schedule): a version survives if it is among the newest
-    ``keep_last`` published versions OR younger than ``keep_age_s``
-    seconds -- deletion requires falling outside both, so sizing
-    ``keep_age_s`` above the longest query keeps every directory a
-    live plan can still reference. Default keeps the current AND
-    previous snapshot (in-flight readers planned just before the last
-    refresh stay servable). ``keep_last`` must be >= 1 (keep=0 would
-    delete the CURRENT snapshot under a live pointer; vacuum_snapshots
-    raises ValueError). Returns the versions removed."""
-    from iot_data_pipeline_spark.sources.matview import vacuum_snapshots
-
-    return vacuum_snapshots(spark, zone, keep=keep_last, keep_age_s=keep_age_s)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,
     out_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     atomic: bool = False,
-    keep_snapshots: int | None = None,
 ) -> int:
     """Rewrite a parquet directory into ~``target_file_bytes`` files.
 
@@ -80,18 +37,15 @@ def compact_parquet(
     small enough to split work evenly.
 
     Atomic-zone composition (round 13): an atomic SOURCE resolves to its
-    current snapshot (a root read would union every version);
-    ``atomic=True`` publishes the compacted data as the zone's next
-    snapshot -- the safe shape for IN-PLACE maintenance (``out_path ==
-    path``), where the plain overwrite opens the measured
-    destroy-then-rewrite crash window; and a plain write into a pointer
-    zone is refused loud (probed: it silently destroyed the snapshots
-    and pointer).
+    current snapshot (a root read would union every version); the
+    output goes through ``sinks.write_parquet``, so ``atomic=True``
+    publishes the compacted data as the zone's next snapshot -- the safe
+    shape for IN-PLACE maintenance (``out_path == path``), where the
+    plain overwrite opens the measured destroy-then-rewrite crash
+    window -- and a plain write into a pointer zone is refused there.
     """
-    from iot_data_pipeline_spark.sources.matview import (
-        publish_snapshot,
-        resolve_snapshot_dir,
-    )
+    from iot_data_pipeline_spark.sources.matview import resolve_snapshot_dir
+    from iot_data_pipeline_spark.sources.sinks import write_parquet
 
     src = resolve_snapshot_dir(spark, path) or path
     # JVM-side file listing via the input_file_name trick would scan; use
@@ -103,58 +57,9 @@ def compact_parquet(
     fs = p.getFileSystem(hadoop_conf)
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src).repartition(n_files)
-    if atomic:
-        publish_snapshot(spark, out_path, df)
-        if keep_snapshots is not None:
-            expire_snapshots(spark, out_path, keep_last=keep_snapshots)
-        return n_files
-    if keep_snapshots is not None:
-        raise ValueError(
-            "compact_parquet: keep_snapshots is a retention knob for "
-            "atomic publishes; pass atomic=True"
-        )
-    _guard_zone_write(spark, out_path, "compact_parquet")
-    df.write.mode("overwrite").parquet(out_path)
+    out = spark.read.parquet(src).repartition(n_files)
+    write_parquet(out, out_path, atomic=atomic)
     return n_files
-
-
-def rewrite_sorted(
-    df: DataFrame,
-    out_path: str,
-    layout_cols: list[str],
-    n_files: int | None = None,
-    atomic: bool = False,
-    keep_snapshots: int | None = None,
-) -> None:
-    """Rewrite with rows clustered by ``layout_cols`` inside each file
-    (``sortWithinPartitions`` -- a local sort, NO global shuffle).
-
-    Parquet keeps per-row-group min/max stats; clustering on the common
-    predicate columns makes those stats selective, so later scans skip
-    row groups server-side. This is the poor-man's Z-order: one sort
-    column family, zero extra infrastructure, and at 100 TB it is the
-    difference between reading every row group and reading the few that
-    overlap the predicate range.
-    """
-    out = df.repartition(n_files) if n_files else df
-    out = out.sortWithinPartitions(*[F.col(c) for c in layout_cols])
-    if atomic:
-        from iot_data_pipeline_spark.sources.matview import publish_snapshot
-
-        publish_snapshot(df.sparkSession, out_path, out)
-        if keep_snapshots is not None:
-            expire_snapshots(
-                df.sparkSession, out_path, keep_last=keep_snapshots
-            )
-        return
-    if keep_snapshots is not None:
-        raise ValueError(
-            "rewrite_sorted: keep_snapshots is a retention knob for "
-            "atomic publishes; pass atomic=True"
-        )
-    _guard_zone_write(df.sparkSession, out_path, "rewrite_sorted")
-    out.write.mode("overwrite").parquet(out_path)
 
 
 def zorder_value(cols: list[str], bits: int = 16) -> F.Column:
@@ -190,7 +95,6 @@ def rewrite_zordered(
     n_files: int = 8,
     bits: int = 16,
     atomic: bool = False,
-    keep_snapshots: int | None = None,
 ) -> None:
     """Rewrite clustered on a multi-column Z-curve: range-partition and
     sort by the interleaved Z-value so EVERY layout column's per-file
@@ -203,7 +107,13 @@ def rewrite_zordered(
     scale substitute an approximate rank (ntile over a sampled CDF),
     which changes nothing downstream since the Z-value only needs
     monotonicity, not exactness.
+
+    The output goes through ``sinks.write_parquet``: ``atomic=True``
+    publishes it as the zone's next snapshot, and a plain write into a
+    pointer zone is refused there.
     """
+    from iot_data_pipeline_spark.sources.sinks import write_parquet
+
     z = zorder_value(layout_cols, bits)
     out = (
         df.withColumn("_z", z)
@@ -211,22 +121,7 @@ def rewrite_zordered(
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    if atomic:
-        from iot_data_pipeline_spark.sources.matview import publish_snapshot
-
-        publish_snapshot(df.sparkSession, out_path, out)
-        if keep_snapshots is not None:
-            expire_snapshots(
-                df.sparkSession, out_path, keep_last=keep_snapshots
-            )
-        return
-    if keep_snapshots is not None:
-        raise ValueError(
-            "rewrite_zordered: keep_snapshots is a retention knob for "
-            "atomic publishes; pass atomic=True"
-        )
-    _guard_zone_write(df.sparkSession, out_path, "rewrite_zordered")
-    out.write.mode("overwrite").parquet(out_path)
+    write_parquet(out, out_path, atomic=atomic)
 
 
 def analyze_table(

@@ -18,7 +18,7 @@ pointer (write-temp + rename: rename is atomic on HDFS; on S3 the
 single-object copy window is milliseconds on a byte-sized file). Readers
 resolve the pointer once at plan time and then only ever list an
 immutable directory. Old snapshots stay readable (in-flight queries,
-time travel) until ``vacuum`` reclaims them.
+time travel) until :func:`vacuum_snapshots` reclaims them.
 
 Round 13 promotes this from the named-matview API to the default
 crash-safe shape for any full-zone refresh: ``write_parquet(...,
@@ -28,6 +28,17 @@ atomic=True)`` (sources/sinks.py) publishes through
 transparently, so a zone written atomically reads exactly like a plain
 parquet directory -- but a killed or failed refresh always leaves the
 PREVIOUS snapshot fully readable.
+
+One function per zone-layout decision:
+
+- ``sinks.write_parquet`` is the only code that chooses between a plain
+  overwrite and :func:`publish_snapshot`; the maintenance rewrites
+  (``compact_parquet``, ``rewrite_zordered``) build their frame and call
+  it, and the named-view :func:`refresh` publishes directly;
+- :func:`ensure_plain_zone` is the only refusal of a plain-layout write
+  into a pointer zone;
+- :func:`vacuum_snapshots` is the only retention call
+  (the ``Engine`` facade's retention method delegates to it).
 
 Name reservation: the snapshot directory is hive-spelled (``v=<N>``) so
 a whole-root ``spark.read.parquet(zone)`` still unions every snapshot
@@ -93,6 +104,20 @@ def _jpath(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """UTF-8 text of the small metadata file at ``path`` (a pointer, a
+    claim, a backfill manifest) through the Hadoop FileSystem API, or
+    None when it does not exist."""
+    fs, p, jvm = _jpath(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
 def _view_root(root: str, name: str) -> str:
     return f"{root.rstrip('/')}/{name}"
 
@@ -104,15 +129,8 @@ def _snapshot_dir(zone: str, version: int) -> str:
 def current_snapshot_version(spark: SparkSession, zone: str) -> int | None:
     """Version the zone's pointer currently publishes, or None if the
     zone has never been atomically published (no ``_current`` file)."""
-    fs, p, jvm = _jpath(spark, f"{zone.rstrip('/')}/{_POINTER}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return _parse_pointer(zone, text)
+    text = _read_text(spark, f"{zone.rstrip('/')}/{_POINTER}")
+    return None if text is None else _parse_pointer(zone, text)
 
 
 def _has_snapshot_dirs(spark: SparkSession, zone: str, local: str | None) -> bool:
@@ -197,16 +215,9 @@ def resolve_snapshot_dir(spark: SparkSession, zone: str) -> str | None:
                 except FileNotFoundError:
                     found = None
         else:
-            fs, p, jvm = _jpath(spark, f"{z}/{_POINTER}")
-            if fs.exists(p):
+            text = _read_text(spark, f"{z}/{_POINTER}")
+            if text is not None:
                 found = True
-                stream = fs.open(p)
-                try:
-                    text = jvm.org.apache.commons.io.IOUtils.toString(
-                        stream, "UTF-8"
-                    )
-                finally:
-                    stream.close()
                 v = _parse_pointer(z, text)
         if v is not None:
             return _snapshot_dir(z, v)
@@ -243,17 +254,29 @@ def resolve_snapshot_dir(spark: SparkSession, zone: str) -> str | None:
 def ensure_plain_zone(spark: SparkSession, path: str, op: str) -> None:
     """Refuse to run a plain-layout writer against an atomically-published
     zone: its output would either land invisibly beside the snapshots or
-    destroy them under the pointer (both measured, SCALE.md section 7e).
-    Writers with their own zone format (streaming ingest, incremental
-    rollup) call this once at start."""
+    destroy them under the pointer (both measured, SCALE.md section 7e;
+    a plain compaction silently deleted a zone's snapshots and pointer).
+
+    The one refusal every plain-layout zone writer goes through:
+
+    - ``sinks.write_parquet`` without ``atomic=True`` (and so
+      ``maintenance.compact_parquet`` and ``rewrite_zordered``, which
+      write through it);
+    - ``backfill.backfill``, on its destination;
+    - ``streaming.ingest.start_sensor_ingest``, at start and again in
+      every micro-batch (an atomic publish can land mid-stream);
+    - ``streaming.rollup.start_incremental_rollup`` and
+      ``compact_rollup``."""
     if resolve_snapshot_dir(spark, path) is not None:
         raise ValueError(
             f"{op}: {path!r} is an atomically-published zone (_current "
-            "pointer present); this writer manages a plain-layout zone "
-            "and would corrupt or bypass the snapshots. Use a separate "
-            "directory, or convert the zone back to plain layout first "
-            "(move the current snapshot's files to the zone root, then "
-            "remove the v=<N> directories and the pointer)."
+            "pointer present); a plain-layout write would land invisibly "
+            "beside its snapshots or destroy them under the pointer. "
+            "Publish the next snapshot with write_parquet(atomic=True), "
+            "or write to a separate plain directory (to convert the zone "
+            "back to plain layout, move the current snapshot's files to "
+            "the zone root, then remove the v=<N> directories and the "
+            "pointer)."
         )
 
 
@@ -318,7 +341,7 @@ def _claim_slot(spark: SparkSession, zone: str, version: int) -> None:
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
             fh.write(content)
         return
-    fs, p, jvm = _jpath(spark, path)
+    fs, p, _ = _jpath(spark, path)
     try:
         out = fs.create(p, False)  # overwrite=false: atomic on HDFS
     except Exception as e:
@@ -326,13 +349,7 @@ def _claim_slot(spark: SparkSession, zone: str, version: int) -> None:
             raise  # a real IO failure, not a lost race
         existing = ""
         try:
-            stream = fs.open(p)
-            try:
-                existing = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
+            existing = _read_text(spark, path) or ""
         except Exception:  # noqa: BLE001 -- claim read is best-effort
             pass
         raise _conflict(existing) from e
@@ -547,9 +564,8 @@ def vacuum_snapshots(
     # Lower-bound the retention knob (round-15 advisor find): keep=0
     # makes `v > cur - keep` false for v == cur, deleting the CURRENT
     # snapshot under a live pointer -- every subsequent read of the
-    # zone then fails with PATH_NOT_FOUND. All retention entry points
-    # (write_parquet keep_snapshots, expire_snapshots keep_last,
-    # vacuum/vacuum_snapshots keep) funnel through here.
+    # zone then fails with PATH_NOT_FOUND. This is the only retention
+    # call (the Engine facade's retention method delegates here).
     if keep < 1:
         raise ValueError(
             f"retention keep={keep!r} would delete the CURRENT published "
@@ -581,11 +597,6 @@ def vacuum_snapshots(
 # --- named materialized-view API (the original surface; q174 time travel) ---
 
 
-def current_version(spark: SparkSession, root: str, name: str) -> int | None:
-    """Version the pointer currently publishes, or None if never refreshed."""
-    return current_snapshot_version(spark, _view_root(root, name))
-
-
 def refresh(spark: SparkSession, root: str, name: str, df: DataFrame) -> int:
     """Materialize ``df`` as the next snapshot of view ``name`` and
     publish it. Returns the new version number."""
@@ -604,22 +615,3 @@ def read(
         if version is None:
             raise FileNotFoundError(f"materialized view {name!r} has no snapshot")
     return spark.read.parquet(_snapshot_dir(zone, version))
-
-
-def list_versions(spark: SparkSession, root: str, name: str) -> list[int]:
-    """All snapshot versions present on storage (published or orphaned)."""
-    return snapshot_versions(spark, _view_root(root, name))
-
-
-def vacuum(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    keep: int = 1,
-    keep_age_s: float | None = None,
-) -> list[int]:
-    """Delete snapshot directories outside the retention window (see
-    :func:`vacuum_snapshots` for the keep-N / keep-age semantics;
-    orphans above the pointer are kept -- they may be an in-flight
-    refresh). Returns the versions removed."""
-    return vacuum_snapshots(spark, _view_root(root, name), keep, keep_age_s)

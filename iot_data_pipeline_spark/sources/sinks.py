@@ -52,12 +52,15 @@ def write_jsonl(df: DataFrame, path: str) -> None:
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: tuple[str, ...] = (),
     atomic: bool = False,
-    keep_snapshots: int | None = None,
 ) -> None:
-    """Parquet sink, optionally hive-partitioned (B4).
+    """Parquet sink, optionally hive-partitioned (B4): a full-zone
+    overwrite of ``path``.
+
+    This is the only code that chooses between a plain overwrite and an
+    atomic publish (the maintenance rewrites in sources/maintenance.py
+    build their frame and write through here).
 
     ``atomic=True`` (round 13, closing the one 100 TB gap the round-12
     probes measured): publish the refresh through the versioned
@@ -70,36 +73,24 @@ def write_parquet(
     reader sees old-or-new, never torn. The engine's read boundary
     (``read_table``; the DuckDB oracle views) resolves the pointer
     transparently; old snapshots stay readable until
-    ``matview.vacuum_snapshots``. Atomic publish IS a full-zone
-    refresh, so it requires ``mode="overwrite"``; appends don't need
-    it (an append crash is clean -- committed data intact, probed) and
-    partition-scoped refreshes use dynamic partition overwrite
-    (sources/backfill.py) with its narrower destruction window.
+    ``matview.vacuum_snapshots`` reclaims them. Partition-scoped
+    refreshes use dynamic partition overwrite (sources/backfill.py)
+    with its narrower destruction window.
 
-    CONCURRENCY posture (round-12 probe, measured): two jobs appending
-    to the SAME output path race on the shared ``_temporary`` staging
-    dir -- the first committer's cleanup deletes the second job's
-    staging, which then fails LOUD (``FileNotFoundException:
-    _temporary/0``); rows committed before the crash stay intact and
-    deduplicated, so the failure mode is availability, not corruption.
-    One writer per zone is the contract; concurrent producers should
-    write to per-job directories (or publish via the matview
-    atomic-pointer pattern, sources/matview.py), and object-store
-    deployments should use the magic committer (SCALE.md section 8).
+    A plain write (``atomic=False``) into a zone that has a published
+    pointer is refused by ``matview.ensure_plain_zone``: the overwrite
+    would delete the snapshots out from under the pointer.
 
-    CRASH posture for ``mode="overwrite"`` (round-12 probe, measured):
+    CRASH posture of the plain overwrite (round-12 probe, measured):
     Spark's overwrite is DESTRUCTIVE-FIRST -- the old zone is deleted
     before the new write commits, so a crash mid-overwrite loses the
     OLD data entirely (probe: a SIGKILL mid-write left the zone empty;
     the 3M-row previous state was gone). Zones whose previous state
-    must survive a failed refresh pass ``atomic=True`` (the matview
-    write-then-swap, promoted to this sink in round 13 -- see below);
-    partition-scoped refreshes use dynamic partition overwrite
-    (sources/backfill.py), which narrows the destruction window to the
-    partitions being replaced. An
-    APPEND crash, by contrast, is clean: committed data stays intact
-    and readable, and ``_temporary`` residue is ignored by readers and
-    cleared by the next write (pinned probes, SCALE.md section 7e).
+    must survive a failed refresh pass ``atomic=True``; partition-scoped
+    refreshes use dynamic partition overwrite (sources/backfill.py),
+    which narrows the destruction window to the partitions being
+    replaced. One writer per zone is the contract; object-store
+    deployments should use the magic committer (SCALE.md section 8).
 
     Partition-VALUE caveats (round-10 probe, frozen in
     tests/test_sources.py::test_partitioned_sink_adversarial_values):
@@ -118,51 +109,18 @@ def write_parquet(
       divergence to remember if a DuckDB twin ever reads a partitioned
       zone keyed by values that need escaping.
     """
-    if keep_snapshots is not None and not atomic:
-        raise ValueError(
-            "write_parquet: keep_snapshots is a retention knob for "
-            "atomic publishes; pass atomic=True"
-        )
-    if atomic:
-        if mode != "overwrite":
-            raise ValueError(
-                f"atomic=True publishes a full-zone refresh and requires "
-                f"mode='overwrite' (got mode={mode!r}); appends commit "
-                "crash-clean without it"
-            )
-        from iot_data_pipeline_spark.sources.matview import publish_snapshot
+    from iot_data_pipeline_spark.sources.matview import (
+        ensure_plain_zone,
+        publish_snapshot,
+    )
 
+    if atomic:
         publish_snapshot(
             df.sparkSession, path, df, partition_by=tuple(partition_by)
         )
-        if keep_snapshots is not None:
-            # Retention (round 14): without it every refresh adds a
-            # full zone copy FOREVER -- at 100 TB a nightly refresh
-            # doubles storage daily. keep_snapshots=N keeps the newest
-            # N published versions; size N (or use
-            # maintenance.expire_snapshots with a keep-age window) so
-            # the longest in-flight reader's snapshot stays on disk.
-            from iot_data_pipeline_spark.sources.matview import (
-                vacuum_snapshots,
-            )
-
-            vacuum_snapshots(df.sparkSession, path, keep=keep_snapshots)
         return
-    # Mirror guard (round 13): a NON-atomic write into a zone that has
-    # a published snapshot pointer is always wrong -- an append lands at
-    # the root where pointer-resolving readers never look (silent
-    # no-op), and an overwrite deletes the snapshots out from under the
-    # pointer. Same hazard class the backfill guard closes.
-    from iot_data_pipeline_spark.sources.matview import resolve_snapshot_dir
-
-    if resolve_snapshot_dir(df.sparkSession, path) is not None:
-        raise ValueError(
-            f"{path!r} is an atomically-published zone (_current pointer "
-            "present): plain-mode writes either land invisibly beside the "
-            "snapshots (append) or destroy them under the pointer "
-            "(overwrite). Pass atomic=True to publish the next snapshot."
-        )
-    writer = df.write.mode(mode)
+    ensure_plain_zone(df.sparkSession, path, "write_parquet")
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

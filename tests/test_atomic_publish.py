@@ -75,12 +75,6 @@ def test_atomic_roundtrip_read_table_flat_and_partitioned(
     assert back3.count() == ev.count()
 
 
-def test_atomic_requires_overwrite(spark, sf_dir, tmp_path):
-    ev = read_table(spark, sf_dir, "events").limit(1)
-    with pytest.raises(ValueError, match="atomic"):
-        write_parquet(ev, str(tmp_path / "z"), mode="append", atomic=True)
-
-
 def test_failed_refresh_preserves_previous_zone(spark, tmp_path):
     """The write job RAISES mid-refresh (a task-level failure, the
     deterministic twin of the crash): the pointer never moves and the
@@ -584,29 +578,26 @@ def test_backfill_composes_with_atomic_zones(spark, tmp_path):
 
 
 def test_snapshot_retention_first_class(spark, tmp_path):
-    """Round-14 verdict task 2: retention is now a first-class knob
-    instead of a never-called vacuum. ``write_parquet(atomic=True,
-    keep_snapshots=N)`` reclaims old versions at publish time; the
-    maintenance janitor ``expire_snapshots`` adds the keep-age window
-    (a version survives if within keep-N OR younger than keep_age_s --
-    deletion requires falling outside both)."""
-    from iot_data_pipeline_spark.sources.maintenance import expire_snapshots
-
+    """Retention is one call, ``vacuum_snapshots``: keep-N after each
+    publish, plus the keep-age window (a version survives if within
+    keep-N OR younger than keep_age_s -- deletion requires falling
+    outside both)."""
     zone = str(tmp_path / "z" / "t.parquet")
     for i in range(4):
         df = spark.createDataFrame([Row(id=i)])
-        write_parquet(df, zone, atomic=True, keep_snapshots=2)
-    # retention ran at each publish: only the newest 2 versions remain
+        write_parquet(df, zone, atomic=True)
+        vacuum_snapshots(spark, zone, keep=2)
+    # retention ran after each publish: only the newest 2 versions remain
     assert snapshot_versions(spark, zone) == [2, 3]
     assert current_snapshot_version(spark, zone) == 3
     assert _rows(read_table(spark, str(tmp_path / "z"), "t")) == [(3,)]
 
     # keep-age keeps everything younger than the window even beyond
     # keep-N...
-    assert expire_snapshots(spark, zone, keep_last=1, keep_age_s=3600) == []
+    assert vacuum_snapshots(spark, zone, keep=1, keep_age_s=3600) == []
     assert snapshot_versions(spark, zone) == [2, 3]
     # ...and a zero-age window defers entirely to keep-N
-    assert expire_snapshots(spark, zone, keep_last=1, keep_age_s=0) == [2]
+    assert vacuum_snapshots(spark, zone, keep=1, keep_age_s=0) == [2]
     assert snapshot_versions(spark, zone) == [3]
 
     # a time-travel read pinned to a vacuumed version fails loud
@@ -616,54 +607,37 @@ def test_snapshot_retention_first_class(spark, tmp_path):
     with pytest.raises(Exception, match="v=2"):
         matview.read(spark, str(tmp_path / "z"), "t", version=2).collect()
 
-    # the knob without atomic is a contract error, never silent
-    with pytest.raises(ValueError, match="keep_snapshots"):
-        write_parquet(
-            spark.createDataFrame([Row(id=9)]), zone, keep_snapshots=1
-        )
-
 
 def test_maintenance_writers_compose_with_retention(spark, tmp_path):
-    """compact_parquet/rewrite_sorted/rewrite_zordered(atomic=True,
-    keep_snapshots=N) publish the rewrite AND reclaim old versions in
-    one maintenance pass -- the in-place compaction loop no longer
-    accumulates a full zone copy per run."""
+    """An in-place maintenance pass publishes each rewrite and then
+    reclaims old versions with ``vacuum_snapshots`` -- the compaction
+    loop no longer accumulates a full zone copy per run."""
     from iot_data_pipeline_spark.sources.maintenance import (
         compact_parquet,
-        rewrite_sorted,
         rewrite_zordered,
     )
 
     zone = str(tmp_path / "z" / "t.parquet")
     df = spark.createDataFrame([Row(id=i, k=i % 3) for i in range(50)])
     write_parquet(df, zone, atomic=True)
-    compact_parquet(spark, zone, zone, atomic=True, keep_snapshots=2)
-    rewrite_sorted(
-        read_table(spark, str(tmp_path / "z"), "t"),
+    compact_parquet(spark, zone, zone, atomic=True)
+    vacuum_snapshots(spark, zone, keep=2)
+    write_parquet(
+        read_table(spark, str(tmp_path / "z"), "t").sortWithinPartitions("id"),
         zone,
-        ["id"],
         atomic=True,
-        keep_snapshots=2,
     )
+    vacuum_snapshots(spark, zone, keep=2)
     rewrite_zordered(
         read_table(spark, str(tmp_path / "z"), "t"),
         zone,
         ["id", "k"],
         n_files=2,
         atomic=True,
-        keep_snapshots=2,
     )
+    vacuum_snapshots(spark, zone, keep=2)
     assert snapshot_versions(spark, zone) == [2, 3]
     assert sorted(r["id"] for r in read_table(spark, str(tmp_path / "z"), "t").collect()) == list(range(50))
-    for fn, kwargs in (
-        (compact_parquet, dict()),
-        (rewrite_sorted, dict(layout_cols=["id"])),
-    ):
-        with pytest.raises(ValueError, match="keep_snapshots"):
-            if fn is compact_parquet:
-                compact_parquet(spark, zone, zone, keep_snapshots=1)
-            else:
-                rewrite_sorted(df, zone, ["id"], keep_snapshots=1)
 
 
 def test_read_during_vacuum_window_is_loud_never_wrong(spark, tmp_path):
@@ -673,7 +647,7 @@ def test_read_during_vacuum_window_is_loud_never_wrong(spark, tmp_path):
     live. The frozen contract is loud-or-right, never wrong: the
     reader either serves its full snapshot or fails with the missing
     file named -- it must never return a silently partial/empty
-    result. (Operationally: size expire_snapshots' keep_age_s above
+    result. (Operationally: size vacuum_snapshots' keep_age_s above
     the longest query to avoid the window entirely.)"""
     zone = str(tmp_path / "z" / "t.parquet")
     old = spark.createDataFrame([Row(id=i) for i in range(2000)])
@@ -876,45 +850,23 @@ def test_claim_edges_hostile_names_v0_race_dangling_pointer(
         read_table(spark, str(tmp_path), "gone").collect()
 
 
-def test_plain_write_into_atomic_zone_refused(spark, tmp_path):
-    """Mirror of the backfill guard: a non-atomic write_parquet into a
-    pointer-published zone is either an invisible append or a
-    pointer-dangling overwrite -- refused loud with the remedy named."""
-    zone = str(tmp_path / "z.parquet")
-    df = spark.createDataFrame([Row(id=1)])
-    write_parquet(df, zone, atomic=True)
-    for mode in ("append", "overwrite"):
-        with pytest.raises(ValueError, match="atomic=True"):
-            write_parquet(df, zone, mode=mode)
-    # the atomic path itself still publishes fine
-    write_parquet(df, zone, atomic=True)
-    assert current_snapshot_version(spark, zone) == 1
-
-
 def test_maintenance_composes_with_atomic_zones(spark, tmp_path):
     """Round-13 third-wave find (measured): a plain maintenance rewrite
     into a pointer zone silently DESTROYED the snapshots and the
-    pointer, demoting the zone to plain layout. The three maintenance
-    writers now refuse pointer zones (remedy named), resolve atomic
-    sources to their snapshot, and offer atomic=True -- the safe shape
-    for in-place compaction, where plain overwrite opens the
-    destroy-then-rewrite crash window."""
+    pointer, demoting the zone to plain layout. The maintenance writers
+    now write through ``write_parquet`` (whose plain path refuses
+    pointer zones, see test_plain_layout_writers_refuse_pointer_zones),
+    resolve atomic sources to their snapshot, and offer atomic=True --
+    the safe shape for in-place compaction, where plain overwrite opens
+    the destroy-then-rewrite crash window."""
     from iot_data_pipeline_spark.sources.maintenance import (
         compact_parquet,
-        rewrite_sorted,
         rewrite_zordered,
     )
 
     zone = str(tmp_path / "z" / "t.parquet")
     df = spark.range(0, 500, 1, 8).selectExpr("id", "id % 7 as k")
     write_parquet(df, zone, atomic=True)
-    # plain rewrites into the pointer zone: refused, zone intact
-    with pytest.raises(ValueError, match="atomic=True"):
-        compact_parquet(spark, zone, zone)
-    with pytest.raises(ValueError, match="atomic=True"):
-        rewrite_sorted(df, zone, ["k"])
-    with pytest.raises(ValueError, match="atomic=True"):
-        rewrite_zordered(df, zone, ["k", "id"])
     assert current_snapshot_version(spark, zone) == 0
     # in-place atomic compaction: source resolves to the snapshot, the
     # compacted data publishes as the next one, rows identical
@@ -924,37 +876,148 @@ def test_maintenance_composes_with_atomic_zones(spark, tmp_path):
     assert back.count() == 500
     assert sorted(r["id"] for r in back.collect()) == list(range(500))
     # sorted/zordered rewrites publish snapshots too
-    rewrite_sorted(back, zone, ["k"], atomic=True)
+    write_parquet(back.sortWithinPartitions("k"), zone, atomic=True)
     assert current_snapshot_version(spark, zone) == 2
     rewrite_zordered(back, zone, ["k", "id"], atomic=True)
     assert current_snapshot_version(spark, zone) == 3
     assert read_table(spark, str(tmp_path / "z"), "t").count() == 500
 
 
-def test_plain_layout_writers_refuse_pointer_zones(spark, tmp_path):
-    """Streaming ingest and the incremental rollup manage their OWN
-    plain-layout zones; pointing them at an atomically-published zone
-    would write beside (or destroy) the snapshots -- refused at start."""
-    from iot_data_pipeline_spark.pipeline import PipelineConfig
-    from iot_data_pipeline_spark.streaming.ingest import (
-        run_ingest_available_now,
-    )
-    from iot_data_pipeline_spark.streaming.rollup import compact_rollup
+def _refuse_write_parquet(spark, zone, tmp_path):
+    write_parquet(spark.createDataFrame([Row(id=2)]), zone)
 
-    zone = str(tmp_path / "z.parquet")
-    write_parquet(spark.createDataFrame([Row(id=1)]), zone, atomic=True)
+
+def _refuse_compact_parquet(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.sources.maintenance import compact_parquet
+
+    compact_parquet(spark, zone, zone)
+
+
+def _refuse_rewrite_zordered(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.sources.maintenance import rewrite_zordered
+
+    rewrite_zordered(spark.createDataFrame([Row(id=2)]), zone, ["id"])
+
+
+def _refuse_backfill(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.sources.backfill import backfill
+
+    src = str(tmp_path / "src.parquet")
+    spark.createDataFrame([Row(day="d1", id=2)]).write.partitionBy(
+        "day"
+    ).parquet(src)
+    backfill(spark, src, zone, "day", lambda df: df)
+
+
+def _refuse_start_sensor_ingest(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.pipeline import PipelineConfig
+    from iot_data_pipeline_spark.streaming.ingest import start_sensor_ingest
+
     raw = tmp_path / "raw"
     raw.mkdir()
-    with pytest.raises(ValueError, match="start_sensor_ingest"):
-        run_ingest_available_now(
-            spark,
-            str(raw),
-            zone,
-            str(tmp_path / "ckpt"),
-            config=PipelineConfig(fixed_clock="2026-01-01 00:00:00"),
+    start_sensor_ingest(
+        spark,
+        str(raw),
+        zone,
+        str(tmp_path / "ckpt"),
+        config=PipelineConfig(fixed_clock="2026-01-01 00:00:00"),
+    )
+
+
+def _refuse_start_incremental_rollup(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.streaming.rollup import (
+        start_incremental_rollup,
+    )
+
+    stream = spark.readStream.format("rate").load()
+    start_incremental_rollup(
+        stream, zone, str(tmp_path / "ckpt"), ["value"], ["value"]
+    )
+
+
+def _refuse_compact_rollup(spark, zone, tmp_path):
+    from iot_data_pipeline_spark.streaming.rollup import compact_rollup
+
+    compact_rollup(spark, zone, ["id"], ["id"])
+
+
+@pytest.mark.parametrize(
+    "write, op",
+    [
+        pytest.param(
+            write, op, id=write.__name__.removeprefix("_refuse_")
         )
-    with pytest.raises(ValueError, match="compact_rollup"):
-        compact_rollup(spark, zone, ["id"], ["id"])
+        for write, op in (
+            (_refuse_write_parquet, "write_parquet"),
+            # the maintenance rewrites write through write_parquet,
+            # whose refusal names it
+            (_refuse_compact_parquet, "write_parquet"),
+            (_refuse_rewrite_zordered, "write_parquet"),
+            (_refuse_backfill, "backfill"),
+            (_refuse_start_sensor_ingest, "start_sensor_ingest"),
+            (_refuse_start_incremental_rollup, "start_incremental_rollup"),
+            (_refuse_compact_rollup, "compact_rollup"),
+        )
+    ],
+)
+def test_plain_layout_writers_refuse_pointer_zones(spark, tmp_path, write, op):
+    """Every plain-layout zone writer refuses an atomically-published
+    zone through ``matview.ensure_plain_zone``, naming the op and the
+    remedy, before it writes anything: a plain overwrite would destroy
+    the snapshots under the pointer (round-13 probe: a plain compaction
+    silently deleted them), and a plain or partition-scoped write would
+    land beside them where pointer-resolving readers never look."""
+    zone = str(tmp_path / "z.parquet")
+    write_parquet(spark.createDataFrame([Row(id=1)]), zone, atomic=True)
+    pointer = open(os.path.join(zone, "_current"), encoding="utf-8").read()
+    listing = sorted(os.listdir(zone))
+    with pytest.raises(ValueError, match=op) as err:
+        write(spark, zone, tmp_path)
+    assert "atomically-published" in str(err.value)
+    assert "atomic=True" in str(err.value)
+    with open(os.path.join(zone, "_current"), encoding="utf-8") as fh:
+        assert fh.read() == pointer
+    assert sorted(os.listdir(zone)) == listing
+    assert snapshot_versions(spark, zone) == [0]
+    assert _rows(read_table(spark, str(tmp_path), "z")) == [(1,)]
+
+
+def test_one_zone_writer_publishes_and_refuses():
+    """Lint: ``sinks.write_parquet`` is the only writer that chooses
+    between a plain overwrite and ``publish_snapshot`` (the named-view
+    ``refresh`` in matview publishes directly), and
+    ``matview.ensure_plain_zone`` is the only pointer-zone refusal --
+    no other module probes ``resolve_snapshot_dir(...) is not None``."""
+    import ast
+    from pathlib import Path
+
+    import iot_data_pipeline_spark
+
+    def callee(node):
+        if not isinstance(node, ast.Call):
+            return None
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    root = Path(iot_data_pipeline_spark.__file__).parent
+    publishers, refusers = set(), set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if callee(node) == "publish_snapshot":
+                publishers.add(rel)
+            if (
+                isinstance(node, ast.Compare)
+                and callee(node.left) == "resolve_snapshot_dir"
+                and any(isinstance(o, ast.IsNot) for o in node.ops)
+                and any(
+                    isinstance(c, ast.Constant) and c.value is None
+                    for c in node.comparators
+                )
+            ):
+                refusers.add(rel)
+    assert publishers == {"sources/matview.py", "sources/sinks.py"}, publishers
+    assert refusers == {"sources/matview.py"}, refusers
 
 
 def test_concurrent_vacuums_never_crash_and_report_actual_deletes(

@@ -21,12 +21,13 @@ def _rollup(spark, sf_dir, flag=None):
 
 def test_refresh_publishes_and_advances_versions(spark, sf_dir, tmp_path):
     root = str(tmp_path)
-    assert matview.current_version(spark, root, "qty") is None
+    zone = f"{root}/qty"
+    assert matview.current_snapshot_version(spark, zone) is None
     with pytest.raises(FileNotFoundError):
         matview.read(spark, root, "qty")
 
     v0 = matview.refresh(spark, root, "qty", _rollup(spark, sf_dir))
-    assert v0 == 0 and matview.current_version(spark, root, "qty") == 0
+    assert v0 == 0 and matview.current_snapshot_version(spark, zone) == 0
     full = {r["l_returnflag"]: r["sum_qty"] for r in matview.read(spark, root, "qty").collect()}
     assert len(full) >= 2
 
@@ -56,10 +57,11 @@ def test_vacuum_keeps_published_and_recent(spark, sf_dir, tmp_path):
     root = str(tmp_path)
     for flag in (None, "A", "N", "R"):
         matview.refresh(spark, root, "qty", _rollup(spark, sf_dir, flag=flag))
-    assert matview.list_versions(spark, root, "qty") == [0, 1, 2, 3]
-    removed = matview.vacuum(spark, root, "qty", keep=2)
+    zone = f"{root}/qty"
+    assert matview.snapshot_versions(spark, zone) == [0, 1, 2, 3]
+    removed = matview.vacuum_snapshots(spark, zone, keep=2)
     assert removed == [0, 1]
-    assert matview.list_versions(spark, root, "qty") == [2, 3]
+    assert matview.snapshot_versions(spark, zone) == [2, 3]
     # published snapshot survives and still reads
     assert matview.read(spark, root, "qty").count() == 1
 

@@ -69,29 +69,6 @@ def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == spark.read.parquet(frag).count()
 
 
-def test_rewrite_sorted_clusters_rows(spark, sf_dir, tmp_path):
-    from iot_data_pipeline_spark.sources.maintenance import rewrite_sorted
-    from iot_data_pipeline_spark.sources.readers import read_table
-
-    out = str(tmp_path / "sorted_zone")
-    rewrite_sorted(
-        read_table(spark, sf_dir, "events"), out, ["user_id", "ts"], n_files=2
-    )
-    from pyspark.sql import functions as F
-
-    got = spark.read.parquet(out)
-    assert got.count() == read_table(spark, sf_dir, "events").count()
-    # rows inside each file are non-decreasing on user_id
-    per_file = got.withColumn("f", F.input_file_name()).withColumn(
-        "rn", F.monotonically_increasing_id()
-    )
-    import pandas as pd
-
-    pdf = per_file.select("f", "user_id").toPandas()
-    for _, grp in pdf.groupby("f"):
-        assert grp["user_id"].is_monotonic_increasing
-
-
 def test_schema_evolution_merge(spark, tmp_path):
     """mergeSchema read across files written with different (compatible)
     schemas -- the corpus-grows-a-column case."""
