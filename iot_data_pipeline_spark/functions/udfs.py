@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf
 from pyspark.sql.types import DoubleType, LongType
 
+from iot_data_pipeline_spark.operators.dedup import kgrams
+
 
 @udf(returnType=DoubleType())
 def celsius_to_fahrenheit_py(c):  # annotation-free: see NOTE above
@@ -65,11 +67,7 @@ def explode_ngrams(df: DataFrame, text_col: str, n: int, out_col: str = "ngram")
     sequence/transform/explode (no Python) -- the engine's standing answer
     to 'table function': explode an array-building expression."""
     toked = df.withColumn("__toks", F.split(text_col, " "))
-    idx = F.sequence(F.lit(1), F.greatest(F.size("__toks") - (n - 1), F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at("__toks", i + j) for j in range(n)])
-    )
-    return toked.withColumn(out_col, F.explode(grams)).drop("__toks")
+    return toked.withColumn(out_col, F.explode(kgrams("__toks", n))).drop("__toks")
 
 
 def fahrenheit_builtin(c: Column) -> Column:

@@ -1,9 +1,18 @@
 """Deduplication operator family (north-star mandate; SURVEY.md B44/B45).
 
-Generic, column-parameterized versions of what the declared queries
-q22-q23 instantiate; q192 composes ``shingle_hashes`` ->
-``minhash_signatures`` -> ``lsh_candidate_pairs`` directly. All shapes
-are shuffle-minimal by construction:
+The one implementation of each text-dedup algorithm the queries use:
+
+- ``kgrams``: word k-grams with the short-document guard. Called by
+  ``shingle_hashes``, ``queries/llm._shingle_hashes`` (q25, q100, q145,
+  q156), q44 (k=3), q109 (k=8), q118 (k=4), q121 and the BPE pair count
+  of q131/q137 (k=2), and ``functions/udfs.explode_ngrams``.
+- ``shingle_hashes`` -> ``minhash_signatures`` -> ``lsh_candidate_pairs``:
+  q23 (exhaustive) and q192 (``max_bucket``) compose all three.
+- ``band_keys``: the LSH band frame; ``lsh_candidate_pairs`` and q156
+  (``side`` carried through ``minhash_signatures`` and ``band_keys``,
+  then its own history-vs-batch join) call it.
+
+All shapes are shuffle-minimal by construction:
 
 - exact: group on a 32-byte digest, never the content (min_by partial
   aggregation, so even a corpus that is 90% one document never funnels
@@ -18,7 +27,7 @@ are shuffle-minimal by construction:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.functions.hashing import PORTABLE_MOD, portable_hash
@@ -78,31 +87,34 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
     )
 
 
-def shingle_hashes(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3
-) -> DataFrame:
-    """(id, h) rows: portable 60-bit hash per k-token shingle.
+def kgrams(toks: str, k: int) -> Column:
+    """Word k-grams of the token array column ``toks``: each run of ``k``
+    consecutive tokens joined by one space, in document order; empty for
+    a document of fewer than ``k`` tokens (or a NULL array).
 
-    ``split`` is hoisted into a column before the shingle lambda -- HOF
-    lambdas are interpreted and re-evaluate inlined subtrees per element
-    (measured 4x at sf0.1), so the hoist matters.
+    The short-document guard is explicit because Spark's
+    ``sequence(start, stop)`` AUTO-DESCENDS when stop < start
+    (``sequence(1, 0)`` is ``[1, 0]``), so a ``greatest(..., 0)`` clamp
+    alone still indexes past the array on documents shorter than ``k``
+    (found by the empty-doc adversarial fixture). ``toks`` names a
+    column, not an expression: the lambda is interpreted and re-evaluates
+    an inlined subtree per element, so the caller hoists ``split`` into
+    its own column first (measured 4x at sf0.1).
     """
-    toked = df.select(F.col(id_col).alias("id"), F.split(text_col, " ").alias("toks"))
-    # guard sub-k-token docs explicitly: Spark's sequence(start, stop)
-    # AUTO-DESCENDS when stop < start (sequence(1, 0) = [1, 0]), so the
-    # greatest(..., 0) clamp alone still indexed past the array on 1-2
-    # token documents (found by the empty-doc adversarial fixture)
     idx = F.when(
-        F.size("toks") >= k,
-        F.sequence(F.lit(1), F.size("toks") - (k - 1)),
+        F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
     ).otherwise(F.array().cast("array<int>"))
-    shingles = F.transform(
+    return F.transform(
         idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at("toks", i + j) for j in range(k)]
-        ),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
     )
-    return toked.select("id", F.explode(shingles).alias("shingle")).select(
+
+
+def shingle_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, h) rows: portable 60-bit hash per 3-token shingle (the
+    oracle's ``SHINGLES_CTE`` width)."""
+    toked = df.select(F.col(id_col).alias("id"), F.split(text_col, " ").alias("toks"))
+    return toked.select("id", F.explode(kgrams("toks", 3)).alias("shingle")).select(
         "id", portable_hash(F.col("shingle")).alias("h")
     )
 
@@ -110,14 +122,17 @@ def shingle_hashes(
 def minhash_signatures(
     hashed: DataFrame, n_hashes: int = 16
 ) -> DataFrame:
-    """MinHash signature columns sig_0..sig_{n-1} from (id, h) rows.
+    """MinHash signature columns sig_0..sig_{n-1} from rows of shingle
+    hashes ``h``, one row per value of every other input column (``id``
+    alone for ``shingle_hashes`` output; q156 keeps its ``side`` too).
 
     One groupBy with n min-aggregates (map-side partial aggregation makes
-    the shuffle one row per id regardless of document length). The hash
+    the shuffle one row per key regardless of document length). The hash
     family is affine: ``(a_i * h + b_i) mod P`` -- min over a multiset
     equals min over its set, so callers need NOT de-duplicate shingles.
     """
-    return hashed.groupBy("id").agg(
+    keys = [c for c in hashed.columns if c != "h"]
+    return hashed.groupBy(*keys).agg(
         *[
             F.min(
                 (F.lit(37 + 61 * i) * F.col("h") + F.lit(91 + 17 * i)) % PORTABLE_MOD
@@ -127,42 +142,20 @@ def minhash_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, n_bands: int = 4, max_bucket: int | None = None
-) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing >= 1 LSH band.
+def band_keys(sigs: DataFrame, n_bands: int) -> DataFrame:
+    """One (band, key) row per signature row and band, every non-``sig_``
+    column kept; ``key`` joins the band's signature values with commas.
 
     Bands derive from the signature via one explode (never a per-band
-    union: that would replicate the signature aggregation subtree per band
-    and again per self-join side). The pairing is an equi-join on
-    (band, key) -- no all-pairs comparison across the corpus exists
-    anywhere in the plan.
-
-    WITHIN a bucket, pairing is still quadratic: a bucket of m members
-    emits m(m-1)/2 pairs. Real corpora make that the dominant scale
-    hazard -- one boilerplate page duplicated 10M times puts all 10M
-    copies in the SAME bucket of every band (identical signatures), and
-    the join explodes to ~5e13 pairs. ``max_bucket`` caps it: buckets at
-    or under the cap pair exhaustively as before; buckets OVER the cap
-    are near-certain duplicate clusters and emit STAR pairs instead --
-    every member paired with the bucket's min id, O(m) not O(m^2).
-    Star pairing preserves bucket connectivity (each member reaches the
-    hub), so connected-component clustering -- how dedup actually
-    consumes candidate pairs -- produces identical clusters; only the
-    redundant transitive pair enumeration is dropped. The cap therefore
-    ASSUMES a connected-component consumer: if an over-cap bucket is not
-    a pure duplicate cluster (banding false positives mixing dissimilar
-    docs), member-member pairs not involving the hub are never emitted,
-    and a consumer that verifies pairs INDIVIDUALLY (per-pair Jaccard
-    filter, no transitive closure) would miss those candidates. Keep the
-    default ``None`` for per-pair-verification pipelines. Cost of the
-    cap: one extra (band, key) count+min aggregation, fully
-    partial-merged. Measured: tools/skew_sweep.py (historical: since deleted),
-    SCALE.md section 7d.
-    Default None keeps the exhaustive semantics (q23's oracle-matched
-    form).
+    union: that would replicate the signature aggregation subtree per
+    band and again per self-join side). The frame is materialized with
+    ``localCheckpoint(eager=True)``: every consumer reads it at least
+    twice (both sides of the bucket join, and the capped path's bucket
+    statistics), and each read would otherwise re-run the shingling and
+    the signature aggregation.
     """
     sig_cols = [c for c in sigs.columns if c.startswith("sig_")]
+    keep = [c for c in sigs.columns if not c.startswith("sig_")]
     if n_bands <= 0 or not sig_cols:
         raise ValueError("need n_bands >= 1 and at least one sig_ column")
     per_band = len(sig_cols) // n_bands
@@ -192,9 +185,52 @@ def lsh_candidate_pairs(
             for b in range(n_bands)
         ]
     )
-    bands = sigs.select("id", F.explode(band_structs).alias("bk")).select(
-        "id", "bk.band", "bk.key"
+    return (
+        sigs.select(*keep, F.explode(band_structs).alias("bk"))
+        .select(*keep, "bk.band", "bk.key")
+        .localCheckpoint(eager=True)
     )
+
+
+def lsh_candidate_pairs(
+    sigs: DataFrame, n_bands: int = 4, max_bucket: int | None = None
+) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing >= 1 LSH band.
+
+    The pairing is an equi-join on (band, key) over ``band_keys`` (which
+    validates ``n_bands`` and materializes the bands once) -- no
+    all-pairs comparison across the corpus exists anywhere in the plan.
+
+    WITHIN a bucket, pairing is still quadratic: a bucket of m members
+    emits m(m-1)/2 pairs. Real corpora make that the dominant scale
+    hazard -- one boilerplate page duplicated 10M times puts all 10M
+    copies in the SAME bucket of every band (identical signatures), and
+    the join explodes to ~5e13 pairs. ``max_bucket`` caps it: buckets at
+    or under the cap pair exhaustively as before; buckets OVER the cap
+    are near-certain duplicate clusters and emit STAR pairs instead --
+    every member paired with the bucket's min id, O(m) not O(m^2).
+    Star pairing preserves bucket connectivity (each member reaches the
+    hub), so connected-component clustering -- how dedup actually
+    consumes candidate pairs -- produces identical clusters; only the
+    redundant transitive pair enumeration is dropped. The cap therefore
+    ASSUMES a connected-component consumer: if an over-cap bucket is not
+    a pure duplicate cluster (banding false positives mixing dissimilar
+    docs), member-member pairs not involving the hub are never emitted,
+    and a consumer that verifies pairs INDIVIDUALLY (per-pair Jaccard
+    filter, no transitive closure) would miss those candidates. Keep the
+    default ``None`` for per-pair-verification pipelines. Cost of the
+    cap: one extra (band, key) count+min aggregation, fully
+    partial-merged. Measured: tools/skew_sweep.py (historical: since deleted),
+    SCALE.md section 7d.
+    Default None keeps the exhaustive semantics (q23's oracle-matched
+    form).
+    """
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError(
+            f"max_bucket={max_bucket}: a bucket of 2 is the smallest that "
+            "can pair at all"
+        )
+    bands = band_keys(sigs, n_bands)
 
     def pairwise(side: DataFrame) -> DataFrame:
         a, b = side.alias("a"), side.alias("b")
@@ -207,15 +243,6 @@ def lsh_candidate_pairs(
 
     if max_bucket is None:
         return pairwise(bands).distinct()
-    if max_bucket < 2:
-        raise ValueError(
-            f"max_bucket={max_bucket}: a bucket of 2 is the smallest that "
-            "can pair at all"
-        )
-    # The capped plan reads bands THREE times (stats + both join sides);
-    # without materialization each read re-runs the upstream shingle +
-    # signature aggregation (q23's lesson, same fix)
-    bands = bands.localCheckpoint(eager=True)
     # One count+min aggregation per (band, key): partial-merged, so the
     # hot bucket itself never concentrates rows on one task here.
     stats = bands.groupBy("band", "key").agg(

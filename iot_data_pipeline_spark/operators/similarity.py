@@ -16,6 +16,10 @@ Three tiers, in order of scale:
 
 All tiers share the fixed dot-product fold so tiers 1-2 are bit-identical
 to the DuckDB oracle's ``list_cosine_similarity`` after ROUND(.., 4).
+Every tier reads the ``embeddings`` table's columns, ``vec_id`` and
+``embedding``. ``assign_cells`` is the one IVF sign cell: tier 2, q31,
+q136 (4 bits), q148, q149, q176, q183 and ``queries/llm.rag_retrieve``
+(3 bits) all call it.
 
 Zero-norm (and NULL) vectors are EXCLUDED from the similarity space in
 every tier: cosine is undefined for them, and under the session's ANSI
@@ -39,10 +43,10 @@ def dot(x: Column, y: Column) -> Column:
     )
 
 
-def _normed(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
-    emb = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+def _normed(df: DataFrame, *extra: Column) -> DataFrame:
+    emb = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         emb.alias("emb"),
         F.sqrt(dot(emb, emb)).alias("nrm"),
         *extra,
@@ -58,8 +62,6 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFra
 def cosine_topk(
     queries: DataFrame,
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query row (brute force).
@@ -68,12 +70,12 @@ def cosine_topk(
     many candidates), so candidates stream through one codegen stage and
     only (query_id, cand_id, sim) survive to the top-k window.
     """
-    q = _normed(queries, id_col, vec_col).select(
+    q = _normed(queries).select(
         F.col("id").alias("query_id"),
         F.col("emb").alias("qemb"),
         F.col("nrm").alias("qnrm"),
     )
-    c = _normed(candidates, id_col, vec_col)
+    c = _normed(candidates)
     sim = F.round(dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")), 4)
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -102,8 +104,6 @@ def assign_cells(vec_col: str, n_sign_bits: int = 3) -> Column:
 def cosine_topk_blocked(
     queries: DataFrame,
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_sign_bits: int = 3,
 ) -> DataFrame:
@@ -115,14 +115,14 @@ def cosine_topk_blocked(
     executor sees only its cells' vectors. The cell is computed in the
     same projection as the norm, so the cell join is the plan's only join.
     """
-    cell = assign_cells(vec_col, n_sign_bits).alias("cell")
-    q = _normed(queries, id_col, vec_col, cell).select(
+    cell = assign_cells("embedding", n_sign_bits).alias("cell")
+    q = _normed(queries, cell).select(
         F.col("id").alias("query_id"),
         F.col("emb").alias("qemb"),
         F.col("nrm").alias("qnrm"),
         F.col("cell").alias("qcell"),
     )
-    c = _normed(candidates, id_col, vec_col, cell)
+    c = _normed(candidates, cell)
     sim = F.round(dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")), 4)
     scored = (
         c.join(F.broadcast(q), F.col("qcell") == F.col("cell"))
@@ -139,8 +139,6 @@ def cosine_topk_blocked(
 
 def neardup_pairs_pandas(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str = "label",
     threshold: float = 0.75,
     keep_block: bool = False,
@@ -184,8 +182,8 @@ def neardup_pairs_pandas(
             cols = {block_col: block_pd, **cols}
         if n < 2:
             return pd.DataFrame({c: [] for c in cols}).astype(cols)
-        m = np.array(list(pdf[vec_col]), dtype="float64")
-        ids = pdf[id_col].to_numpy()
+        m = np.array(list(pdf["embedding"]), dtype="float64")
+        ids = pdf["vec_id"].to_numpy()
         valid = np.sqrt((m * m).sum(axis=1)) > 0
         m, ids = m[valid], ids[valid]  # zero-norm rows: excluded
         n = len(ids)
@@ -211,7 +209,7 @@ def neardup_pairs_pandas(
     out_schema = "vec_a long, vec_b long, sim double"
     if keep_block:
         out_schema = f"{block_col} {block_dt}, " + out_schema
-    return df.select(id_col, vec_col, block_col).groupBy(block_col).applyInPandas(
+    return df.select("vec_id", "embedding", block_col).groupBy(block_col).applyInPandas(
         pairs, schema=out_schema
     )
 
@@ -219,8 +217,6 @@ def neardup_pairs_pandas(
 def cosine_topk_pandas(
     queries: DataFrame,
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Brute-force top-k with numpy-batched scoring (B50 throughput tier).
@@ -235,9 +231,9 @@ def cosine_topk_pandas(
     import numpy as np
     import pandas as pd
 
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[id_col] for r in qrows])
-    qm = np.array([r[vec_col] for r in qrows], dtype="float64")
+    qrows = queries.select("vec_id", "embedding").collect()
+    qids = np.array([r["vec_id"] for r in qrows])
+    qm = np.array([r["embedding"] for r in qrows], dtype="float64")
     qn = np.linalg.norm(qm, axis=1, keepdims=True)
     qvalid = qn[:, 0] > 0
     qids, qm, qn = qids[qvalid], qm[qvalid], qn[qvalid]  # excluded
@@ -247,10 +243,10 @@ def cosine_topk_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf[vec_col]), dtype="float64")
+            cm = np.array(list(pdf["embedding"]), dtype="float64")
             cn = np.linalg.norm(cm, axis=1, keepdims=True)
             cvalid = cn[:, 0] > 0
-            cids = pdf[id_col].to_numpy()[cvalid]
+            cids = pdf["vec_id"].to_numpy()[cvalid]
             if len(cids) == 0:
                 continue
             cm = cm[cvalid] / cn[cvalid]
@@ -264,7 +260,7 @@ def cosine_topk_pandas(
                 }
             )
 
-    scored = candidates.select(id_col, vec_col).mapInPandas(
+    scored = candidates.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, cand_id long, sim double"
     ).filter(F.col("query_id") != F.col("cand_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cand_id")

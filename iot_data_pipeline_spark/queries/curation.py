@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iot_data_pipeline_spark.operators.dedup import kgrams
 from iot_data_pipeline_spark.queries.registry import declared
 from iot_data_pipeline_spark.sources.readers import read_table
 
@@ -389,23 +390,10 @@ def q118_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token stream by ~1/w before any cross-doc work.
     """
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= WINNOW_K
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - WINNOW_K),
-                lambda p: F.struct(
-                    p.alias("pos"),
-                    F.md5(
-                        F.concat_ws(" ", F.slice("t", p + 1, WINNOW_K))
-                    ).alias("gh"),
-                ),
-            )
-        ).alias("g"),
-    ).select("doc_id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
+        "doc_id", F.posexplode(kgrams("t", WINNOW_K)).alias("pos", "gram")
+    ).select("doc_id", "pos", F.md5("gram").alias("gh"))
     w = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -673,17 +661,7 @@ def q121_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 6 == 0)
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    bigrams = toks.filter(F.size("t") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - 2),
-                lambda p: F.concat_ws(
-                    " ", F.element_at("t", p + 1), F.element_at("t", p + 2)
-                ),
-            )
-        ).alias("bg"),
-    )
+    bigrams = toks.select("doc_id", F.explode(kgrams("t", 2)).alias("bg"))
     bg_stats = (
         bigrams.groupBy("doc_id", "bg")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -18,6 +18,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from iot_data_pipeline_spark.operators.dedup import kgrams
 from iot_data_pipeline_spark.operators.spread import spread_rows
 
 from iot_data_pipeline_spark.queries.base import ORACLE_FINITE, finite_or_null
@@ -160,25 +161,10 @@ def q44_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     real corpus scan already has >= defaultParallelism splits
     (operators/spread.py). The 3-gram list is built once from a hoisted
     `split` (interpreted HOF lambdas don't share subexpressions; see
-    _shingle_hashes in queries/llm.py)."""
+    operators/dedup.kgrams)."""
     docs = spread_rows(read_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", F.split("text", " ").alias("toks"))
-    # explicit >= 3 guard: sequence(1, 0) AUTO-DESCENDS to [1, 0] in
-    # Spark, so the greatest() clamp alone still indexed past the array
-    # on 1-2 token documents (empty-doc adversarial fixture)
-    idx = F.when(
-        F.size("toks") >= 3, F.sequence(F.lit(1), F.size("toks") - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at("toks", i),
-            F.element_at("toks", i + 1),
-            F.element_at("toks", i + 2),
-        ),
-    )
-    g = toked.select("doc_id", "toks", grams.alias("grams"))
+    g = toked.select("doc_id", "toks", kgrams("toks", 3).alias("grams"))
     has_grams = F.size("grams") > 0
     dup_gram = 1.0 - F.size(F.array_distinct("grams")).cast("double") / F.size("grams")
     dup_tok = 1.0 - F.size(F.array_distinct("toks")).cast("double") / F.size("toks")

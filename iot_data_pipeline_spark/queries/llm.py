@@ -25,8 +25,19 @@ from iot_data_pipeline_spark.functions.hashing import (
     PORTABLE_MOD as MOD,
     portable_hash,
 )
+from iot_data_pipeline_spark.operators.dedup import (
+    band_keys,
+    kgrams,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    shingle_hashes,
+)
 from iot_data_pipeline_spark.operators.multimodal import with_media_metadata
-from iot_data_pipeline_spark.operators.similarity import cosine_topk_blocked, dot
+from iot_data_pipeline_spark.operators.similarity import (
+    assign_cells,
+    cosine_topk_blocked,
+    dot,
+)
 from iot_data_pipeline_spark.operators.spread import spread_rows as _spread_rows
 from iot_data_pipeline_spark.queries.registry import declared
 from iot_data_pipeline_spark.queries.base import ORACLE_FINITE, valid_embeddings
@@ -122,23 +133,7 @@ def _shingle_hashes(corpus: DataFrame, distinct: bool = True) -> DataFrame:
       multiset-invariant.
     """
     toked = corpus.select("doc_id", "lang", F.split("text", " ").alias("toks"))
-    # explicit >= 3 guard: Spark's sequence(1, 0) AUTO-DESCENDS to
-    # [1, 0], so the greatest() clamp alone still indexed past the array
-    # on 1-2 token documents (empty-doc adversarial fixture; same fix as
-    # operators/dedup.shingle_hashes)
-    idx = F.when(
-        F.size("toks") >= 3, F.sequence(F.lit(1), F.size("toks") - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle_list = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at("toks", i),
-            F.element_at("toks", i + 1),
-            F.element_at("toks", i + 2),
-        ),
-    )
-    hash_list = F.transform(shingle_list, portable_hash)
+    hash_list = F.transform(kgrams("toks", 3), portable_hash)
     if distinct:
         hash_list = F.array_distinct(hash_list)
     return toked.select("doc_id", "lang", F.explode(hash_list).alias("h"))
@@ -249,49 +244,12 @@ def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset equals MIN over its set, so the distinct pass the oracle runs
     for clarity is pure cost here.
     """
-    hashed = _shingle_hashes(_corpus_near(spark, sf_dir), distinct=False).select(
-        "doc_id", "h"
+    sigs = minhash_signatures(
+        shingle_hashes(_corpus_near(spark, sf_dir), "text", "doc_id"), N_MINHASH
     )
-    per_band = N_MINHASH // N_BANDS
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(37 + 61 * i) * F.col("h") + F.lit(91 + 17 * i)) % MOD).alias(
-                f"sig_{i}"
-            )
-            for i in range(N_MINHASH)
-        ]
-    )
-    # One explode, not an N_BANDS-way union: a union would replicate the
-    # signature aggregation subtree per band (and again per self-join side).
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",", *[f"sig_{b * per_band + j}" for j in range(per_band)]
-                ).alias("key"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    # Materialize band keys once: both self-join sides would otherwise
-    # re-run shingling + the 64-minhash aggregation.
-    bands = (
-        sigs.select("doc_id", F.explode(band_structs).alias("bk"))
-        .select("doc_id", "bk.band", "bk.key")
-        .localCheckpoint(eager=True)
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+        lsh_candidate_pairs(sigs, N_BANDS)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .orderBy("doc_a", "doc_b")
     )
 
@@ -373,12 +331,6 @@ def q192_lsh_hot_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hub). Measured against the uncapped blowup in
     tools/skew_sweep.py (historical: since deleted) / SCALE.md section 7d.
     """
-    from iot_data_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingle_hashes,
-    )
-
     docs = (
         read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -622,9 +574,9 @@ def q26_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iot_data_pipeline_spark.operators.similarity import neardup_pairs_pandas
 
     emb = valid_embeddings(spark, sf_dir)
-    return neardup_pairs_pandas(
-        emb, id_col="vec_id", vec_col="embedding", block_col="label", threshold=0.35
-    ).orderBy("vec_a", "vec_b")
+    return neardup_pairs_pandas(emb, block_col="label", threshold=0.35).orderBy(
+        "vec_a", "vec_b"
+    )
 
 
 #: tiny deterministic lexicons over the corpus vocabulary -- the *plumbing*
@@ -1308,7 +1260,7 @@ def q100_crossmodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = valid_embeddings(spark, sf_dir)
     cand = neardup_pairs_pandas(
-        emb, id_col="vec_id", vec_col="embedding", block_col="label", threshold=0.35
+        emb, block_col="label", threshold=0.35
     ).localCheckpoint(eager=True)  # feeds the id semi-join AND the final join
 
     ids = (
@@ -1397,19 +1349,13 @@ def q109_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized the gram build + hash on a single core -- measured
     # 2.8s -> 1.0s, results identical (same rationale as _shingle_hashes)
     docs = _spread_rows(read_table(spark, sf_dir, "documents"))
-    toks = F.split("text", " ")
 
     def grams(df: DataFrame, keep_doc: bool) -> DataFrame:
-        n = F.size(toks)
-        idx = F.when(n >= 8, F.sequence(F.lit(0), n - 8)).otherwise(
-            F.array().cast("array<int>")
+        g = (
+            df.select("doc_id", F.split("text", " ").alias("toks"))
+            .select("doc_id", F.explode(kgrams("toks", 8)).alias("gram"))
+            .select("doc_id", portable_hash(F.col("gram")).alias("gram_h"))
         )
-        g = df.select(
-            "doc_id",
-            F.explode(
-                F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 8)))
-            ).alias("gram"),
-        ).select("doc_id", portable_hash(F.col("gram")).alias("gram_h"))
         cols = ["doc_id", "gram_h"] if keep_doc else ["gram_h"]
         return g.select(*cols).distinct()
 
@@ -2220,24 +2166,9 @@ def _bpe_merge_round(cur: DataFrame) -> tuple[DataFrame, DataFrame]:
     (q137): both must merge with the identical rule or their oracles
     diverge.
     """
-    arr = F.split("rep", " ")
     pairs = (
-        cur.select(
-            "cnt",
-            F.explode(
-                F.when(
-                    F.size(arr) >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(arr) - 1),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.element_at(arr, i),
-                            F.element_at(arr, i + 1),
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("pair"),
-        )
+        cur.select("cnt", F.split("rep", " ").alias("syms"))
+        .select("cnt", F.explode(kgrams("syms", 2)).alias("pair"))
         .groupBy("pair")
         .agg(F.sum("cnt").alias("pair_count"))
     )
@@ -2823,13 +2754,7 @@ def q136_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iot_data_pipeline_spark.operators.similarity import neardup_pairs_pandas
 
     emb = valid_embeddings(spark, sf_dir)
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 8).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 4) > 0, 1).otherwise(0)
-    )
-    e = emb.select("vec_id", "embedding", cell.alias("cell"))
+    e = emb.select("vec_id", "embedding", assign_cells("embedding", 4).alias("cell"))
     # pair generation = one numpy Gram matrix per cell (the q26 kernel):
     # same ROUND(cos,4) >= t decision, ~10-50x the HOF-fold throughput,
     # and the shuffle is one exchange on cell either way.
@@ -3148,17 +3073,12 @@ def rag_retrieve(with_emb: DataFrame) -> DataFrame:
     stand-in (q143, cross-engine oracle-able) and a model-shaped
     pandas-UDF encoder (bench b06) differ only in how ``e`` is computed.
     """
-    cell = (
-        F.when(F.element_at("e", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("e", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("e", 3) > 0, 1).otherwise(0)
-    )
     celled = with_emb.select(
         "doc_id",
         "chunk_idx",
         "e",
         F.sqrt(dot(F.col("e"), F.col("e"))).alias("nrm"),
-        cell.alias("cell"),
+        assign_cells("e", 3).alias("cell"),
     ).filter(F.col("nrm") > 0)
     q = celled.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("q_doc"),
@@ -3511,16 +3431,11 @@ def q148_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
-    )
     e = emb.select(
         "vec_id",
         as_double.alias("emb"),
         F.sqrt(dot(as_double, as_double)).alias("nrm"),
-        cell.alias("cell"),
+        assign_cells("embedding", 3).alias("cell"),
     )
     qf = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -3651,16 +3566,11 @@ def q149_ivf_multiprobe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
-    )
     e = emb.select(
         "vec_id",
         as_double.alias("emb"),
         F.sqrt(dot(as_double, as_double)).alias("nrm"),
-        cell.alias("cell"),
+        assign_cells("embedding", 3).alias("cell"),
     )
     qf = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -3839,16 +3749,11 @@ def q183_ivf_adaptive_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
-    )
     e = emb.select(
         "vec_id",
         as_double.alias("emb"),
         F.sqrt(dot(as_double, as_double)).alias("nrm"),
-        cell.alias("cell"),
+        assign_cells("embedding", 3).alias("cell"),
     )
     cell_sizes = e.groupBy("cell").agg(
         F.count(F.lit(1)).cast("bigint").alias("cell_n")
@@ -4390,31 +4295,7 @@ def q156_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = _shingle_hashes(
         corpus.withColumnRenamed("side", "lang"), distinct=False
     ).select("doc_id", F.col("lang").alias("side"), "h")
-    per_band = N_MINHASH // N_BANDS
-    sigs = hashed.groupBy("side", "doc_id").agg(
-        *[
-            F.min((F.lit(37 + 61 * i) * F.col("h") + F.lit(91 + 17 * i)) % MOD).alias(
-                f"sig_{i}"
-            )
-            for i in range(N_MINHASH)
-        ]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",", *[f"sig_{b * per_band + j}" for j in range(per_band)]
-                ).alias("key"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sigs.select("side", "doc_id", F.explode(band_structs).alias("bk"))
-        .select("side", "doc_id", "bk.band", "bk.key")
-        .localCheckpoint(eager=True)
-    )
+    bands = band_keys(minhash_signatures(hashed, N_MINHASH), N_BANDS)
     hbands = bands.filter(F.col("side") == "h").select(
         F.col("doc_id").alias("hist_doc"), "band", "key"
     )
@@ -4784,16 +4665,11 @@ def q176_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = valid_embeddings(spark, sf_dir)
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cell = (
-        F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
-        + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
-    )
     e = emb.select(
         "vec_id",
         as_double.alias("emb"),
         F.sqrt(dot(as_double, as_double)).alias("nrm"),
-        cell.alias("cell"),
+        assign_cells("embedding", 3).alias("cell"),
     )
     qf = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),

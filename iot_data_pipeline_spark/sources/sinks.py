@@ -155,14 +155,18 @@ def seed_zone_schema(
     )
 
 
+def stamp_ingest_time(bad: DataFrame) -> DataFrame:
+    """The dead-letter row schema: the corrupt rows plus ``_ingest_ts``,
+    their capture time. Both dead-letter channels (the bulk run's
+    ``write_dead_letter`` and the stream's per-batch partition
+    overwrite) write through it."""
+    return bad.withColumn("_ingest_ts", F.current_timestamp())
+
+
 def write_dead_letter(bad: DataFrame, path: str) -> None:
     """Dead-letter sink for corrupt records (realizes reference README.md:215).
 
     Appends the raw line plus capture metadata; parquet so the DLQ is
     itself queryable (count by error day, replay a range, ...).
     """
-    (
-        bad.withColumn("_ingest_ts", F.current_timestamp())
-        .write.mode("append")
-        .parquet(path)
-    )
+    stamp_ingest_time(bad).write.mode("append").parquet(path)

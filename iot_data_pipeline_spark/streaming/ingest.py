@@ -67,6 +67,7 @@ from iot_data_pipeline_spark.pipeline import (
     _process_sensor_frame,
     transform_sensor,
 )
+from iot_data_pipeline_spark.sources.matview import _read_text
 from iot_data_pipeline_spark.sources.readers import (
     CORRUPT_COL,
     SENSOR_SCHEMA,
@@ -135,33 +136,26 @@ def _batch_source_files(
         return []
     out: list[str] = []
     for src_status in fs.listStatus(root):
+        src = src_status.getPath().toString()
         compacted = False
-        entry = jvm.org.apache.hadoop.fs.Path(
-            src_status.getPath(), str(batch_id)
-        )
-        if not fs.exists(entry):
-            entry = jvm.org.apache.hadoop.fs.Path(
-                src_status.getPath(), f"{batch_id}.compact"
-            )
+        text = _read_text(spark, f"{src}/{batch_id}")
+        if text is None:
+            text = _read_text(spark, f"{src}/{batch_id}.compact")
             compacted = True
-            if not fs.exists(entry):
+            if text is None:
                 continue
-        for rec in _log_records(jvm, fs, entry):
+        for rec in _log_records(text):
             if not compacted or rec.get("batchId") == batch_id:
                 out.append(rec["path"])  # compact files carry the whole history
     return out
 
 
-def _log_records(jvm, fs, entry) -> list[dict]:
-    """The file entries of one checkpointed source-log file: a ``v1``
-    header, then one JSON object per line carrying at least ``path``."""
+def _log_records(text: str) -> list[dict]:
+    """The file entries of one checkpointed source-log file's text: a
+    ``v1`` header, then one JSON object per line carrying at least
+    ``path``."""
     import json
 
-    stream = fs.open(entry)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
     out = []
     for line in text.splitlines():
         line = line.strip()
@@ -252,10 +246,6 @@ def _overwrite_partitions(path: str) -> Callable[[DataFrame], None]:
     return write
 
 
-def _stamp_ingest_time(bad: DataFrame) -> DataFrame:
-    return bad.withColumn("_ingest_ts", F.current_timestamp())
-
-
 def detect_replaced_source_files(
     spark: SparkSession, checkpoint_dir: str
 ) -> list[str]:
@@ -315,9 +305,10 @@ def detect_replaced_source_files(
                 latest_compact is None or int(n) > latest_compact
             ):
                 keep.append(n)
+        src = src_status.getPath().toString()
         for name in keep:
-            entry = jvm.org.apache.hadoop.fs.Path(src_status.getPath(), name)
-            for rec in _log_records(jvm, fs, entry):
+            # a log file gone since the listing carries nothing to audit
+            for rec in _log_records(_read_text(spark, f"{src}/{name}") or ""):
                 p = rec["path"]
                 recorded[p] = max(int(rec.get("timestamp", 0)), recorded.get(p, 0))
     by_dir: dict[str, dict[str, tuple[str, int]]] = {}
@@ -433,7 +424,10 @@ def start_sensor_ingest(
     # schema inference. Each seed is the exact channel output schema,
     # computed on a 0-row frame (no data touched).
     from iot_data_pipeline_spark.sources.matview import ensure_plain_zone
-    from iot_data_pipeline_spark.sources.sinks import seed_zone_schema
+    from iot_data_pipeline_spark.sources.sinks import (
+        seed_zone_schema,
+        stamp_ingest_time,
+    )
 
     ensure_plain_zone(spark, out_dir, "start_sensor_ingest")
     dead_letter = f"{out_dir}/_dead_letter"
@@ -443,7 +437,7 @@ def start_sensor_ingest(
     seed_zone_schema(
         transform_sensor(empty_good, config, dim_location), out_dir, ROUTE_COL
     )
-    seed_zone_schema(_stamp_ingest_time(empty_bad), dead_letter, ROUTE_COL)
+    seed_zone_schema(stamp_ingest_time(empty_bad), dead_letter, ROUTE_COL)
     write_good = _overwrite_partitions(out_dir)
     write_dead = _overwrite_partitions(dead_letter)
 
@@ -467,7 +461,7 @@ def start_sensor_ingest(
             config,
             dim_location,
             write_good,
-            lambda bad: write_dead(_stamp_ingest_time(bad)),
+            lambda bad: write_dead(stamp_ingest_time(bad)),
             lambda seen: _raise_if_files_vanished(spark, checkpoint_dir, batch_id, seen),
         )
 

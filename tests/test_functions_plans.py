@@ -82,6 +82,16 @@ def test_explode_ngrams(spark):
     assert grams == ["a b", "b c", "c d"]
 
 
+def test_explode_ngrams_skips_documents_shorter_than_n(spark):
+    """A document of fewer than n tokens has no n-gram (the unclamped
+    index ``sequence(1, 0)`` would read token 0 of a one-token doc)."""
+    df = spark.createDataFrame(
+        [Row(id=1, text="one"), Row(id=2, text=""), Row(id=3, text="a b")]
+    )
+    got = [(r["id"], r["ngram"]) for r in explode_ngrams(df, "text", 2).collect()]
+    assert got == [(3, "a b")]
+
+
 def test_portable_hash_range(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents").limit(100)
     rows = docs.select(portable_hash(F.col("text")).alias("h")).collect()

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.operators.dedup import (
     exact_dedup,
+    kgrams,
     lsh_candidate_pairs,
     minhash_signatures,
     shingle_hashes,
@@ -144,6 +145,61 @@ def test_exact_dedup_null_id_contract_observed(spark):
     assert null_rows == 2, observed
 
 
+@pytest.mark.parametrize("k", [2, 3, 8])
+def test_kgrams_match_python_reference(spark, k):
+    """Word k-grams over documents of 0, 1, k-1, k and k+1 tokens equal a
+    plain-Python sliding window; a document shorter than k (or a NULL
+    token array) has none. The
+    k-1 document is the case an unguarded index would get wrong: Spark's
+    ``sequence(1, 0)`` auto-descends to ``[1, 0]``."""
+    assert spark.range(1).select(
+        F.sequence(F.lit(1), F.lit(0)).alias("s")
+    ).first()["s"] == [1, 0]
+
+    docs = [
+        (n, [f"w{i}" for i in range(n)]) for n in sorted({0, 1, k - 1, k, k + 1})
+    ]
+    df = spark.createDataFrame(docs + [(-1, None)], "n int, toks array<string>")
+    got = {
+        r["n"]: r["g"]
+        for r in df.select("n", kgrams("toks", k).alias("g")).collect()
+    }
+    want = {
+        n: [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+        for n, toks in docs
+    }
+    assert got == {**want, -1: []}
+
+
+def test_minhash_signatures_keep_passthrough_columns(spark):
+    """``minhash_signatures`` groups by every column except ``h`` and
+    ``band_keys`` keeps every non-``sig_`` column: one id under two values
+    of a passthrough column (q156's history and batch sides) stays two
+    signature rows, each the min of its own hashes."""
+    from iot_data_pipeline_spark.functions.hashing import PORTABLE_MOD
+    from iot_data_pipeline_spark.operators.dedup import band_keys
+
+    rows = [("h", 7, 11), ("h", 7, 13), ("b", 7, 11), ("b", 7, 17)]
+    hashed = spark.createDataFrame(rows, "side string, id long, h long")
+    sigs = minhash_signatures(hashed, 4)
+    got = {(r["side"], r["id"]): [r[f"sig_{i}"] for i in range(4)] for r in sigs.collect()}
+    want = {
+        key: [
+            min(
+                ((37 + 61 * i) * h + 91 + 17 * i) % PORTABLE_MOD
+                for side, id_, h in rows
+                if (side, id_) == key
+            )
+            for i in range(4)
+        ]
+        for key in [("h", 7), ("b", 7)]
+    }
+    assert got == want
+    bands = band_keys(sigs, 2)
+    assert bands.columns == ["side", "id", "band", "key"]
+    assert bands.count() == 4
+
+
 def test_minhash_candidates_find_neardups(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     # plant a near-dup: doc 0's text minus its last token, as id 900000
@@ -211,6 +267,84 @@ def test_queries_share_one_dot_product_fold():
         for p in sorted(root.rglob("*.py"))
         for n, line in enumerate(p.read_text().splitlines(), 1)
         if "F.zip_with(" in line
+    ]
+    assert hits == [], hits
+
+
+def _call_name(node) -> str | None:
+    import ast
+
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _copied_primitive(node) -> str | None:
+    """The operator ``node`` re-spells, if it is one of: the IVF sign cell
+    (``element_at(...) > 0``), the MinHash family (``37 + 61 * i``) or a
+    k-gram index over a token array (``sequence(lit(1), size(...) - k)``,
+    or its 0-based form for k > 1)."""
+    import ast
+
+    if (
+        isinstance(node, ast.Compare)
+        and _call_name(node.left) == "element_at"
+        and isinstance(node.ops[0], ast.Gt)
+        and isinstance(node.comparators[0], ast.Constant)
+        and node.comparators[0].value == 0
+    ):
+        return "similarity.assign_cells"
+    if (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Add)
+        and isinstance(node.left, ast.Constant)
+        and node.left.value == 37
+        and isinstance(node.right, ast.BinOp)
+        and isinstance(node.right.op, ast.Mult)
+        and isinstance(node.right.left, ast.Constant)
+        and node.right.left.value == 61
+    ):
+        return "dedup.minhash_signatures"
+    if _call_name(node) == "sequence" and len(node.args) == 2:
+        start, stop = node.args
+        if (
+            _call_name(start) == "lit"
+            and isinstance(start.args[0], ast.Constant)
+            and isinstance(stop, ast.BinOp)
+            and isinstance(stop.op, ast.Sub)
+            and _call_name(stop.left) == "size"
+        ):
+            first = start.args[0].value
+            minus_one = isinstance(stop.right, ast.Constant) and stop.right.value == 1
+            if first == 1 or (first == 0 and not minus_one):
+                return "dedup.kgrams"
+    return None
+
+
+def test_queries_share_one_kgram_minhash_and_sign_cell():
+    """Word k-grams, the MinHash hash family and the IVF sign cell each
+    have one implementation, in ``operators/``: no query module spells
+    its own copy in code. The oracle SQL (strings and f-strings) keeps
+    its own spelling, because it is the reference the answers are
+    compared against."""
+    import ast
+    from pathlib import Path
+
+    import iot_data_pipeline_spark.queries as queries
+
+    def code_nodes(node):
+        for child in ast.iter_child_nodes(node):
+            if not isinstance(child, ast.JoinedStr):
+                yield child
+                yield from code_nodes(child)
+
+    root = Path(queries.__file__).parent
+    hits = [
+        f"{p.name}:{n.lineno} re-spells {op}"
+        for p in sorted(root.rglob("*.py"))
+        for n in code_nodes(ast.parse(p.read_text()))
+        if (op := _copied_primitive(n))
     ]
     assert hits == [], hits
 
