@@ -1,5 +1,5 @@
 """Engine function library: portable hashing, text statistics, and the
-UDF surface (scalar / pandas / grouped -- SURVEY.md section 2.2 B49-B52)."""
+UDF surface (scalar / pandas / n-gram explode -- SURVEY.md section 2.2 B49-B51)."""
 
 from iot_data_pipeline_spark.functions.hashing import (  # noqa: F401
     ORACLE_HASH,

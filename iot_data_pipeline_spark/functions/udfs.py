@@ -1,4 +1,4 @@
-"""UDF surface (SURVEY.md B49-B52) -- present, tested, and deliberately
+"""UDF surface (SURVEY.md B49-B51) -- present, tested, and deliberately
 rationed.
 
 Engine policy (SURVEY.md section 4.2): built-in column expressions first
@@ -15,7 +15,7 @@ without putting Python in any declared query's hot path.
 # its eval type from REAL annotation objects; stringified annotations make
 # every import of this module emit "Cannot infer the eval type" warnings.
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf
 from pyspark.sql.types import DoubleType, LongType
@@ -35,14 +35,6 @@ def celsius_to_fahrenheit_py(c):  # annotation-free: see NOTE above
     return c * 9 / 5 + 32
 
 
-@pandas_udf(DoubleType())
-def celsius_to_fahrenheit_arrow(c: pd.Series) -> pd.Series:
-    """B50 vectorized scalar UDF: same transform over Arrow batches --
-    one numpy expression per ~10k-row batch instead of one Python call
-    per row."""
-    return c * 9 / 5 + 32
-
-
 @pandas_udf(LongType())
 def token_count_arrow(text: pd.Series) -> pd.Series:
     """B50: tokens per document, vectorized. Twin of
@@ -54,14 +46,6 @@ def token_count_arrow(text: pd.Series) -> pd.Series:
     return text.str.split(" ").str.len().astype("Int64")
 
 
-@pandas_udf(DoubleType())
-def weighted_mean_arrow(v: pd.Series, w: pd.Series) -> float:
-    """B52 grouped-aggregate pandas UDF: sum(v*w)/sum(w) per group.
-    Twin of the built-in ``sum(v*w)/sum(w)`` aggregate expression."""
-    denom = w.sum()
-    return float((v * w).sum() / denom) if denom else None
-
-
 def explode_ngrams(df: DataFrame, text_col: str, n: int, out_col: str = "ngram") -> DataFrame:
     """B51 UDTF-equivalent: one row per n-gram, via JVM-side
     sequence/transform/explode (no Python) -- the engine's standing answer
@@ -69,20 +53,3 @@ def explode_ngrams(df: DataFrame, text_col: str, n: int, out_col: str = "ngram")
     toked = df.withColumn("__toks", F.split(text_col, " "))
     return toked.withColumn(out_col, F.explode(kgrams("__toks", n))).drop("__toks")
 
-
-def fahrenheit_builtin(c: Column) -> Column:
-    """The codegen twin the tests compare every UDF flavor against."""
-    return c * 9 / 5 + 32
-
-
-@udf(returnType=DoubleType(), useArrow=True)
-def celsius_to_fahrenheit_arrow_scalar(c):
-    """B49's Spark 4 upgrade path: the SAME row-at-a-time function body as
-    ``celsius_to_fahrenheit_py`` but with Arrow serialization
-    (``useArrow=True``) -- batches cross the JVM/Python boundary as Arrow
-    instead of pickled rows, typically recovering most of the pandas-UDF
-    win without rewriting the function vectorized. Still slower than the
-    column-expression twin; still rationed out of hot paths."""
-    if c is None:
-        return None
-    return c * 9 / 5 + 32

@@ -3,10 +3,11 @@
 The one implementation of each text-dedup algorithm the queries use:
 
 - ``kgrams``: word k-grams with the short-document guard. Called by
-  ``shingle_hashes``, ``queries/llm._shingle_hashes`` (q25, q100, q145,
-  q156), q44 (k=3), q109 (k=8), q118 (k=4), q121 and the BPE pair count
-  of q131/q137 (k=2), and ``functions/udfs.explode_ngrams``.
-- ``shingle_hashes`` -> ``minhash_signatures`` -> ``lsh_candidate_pairs``:
+  ``shingle_hashes``, q44 (k=3), q109 (k=8), q118 (k=4), q121 and the
+  BPE pair count of q131/q137 (k=2), and ``functions/udfs.explode_ngrams``.
+- ``shingle_hashes``: the one 3-token shingle hasher. q25, q100 and q145
+  (Jaccard over the shingle set) and q156 call it alone;
+  ``shingle_hashes`` -> ``minhash_signatures`` -> ``lsh_candidate_pairs``:
   q23 (exhaustive) and q192 (``max_bucket``) compose all three.
 - ``band_keys``: the LSH band frame; ``lsh_candidate_pairs`` and q156
   (``side`` carried through ``minhash_signatures`` and ``band_keys``,
@@ -111,12 +112,29 @@ def kgrams(toks: str, k: int) -> Column:
 
 
 def shingle_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, h) rows: portable 60-bit hash per 3-token shingle (the
-    oracle's ``SHINGLES_CTE`` width)."""
-    toked = df.select(F.col(id_col).alias("id"), F.split(text_col, " ").alias("toks"))
-    return toked.select("id", F.explode(kgrams("toks", 3)).alias("shingle")).select(
-        "id", portable_hash(F.col("shingle")).alias("h")
+    """(id, ..., h) rows: the portable 60-bit hash of each distinct 3-token
+    shingle (the oracle's ``SHINGLES_CTE`` width) of each document, with
+    ``id_col`` renamed ``id`` and every other input column except
+    ``text_col`` carried through unchanged.
+
+    - ``split(text)`` is hoisted into its own column before the shingle
+      lambda runs: higher-order-function lambdas are interpreted and do
+      NOT share subexpressions, so an inlined split re-tokenizes the
+      document once per element (measured 4x slower at sf0.1).
+    - the hash is applied inside the array, before the explode and any
+      shuffle, so downstream joins move 8-byte ints, never shingle text.
+    - ``array_distinct`` dedups within the row: a duplicate (id, h) can
+      only come from the same document, so set semantics need no shuffle
+      (a global ``.distinct()`` measured ~2x the whole stage at sf0.1).
+      The Jaccard callers need the set; MinHash loses nothing, as min
+      over a set equals min over the multiset.
+    """
+    keep = [c for c in df.columns if c not in (text_col, id_col)]
+    toked = df.select(
+        F.col(id_col).alias("id"), *keep, F.split(text_col, " ").alias("toks")
     )
+    hashes = F.array_distinct(F.transform(kgrams("toks", 3), portable_hash))
+    return toked.select("id", *keep, F.explode(hashes).alias("h"))
 
 
 def minhash_signatures(

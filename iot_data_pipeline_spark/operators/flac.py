@@ -34,7 +34,6 @@ import struct
 __all__ = [
     "FlacFormatError",
     "is_flac",
-    "decode_flac",
     "decode_flac_ex",
     "encode_flac",
     "MAX_DECODED_SAMPLES",
@@ -226,13 +225,6 @@ def _decode_subframe(r: _BitReader, block_size: int, bps: int) -> list[int]:
     if wasted:
         samples = [s << wasted for s in samples]
     return samples
-
-
-def decode_flac(payload: bytes) -> tuple[int, int, list[int]]:
-    """Decode -> ``(sample_rate, channels, samples)`` (interleaved ints),
-    the same contract as :func:`audio.decode_wav`."""
-    rate, channels, _bps, samples = decode_flac_ex(payload)
-    return rate, channels, samples
 
 
 def decode_flac_ex(payload: bytes) -> tuple[int, int, int, list[int]]:

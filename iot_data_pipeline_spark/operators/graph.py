@@ -105,7 +105,8 @@ def connected_components(
         )
 
     if algorithm == "star":
-        return _star_contraction(sym, max_iter)
+        # sym is already symmetric and deduped: reuse it as the edge frame
+        return connected_components_star(sym, src="a", dst="b", max_iter=max_iter)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
 
@@ -296,8 +297,3 @@ def connected_components_star(
         "node", F.coalesce("component", F.col("node")).alias("component")
     )
 
-
-def _star_contraction(sym: DataFrame, max_iter: int) -> DataFrame:
-    """Dispatch shim for :func:`connected_components` (input already
-    symmetric and deduped -- reuse it directly as the edge frame)."""
-    return connected_components_star(sym, src="a", dst="b", max_iter=max_iter)

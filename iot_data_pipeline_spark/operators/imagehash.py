@@ -62,7 +62,7 @@ def dhash_bytes(payload: bytes) -> int:
     else:
         # greyscale or grey+alpha: channel 0 is the luma
         luma = arr[:, :, 0]
-    # nearest-neighbor 9x8 sample on the same integer grid as resize_nearest
+    # nearest-neighbor 9x8 sample on an integer grid (source row y*h//H)
     sy = np.minimum(np.arange(DHASH_H) * h // DHASH_H, h - 1)
     sx = np.minimum(np.arange(DHASH_W) * w // DHASH_W, w - 1)
     small = luma[np.ix_(sy, sx)]

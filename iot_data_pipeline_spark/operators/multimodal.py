@@ -171,86 +171,6 @@ def extract_features(
     return df.select(id_col, content_col).mapInPandas(run, schema=out_schema)
 
 
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    content_col: str = "content",
-    id_col: str = "media_id",
-    mode: str = "strict",
-) -> DataFrame:
-    """Resize each image payload to ``width``x``height`` -> new binary column.
-
-    Same two-mode contract as :func:`extract_features`: the Spark-side
-    plumbing (Arrow batches via ``mapInPandas``, NULL pass-through, binary
-    out-schema) is real. mode='strict' decodes PNG payloads with the
-    vendored codec, nearest-neighbor resamples to (width, height), and
-    re-encodes PNG (byte-deterministic); non-PNG raises. mode='fake' emits
-    a deterministic digest of (payload, w, h) truncated to w*h//64 bytes
-    so output size scales with the requested dimensions and tests can
-    assert the full pipeline shape on arbitrary bytes.
-    """
-    if mode not in ("strict", "fake"):
-        raise ValueError(f"mode must be strict|fake, got {mode!r}")
-
-    def kernel(payload: bytes) -> bytes:
-        if mode == "strict":
-            from iot_data_pipeline_spark.operators import gif, jpeg, png
-
-            if png.is_png(payload):
-                w, h, ch, pixels = png.decode_png(payload)
-            elif jpeg.is_jpeg(payload):
-                # JPEG in, PNG out: re-encoding lossy JPEG would degrade
-                # again, so resized media normalizes to lossless PNG.
-                w, h, ch, pixels = jpeg.decode_jpeg(payload)
-            elif gif.is_gif(payload):
-                # GIF in, PNG out: palette expanded to RGB truecolor
-                # (resampling palette indices would invent colors).
-                import numpy as np
-
-                w, h, palette, indices = gif.decode_gif(payload)
-                pal = np.asarray(palette, dtype=np.uint8)
-                pixels = bytearray(
-                    pal[np.frombuffer(bytes(indices), dtype=np.uint8)].tobytes()
-                )
-                ch = 3
-            else:
-                raise NotImplementedError(
-                    "only PNG, JPEG (baseline + progressive), and GIF "
-                    "resize are vendored in this environment; run with "
-                    "mode='fake' for the deterministic test kernel"
-                )
-            return png.encode_png(
-                width, height, ch, png.resize_nearest(w, h, ch, pixels, width, height)
-            )
-        out_len = max(width * height // 64, 1)
-        seed = payload + width.to_bytes(2, "big") + height.to_bytes(2, "big")
-        buf = b""
-        counter = 0
-        while len(buf) < out_len:
-            buf += hashlib.sha256(seed + counter.to_bytes(4, "big")).digest()
-            counter += 1
-        return buf[:out_len]
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            resized = [
-                None if payload is None else kernel(bytes(payload))
-                for payload in pdf[content_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "resized": resized})
-
-    out_schema = T.StructType(
-        [
-            next(f for f in df.schema.fields if f.name == id_col),
-            T.StructField("resized", T.BinaryType()),
-        ]
-    )
-    return df.select(id_col, content_col).mapInPandas(run, schema=out_schema)
-
-
 def extract_audio_features(
     df: DataFrame,
     content_col: str = "content",

@@ -402,25 +402,6 @@ def encode_png_palette(
     return bytes(out)
 
 
-def resize_nearest(
-    width: int,
-    height: int,
-    channels: int,
-    pixels: bytes | bytearray,
-    new_w: int,
-    new_h: int,
-) -> bytearray:
-    """Nearest-neighbor resample (deterministic integer sampling grid)."""
-    import numpy as np
-
-    arr = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(
-        height, width, channels
-    )
-    sy = np.minimum(np.arange(new_h) * height // new_h, height - 1)
-    sx = np.minimum(np.arange(new_w) * width // new_w, width - 1)
-    return bytearray(arr[np.ix_(sy, sx)].tobytes())
-
-
 def luma_grid_features(
     width: int, height: int, channels: int, pixels: bytes | bytearray, dim: int
 ) -> list[float]:

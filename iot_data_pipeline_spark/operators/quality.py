@@ -72,17 +72,3 @@ def expect_split(
     quarantined = marked.filter(F.size(VIOLATIONS_COL) > 0)
     return clean, quarantined
 
-
-def violation_stats(df: DataFrame, rules: list[Expectation]) -> DataFrame:
-    """Per-rule violation counts + total rows, as one aggregation row --
-    the quality dashboard feed."""
-    marked = with_violations(df, rules)
-    return marked.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.count_if(F.array_contains(VIOLATIONS_COL, r.name)).alias(
-                f"viol_{r.name}"
-            )
-            for r in rules
-        ],
-    )

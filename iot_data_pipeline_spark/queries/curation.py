@@ -343,6 +343,27 @@ WINNOW_K = 4  # k-gram length
 WINNOW_W = 5  # winnowing window
 
 
+def _winnowing_fingerprints(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, fp) winnowing fingerprints of (doc_id, text) rows:
+    the md5 hex of each WINNOW_K-token gram, and the minimum of each full
+    window of WINNOW_W consecutive grams."""
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    grams = toks.select(
+        "doc_id", F.posexplode(kgrams("t", WINNOW_K)).alias("pos", "gram")
+    ).select("doc_id", "pos", F.md5("gram").alias("gh"))
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(-(WINNOW_W - 1), 0)
+    )
+    winmin = grams.select(
+        "doc_id",
+        F.min("gh").over(w).alias("fp"),
+        F.count(F.lit(1)).over(w).alias("wn"),
+    ).filter(F.col("wn") == WINNOW_W)
+    return winmin.select("doc_id", "fp").distinct()
+
+
 @declared(
     "q118_winnowing_fingerprints",
     oracle=f"""
@@ -390,23 +411,8 @@ def q118_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token stream by ~1/w before any cross-doc work.
     """
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    grams = toks.select(
-        "doc_id", F.posexplode(kgrams("t", WINNOW_K)).alias("pos", "gram")
-    ).select("doc_id", "pos", F.md5("gram").alias("gh"))
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(-(WINNOW_W - 1), 0)
-    )
-    winmin = grams.select(
-        "doc_id",
-        F.min("gh").over(w).alias("fp"),
-        F.count(F.lit(1)).over(w).alias("wn"),
-    ).filter(F.col("wn") == WINNOW_W)
     return (
-        winmin.select("doc_id", "fp")
-        .distinct()
+        _winnowing_fingerprints(docs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_fingerprints"))
         .orderBy("doc_id")
@@ -444,7 +450,9 @@ def q119_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: the historical index is a digest-only table (32 bytes a
     row for billions of docs -- parquet-compact, bucketable by digest so
-    repeated daily batches join shuffle-free, operators/bucketing.py).
+    repeated daily batches join shuffle-free with ``bucketBy``; the
+    engine's operators/bucketing.py is historical: deleted, no caller
+    outside tests).
     The batch side shuffles digests, never text. A bloom filter over the
     index (session conf enables Spark's runtime bloom pushdown) prunes
     the probe side before the exchange at real scale.

@@ -991,9 +991,8 @@ def q168_backfill_derived_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-backfill subsystem (sources/backfill.py) under the
     oracle gate: a partitioned source zone is derived once in full, then
     ONE source partition is corrected upstream (part 2's values +100);
-    ``stale_partitions`` must detect exactly that partition from the
-    fingerprint manifest, and the second ``backfill`` recomputes only it
-    -- untouched partitions keep their original derived files. The final
+    the second ``backfill`` must detect exactly that partition from the
+    fingerprint manifest and recompute only it -- untouched partitions keep their original derived files. The final
     derived zone is aggregated and hash-matched against the one-shot
     derivation of the FINAL source state, so both a missed recompute
     (stale part 2 data) and an over-eager one (recompute-all would still

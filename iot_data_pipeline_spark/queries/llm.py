@@ -113,32 +113,6 @@ def _corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(dup)
 
 
-def _shingle_hashes(corpus: DataFrame, distinct: bool = True) -> DataFrame:
-    """(doc_id, lang, h) with h = portable hash of each 3-token shingle.
-
-    Two deliberate plan shapes:
-    - ``split(text)`` is hoisted into its own projected column before the
-      shingle lambda runs. Higher-order-function lambdas are interpreted
-      (not codegen'd) and do NOT share subexpressions, so an inlined split
-      re-tokenizes the document once per element_at -- measured 4x slower
-      at sf0.1.
-    - the hash is applied *before* any shuffle so downstream joins move
-      8-byte ints, never shingle text -- at 100 TB the shuffle volume
-      drops ~10x versus shuffling the strings.
-    - ``distinct=True`` dedups with ``array_distinct`` INSIDE the row,
-      before the explode: a (doc_id, h) duplicate can only come from the
-      same document, so set semantics need no shuffle at all (a global
-      ``.distinct()`` here measured ~2x the whole stage cost at sf0.1).
-      ``distinct=False`` callers (MinHash) skip even that: min() is
-      multiset-invariant.
-    """
-    toked = corpus.select("doc_id", "lang", F.split("text", " ").alias("toks"))
-    hash_list = F.transform(kgrams("toks", 3), portable_hash)
-    if distinct:
-        hash_list = F.array_distinct(hash_list)
-    return toked.select("doc_id", "lang", F.explode(hash_list).alias("h"))
-
-
 @declared(
     "q17b_token_counts",
     oracle="""
@@ -240,9 +214,8 @@ def q23_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the only shuffles are the groupBy(doc_id) for signatures
     and the band-key self-join -- both linear in corpus size; no all-pairs
     comparison ever happens (that's the point of LSH at 100 TB). Shingles
-    are hashed before the first shuffle and never deduplicated: MIN over a
-    multiset equals MIN over its set, so the distinct pass the oracle runs
-    for clarity is pure cost here.
+    are hashed and deduplicated inside each document's row before the
+    first shuffle, so the oracle's distinct pass costs no shuffle here.
     """
     sigs = minhash_signatures(
         shingle_hashes(_corpus_near(spark, sf_dir), "text", "doc_id"), N_MINHASH
@@ -489,9 +462,11 @@ def q25_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the shingle hashes once: three consumers below (both
     # self-join sides + the size agg) would otherwise re-run the whole
     # shingling pipeline each.
-    shingles = _shingle_hashes(
-        _corpus_near(spark, sf_dir), distinct=True
-    ).localCheckpoint(eager=True)
+    shingles = (
+        shingle_hashes(_corpus_near(spark, sf_dir), "text", "doc_id")
+        .withColumnRenamed("id", "doc_id")
+        .localCheckpoint(eager=True)
+    )
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -1268,9 +1243,13 @@ def q100_crossmodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    sh = _shingle_hashes(
-        docs.join(F.broadcast(ids), "doc_id", "left_semi"), distinct=True
-    ).localCheckpoint(eager=True)  # both self-join sides + the size agg
+    sh = (
+        shingle_hashes(
+            docs.join(F.broadcast(ids), "doc_id", "left_semi"), "text", "doc_id"
+        )
+        .withColumnRenamed("id", "doc_id")
+        .localCheckpoint(eager=True)  # both self-join sides + the size agg
+    )
 
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -1347,7 +1326,7 @@ def q109_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~2^30 space) are deterministic and identical in both engines."""
     # spread before the 8-gram explode (round-15): the one-task scan
     # serialized the gram build + hash on a single core -- measured
-    # 2.8s -> 1.0s, results identical (same rationale as _shingle_hashes)
+    # 2.8s -> 1.0s, results identical (spread.py rationale)
     docs = _spread_rows(read_table(spark, sf_dir, "documents"))
 
     def grams(df: DataFrame, keep_doc: bool) -> DataFrame:
@@ -3309,7 +3288,9 @@ def q145_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelizes the single cache build across cores (the corpus scans
     # as one task at bench scale, spread.py rationale).
     tok = transient_persist(
-        _shingle_hashes(_spread_rows(_corpus_near(spark, sf_dir)), distinct=True)
+        shingle_hashes(
+            _spread_rows(_corpus_near(spark, sf_dir)), "text", "doc_id"
+        ).withColumnRenamed("id", "doc_id")
     )
     dfreq = tok.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     w_doc = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -4292,9 +4273,9 @@ def q156_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("side", F.lit("b"))
     )
     corpus = hist.unionByName(batch)
-    hashed = _shingle_hashes(
-        corpus.withColumnRenamed("side", "lang"), distinct=False
-    ).select("doc_id", F.col("lang").alias("side"), "h")
+    hashed = shingle_hashes(corpus, "text", "doc_id").withColumnRenamed(
+        "id", "doc_id"
+    )
     bands = band_keys(minhash_signatures(hashed, N_MINHASH), N_BANDS)
     hbands = bands.filter(F.col("side") == "h").select(
         F.col("doc_id").alias("hist_doc"), "band", "key"

@@ -354,8 +354,8 @@ def q21_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff > gap), matching Spark's built-in ``session_window``, whose
     observed behavior merges at the exact-gap boundary (session end =
     last_event + gap, and window-overlap inclusion is closed there).
-    streaming/windows.py's session_window path is asserted equivalent to
-    this in tests/test_fuzz_sessions.py."""
+    Spark's batch ``session_window`` is asserted equivalent to this in
+    tests/test_fuzz_sessions.py."""
     ev = read_table(spark, sf_dir, "events")
     gap_us = 1_800_000_000
     # events.ts is unique per user in microseconds, so ordering by the

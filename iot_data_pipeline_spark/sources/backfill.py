@@ -78,16 +78,6 @@ def _write_manifest(
         out.close()
 
 
-def stale_partitions(
-    spark: SparkSession, src_path: str, dst_path: str, partition_col: str
-) -> list[str]:
-    """Partition values whose source fingerprint differs from the manifest
-    recorded at the last backfill (new partitions included)."""
-    current = partition_fingerprints(spark, src_path, partition_col)
-    seen = _read_manifest(spark, dst_path)
-    return sorted(v for v, fp in current.items() if seen.get(v) != fp)
-
-
 def backfill(
     spark: SparkSession,
     src_path: str,
@@ -147,7 +137,7 @@ def backfill(
     )
     # record the fingerprints we just consumed (the pre-read capture: a
     # partition that changed again mid-run keeps its OLD stamp here, so
-    # the next stale_partitions diff re-backfills it)
+    # the next backfill's diff recomputes it)
     manifest = _read_manifest(spark, dst_path)
     for v in todo:
         manifest[v] = captured[v]

@@ -123,35 +123,3 @@ def rewrite_zordered(
     )
     write_parquet(out, out_path, atomic=atomic)
 
-
-def analyze_table(
-    spark: SparkSession,
-    table: str,
-    columns: list[str] | None = None,
-) -> dict[str, str]:
-    """Collect catalog statistics for a saved table (``ANALYZE TABLE``):
-    table-level rowCount/sizeInBytes, plus per-column NDV/min/max/null
-    counts when ``columns`` is given.
-
-    This is the cost-based-optimizer feed. AQE fixes plans at *runtime*
-    from observed shuffle sizes; catalog stats fix them at *plan* time --
-    on a 100 TB lake that is the difference between never starting the
-    wrong sort-merge join and cancelling it halfway. Column NDVs also
-    drive join reordering (``spark.sql.cbo.joinReorder.enabled``).
-
-    Returns the table-level stats as reported by ``DESC EXTENDED``.
-    """
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(columns)
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    rows = spark.sql(f"DESC EXTENDED {table}").collect()
-    stats = {r["col_name"]: r["data_type"] for r in rows if r["col_name"] == "Statistics"}
-    return stats
-
-
-CBO_CONF = {
-    "spark.sql.cbo.enabled": "true",
-    "spark.sql.cbo.joinReorder.enabled": "true",
-    "spark.sql.statistics.histogram.enabled": "true",
-}

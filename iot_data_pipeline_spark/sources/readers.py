@@ -522,12 +522,6 @@ _INFERENCE_CONFS = (
     "spark.sql.files.ignoreCorruptFiles",
 )
 
-def clear_lake_schema_cache() -> None:
-    """Drop every cached table schema. Never needed for correctness (a
-    changed listing or inference conf misses the cache by itself); it
-    only frees the entries."""
-    _SCHEMA_CACHE.clear()
-
 
 def _schema_fingerprint(spark: SparkSession, src: str) -> tuple | None:
     """What a table's inferred schema depends on: the session, the

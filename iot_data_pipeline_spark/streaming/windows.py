@@ -47,28 +47,6 @@ def windowed_value_counts(
     )
 
 
-def sessionized_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Gap-based session windows per key (B40). The batch twin is q21's
-    lag/cumsum island query -- asserted equal in tests."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def dedup_stream(
     stream: DataFrame,
     keys: list[str],

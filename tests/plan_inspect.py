@@ -1,4 +1,4 @@
-"""Plan-shape assertions for scale correctness.
+"""Plan-shape assertions for scale correctness (test helpers).
 
 At 100 TB a query that *passes* but scans all columns, shuffles a
 broadcastable dim, or drops out of whole-stage codegen in the hot path is
@@ -9,7 +9,8 @@ rely on must actually be happening).
 
 Textual plan parsing is the public, version-stable surface for this
 (the JVM plan-node API is not exposed to PySpark); matching is kept to
-coarse node names that survive Spark minor versions.
+coarse node names that survive Spark minor versions. The codegen count
+is the one exception: it reaches the static plan through Py4J.
 """
 
 from __future__ import annotations
@@ -71,19 +72,17 @@ def wholestage_codegen_count(df: DataFrame) -> int:
     """Number of WholeStageCodegen subtrees -- wide spans mean the hot path
     stays in generated JVM code instead of interpreted evaluation.
 
-    Uses ``explain("codegen")`` with AQE toggled off for the duration:
-    an unexecuted AdaptiveSparkPlan hides its subtrees from both the
-    formatted and codegen explain modes, so inspection uses the static
-    plan (same operators, pre-AQE) and restores the conf after.
+    Counts on the static plan (same operators, pre-AQE): an unexecuted
+    AdaptiveSparkPlan hides its subtrees from both the formatted and
+    codegen explain modes. The static plan is the query's own physical
+    plan prepared without the adaptive rule, so no session conf changes
+    while the count is read.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("codegen")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    m = re.search(r"Found (\d+) WholeStageCodegen subtrees", buf.getvalue())
-    return int(m.group(1)) if m else 0
+    jvm = df.sparkSession._jvm
+    qe = df._jdf.queryExecution()
+    static = jvm.org.apache.spark.sql.execution.QueryExecution.prepareExecutedPlan(
+        qe.sparkSession(), qe.sparkPlan()
+    )
+    return jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(
+        static
+    ).size()

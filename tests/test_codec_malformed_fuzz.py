@@ -74,7 +74,7 @@ def test_flac_malformed():
     valid = flac.encode_flac(
         [rnd.randint(-30000, 30000) for _ in range(600)], block_size=192
     )
-    _probe(valid, flac.decode_flac, flac.FlacFormatError, seed=14)
+    _probe(valid, flac.decode_flac_ex, flac.FlacFormatError, seed=14)
 
 
 def test_png_palette_interlaced_malformed():

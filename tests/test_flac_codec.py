@@ -21,7 +21,7 @@ from iot_data_pipeline_spark.operators.flac import (
 
 def _roundtrip(samples, ch=1, rate=16000, bs=1024):
     blob = flac.encode_flac(samples, sample_rate=rate, channels=ch, block_size=bs)
-    drate, dch, ds = flac.decode_flac(blob)
+    drate, dch, _, ds = flac.decode_flac_ex(blob)
     assert (drate, dch) == (rate, ch)
     assert ds == samples
 
@@ -106,7 +106,7 @@ def test_lpc_subframe_decodes():
         w.write(2, 4)  # rice param 2
         _write_rice(w, res, 2)
 
-    rate, ch, got = flac.decode_flac(_stream(1, bs, sub))
+    rate, ch, _, got = flac.decode_flac_ex(_stream(1, bs, sub))
     assert got == expect
 
 
@@ -134,7 +134,7 @@ def test_stereo_decorrelation_modes():
             verbatim(w, first, fbits)
             verbatim(w, second, sbits)
 
-        rate, ch, got = flac.decode_flac(_stream(2, bs, subs, ch_code=code))
+        rate, ch, _, got = flac.decode_flac_ex(_stream(2, bs, subs, ch_code=code))
         assert ch == 2
         assert got[0::2] == left and got[1::2] == right, code
 
@@ -151,7 +151,7 @@ def test_wasted_bits_shift_back():
         for v in base:
             w.write(v & ((1 << 14) - 1), 14)
 
-    rate, ch, got = flac.decode_flac(_stream(1, bs, sub))
+    rate, ch, _, got = flac.decode_flac_ex(_stream(1, bs, sub))
     assert got == [v << 2 for v in base]
 
 
@@ -173,7 +173,7 @@ def test_rice_escape_and_partitions():
         for e in res[4:]:
             w.write(e & 0xFFF, 12)
 
-    rate, ch, got = flac.decode_flac(_stream(1, bs, sub))
+    rate, ch, _, got = flac.decode_flac_ex(_stream(1, bs, sub))
     assert got == res
 
 
@@ -183,12 +183,12 @@ def test_header_crc_detects_corruption():
     frame_at = 4 + 4 + 34
     blob[frame_at + 4] ^= 0x01
     with pytest.raises(flac.FlacFormatError, match="CRC|sync|reserved|sample rate|block size"):
-        flac.decode_flac(bytes(blob))
+        flac.decode_flac_ex(bytes(blob))
 
 
 def test_not_flac_refused():
     with pytest.raises(flac.FlacFormatError):
-        flac.decode_flac(b"RIFF....WAVE")
+        flac.decode_flac_ex(b"RIFF....WAVE")
 
 
 def _stream_custom(channels, bs, bps_code, si_bps, subframe_writer, rate=16000):
@@ -238,7 +238,7 @@ def test_24bit_samples_decode():
         for v in vals:
             w.write(v & 0xFFFFFF, 24)
 
-    rate, ch, got = flac.decode_flac(_stream_custom(1, bs, 6, 24, sub))
+    rate, ch, _, got = flac.decode_flac_ex(_stream_custom(1, bs, 6, 24, sub))
     assert got == vals
 
 
@@ -254,7 +254,7 @@ def test_eight_channel_interleaving():
             for v in chans[c]:
                 w.write(v & 0xFFFF, 16)
 
-    rate, ch, got = flac.decode_flac(_stream_custom(8, bs, 4, 16, subs))
+    rate, ch, _, got = flac.decode_flac_ex(_stream_custom(8, bs, 4, 16, subs))
     assert ch == 8
     for c in range(8):
         assert got[c::8] == chans[c], c
@@ -274,7 +274,7 @@ def test_32bit_size_code_refused():
             w.write(v & 0xFFFFFFFF, 32)
 
     with pytest.raises(flac.FlacFormatError, match="32-bit"):
-        flac.decode_flac(_stream_custom(1, bs, 7, 24, sub))
+        flac.decode_flac_ex(_stream_custom(1, bs, 7, 24, sub))
 
 
 def test_32bit_streaminfo_depth_refused():
@@ -290,7 +290,7 @@ def test_32bit_streaminfo_depth_refused():
             w.write(v & 0xFFFFFFFF, 32)
 
     with pytest.raises(flac.FlacFormatError, match="scope"):
-        flac.decode_flac(_stream_custom(1, bs, 0, 32, sub))
+        flac.decode_flac_ex(_stream_custom(1, bs, 0, 32, sub))
 
 
 def test_decode_flac_ex_exposes_bit_depth():

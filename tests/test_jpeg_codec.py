@@ -176,20 +176,6 @@ def test_strict_kernel_decodes_jpeg_in_spark(spark):
         assert got[i] == pytest.approx([luma / 255.0] * 4), i
 
 
-def test_resize_kernel_normalizes_jpeg_to_png(spark):
-    from iot_data_pipeline_spark.operators import png
-    from iot_data_pipeline_spark.operators.multimodal import resize_images
-
-    blob = jpeg.encode_jpeg(8, 8, 3, bytes((40, 80, 120)) * 64, quality=100)
-    df = spark.createDataFrame(
-        [(0, bytearray(blob))], "media_id long, content binary"
-    )
-    (row,) = resize_images(df, 4, 4, mode="strict").collect()
-    w, h, ch, pix = png.decode_png(bytes(row["resized"]))
-    assert (w, h, ch) == (4, 4, 3)
-    assert bytes(pix) == bytes(_expected_solid_rgb(40, 80, 120)) * 16
-
-
 def test_420_solid_matches_444_exactly():
     # flat chroma planes are invariant under 2x2 averaging, so 4:2:0 and
     # 4:4:4 must decode to identical pixels for solid colors

@@ -3,9 +3,8 @@
 Row-correctness is gated by the DuckDB oracle; these tests gate the
 *scale* properties that rows can't show: dims broadcast, filters reach
 the parquet scan, scans read only needed columns, aggregation is
-partial+final, top-k plans as TakeOrderedAndProject, and same-bucketed
-joins need no shuffle. A regression here is invisible at sf0.01 and fatal
-at 100 TB.
+partial+final, and top-k plans as TakeOrderedAndProject. A regression
+here is invisible at sf0.01 and fatal at 100 TB.
 """
 
 from __future__ import annotations
@@ -13,8 +12,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from iot_data_pipeline_spark.operators.bucketing import bucketed_join, write_bucketed
-from iot_data_pipeline_spark.plans.inspect import (
+from iot_data_pipeline_spark.queries.registry import REGISTRY
+from iot_data_pipeline_spark.sources.readers import read_table
+from tests.plan_inspect import (
     broadcast_join_count,
     formatted_plan,
     has_pushed_filters,
@@ -22,8 +22,6 @@ from iot_data_pipeline_spark.plans.inspect import (
     shuffle_count,
     wholestage_codegen_count,
 )
-from iot_data_pipeline_spark.queries.registry import REGISTRY
-from iot_data_pipeline_spark.sources.readers import read_table
 
 
 def q(name, spark, sf_dir):
@@ -73,49 +71,28 @@ def test_declared_queries_stay_in_codegen(spark, sf_dir):
         assert wholestage_codegen_count(q(name, spark, sf_dir)) >= 1, name
 
 
-@pytest.fixture()
-def bucketed_tables(spark, sf_dir):
-    names = ("bt_orders", "bt_lineitem")
-    write_bucketed(
-        read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice"),
-        names[0],
-        ["o_orderkey"],
-        8,
-    )
-    write_bucketed(
-        read_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-        ),
-        names[1],
-        ["o_orderkey"],
-        8,
-    )
-    yield names
-    for n in names:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
+def test_codegen_count_leaves_session_conf_alone(spark, sf_dir, monkeypatch):
+    """The codegen count reads the static plan without switching AQE off
+    on the shared session, where every other thread's query would see
+    it; every ``RuntimeConfig.set`` during the count is recorded."""
+    from pyspark.sql.conf import RuntimeConfig
 
+    df = q("q09_lineitem_agg", spark, sf_dir)
+    keys: list[str] = []
+    real_set = RuntimeConfig.set
 
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, bucketed_tables):
-    left, right = bucketed_tables
-    # suppress broadcast so the test proves co-location, not small-side luck
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, left, right, ["o_orderkey"])
-        assert shuffle_count(joined) == 0, formatted_plan(joined)
-        # and it still computes the right thing
-        plain = read_table(spark, sf_dir, "orders").join(
-            read_table(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    assert wholestage_codegen_count(df) >= 1
+    assert keys == []
 
 
 def test_unbucketed_same_join_shuffles(spark, sf_dir):
-    # control: the identical join off plain parquet paths DOES shuffle --
-    # proves the zero above comes from bucket metadata, not plan luck.
+    # with broadcast off, a fact-fact join off plain parquet paths
+    # shuffles both sides: shuffle_count sees every plain Exchange.
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -127,14 +127,7 @@ def test_png_16bit_narrows_to_high_byte():
     )
 
 
-def test_resize_nearest_and_luma_features():
-    # 2x2 RGB: black / white / black / white checker
-    pixels = bytes([0, 0, 0, 255, 255, 255, 255, 255, 255, 0, 0, 0])
-    up = png.resize_nearest(2, 2, 3, pixels, 4, 4)
-    assert len(up) == 4 * 4 * 3
-    # corners preserved by nearest-neighbor
-    assert up[0:3] == bytes([0, 0, 0])
-    assert up[-3:] == bytes([0, 0, 0])
+def test_luma_grid_features():
     # solid-grey features: every cell = v/255
     grey = bytes([100] * (3 * 3 * 3))
     feats = png.luma_grid_features(3, 3, 3, grey, 4)
@@ -146,10 +139,7 @@ def test_strict_mode_decodes_png_in_spark(spark):
     payloads distributed over partitions; non-PNG payloads raise."""
     from pyspark.sql import functions as F
 
-    from iot_data_pipeline_spark.operators.multimodal import (
-        extract_features,
-        resize_images,
-    )
+    from iot_data_pipeline_spark.operators.multimodal import extract_features
 
     rows = []
     for i in range(6):
@@ -164,13 +154,6 @@ def test_strict_mode_decodes_png_in_spark(spark):
     }
     for i in range(6):
         assert got[i] == pytest.approx([40 * i / 255.0] * 4), i
-
-    resized = resize_images(df, 2, 2, mode="strict").collect()
-    for r in resized:
-        w, h, ch, pix = png.decode_png(bytes(r["resized"]))
-        assert (w, h, ch) == (2, 2, 3)
-        v = 40 * r["media_id"]
-        assert bytes(pix) == bytes([v] * (2 * 2 * 3))
 
     bad = spark.createDataFrame(
         [(0, bytearray(b"JFIF-not-a-png"))], "media_id long, content binary"
@@ -234,21 +217,14 @@ def test_non_image_payload_refused_with_documented_boundary(spark):
     """Payloads that are neither PNG nor baseline JPEG are a declared codec
     boundary (SCALE.md): strict-mode kernels must raise NotImplementedError
     naming the vendored scope."""
-    from iot_data_pipeline_spark.operators.multimodal import (
-        extract_features,
-        resize_images,
-    )
+    from iot_data_pipeline_spark.operators.multimodal import extract_features
 
     mp3ish = b"ID3\x04\x00\x00\x00\x00\x00\x00" + bytes(64)
     df = spark.createDataFrame(
         [(0, bytearray(mp3ish))], "media_id long, content binary"
     )
-    for op in (
-        lambda d: extract_features(d, dim=4, mode="strict"),
-        lambda d: resize_images(d, 2, 2, mode="strict"),
-    ):
-        with pytest.raises(Exception, match="only PNG, JPEG"):
-            op(df).collect()
+    with pytest.raises(Exception, match="only PNG, JPEG"):
+        extract_features(df, dim=4, mode="strict").collect()
     # Kernel-level twin (no Spark wrapping): message must name the boundary.
     with pytest.raises(png.PngFormatError):
         png.decode_png(mp3ish)

@@ -801,7 +801,7 @@ def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):
     - the partition-type parity pass re-listed the WHOLE table on every
       pruned read; its whole-table schema now comes from the table
       schema cache that ``read_table`` uses, keyed by the table's
-      listing (clear_lake_schema_cache only frees entries);
+      listing (clearing the cache only frees entries);
     - the broad fallback when that pass fails now WARNS instead of
       silently reverting to subset-local partition-type inference.
     """
@@ -828,7 +828,7 @@ def test_explicit_files_schema_cache_and_loud_fallback(spark, tmp_path):
     )
     df2 = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df2.dtypes)["a"] == "string"
-    R.clear_lake_schema_cache()
+    R._SCHEMA_CACHE.clear()
     df3 = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df3.dtypes)["a"] == "int"
 
@@ -863,7 +863,7 @@ def test_stale_schema_cache_reinfers_on_type_flipping_spelling(
     os.makedirs(f"{root}/a=1")
     t = pa.table({"x": pa.array([1, 2], pa.int64())})
     pq.write_table(t, f"{root}/a=1/p.parquet")
-    R.clear_lake_schema_cache()
+    R._SCHEMA_CACHE.clear()
     df = R._read_explicit_files(spark, root, [f"{root}/a=1/p.parquet"])
     assert dict(df.dtypes)["a"] == "int"  # cache now holds INT for a
 
@@ -879,7 +879,7 @@ def test_stale_schema_cache_reinfers_on_type_flipping_spelling(
     # and the refreshed entry, the root's only one, types it STRING
     _key, schema = R._SCHEMA_CACHE[root]
     assert isinstance(schema["a"].dataType, T.StringType)
-    R.clear_lake_schema_cache()
+    R._SCHEMA_CACHE.clear()
 
 
 def _write_events(root: str, part: str, name: str, xs: list[int], day: str):

@@ -154,48 +154,6 @@ def test_zorder_rewrite_clusters_both_columns(spark, sf_dir, tmp_path):
     assert mean_v < 0.7 * glob["v"], (mean_v, glob["v"])
 
 
-def test_analyze_table_feeds_cbo_estimates(spark, sf_dir, tmp_path):
-    from iot_data_pipeline_spark.sources.maintenance import CBO_CONF, analyze_table
-    from iot_data_pipeline_spark.sources.readers import read_table
-
-    zone = str(tmp_path / "orders_tbl")
-    orders = read_table(spark, sf_dir, "orders")
-    orders.write.parquet(zone)
-    spark.sql(
-        f"CREATE TABLE stats_orders USING parquet LOCATION '{zone}'"
-    )
-    try:
-        for k, v in CBO_CONF.items():
-            spark.conf.set(k, v)
-        stats = analyze_table(
-            spark, "stats_orders", ["o_orderkey", "o_orderpriority"]
-        )
-        n = orders.count()
-        # table-level: exact row count lands in the catalog
-        assert stats and f"{n} rows" in list(stats.values())[0]
-        # column-level: NDV recorded for the analyzed columns
-        desc = {
-            r["info_name"]: r["info_value"]
-            for r in spark.sql(
-                "DESC EXTENDED stats_orders o_orderpriority"
-            ).collect()
-        }
-        assert int(desc["distinct_count"]) >= 4
-        # the optimizer now KNOWS the cardinality at plan time (no AQE,
-        # no runtime sampling): rowCount surfaces in plan statistics.
-        jstats = (
-            spark.table("stats_orders")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-        )
-        assert int(str(jstats.rowCount().get())) == n, jstats.toString()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS stats_orders")
-        for k in CBO_CONF:
-            spark.conf.unset(k)
-
-
 def test_read_jsonl_byte_level_writer_choices(spark, tmp_path):
     """Round-10 probe, frozen: byte-level JSONL writer choices -- a UTF-8
     BOM (Windows notepad/PowerShell), CRLF and bare-CR line endings, and

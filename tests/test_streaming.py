@@ -313,34 +313,6 @@ def test_stream_static_join_rereads_dim(spark, tmp_path):
     assert got == {1.0: "loc-OLD", 2.0: "loc-NEW"}
 
 
-def test_progress_capture_records_batches(spark, raw_dir, tmp_path):
-    from iot_data_pipeline_spark.streaming.metrics import (
-        attach_progress_capture,
-        detach_progress_capture,
-        progress_frame,
-    )
-
-    cap = attach_progress_capture(spark)
-    try:
-        _run(spark, raw_dir, tmp_path)
-        # listener bus is async; progress may trail the query end briefly
-        import time
-
-        for _ in range(40):
-            if cap.rows():
-                break
-            time.sleep(0.25)
-        rows = cap.rows()
-        assert rows, "no progress events captured"
-        assert sum(r["num_input_rows"] or 0 for r in rows) >= 6  # 6 input lines
-        assert all(r["batch_duration_ms"] is not None for r in rows)
-        df = progress_frame(spark, cap)
-        assert df.schema["num_input_rows"].dataType.typeName() == "long"
-        assert df.count() == len(rows)
-    finally:
-        detach_progress_capture(spark, cap)
-
-
 def test_crash_midstream_recovers_exactly_once(spark, raw_dir, tmp_path):
     """Fault-injected recovery: with maxFilesPerTrigger=1 the 3-file
     backlog is 3 micro-batches; the sink throws on the SECOND batch after

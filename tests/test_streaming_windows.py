@@ -15,7 +15,6 @@ from pyspark.sql import types as T
 
 from iot_data_pipeline_spark.streaming.windows import (
     dedup_stream,
-    sessionized_counts,
     windowed_value_counts,
 )
 
@@ -146,29 +145,6 @@ def test_sliding_window_matches_batch(spark, tmp_path):
     # and all windows not containing the sentinel must have closed
     open_allowed = {ws for ws in want_rows if ws.hour >= 13}
     assert set(got_rows) >= set(want_rows) - open_allowed
-
-
-def test_session_window_parity(spark, tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    rows = [
-        _ev(1, "2026-01-01T10:00:00Z", uid=1),
-        _ev(2, "2026-01-01T10:10:00Z", uid=1),   # same session (gap 30m)
-        _ev(3, "2026-01-01T11:30:00Z", uid=1),   # new session
-        _ev(4, "2026-01-01T10:00:00Z", uid=2),
-        _ev(5, "2026-01-01T23:00:00Z", uid=99),  # sentinel closes everything
-    ]
-    _write(raw, "f1.jsonl", rows)
-    got = _run_stream(
-        spark, tmp_path, raw, lambda s: sessionized_counts(s), "sessions"
-    )
-    sessions = {
-        (r["user_id"], r["session_start"].isoformat()): r["n_events"]
-        for r in got.collect()
-    }
-    assert sessions[(1, "2026-01-01T10:00:00")] == 2
-    assert sessions[(1, "2026-01-01T11:30:00")] == 1
-    assert sessions[(2, "2026-01-01T10:00:00")] == 1
 
 
 def test_dedup_stream_within_watermark(spark, tmp_path):

@@ -2,8 +2,9 @@
 window of w consecutive k-grams contributes its minimum to the
 fingerprint set, so any shared substring of length >= w + k - 1 tokens
 between two documents forces at least one SHARED fingerprint. q118
-reports per-doc counts; this test checks the underlying guarantee by
-reconstructing the fingerprint SETS with the same md5 ordering."""
+reports per-doc counts; this test checks the underlying guarantee on
+the fingerprint SETS of q118's own gram and window-min step, against a
+reference implementation with the same md5 ordering."""
 
 from __future__ import annotations
 
@@ -22,8 +23,11 @@ def _winnow(tokens, k, w):
 
 
 def test_shared_long_substring_forces_shared_fingerprint(spark):
-    from pyspark.sql import functions as F
-    from iot_data_pipeline_spark.queries.curation import WINNOW_K, WINNOW_W
+    from iot_data_pipeline_spark.queries.curation import (
+        WINNOW_K,
+        WINNOW_W,
+        _winnowing_fingerprints,
+    )
 
     base = "alpha beta gamma delta epsilon zeta eta theta".split()
     # doc B embeds a >= w+k-1 = 8-token run of doc A inside unrelated text
@@ -38,33 +42,7 @@ def test_shared_long_substring_forces_shared_fingerprint(spark):
     df = spark.createDataFrame(
         [(0, " ".join(doc_a)), (1, " ".join(doc_b))], "doc_id long, text string"
     )
-    from pyspark.sql import Window
-
-    toks = df.select("doc_id", F.split("text", " ").alias("t"))
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - WINNOW_K),
-                lambda p: F.struct(
-                    p.alias("pos"),
-                    F.md5(F.concat_ws(" ", F.slice("t", p + 1, WINNOW_K))).alias("gh"),
-                ),
-            )
-        ).alias("g"),
-    ).select("doc_id", "g.pos", "g.gh")
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(WINNOW_W - 1), 0)
-    spark_fps = (
-        grams.select(
-            "doc_id",
-            F.min("gh").over(w).alias("fp"),
-            F.count(F.lit(1)).over(w).alias("wn"),
-        )
-        .filter(F.col("wn") == WINNOW_W)
-        .select("doc_id", "fp")
-        .distinct()
-        .collect()
-    )
+    spark_fps = _winnowing_fingerprints(df).collect()
     got = {0: set(), 1: set()}
     for r in spark_fps:
         got[r["doc_id"]].add(r["fp"])
