@@ -91,9 +91,23 @@ def _process_sensor_frame(
     write_good: Callable[[DataFrame], None],
     write_bad: Callable[[DataFrame], None] | None = None,
     check: Callable[[set[str]], None] | None = None,
+    bad_seeded: bool = False,
 ) -> tuple[int, int, int]:
     """The sensor ETL body over one PERMISSIVE-parsed frame; returns
     (rows in, good rows written, corrupt rows).
+
+    The frame is first packed to ``ceil(input bytes / openCostInBytes)``
+    partitions when that is fewer than its scan has: Spark splits any
+    input smaller than ``cores x 128 MB`` into one partition per core,
+    and each task pays a fixed cost (it deserializes the whole Hadoop
+    configuration) that dwarfs reading a few small files. The input
+    bytes are the frame's own plan statistics (the file sizes, for a
+    file relation), and ``spark.sql.files.openCostInBytes`` is Spark's
+    own estimate of what one file costs to open. Packing never adds
+    partitions, so a large input or a backlog keeps its split; a
+    ``minPartitionNum`` of 1 would also collapse a large input onto
+    fewer tasks than cores, and ``coalesce(1)`` would run a whole
+    backlog in one task.
 
     One pass fills the frame's cache, reading every input once, while an
     observed aggregate counts its rows and corrupt rows and, when it
@@ -102,10 +116,16 @@ def _process_sensor_frame(
     pass writes to Spark's ``noop`` sink: one job, where an aggregate
     action runs three under adaptive execution. The transformed good rows
     go to ``write_good``, counted on that write (after the threshold
-    filter); the corrupt rows go to ``write_bad``. The cache is released
-    however the body ends.
+    filter); the corrupt rows go to ``write_bad``, skipped on a batch
+    with none when ``bad_seeded`` says the channel already exists. The
+    cache is released however the body ends.
     """
     routed = ROUTE_COL in parsed.columns
+    qe = parsed._jdf.queryExecution()
+    open_cost = parsed.sparkSession._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    packed = max(1, -(-qe.optimizedPlan().stats().sizeInBytes() // open_cost))
+    if packed < qe.toRdd().getNumPartitions():
+        parsed = parsed.coalesce(packed)
     parent = parsed.persist()
     try:
         read = Observation("sensor_read")
@@ -120,7 +140,7 @@ def _process_sensor_frame(
         obs = Observation("sensor_pipeline")
         processed = transform_sensor(good, config, dim_location)
         write_good(processed.observe(obs, F.count(F.lit(1)).alias("n_good")))
-        if write_bad is not None:
+        if write_bad is not None and (row["n_bad"] or not bad_seeded):
             write_bad(bad)
         return row["n_in"], obs.get["n_good"], row["n_bad"]
     finally:

@@ -35,8 +35,10 @@ Scale notes:
   crash between its writes and its checkpoint commit replaces its own
   ``source_file=`` partitions instead of appending its rows twice.
 - both channels, the zone and its ``_dead_letter``, get a 0-row schema
-  partition at stream start, so each is readable before its first row
-  and a micro-batch writes both without first probing for corrupt rows.
+  partition at stream start, so each is readable before its first row.
+  A micro-batch runs no probe for corrupt rows: its cache pass counts
+  them, and a batch with none skips the dead-letter write. A replayed
+  batch has the same count, so each corrupt row still lands once.
 - the dim contract: a ``dim_location`` that reads a data source (files,
   tables) is read again in every micro-batch, so a dim updated between
   batches enriches later records with the new values. A dim that reads
@@ -44,7 +46,11 @@ Scale notes:
   collected once at stream start into a JVM local relation: no batch
   rebuilds a ``createDataFrame`` list in PySpark worker processes, and
   there is no cache to release. Each batch still runs one broadcast
-  job to ship the dim to its join.
+  job to ship the dim to its join, as one task: the local relation is
+  held in one partition, not one per core.
+- a micro-batch of a few small files runs one task per job: the body
+  packs its input to one partition per ``openCostInBytes`` of bytes
+  (``pipeline._process_sensor_frame``), while a backlog keeps its split.
 - the session polls the raw zone every 100 ms while idle
   (``spark.sql.streaming.pollingDelay``, set in ``session.build_session``;
   Spark's default is 10 ms). Each poll lists every file the raw zone has
@@ -372,14 +378,16 @@ def _snapshot_dim(dim: DataFrame | None) -> DataFrame | None:
     """Evaluate an in-memory dim once, at stream start, into a JVM local
     relation: its rows then live in the plan, so no micro-batch reruns
     the dim's Python workers and nothing is cached or left to release.
-    A dim that reads a source (or no dim) is returned as it is."""
+    The relation is held in one partition, so each batch's broadcast of
+    it runs one task instead of one per core. A dim that reads a source
+    (or no dim) is returned as it is."""
     if dim is None or not _reads_no_source(dim):
         return dim
     jdf, spark = dim._jdf, dim.sparkSession
     return DataFrame(
         spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()),
         spark,
-    )
+    ).coalesce(1)
 
 
 def start_sensor_ingest(
@@ -398,13 +406,15 @@ def start_sensor_ingest(
     same transform): one pass that caches the batch and aggregates it
     (counts and the source files seen), the vanished-file guard, then two
     writes, parquet partitioned by source file and the corrupt rows to
-    ``<out_dir>/_dead_letter`` keyed the same way. When ``dim_location``
-    is given, every micro-batch broadcast-joins the static dim (stream-
-    static enrichment, reference README.md:13): the dim never shuffles
-    the stream. A dim that reads a data source is read again in every
+    ``<out_dir>/_dead_letter`` keyed the same way (skipped when the
+    batch has no corrupt row, since the channel is seeded at start).
+    When ``dim_location`` is given, every micro-batch broadcast-joins the
+    static dim (stream-static enrichment, reference README.md:13): the
+    dim never shuffles the stream. A dim that reads a data source is read again in every
     batch, so each batch sees it as of its own execution; an in-memory
     dim (``createDataFrame``, ``range``) cannot change, so it is evaluated
-    once, at start, into a local relation that holds its rows.
+    once, at start, into a local relation that holds its rows, and each
+    batch broadcasts it in one task.
 
     A long-lived stream (``available_now=False``) lists the raw zone
     every 100 ms while idle (the session's ``pollingDelay``, see
@@ -463,6 +473,7 @@ def start_sensor_ingest(
             write_good,
             lambda bad: write_dead(stamp_ingest_time(bad)),
             lambda seen: _raise_if_files_vanished(spark, checkpoint_dir, batch_id, seen),
+            bad_seeded=True,
         )
 
     writer = (

@@ -155,3 +155,28 @@ def test_clean_input_leaves_readable_empty_dead_letter(spark, tmp_path):
     dead = spark.read.parquet(str(dlq))
     assert dead.count() == 0
     assert dead.columns == ["raw_line", "_ingest_ts"]
+
+
+def test_batch_run_packs_small_input_and_keeps_a_large_split(spark, tmp_path):
+    """The body packs its input to ``ceil(bytes / openCostInBytes)``
+    partitions only when that is fewer than the scan's. Four ~1 KB files
+    (four scan partitions) are written by one task, so as one part file,
+    at Spark's 4 MB open cost. With the open cost set to 64 bytes on a
+    session of its own, the same files are far bigger than partitions x
+    64 bytes and keep the scan's split: one part file per partition."""
+    from iot_data_pipeline_spark.pipeline import PipelineConfig, run_batch_pipeline
+    from iot_data_pipeline_spark.sources.readers import SENSOR_SCHEMA, read_jsonl
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for k in range(4):
+        (src / f"f{k}.jsonl").write_text("\n".join(README_LINES) + "\n")
+    cheap_open = spark.newSession()
+    cheap_open.conf.set("spark.sql.files.openCostInBytes", "64")
+    split = read_jsonl(cheap_open, str(src), SENSOR_SCHEMA).rdd.getNumPartitions()
+    assert split > 1
+    for session, want in ((spark, 1), (cheap_open, split)):
+        out = tmp_path / f"out{want}"
+        cfg = PipelineConfig(fixed_clock=CLOCK)
+        assert run_batch_pipeline(session, str(src), str(out), cfg) == (20, 0)
+        assert len(list(out.glob("part-*.json"))) == want

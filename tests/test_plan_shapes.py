@@ -92,17 +92,16 @@ def test_codegen_count_leaves_session_conf_alone(spark, sf_dir, monkeypatch):
 
 def test_unbucketed_same_join_shuffles(spark, sf_dir):
     # with broadcast off, a fact-fact join off plain parquet paths
-    # shuffles both sides: shuffle_count sees every plain Exchange.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_table(spark, sf_dir, "orders").join(
-            read_table(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        assert shuffle_count(joined) >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # shuffles both sides: shuffle_count sees every plain Exchange. The
+    # join plans on a session of its own, so the shared test session
+    # never has broadcast switched off.
+    no_broadcast = spark.newSession()
+    no_broadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    joined = read_table(no_broadcast, sf_dir, "orders").join(
+        read_table(no_broadcast, sf_dir, "lineitem"),
+        F.col("o_orderkey") == F.col("l_orderkey"),
+    )
+    assert shuffle_count(joined) >= 2
 
 
 def test_q46_pushdown_and_topk(spark, sf_dir):

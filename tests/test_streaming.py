@@ -20,7 +20,10 @@ from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.pipeline import PipelineConfig, transform_sensor
 from iot_data_pipeline_spark.sources.readers import read_jsonl, split_corrupt
-from iot_data_pipeline_spark.streaming.ingest import run_ingest_available_now
+from iot_data_pipeline_spark.streaming.ingest import (
+    run_ingest_available_now,
+    start_sensor_ingest,
+)
 
 CLOCK = "2026-01-01 00:00:00"
 
@@ -147,15 +150,26 @@ def test_per_file_routing_and_dead_letter(spark, raw_dir, tmp_path):
     assert rows[0]["source_file"] == "b.jsonl"
 
 
+def _tasks_per_job(spark, query) -> list[int]:
+    """The task count of each Spark job a stream has run, in job order
+    (the stream runs its jobs under its ``runId`` as job group)."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in sorted(tracker.getJobIdsForGroup(str(query.runId)))
+    ]
+
+
 def test_one_batch_runs_one_pass_the_guard_and_two_writes(
     spark, raw_dir, tmp_path, monkeypatch
 ):
     """A 2-file batch with a corrupt line runs at most 4 Spark jobs under
     the query's job group (one pass that caches and counts the batch, the
     zone write, the dead-letter write; no separate count, aggregate or
-    dead-letter probe; 7 before), and the vanished-file guard resolves no
-    file path: every listed file contributed rows, so none needs an
-    existence probe."""
+    dead-letter probe; 7 before), each as one task: the body packs the two
+    tiny files into one partition (one task per file and job before). The
+    vanished-file guard resolves no file path: every listed file
+    contributed rows, so none needs an existence probe."""
     from iot_data_pipeline_spark.streaming import ingest as ingest_mod
 
     queries = []
@@ -186,8 +200,9 @@ def test_one_batch_runs_one_pass_the_guard_and_two_writes(
     offsets = [p.name for p in (ckpt / "offsets").iterdir() if not p.name.startswith(".")]
     assert offsets == ["0"]  # both files in one micro-batch
     assert resolved == []
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(queries[0].runId))
-    assert 0 < len(jobs) <= 4, len(jobs)
+    tasks = _tasks_per_job(spark, queries[0])
+    assert 0 < len(tasks) <= 4, tasks
+    assert tasks == [1] * len(tasks), tasks
     assert spark.read.parquet(str(out)).count() == 5
     assert spark.read.parquet(str(out / "_dead_letter")).count() == 1
 
@@ -206,6 +221,35 @@ def test_clean_batch_leaves_readable_empty_dead_letter(spark, tmp_path):
     assert spark.read.parquet(str(out)).count() == 3
     for d in (out, out / "_dead_letter"):
         assert not [p.name for p in d.iterdir() if p.name.startswith(".spark-staging")]
+
+
+@pytest.mark.parametrize("dim_rows", [0, 100])
+def test_clean_batch_skips_the_dead_letter_write(spark, tmp_path, dim_rows):
+    """A clean 2-file batch runs one task per Spark job: the cache pass
+    and the zone write, plus, with an in-memory dim, its broadcast. The
+    dead letter, seeded at stream start, is not written again for 0
+    corrupt rows (no dim: 3 jobs of 2 tasks before), and the 100-row dim
+    is broadcast from one partition (one task per core before)."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_file(raw, "a.jsonl", _records(1, 3, 10.0))
+    _write_file(raw, "b.jsonl", _records(2, 2, 20.0))
+    dim = None
+    if dim_rows:
+        dim = spark.createDataFrame(
+            [(f"device-{i}", f"loc-{i}") for i in range(dim_rows)],
+            "device_id string, location_id string",
+        )
+    out = tmp_path / "out"
+    q = start_sensor_ingest(
+        spark, str(raw), str(out), str(tmp_path / "ckpt"),
+        PipelineConfig(fixed_clock=CLOCK), dim_location=dim,
+    )
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert _tasks_per_job(spark, q) == [1] * (3 if dim_rows else 2)
+    assert spark.read.parquet(str(out)).count() == 5
+    assert spark.read.parquet(str(out / "_dead_letter")).count() == 0
 
 
 def test_routing_decodes_special_character_basenames(spark, tmp_path):
