@@ -6,21 +6,24 @@ A~C never scored above threshold. That closure is a connected-components
 computation over the match graph.
 
 Spark has no recursive-query primitive (the DuckDB oracle uses WITH
-RECURSIVE), so the engine runs the classic distributed min-label
-propagation: every node starts labeled with itself, and each round every
-node takes the min label among itself and its neighbors. Each round is
-one shuffle (join + groupBy.min); the loop converges in O(graph
-diameter) rounds. Near-dup clusters are dense and shallow (diameter is
-almost always <= 3), so this beats the O(log n)-round large-star/
-small-star algorithm in practice -- fewer, cheaper rounds -- while
-staying pure DataFrame code. ``localCheckpoint`` truncates the plan
-lineage each round so the plan does not grow with the iteration count.
+RECURSIVE). A small edge list is closed on the driver by union-find; a
+large one by alternating large-star/small-star contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14), whose
+round count is set by the node count, not by the graph's diameter -- so
+a long chain converges as fast as a dense cluster. ``localCheckpoint``
+truncates the plan lineage each round so the plan does not grow with
+the iteration count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: contraction rounds before the loop gives up without a fixpoint
+_MAX_ROUNDS = 50
+#: rounds between fixpoint probes (each probe is the round's only job)
+_CHECK_EVERY = 2
 
 
 def _union_find_local(pairs: list[tuple[int, int]]) -> dict[int, int]:
@@ -44,18 +47,31 @@ def _union_find_local(pairs: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
+def _flip(e: DataFrame) -> DataFrame:
+    return e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+
+
+def _signature(e: DataFrame) -> tuple:
+    """(count, xor of edge hashes): an order-independent fingerprint of a
+    distinct edge set. ``bit_xor``, not ``sum``, so it cannot overflow
+    under ANSI arithmetic."""
+    row = e.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(F.least("a", "b"), F.greatest("a", "b"))).alias("h"),
+    ).collect()[0]
+    return (row["n"], row["h"])
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     local_threshold: int = 200_000,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     ``component`` is the smallest node id reachable from the node.
 
-    Two execution paths, picked by edge count:
+    Two execution paths, picked by the symmetric edge count:
 
     - **small edge set** (<= ``local_threshold``): collect the pairs and
       run driver-side union-find. This is the honest scale design, not a
@@ -64,20 +80,26 @@ def connected_components(
       magnitude smaller than its input, and union-find on a few hundred
       thousand pairs is milliseconds versus several distributed rounds.
       The distributed work (pair generation) already happened upstream.
-    - **large edge set**: distributed min-label propagation; each
-      iteration is one join + min-aggregate shuffle, converging in
-      O(graph diameter) rounds with a one-row convergence probe.
+    - **large edge set**: star contraction. Each round runs two phases
+      over the symmetric neighbor list:
 
-    ``algorithm`` picks the distributed path: ``"label"`` (default)
-    min-label propagation, ``"star"`` alternating large-star/small-star
-    contraction (:func:`connected_components_star`). Tradeoff: label
-    propagation pays ONE cheap shuffle per round but needs O(diameter)
-    rounds -- the right choice for dedup match graphs, whose components
-    are dense and shallow (diameter <= ~3). Star contraction pays two
-    heavier phases per round but converges in O(log n) rounds
-    independent of diameter -- the right choice for arbitrary graphs
-    (long chains, web graphs) where diameter, not size, is the enemy.
-    Both are property-tested equivalent on random graphs.
+      - *large-star*: every node u computes m = min(neighbors(u) + {u})
+        and re-points each STRICTLY LARGER neighbor v at m (plus u
+        itself); long chains fold toward small ids in halving steps.
+      - *small-star*: u re-points its smaller-or-equal neighbors (and
+        itself) at the min of that subset; stars flatten.
+
+      Both phases preserve the component partition (every emitted edge
+      connects nodes already connected through u), so the fixpoint --
+      an edge set of (node, component-min) stars -- labels every node
+      with the smallest reachable id. The fixpoint probe, a (count,
+      hash) signature of the round's edge set, runs every
+      :data:`_CHECK_EVERY` rounds: it is the only per-round job, and a
+      converged round is two no-op contractions of a star edge set.
+      Unprobed rounds materialize lazily inside the next probe's job.
+      The rounds' edge sets shrink geometrically; AQE coalesces their
+      shuffles. A loop that reaches :data:`_MAX_ROUNDS` without a
+      fixpoint raises rather than return partial labels.
     """
     # Materialize the edge list FIRST: it is usually the output of an
     # expensive upstream pipeline (similarity self-join), and the two
@@ -85,12 +107,9 @@ def connected_components(
     pairs = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
-    sym = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
     # lazy: the count below is the action that materializes pairs AND sym
     # in one job (eager ran one setup job per checkpoint)
-    sym = sym.distinct().localCheckpoint(eager=False)
+    sym = pairs.unionByName(_flip(pairs)).distinct().localCheckpoint(eager=False)
 
     n_edges = sym.count()
     if n_edges <= local_threshold:
@@ -104,191 +123,64 @@ def connected_components(
             sorted(comp.items()), "node long, component long"
         )
 
-    if algorithm == "star":
-        # sym is already symmetric and deduped: reuse it as the edge frame
-        return connected_components_star(sym, src="a", dst="b", max_iter=max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
-
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=False)  # the collect below materializes
-    )
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            labels.join(sym, labels.node == sym.a)
-            .select(F.col("b").alias("node"), "component")
-            .unionByName(labels.select("node", "component"))
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # lazy: the convergence collect right below is the action that
-        # materializes the checkpoint -- eager would run a separate job
-        # per round for the same work (the star path's pattern)
-        labels = neighbor_min.localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    check_every: int = 2,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 -- public algorithm): converges in O(log n) rounds
-    regardless of graph diameter, where min-label propagation needs
-    O(diameter) rounds.
-
-    Each round runs two phases over the symmetric neighbor list:
-
-    - **large-star**: every node u computes m = min(neighbors(u) + {u})
-      and re-points each STRICTLY LARGER neighbor v at m (plus u itself);
-      long chains fold toward small ids in halving steps.
-    - **small-star**: u re-points its smaller-or-equal neighbors (and
-      itself) at the min of that subset; stars flatten.
-
-    Both phases preserve the component partition (every emitted edge
-    connects nodes already connected through u), so the fixpoint -- an
-    edge set of (node, component-min) stars -- labels every node with
-    the smallest reachable id, exactly like min-label propagation
-    (property-tested equivalent on random graphs, including chain
-    graphs where the round-count difference shows).
-
-    Cost model: two groupBy+join shuffles per round vs label
-    propagation's one, but O(log n) vs O(diameter) rounds -- use this
-    for arbitrary/deep graphs, the default for shallow dedup clusters.
-    Fixpoint detection: (count, xxhash64-sum) signature of the canonical
-    edge set, probed every ``check_every`` rounds -- the signature's
-    collect is the only per-round JOB, so probing every 2nd round halves
-    job-submission overhead (the dominant cost at probe scale: task work
-    shrinks geometrically but scheduling does not) at the price of at
-    most ``check_every - 1`` extra converged rounds, which are near-free
-    because a converged round's plan is two no-op contractions of an
-    already-star edge set. ``localCheckpoint`` still cuts lineage per
-    round; unprobed rounds materialize lazily inside the next probe's
-    job, so no work is duplicated.
-    """
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
-    # contract parity with the label path: every node APPEARING in edges
-    # gets a row, including nodes whose only edge is a self-loop
-    all_nodes = (
-        raw.select(F.col("a").alias("node"))
-        .unionByName(raw.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)  # materializes at the final join
-    )
-    pairs = raw.filter(F.col("a") != F.col("b"))
-    sym = (
-        pairs.unionByName(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        # lazy: the n_edges count below is the single setup job that
-        # materializes raw AND sym (eager ran one job per checkpoint,
-        # plus a separate isEmpty probe)
-        .localCheckpoint(eager=False)
-    )
-    spark = edges.sparkSession
-
-    def signature(e: DataFrame) -> tuple:
-        # bit_xor, not sum: the edge set is distinct, so xor of per-edge
-        # hashes is an order-independent set fingerprint that cannot
-        # overflow under ANSI arithmetic
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(
-                F.xxhash64(F.least("a", "b"), F.greatest("a", "b"))
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    # Size the per-round shuffles to the graph, not the session default:
-    # contraction rounds run on edge sets that SHRINK geometrically, and
-    # on probe-sized graphs 32-partition stages are pure task-launch
-    # overhead (measured 2.3x end-to-end on a 625-deep chain).
-    spark_conf = spark.conf
-    n_edges = sym.count()
-    if n_edges == 0:
-        return all_nodes.withColumn("component", F.col("node"))
-    parts = max(1, min(int(spark_conf.get("spark.sql.shuffle.partitions")),
-                       n_edges // 50_000 + 1))
-    saved_parts = spark_conf.get("spark.sql.shuffle.partitions")
-
-    cur = sym
+    # every node APPEARING in edges gets a row, including nodes whose only
+    # edge is a self-loop; sym is symmetric, so its ``a`` side holds them all
+    all_nodes = sym.select(F.col("a").alias("node")).distinct()
+    cur = sym.filter(F.col("a") != F.col("b"))
     prev_sig = None
-    rounds = 0
-    try:
-        spark_conf.set("spark.sql.shuffle.partitions", str(parts))
-        for _ in range(max_iter):
-            # ---- large-star: m(u) = min(G(u)+{u}); (v,m) for v > u, (u,m).
-            # Every emitted edge has b < a (m is a strict minimum), so the
-            # output IS the directed b<a form -- no symmetric expansion or
-            # re-distinct needed before the small-star phase.
-            nbr_min = cur.groupBy("a").agg(F.min("b").alias("mb"))
-            m = nbr_min.select("a", F.least("a", "mb").alias("m"))
-            large = (
-                cur.join(m, "a")
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .unionByName(m.select(F.col("a"), F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                # no distinct here: duplicate (v, m) edges don't affect the
-                # small phase's min aggregate, and the small phase's own
-                # distinct canonicalizes the round's output -- one fewer
-                # exchange per round
-            )
+    for rounds in range(1, _MAX_ROUNDS + 1):
+        # ---- large-star: m(u) = min(G(u)+{u}); (v,m) for v > u, (u,m).
+        # Every emitted edge has b < a (m is a strict minimum), so the
+        # output IS the directed b<a form -- no symmetric expansion or
+        # re-distinct needed before the small-star phase.
+        nbr_min = cur.groupBy("a").agg(F.min("b").alias("mb"))
+        m = nbr_min.select("a", F.least("a", "mb").alias("m"))
+        large = (
+            cur.join(m, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .unionByName(m.select(F.col("a"), F.col("m").alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            # no distinct here: duplicate (v, m) edges don't affect the
+            # small phase's min aggregate, and the small phase's own
+            # distinct canonicalizes the round's output -- one fewer
+            # exchange per round
+        )
 
-            # ---- small-star over the directed (a, b<a) large output
-            sm = large.groupBy("a").agg(F.min("b").alias("m"))
-            small = (
-                large.join(sm, "a")
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                # lazy: the signature collect right below is the action
-                # that materializes the checkpoint -- eager would run a
-                # separate job per round for the same work
-                .localCheckpoint(eager=False)
-            )
-            rounds += 1
-            if rounds % check_every == 0:
-                sig = signature(small)
-                if sig == prev_sig:
-                    cur = small
-                    break
-                prev_sig = sig
-            # symmetric view for the next large-star; both halves are
-            # disjoint (b<a vs a<b) and small is distinct, so no
-            # re-distinct -- and small is checkpointed, so lineage stays
-            # one union deep
-            cur = small.unionByName(
-                small.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-        else:
-            # loop exhausted max_iter without a stable signature; reduce
-            # the symmetric set to the directed star form for labeling
-            cur = cur.filter(F.col("b") < F.col("a"))
-    finally:
-        spark_conf.set("spark.sql.shuffle.partitions", saved_parts)
+        # ---- small-star over the directed (a, b<a) large output
+        sm = large.groupBy("a").agg(F.min("b").alias("m"))
+        small = (
+            large.join(sm, "a")
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            # lazy: the next signature collect is the action that
+            # materializes the checkpoint -- eager would run a separate
+            # job per round for the same work
+            .localCheckpoint(eager=False)
+        )
+        if rounds % _CHECK_EVERY == 0:
+            sig = _signature(small)
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+        # symmetric view for the next large-star; both halves are
+        # disjoint (b<a vs a<b) and small is distinct, so no re-distinct
+        # -- and small is checkpointed, so lineage stays one union deep
+        cur = small.unionByName(_flip(small))
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {_MAX_ROUNDS} "
+            f"contraction rounds over {n_edges} symmetric edges"
+        )
 
     # fixpoint edges are (node, component-min) stars; nodes with no
     # surviving edge (self-loop-only) label themselves
     labels = (
-        cur.select(F.col("a").alias("node"), F.col("b").alias("component"))
+        small.select(F.col("a").alias("node"), F.col("b").alias("component"))
         .unionByName(
-            cur.select(F.col("b").alias("node"), F.col("b").alias("component"))
+            small.select(F.col("b").alias("node"), F.col("b").alias("component"))
         )
         .groupBy("node")
         .agg(F.min("component").alias("component"))
@@ -296,4 +188,3 @@ def connected_components_star(
     return all_nodes.join(labels, "node", "left").select(
         "node", F.coalesce("component", F.col("node")).alias("component")
     )
-

@@ -18,6 +18,14 @@ and no createDataFrame re-ship (each was a per-call driver
 synchronization point, and the Py4J local-relation serde bring-up cost
 ~3 s on whichever query ran a prefix operator first). This is how a
 100 TB sweep-line / running-balance query stays parallel.
+
+The range-partitioned frame feeds both the per-partition totals and the
+rows the offsets are added to, so both sides of that join must read ONE
+partitioning. Each operator takes a ``localCheckpoint`` of it: building
+the checkpoint's RDD fixes the range bounds and ``spark_partition_id()``
+once, both sides read the same blocks, and a lost block fails the query
+loudly instead of recomputing bounds that could differ. The blocks are
+freed with the frame, so nothing is registered for a release sweep.
 """
 
 from __future__ import annotations
@@ -25,8 +33,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from iot_data_pipeline_spark.transient import transient_persist
 
 
 def global_fill_forward(
@@ -57,7 +63,7 @@ def global_fill_forward(
     local = parted.withColumn("_pid", F.spark_partition_id()).withColumn(
         "_lf", F.last(value_col, ignorenulls=True).over(w_local)
     )
-    local = transient_persist(local)  # one pass feeds the boundary agg AND the join
+    local = local.localCheckpoint(eager=False)  # one partitioning, module doc
 
     # each partition's final fill value = _lf on its last row in order;
     # the carry flowing INTO partition p = last non-null boundary among
@@ -151,7 +157,7 @@ def global_scan(
             .withColumn("_ldr", F.dense_rank().over(w))
             .withColumn("_lrn", F.row_number().over(w_full))
         )
-    local = transient_persist(local)
+    local = local.localCheckpoint(eager=False)  # one partitioning, module doc
 
     aggs = [F.count(F.lit(1)).alias("_n")]
     aggs += [F.sum(src).alias(f"_t_{out}") for out, src in sums.items()]

@@ -1067,11 +1067,11 @@ def q150_chain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed star-contraction connected components on DEEP graphs:
     events (capped at event_id < 10000 so the graph is constant-size
     across scale factors) are chained consecutively within user buckets
-    (user_id % 64) -- 64 path components ~150 nodes deep, the
-    diameter regime where min-label propagation's O(diameter) rounds
-    lose to large-star/small-star's O(log n)
-    (operators/graph.connected_components_star; q52 covers the shallow
-    dedup-cluster regime with the default path).
+    (user_id % 64) -- 64 path components ~150 nodes deep, the diameter
+    regime that star contraction's node-count-bound round count handles
+    (operators/graph.connected_components, forced onto its distributed
+    path with ``local_threshold=0``; q52 covers the shallow dedup-cluster
+    regime on the driver union-find path).
 
     The oracle derives the answer from the generative structure instead
     of re-running a graph algorithm: a chain over a bucket's events is
@@ -1085,7 +1085,7 @@ def q150_chain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs ~log2(depth) rounds of two groupBy+join phases each, lineage
     cut per round. Output is one row per component.
     """
-    from iot_data_pipeline_spark.operators.graph import connected_components_star
+    from iot_data_pipeline_spark.operators.graph import connected_components
 
     ev = (
         read_table(spark, sf_dir, "events")
@@ -1098,7 +1098,7 @@ def q150_chain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev").isNotNull())
         .select(F.col("prev").alias("src"), F.col("event_id").alias("dst"))
     )
-    cc = connected_components_star(edges)
+    cc = connected_components(edges, local_threshold=0)
     return (
         cc.groupBy("component")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))

@@ -37,8 +37,8 @@ from iot_data_pipeline_spark.queries.staging import (
     batch_mtime_pinner,
     fresh_dir,
     staged_fixture,
-    unique_name,
 )
+from iot_data_pipeline_spark.session import stream_probe_session
 from iot_data_pipeline_spark.sources.readers import (
     read_jsonl,
     read_table,
@@ -47,6 +47,32 @@ from iot_data_pipeline_spark.sources.readers import (
 from iot_data_pipeline_spark.streaming.ingest import run_ingest_available_now
 
 Q14_CLOCK = "2026-01-01 00:00:00"
+
+#: seconds a streaming probe may take to drain before it fails
+_DRAIN_TIMEOUT_S = 300
+
+
+def _drain_to_memory(stream: DataFrame, output_mode: str, checkpoint: str) -> DataFrame:
+    """Run ``stream`` to completion (``availableNow``) into a memory sink
+    and return the sink's rows, read back through the stream's own
+    session -- a :func:`stream_probe_session` clone, so the sink's temp
+    view (and the rows it holds) never lands on the caller's session.
+    A stream that has not drained within ``_DRAIN_TIMEOUT_S`` is
+    stopped and fails the probe."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("probe_sink")
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream probe ({checkpoint}) did not drain within {_DRAIN_TIMEOUT_S}s"
+        )
+    return stream.sparkSession.table("probe_sink")
 
 
 def _dirty_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,41 +488,21 @@ def q34_stateful_device_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iot_data_pipeline_spark.operators.stateful import apply_last_state_stream
 
     raw = _stage_q34_raw(spark, sf_dir)
-    work = fresh_dir("q34_run")  # checkpoint + sink: never cached
 
     from iot_data_pipeline_spark.sources.readers import SENSOR_SCHEMA
 
+    # ~25 devices: 2 state stores, not one per session shuffle partition
+    # (a real 1M-device deployment sizes this UP, same knob)
     stream = (
-        spark.readStream.schema(SENSOR_SCHEMA)
+        stream_probe_session(spark)
+        .readStream.schema(SENSOR_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .json(raw)
         .select("device_id", "timestamp", "temperature")
     )
-    sink_name = unique_name("q34_state")
-    # State-store instance count is fixed at the stream's first run from
-    # the session's shuffle-partition conf. This probe holds ~25 devices,
-    # so 32 stores x 3 micro-batches is pure commit overhead (~2x wall) --
-    # cap it for the stream, restore after. (A real 1M-device deployment
-    # sizes this UP, same knob.)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            apply_last_state_stream(stream)
-            .writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("q34 stateful stream did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    final = spark.table(sink_name)
+    final = _drain_to_memory(
+        apply_last_state_stream(stream), "update", fresh_dir("q34_ckpt")
+    )
     w_latest = F.row_number().over(
         Window.partitionBy("device_id").orderBy(F.desc("n_readings"))
     )
@@ -721,8 +727,10 @@ def q53_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE file-stream source feeding both join sides: deriving purchases
     # and clicks from the same source node lets each micro-batch list and
     # scan the staged parquet once instead of twice (two readStream calls
-    # would plan two independent sources).
-    src = spark.readStream.schema(schema).parquet(staged)
+    # would plan two independent sources). The probe session's 2 join
+    # state stores hold tens of thousands of buffered rows; a real
+    # deployment sizes the store count to state volume.
+    src = stream_probe_session(spark).readStream.schema(schema).parquet(staged)
     purchases = src.filter(F.col("event_type") == "purchase")
     clicks = src.filter(F.col("event_type") == "click")
     joined = interval_join_streams(
@@ -731,30 +739,8 @@ def q53_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.user_id").alias("user_id"),
         F.col("r.value").alias("click_value_raw"),
     )
-    sink = unique_name("q53_sink")
-    # Join state-store instances = shuffle partitions at first run; this
-    # probe holds tens of thousands of buffered rows, so 32 stores are
-    # pure per-batch commit overhead (same knob as q34; a real deployment
-    # sizes it to state volume).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            # explicit RAM-backed checkpoint (staging._scratch_base):
-            # without it Spark creates a temp checkpoint under /tmp
-            # (ext4), paying fsync on every state-store commit
-            .option("checkpointLocation", fresh_dir("q53_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _drain_to_memory(joined, "append", fresh_dir("q53_ckpt"))
         .groupBy((F.col("user_id") % 50).alias("user_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_attributed"),
@@ -934,26 +920,22 @@ def q167_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("v", T.DecimalType(18, 6)),
         ]
     )
+    # ~8 event_type groups: the probe session's 2 shuffle partitions,
+    # not one near-empty task and file per session partition in each
+    # micro-batch's partial write
     stream = (
-        spark.readStream.schema(schema)
+        stream_probe_session(spark)
+        .readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(raw)
     )
-    # ~8 event_type groups: 32 shuffle partitions would mean 32 near-empty
-    # tasks + files per micro-batch partial write (the q34/q177 knob)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = start_incremental_rollup(
-            stream,
-            rollup_path,
-            os.path.join(work, "ckpt"),
-            keys=["event_type"],
-            values=["v"],
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    start_incremental_rollup(
+        stream,
+        rollup_path,
+        os.path.join(work, "ckpt"),
+        keys=["event_type"],
+        values=["v"],
+    ).awaitTermination()
     compact_rollup(spark, rollup_path, keys=["event_type"], values=["v"])
     folded = read_rollup(spark, rollup_path, keys=["event_type"], values=["v"])
     # Final projection: decimals stay exact internally, but render to
@@ -1301,13 +1283,18 @@ def q177_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: same state-store shape as q53 (both sides watermarked,
     eviction horizon from the interval bound); outer emission adds no
-    state -- it is the eviction path itself surfacing rows. 4 shuffle
-    partitions at this probe size (q53's knob).
+    state -- it is the eviction path itself surfacing rows. 2 shuffle
+    partitions at this probe size (the probe session, as q53).
     """
     staged = _stage_q177_events(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
+    # 2 shuffle partitions: state-store instances = partitions x sides x
+    # batches, and this probe's cost is store open/commit across the data
+    # batch, the sentinel batch, and the trailing no-data eviction batch
+    # -- not row volume
     src = (
-        spark.readStream.schema(schema)
+        stream_probe_session(spark)
+        .readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
     )
@@ -1322,27 +1309,8 @@ def q177_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.user_id").alias("user_id"),
         F.col("r.value").alias("click_value_raw"),
     )
-    sink = unique_name("q177_sink")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 2 partitions: state-store instances = partitions x sides x batches,
-    # and this probe's cost is store open/commit across the data batch,
-    # the sentinel batch, and the trailing no-data eviction batch -- not
-    # row volume
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", fresh_dir("q177_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _drain_to_memory(joined, "append", fresh_dir("q177_ckpt"))
         .filter(F.col("user_id") >= 0)  # drop watermark sentinels
         .groupBy((F.col("user_id") % 50).alias("user_bucket"))
         .agg(
@@ -1453,28 +1421,14 @@ def q189_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = _stage_q189_dups(spark, sf_dir)
     src = (
-        spark.readStream.schema("k long, ts timestamp, v double")
+        stream_probe_session(spark)
+        .readStream.schema("k long, ts timestamp, v double")
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
     )
     deduped = dedup_stream(src, ["k"], ts_col="ts", watermark="10 minutes")
-    sink = unique_name("q189_sink")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", fresh_dir("q189_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _drain_to_memory(deduped, "append", fresh_dir("q189_ckpt"))
         .groupBy("k")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_emits"),
@@ -1584,7 +1538,8 @@ def q191_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = _stage_q191_late(spark, sf_dir)
     src = (
-        spark.readStream.schema("ts timestamp, v double")
+        stream_probe_session(spark)
+        .readStream.schema("ts timestamp, v double")
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
     )
@@ -1592,23 +1547,8 @@ def q191_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, ts_col="ts", value_col="v", window="10 minutes",
         watermark="10 minutes",
     )
-    sink = unique_name("q191_sink")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        (
-            windowed.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", fresh_dir("q191_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _drain_to_memory(windowed, "append", fresh_dir("q191_ckpt"))
         .select(
             fmt_ts("window_start").alias("window_start"),
             fmt_ts("window_end").alias("window_end"),

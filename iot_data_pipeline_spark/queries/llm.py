@@ -894,15 +894,14 @@ def q52_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster formation: transitive closure of the q25 n-gram
     Jaccard matches via distributed connected components (operators/
     graph.py). The DuckDB oracle computes the same closure with WITH
-    RECURSIVE -- Spark has no recursive SQL, so the engine's iterative
-    min-label propagation (one shuffle per round, O(diameter) rounds) is
-    checked against a genuinely different algorithm, not a mirror of
-    itself.
+    RECURSIVE -- Spark has no recursive SQL, so the engine's union-find
+    (or, above its edge threshold, star contraction) is checked against a
+    genuinely different algorithm, not a mirror of itself.
 
-    Scale plan: rounds operate on the (node, label) frame -- fixed-width
-    ints, never document text; localCheckpoint caps lineage so round N's
-    plan does not replay rounds 1..N-1. Cluster pick: keep-min-id is the
-    standard canonical-representative rule for dedup.
+    Scale plan: rounds operate on the (node, component) edge frame --
+    fixed-width ints, never document text; localCheckpoint caps lineage
+    so round N's plan does not replay rounds 1..N-1. Cluster pick:
+    keep-min-id is the standard canonical-representative rule for dedup.
     """
     from iot_data_pipeline_spark.operators.graph import connected_components
 

@@ -24,14 +24,12 @@ sessions must not accumulate them.
 from __future__ import annotations
 
 import atexit
-import itertools
 import os
 import shutil
 import tempfile
 from collections.abc import Callable
 
 _CACHE: dict[tuple[str, str], str] = {}
-_SEQ = itertools.count()
 _CREATED: list[str] = []
 
 # conservative upper bound for one staged fixture / checkpoint dir at the
@@ -128,8 +126,3 @@ def fresh_dir(kind: str) -> str:
     """A unique NON-cached work dir (checkpoints, sinks, outputs)."""
     return _tracked_mkdtemp(f"idp_{kind}_")
 
-
-def unique_name(prefix: str) -> str:
-    """Process-unique name for memory-sink queries (must not collide when
-    the same query runs twice in one session)."""
-    return f"{prefix}_{next(_SEQ)}"

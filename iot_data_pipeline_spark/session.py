@@ -535,6 +535,23 @@ def configure_object_store(spark: SparkSession, conf: dict[str, str]) -> None:
                 pass  # static conf on a running session; document-only
 
 
+def stream_probe_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` with 2 shuffle partitions, for a bounded
+    stream probe whose cost is state-store open/commit, not rows.
+
+    A stream's state-store count is fixed in its checkpoint at its first
+    run, from the conf of the session that starts it (Structured
+    Streaming, SIGMOD 2018), so a private session's conf is enough to
+    set it. The clone inherits every conf set on ``spark`` at runtime,
+    shares its SparkContext, and never writes back: ``spark``'s conf is
+    untouched for its other threads, and a memory sink's temp view lives
+    on the clone, not on ``spark``, for as long as its frames do.
+    """
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.conf.set("spark.sql.shuffle.partitions", "2")
+    return clone
+
+
 def get_session() -> SparkSession:
     """Active session if one exists (e.g. driver-provided), else build one."""
     active = SparkSession.getActiveSession()

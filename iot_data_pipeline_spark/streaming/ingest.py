@@ -495,39 +495,27 @@ def run_ingest_available_now(
     timeout_s: int = 300,
     dim_location: DataFrame | None = None,
     max_files_per_trigger: int | None = None,
-    on_replaced: str = "error",
 ) -> None:
     """Process-everything-then-stop convenience (the per-burst batch mode).
 
-    ``on_replaced`` -- what to do when :func:`detect_replaced_source_files`
-    finds raw files mutated in place since a previous burst ingested
-    them (their new content can NEVER be re-ingested through this
-    checkpoint -- the file source dedups on path): ``"error"`` (default;
-    fail before processing anything, and again after the drain for
-    mid-burst mutations), ``"warn"``, or ``"ignore"``.
+    Fails when :func:`detect_replaced_source_files` finds raw files
+    mutated in place since a previous burst ingested them -- before
+    processing anything, and again after the drain for mid-burst
+    mutations: their new content can NEVER be re-ingested through this
+    checkpoint, because the file source dedups on path.
     """
-    if on_replaced not in ("error", "warn", "ignore"):
-        raise ValueError(f"on_replaced must be error|warn|ignore, got {on_replaced!r}")
 
     def _audit(stage: str) -> None:
-        if on_replaced == "ignore":
-            return
         replaced = detect_replaced_source_files(spark, checkpoint_dir)
-        if not replaced:
-            return
-        msg = (
-            f"raw file(s) REPLACED or appended-to in place ({stage} "
-            f"burst): {replaced}. The checkpointed file source dedups "
-            "on path, so the new content will never be ingested -- "
-            "write new data under new, unique file names (the "
-            "reference's S3-event model reprocesses an overwritten "
-            "object; a mutated local/HDFS raw zone silently cannot)."
-        )
-        if on_replaced == "error":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        if replaced:
+            raise RuntimeError(
+                f"raw file(s) REPLACED or appended-to in place ({stage} "
+                f"burst): {replaced}. The checkpointed file source dedups "
+                "on path, so the new content will never be ingested -- "
+                "write new data under new, unique file names (the "
+                "reference's S3-event model reprocesses an overwritten "
+                "object; a mutated local/HDFS raw zone silently cannot)."
+            )
 
     _audit("before")
     q = start_sensor_ingest(

@@ -1,10 +1,10 @@
 """Registry for per-query transient caches (round-15 optimization).
 
 Several operators ``persist()`` an intermediate that is consumed more
-than once inside ONE query's plan (prefix scans, the JSONL corrupt-split
-parse, the quality expect/split pass). A ``persist()`` is pinned in
-Spark's CacheManager until an explicit ``unpersist()`` -- it is NOT
-GC-reclaimable like ``localCheckpoint`` blocks -- so a long-lived
+than once inside ONE query's plan (the JSONL corrupt-split parse, the
+quality expect/split pass, q145's shingle-hash frame). A ``persist()``
+is pinned in Spark's CacheManager until an explicit ``unpersist()`` --
+it is NOT GC-reclaimable like ``localCheckpoint`` blocks -- so a long-lived
 session that runs hundreds of queries (the bench, the oracle harness, a
 notebook) accumulates dead cached plans and their storage blocks
 without bound (guide section 5: "unpersist when done").
@@ -36,16 +36,8 @@ Release-then-re-execute is shown safe for ONE registered frame only:
 recompute identically without the cache, released before or after
 their first execution (frozen in tests/test_transient_caches.py; the
 ``bad`` frame needs the coalesce guard in ``readers.split_cached`` to
-stay analyzable against the raw JSON scan). The frames of the prefix
-operators ``global_scan`` and ``global_fill_forward``
-(``operators/prefix.py``) are NOT covered: once released, their
-``repartitionByRange`` sampling and ``spark_partition_id()`` are
-recomputed separately on each side of a join, so the offsets can be
-keyed to a different partitioning than the rows they are added to,
-which gives silently wrong running sums and ranks; a prefix result
-executed (or re-executed) after a release is not known to be correct.
-The ``quality.expect_split`` and ``llm.py`` tokenizer frames are not
-shown either way.
+stay analyzable against the raw JSON scan). The ``quality.expect_split``
+and ``llm.py`` tokenizer frames are not shown either way.
 """
 
 from __future__ import annotations

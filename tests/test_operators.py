@@ -557,7 +557,7 @@ def test_connected_components_two_clusters(spark):
 
 
 def test_connected_components_long_chain(spark):
-    """Convergence needs multiple propagation rounds on a path graph."""
+    """A path graph is one component (the driver union-find path)."""
     from iot_data_pipeline_spark.operators.graph import connected_components
 
     n = 12
@@ -569,8 +569,35 @@ def test_connected_components_long_chain(spark):
     assert {r.component for r in rows} == {0}
 
 
+def test_connected_components_distributed_chain_is_one_component(spark):
+    """A 41-node chain forced onto the distributed path is one component:
+    the round count follows the node count, not the chain's diameter
+    (a 25-round label propagation stopped at 16 components, silently)."""
+    from iot_data_pipeline_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    rows = connected_components(edges, local_threshold=0).collect()
+    assert len(rows) == 41
+    assert {r.component for r in rows} == {0}
+
+
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
+    """Rounds that run out before the fixpoint fail loudly instead of
+    returning partial labels."""
+    from iot_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_MAX_ROUNDS", 2)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint after 2"):
+        graph.connected_components(edges, local_threshold=0)
+
+
 def test_connected_components_paths_agree(spark):
-    """Hybrid contract: driver union-find and distributed propagation
+    """Hybrid contract: driver union-find and distributed contraction
     return identical components on the same random-ish graph."""
     import random
 
@@ -798,13 +825,14 @@ def _uf_ground_truth(pairs):
 
 
 def test_star_contraction_matches_union_find_random_graphs(spark):
-    # Property: large-star/small-star contraction labels every node with
-    # its component minimum, on graphs of varying density -- including
-    # the long-chain case where min-label propagation's O(diameter)
-    # round count is worst and star contraction's O(log n) shines.
+    # Property: the distributed path (large-star/small-star contraction)
+    # labels every node with its component minimum, on graphs of varying
+    # density -- including a 60-deep chain, more hops than the loop's
+    # round budget, so only a round count that does not follow the
+    # diameter converges on it.
     import random
 
-    from iot_data_pipeline_spark.operators.graph import connected_components_star
+    from iot_data_pipeline_spark.operators.graph import connected_components
 
     cases = []
     rng = random.Random(0xC0FFEE)
@@ -830,27 +858,9 @@ def test_star_contraction_matches_union_find_random_graphs(spark):
         )
         got = {
             r["node"]: r["component"]
-            for r in connected_components_star(edges).collect()
+            for r in connected_components(edges, local_threshold=0).collect()
         }
         assert got == want, (sorted(got.items()), sorted(want.items()))
-
-
-def test_star_dispatch_from_connected_components(spark):
-    from iot_data_pipeline_spark.operators.graph import connected_components
-
-    pairs = [(1, 2), (2, 3), (10, 11), (5, 5)]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    label = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, local_threshold=0).collect()
-    }
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edges, local_threshold=0, algorithm="star"
-        ).collect()
-    }
-    assert label == star == {1: 1, 2: 1, 3: 1, 5: 5, 10: 10, 11: 10}
 
 
 @pytest.mark.parametrize("seed,n_rows,n_parts", [(1, 37, 64), (2, 200, 3), (3, 5, 8)])

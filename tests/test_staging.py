@@ -20,9 +20,8 @@ def test_staged_fixture_builds_once_per_key():
     assert len(calls) == 3  # one build per distinct (kind, sf_dir)
 
 
-def test_fresh_dir_and_unique_name_never_collide():
+def test_fresh_dir_never_collides():
     assert staging.fresh_dir("t_run") != staging.fresh_dir("t_run")
-    assert staging.unique_name("s") != staging.unique_name("s")
 
 
 def test_batch_mtime_pinner_orders_batches(tmp_path):

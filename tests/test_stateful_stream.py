@@ -218,3 +218,47 @@ def test_rocksdb_state_store_provider_parity(spark, tmp_path):
     )
     assert rocks == default
     assert len(rocks) == 3  # all three devices surfaced a final state
+
+
+def test_q34_probe_leaves_shared_session_alone(spark, sf_dir, monkeypatch):
+    """q34 fixes its state-store count (2) on a cloned session: no
+    ``RuntimeConfig.set`` reaches the shared session's conf while it
+    runs, its memory sink's temp view is not left on the shared session,
+    and the checkpoint still records 2 shuffle partitions."""
+    import os
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from iot_data_pipeline_spark.queries import ingest_q
+    from iot_data_pipeline_spark.queries.registry import REGISTRY
+
+    shared = spark.conf._jconf
+    shared_keys: list[str] = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        if self._jconf == shared:
+            shared_keys.append(key)
+        return real_set(self, key, value)
+
+    dirs: list[str] = []
+    real_fresh_dir = ingest_q.fresh_dir
+
+    def recording_fresh_dir(kind):
+        dirs.append(real_fresh_dir(kind))
+        return dirs[-1]
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views_before = temp_views()
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    monkeypatch.setattr(ingest_q, "fresh_dir", recording_fresh_dir)
+    rows = REGISTRY["q34_stateful_device_state"].fn(spark, sf_dir).collect()
+
+    assert rows
+    assert shared_keys == []
+    assert temp_views() == views_before
+    (checkpoint,) = dirs
+    with open(os.path.join(checkpoint, "offsets", "0")) as f:
+        assert '"spark.sql.shuffle.partitions":"2"' in f.read()

@@ -418,8 +418,7 @@ def test_replaced_raw_file_fails_loud(spark, tmp_path):
     """A raw file REPLACED in place between bursts can never re-ingest
     through the same checkpoint (path-keyed dedup) -- measured: its new
     content silently vanished, where the reference's S3-event model
-    would reprocess the overwritten object. The default burst now fails
-    loud; warn/ignore opt out."""
+    would reprocess the overwritten object. The burst now fails loud."""
     import time
 
     from iot_data_pipeline_spark.streaming.ingest import (
@@ -443,26 +442,6 @@ def test_replaced_raw_file_fails_loud(spark, tmp_path):
         run_ingest_available_now(
             spark, str(raw), out, ckpt, config=PipelineConfig(fixed_clock=CLOCK)
         )
-    # ignore-mode pins the measured Spark behavior: the burst drains
-    # clean and the replacement content is NOT ingested (still 2 rows)
-    run_ingest_available_now(
-        spark,
-        str(raw),
-        out,
-        ckpt,
-        config=PipelineConfig(fixed_clock=CLOCK),
-        on_replaced="ignore",
-    )
-    assert spark.read.parquet(out).count() == 2
-    with pytest.warns(RuntimeWarning, match="REPLACED"):
-        run_ingest_available_now(
-            spark,
-            str(raw),
-            out,
-            ckpt,
-            config=PipelineConfig(fixed_clock=CLOCK),
-            on_replaced="warn",
-        )
 
 
 def test_vanished_mid_burst_fails_loud_and_recovers(
@@ -484,6 +463,7 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
 
     time.sleep(1.1)
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))
+    f2_stat = _os.stat(raw / "f2.jsonl")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     real_transform = pipeline_mod.transform_sensor
@@ -517,6 +497,8 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
     assert spark.read.parquet(out).count() == 2
     assert not _os.path.exists(_os.path.join(ckpt, "commits", "1"))
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))  # restore
+    # the restore is the same file: give it back its recorded mtime
+    _os.utime(raw / "f2.jsonl", ns=(f2_stat.st_atime_ns, f2_stat.st_mtime_ns))
     run_ingest_available_now(
         spark,
         str(raw),
@@ -524,7 +506,6 @@ def test_vanished_mid_burst_fails_loud_and_recovers(
         ckpt,
         config=PipelineConfig(fixed_clock=CLOCK),
         max_files_per_trigger=1,
-        on_replaced="ignore",  # the restore itself bumps f2's mtime
     )
     assert spark.read.parquet(out).count() == 5
 
@@ -562,6 +543,7 @@ def test_vanished_guard_writes_nothing_so_retry_never_duplicates(
     raw.mkdir()
     _write_file(raw, "f1.jsonl", _records(1, 2, 10.0))
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))
+    f2_stat = _os.stat(raw / "f2.jsonl")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     real_guard = matview_mod.ensure_plain_zone
@@ -594,6 +576,8 @@ def test_vanished_guard_writes_nothing_so_retry_never_duplicates(
     # the zone (only the 0-row schema seed is), so a retry cannot dup
     assert spark.read.parquet(out).count() == 0
     _write_file(raw, "f2.jsonl", _records(2, 3, 20.0))  # restore
+    # the restore is the same file: give it back its recorded mtime
+    _os.utime(raw / "f2.jsonl", ns=(f2_stat.st_atime_ns, f2_stat.st_mtime_ns))
     for _ in range(2):  # retry twice: idempotent, never duplicates
         run_ingest_available_now(
             spark,
@@ -601,7 +585,6 @@ def test_vanished_guard_writes_nothing_so_retry_never_duplicates(
             out,
             ckpt,
             config=PipelineConfig(fixed_clock=CLOCK),
-            on_replaced="ignore",  # the restore bumps f2's mtime
         )
         assert spark.read.parquet(out).count() == 5
 
@@ -980,8 +963,9 @@ def test_file_dim_reread_each_batch_of_one_stream(spark, tmp_path):
 
 
 def test_in_memory_dim_evaluated_once_per_stream(spark, raw_dir, tmp_path):
-    """A createDataFrame dim cannot change, so the stream persists it:
-    only the first of three micro-batches evaluates the dim's Python RDD
+    """A createDataFrame dim cannot change, so the stream snapshots it
+    into a local relation at start: only the first of three
+    micro-batches evaluates the dim's Python RDD
     (counted by an accumulator its rows pass through); before, every
     batch's broadcast rebuilt it in PySpark workers."""
     _write_file(raw_dir, "c.jsonl", _records(3, 4, 30.0))

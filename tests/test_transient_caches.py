@@ -2,16 +2,20 @@
 registered and releasable, and releasing them changes no results.
 
 The operators that persist() an intermediate consumed multiple times
-inside one query (prefix scans, corrupt-split JSONL parse, quality
-expect/split) register with iot_data_pipeline_spark.transient so batch
-drivers (bench, oracle harness) can unpersist after each query --
-otherwise a 200-query session pins one CacheManager entry per call
-forever (guide section 5: unpersist when done).
+inside one query (corrupt-split JSONL parse, quality expect/split)
+register with iot_data_pipeline_spark.transient so batch drivers (bench,
+oracle harness) can unpersist after each query -- otherwise a 200-query
+session pins one CacheManager entry per call forever (guide section 5:
+unpersist when done). The prefix scans checkpoint their partitioned
+frame instead and register nothing.
 """
 
 from pyspark.sql import functions as F
 
-from iot_data_pipeline_spark.operators.prefix import global_scan
+from iot_data_pipeline_spark.operators.prefix import (
+    global_fill_forward,
+    global_scan,
+)
 from iot_data_pipeline_spark.operators.quality import Expectation, expect_split
 from iot_data_pipeline_spark.transient import (
     _TRANSIENT,
@@ -19,25 +23,25 @@ from iot_data_pipeline_spark.transient import (
 )
 
 
-def _n_cached(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def test_release_unpins_prefix_cache_and_preserves_results(spark):
+def test_prefix_scans_register_nothing_and_rerun_identically(spark):
+    # Released, a persisted partitioned frame re-sampled its range bounds
+    # separately on each side of the offsets join; the checkpointed frame
+    # has nothing to release, and its results re-execute unchanged.
     release_transient_caches()  # clean slate
-    base = _n_cached(spark)
     df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") % 7).cast("double").alias("v")
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 3 == 0, F.lit(None))
+        .otherwise((F.col("id") % 7).cast("double"))
+        .alias("v"),
     )
-    out = global_scan(df, ["k"], sum_cols={"running_sum": "v"})
-    before = out.orderBy("k").collect()
-    assert len(_TRANSIENT) >= 1  # the operator registered its persist
-    assert _n_cached(spark) > base  # and it is materially pinned
-    released = release_transient_caches()
-    assert released >= 1
-    assert _TRANSIENT == []
-    # the released plan still recomputes to the identical result
-    assert out.orderBy("k").collect() == before
+    scan = global_scan(df, ["k"], sum_cols={"running_sum": "v"}, ranks=True)
+    fill = global_fill_forward(df, "v", ["k"])
+    first = (scan.orderBy("k").collect(), fill.orderBy("k").collect())
+    assert release_transient_caches() == 0
+    assert (scan.orderBy("k").collect(), fill.orderBy("k").collect()) == first
+    assert [r["running_sum"] for r in first[0]][-1] == sum(
+        float(i % 7) for i in range(100) if i % 3
+    )
 
 
 def test_release_unpins_expect_split_cache(spark):
